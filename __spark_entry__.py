@@ -2381,74 +2381,18 @@ def _nan_to_null(df, col):
     return df.withColumn(col, F.when(F.isnan(F.col(col)), F.lit(None)).otherwise(F.col(col)))
 
 
-def _q_stream_backfill_day(spark, sf_dir):
+def _stream_day(spark, sf_dir, commits):
     """Day-pruned streamed backfill over a days(ts)-partitioned Iceberg
-    topic (the 10^12-clip deployment shape, VERDICT r4 #1/#7): the events
-    table is committed as a days(ts)-partitioned Iceberg v2 table
-    (engine/iceberg.py), ONE day is streamed through the validated pruned
-    brace-glob file source (engine/streams.py iceberg_stream_source_path
-    — strictly fewer files than the table holds, asserted here), and the
-    tumbling 10 m aggregate lands through the stream. Reference anchor:
-    Hudi-partitioned feature groups (base/Feature.java:40-136) + the S1
-    source chain (TransactionFraudExample.java:52-57)."""
-    import tempfile
-
-    from engine.iceberg import IcebergTable, iceberg_schema_to_ddl
-    from engine.streams import iceberg_stream_source_path
-    from engine.windows import tumbling_agg
-
-    ev = _read(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp"))
-    t = IcebergTable(tempfile.mkdtemp(prefix="entry_backfill_"),
-                     schema=ev.schema, partition_by=["days(ts)"])
-    # one producer task → one file per day dir (deterministic replay:
-    # the pruned day streams as a single micro-batch)
-    t.write_dataframe(ev.repartition(1))
-    flt = {"ts_day": "2024-01-05"}
-    planned = t.plan_files(partition_filter=flt)
-    n_live = len(t.plan_files())
-    assert 0 < len(planned) < n_live, (len(planned), n_live)
-    path, recursive = iceberg_stream_source_path(t, flt)
-    assert recursive
-    src = (
-        spark.readStream.schema(iceberg_schema_to_ddl(
-            t.schema_json()))
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "60 seconds")
-    )
-    out = _run_stream_to_df(
-        spark, tumbling_agg(src, "ts", "user_id", "value", "10 minutes"))
-    out = _nan_to_null(out, "stdev_amt_per_10m")
-    return _round6(out, ["avg_amt_per_10m", "stdev_amt_per_10m",
-                         "min_amt_per_10m", "max_amt_per_10m"])
-
-
-_SQL_BACKFILL_DAY_SRC = _SQL_TUMBLING_10M.replace(
-    "FROM events",
-    "FROM events WHERE CAST(ts AS DATE) = DATE '2024-01-05'")
-
-_SQL_STREAM_BACKFILL_DAY = f"""
-SELECT * FROM ({_SQL_BACKFILL_DAY_SRC})
-WHERE window_end <= (SELECT max(ts) - INTERVAL 60 SECOND FROM events
-                     WHERE CAST(ts AS DATE) = DATE '2024-01-05')
-"""
-
-
-def _q_stream_tail_day(spark, sf_dir):
-    """Snapshot-TAIL streamed day backfill (engine/tail.py, round 5): the
-    events table is committed as a days(ts)-partitioned Iceberg v2 table
-    in TWO append snapshots, then one day is streamed via the
-    ``iceberg_tail`` Python Data Source — offsets are (snapshot, position)
-    coordinates in the table's append log, partitions prune at the
-    MANIFEST level (no directory listing, no rectangular-glob restriction
-    of the file-source path), and each data file becomes one executor-side
-    Arrow read. Same tumbling 10 m aggregate and oracle as
-    ``stream_backfill_day``, so the two source paths are value-checked
-    against each other. Reference anchor: the incremental pull-changes
-    seam (base/FeatureGroupCommit.java) turned into a LIVE source."""
+    topic (the 10^12-clip deployment shape): the events table is committed
+    as a days(ts)-partitioned Iceberg v2 table, one append snapshot per
+    ``commits`` predicate, and ONE day is streamed through the snapshot
+    tail (engine/tail.py) — offsets are (snapshot, position) coordinates
+    in the table's append log, partitions prune at the MANIFEST level
+    (strictly fewer files than the table holds, asserted here), and each
+    data file becomes one executor-side Arrow read. The tumbling 10 m
+    aggregate lands through the stream. Reference anchor: Hudi-partitioned
+    feature groups (base/Feature.java:40-136) + the S1 source chain
+    (TransactionFraudExample.java:52-57)."""
     import tempfile
 
     from engine.iceberg import IcebergTable
@@ -2457,15 +2401,14 @@ def _q_stream_tail_day(spark, sf_dir):
 
     ev = _read(spark, sf_dir, "events").withColumn(
         "ts", F.col("ts").cast("timestamp"))
-    base = tempfile.mkdtemp(prefix="entry_tail_")
+    base = tempfile.mkdtemp(prefix="entry_day_")
     t = IcebergTable(base + "/t", schema=ev.schema,
                      partition_by=["days(ts)"])
-    # two commits → the tail crosses a snapshot boundary mid-stream;
-    # split by time-of-day so commit order follows event time (morning
-    # file then afternoon file per day: the watermark stays monotone with
-    # the data and closes no window early)
-    t.write_dataframe(ev.where("hour(ts) < 12").repartition(1))
-    t.write_dataframe(ev.where("hour(ts) >= 12").repartition(1))
+    # one producer task per commit → one file per day dir per commit;
+    # commits split by time-of-day so commit order follows event time (the
+    # watermark stays monotone with the data and closes no window early)
+    for pred in commits:
+        t.write_dataframe(ev.where(pred).repartition(1))
     flt = {"ts_day": "2024-01-05"}
     assert 0 < len(t.plan_files(partition_filter=flt)) < len(t.plan_files())
     src = read_clip_stream_tail(
@@ -2478,6 +2421,30 @@ def _q_stream_tail_day(spark, sf_dir):
     return _round6(out, ["avg_amt_per_10m", "stdev_amt_per_10m",
                          "min_amt_per_10m", "max_amt_per_10m"])
 
+
+def _q_stream_backfill_day(spark, sf_dir):
+    """Day-pruned streamed backfill of a one-commit topic (see
+    :func:`_stream_day`)."""
+    return _stream_day(spark, sf_dir, ("true",))
+
+
+def _q_stream_tail_day(spark, sf_dir):
+    """The same day-pruned backfill over a TWO-commit topic: the tail
+    crosses a snapshot boundary mid-stream (see :func:`_stream_day`).
+    Reference anchor: the incremental pull-changes seam
+    (base/FeatureGroupCommit.java) turned into a LIVE source."""
+    return _stream_day(spark, sf_dir, ("hour(ts) < 12", "hour(ts) >= 12"))
+
+
+_SQL_BACKFILL_DAY_SRC = _SQL_TUMBLING_10M.replace(
+    "FROM events",
+    "FROM events WHERE CAST(ts AS DATE) = DATE '2024-01-05'")
+
+_SQL_STREAM_BACKFILL_DAY = f"""
+SELECT * FROM ({_SQL_BACKFILL_DAY_SRC})
+WHERE window_end <= (SELECT max(ts) - INTERVAL 60 SECOND FROM events
+                     WHERE CAST(ts AS DATE) = DATE '2024-01-05')
+"""
 
 _SQL_STREAM_TAIL_DAY = _SQL_STREAM_BACKFILL_DAY
 

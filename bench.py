@@ -90,16 +90,28 @@ def bench_queries(spark) -> tuple[dict[str, float], dict[str, list[float]]]:
     return best, runs
 
 
-def _stream_once(spark, clips_dir: str, rundir: str) -> dict:
+def _stream_once(spark, table, rundir: str,
+                 partition_filter: dict | None = None) -> dict:
+    """One pass of the flagship over ``table``'s snapshot tail (fresh
+    checkpoint and sink under ``rundir``): payload-direct decode → 60 s
+    watermark → per-speaker 10-minute tumbling window → exactly-once ledger
+    sink. ``partition_filter`` prunes the tail at the manifest level."""
     from engine.audio import extract_audio_features_direct
     from engine.sink import ParquetLedgerSink
-    from engine.streams import read_clip_stream
+    from engine.streams import read_clip_stream_tail
     from engine.windows import tumbling_agg
 
+    n_clips = sum(f.record_count
+                  for f in table.plan_files(partition_filter=partition_filter))
     sink = ParquetLedgerSink(os.path.join(rundir, "out"),
                              event_ts_col="window_start")
-    src = read_clip_stream(spark, clips_dir, max_files_per_trigger=4, watermark=None)
-    feats = extract_audio_features_direct(src).withWatermark("event_ts", "60 seconds")
+    src = read_clip_stream_tail(
+        spark, table, max_files_per_trigger=4, watermark=None,
+        partition_filter=partition_filter,
+        progress_dir=os.path.join(rundir, "progress"),
+        exclude_columns=["bytes", "transcript"], include_file_path=True)
+    feats = extract_audio_features_direct(src).withWatermark(
+        "event_ts", "60 seconds")
     agg = tumbling_agg(feats, "event_ts", "speaker_id", "rms", "10 minutes")
 
     t0 = time.time()
@@ -114,9 +126,9 @@ def _stream_once(spark, clips_dir: str, rundir: str) -> dict:
     elapsed = time.time() - t0
     audit = sink.audit()
     return {
-        "clips": N_CLIPS,
+        "clips": n_clips,
         "stream_elapsed_sec": round(elapsed, 3),
-        "clips_per_sec": round(N_CLIPS / elapsed, 1),
+        "clips_per_sec": round(n_clips / elapsed, 1),
         "exactly_once_audit": audit["consistent"] and audit["unique_batch_ids"],
         "n_batches": audit["n_batches"],
     }
@@ -130,25 +142,23 @@ def bench_streaming(spark, workdir: str) -> dict:
     swings ~2× between windows (BENCH/BASELINE.md), and best-of-2 keeps one
     noisy window from defining the recorded headline."""
     from engine.audio import extract_audio_features_direct
-    from engine.streams import iceberg_stream_data_dir, write_clips_iceberg
+    from engine.streams import write_clips_iceberg
 
     # the clip topic is produced AS an Iceberg v2 table (BASELINE.json
-    # metric: "the audio+transcript Iceberg stream") — same parquet bytes as
-    # a plain dir, plus manifest/snapshot commits; the stream source is the
-    # manifest-validated data/ dir (read_clip_stream_iceberg's plan)
+    # metric: "the audio+transcript Iceberg stream") and streamed through
+    # its snapshot tail
     table = write_clips_iceberg(os.path.join(workdir, "clips_iceberg"),
                                 N_CLIPS, n_files=24, seed=42,
                                 files_per_snapshot=6,
                                 jitter_ms=30_000, max_dur_ms=600)
-    clips_dir = iceberg_stream_data_dir(table)
 
     # warmup: python worker spawn + codegen outside the measured window
     extract_audio_features_direct(
-        spark.read.parquet(clips_dir).limit(256)
+        table.read(spark).limit(256)
     ).write.format("noop").mode("overwrite").save()
 
     runs = [
-        _stream_once(spark, clips_dir, os.path.join(workdir, f"run{i}"))
+        _stream_once(spark, table, os.path.join(workdir, f"run{i}"))
         for i in range(2)
     ]
     best = max(runs, key=lambda r: r["clips_per_sec"])
@@ -162,17 +172,10 @@ def bench_backfill(spark, workdir: str) -> dict:
     """Day-pruned streamed backfill — the partitioned 10^12-clip deployment
     shape (round-5 flagship): a 2-day days(event_ts)-partitioned Iceberg
     topic, ONE day streamed through the same decode + window + exactly-once
-    pipeline via the validated pruned glob source. Reports pruned-day
+    pipeline via the partition-filtered tail. Reports pruned-day
     throughput plus the file-pruning ratio (files_read / files_total — at
     a 3-year topic this ratio is ~1/1000)."""
-    from engine.audio import extract_audio_features_direct
-    from engine.sink import ParquetLedgerSink
-    from engine.streams import (
-        iceberg_stream_source_path,
-        read_clip_stream,
-        write_clips_iceberg,
-    )
-    from engine.windows import tumbling_agg
+    from engine.streams import write_clips_iceberg
 
     n = max(N_CLIPS // 2, 2000)
     table = write_clips_iceberg(
@@ -182,82 +185,15 @@ def bench_backfill(spark, workdir: str) -> dict:
         partition_by=["days(event_ts)"],
     )
     live = table.plan_files()
-    days = sorted({f.partition["event_ts_day"] for f in live})
-    day = days[1]
+    day = sorted({f.partition["event_ts_day"] for f in live})[1]
     flt = {"event_ts_day": day}
-    planned = table.plan_files(partition_filter=flt)
-    path, _recursive = iceberg_stream_source_path(table, flt)
-    n_day = sum(f.record_count for f in planned)
-
-    rundir = os.path.join(workdir, "bf")
-    sink = ParquetLedgerSink(os.path.join(rundir, "out"),
-                             event_ts_col="window_start")
-    src = read_clip_stream(spark, path, max_files_per_trigger=4,
-                           watermark=None, recursive=True)
-    feats = extract_audio_features_direct(src).withWatermark(
-        "event_ts", "60 seconds")
-    agg = tumbling_agg(feats, "event_ts", "speaker_id", "rms", "10 minutes")
-    t0 = time.time()
-    q = (
-        agg.writeStream.outputMode("append")
-        .option("checkpointLocation", os.path.join(rundir, "ckpt"))
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    elapsed = time.time() - t0
-    audit = sink.audit()
+    run = _stream_once(spark, table, os.path.join(workdir, "bf"),
+                       partition_filter=flt)
     return {
         "day": int(day),
-        "clips": n_day,
-        "files_read": len(planned),
+        "files_read": len(table.plan_files(partition_filter=flt)),
         "files_total": len(live),
-        "stream_elapsed_sec": round(elapsed, 3),
-        "clips_per_sec": round(n_day / elapsed, 1),
-        "exactly_once_audit": audit["consistent"] and audit["unique_batch_ids"],
-    }
-
-
-def bench_tail(spark, workdir: str) -> dict:
-    """Snapshot-tail source leg (round 5): the SAME Iceberg topic
-    bench_streaming produced, streamed via the iceberg_tail Python Data
-    Source (manifest-planned offsets, live-follow capable) through the
-    payload-direct decode + window + exactly-once pipeline. Comparable
-    head-to-head with streaming["clips_per_sec"]; includes the one-time
-    python-runner init in batch 0 (amortized on long-running streams)."""
-    from engine.audio import extract_audio_features_direct
-    from engine.iceberg import IcebergTable
-    from engine.sink import ParquetLedgerSink
-    from engine.streams import read_clip_stream_tail
-    from engine.windows import tumbling_agg
-
-    table = IcebergTable(os.path.join(workdir, "clips_iceberg"))
-    rundir = os.path.join(workdir, "tail")
-    sink = ParquetLedgerSink(os.path.join(rundir, "out"),
-                             event_ts_col="window_start")
-    src = read_clip_stream_tail(
-        spark, table, max_files_per_trigger=4, watermark=None,
-        progress_dir=os.path.join(rundir, "progress"),
-        exclude_columns=["bytes"], include_file_path=True)
-    feats = extract_audio_features_direct(src).withWatermark(
-        "event_ts", "60 seconds")
-    agg = tumbling_agg(feats, "event_ts", "speaker_id", "rms", "10 minutes")
-    t0 = time.time()
-    q = (agg.writeStream.outputMode("append")
-         .option("checkpointLocation", os.path.join(rundir, "ckpt"))
-         .foreachBatch(sink.foreach_batch())
-         .start())
-    q.processAllAvailable()
-    q.stop()
-    elapsed = time.time() - t0
-    audit = sink.audit()
-    return {
-        "clips": N_CLIPS,
-        "stream_elapsed_sec": round(elapsed, 3),
-        "clips_per_sec": round(N_CLIPS / elapsed, 1),
-        "exactly_once_audit": audit["consistent"] and audit["unique_batch_ids"],
-        "n_batches": audit["n_batches"],
+        **run,
     }
 
 
@@ -288,7 +224,6 @@ def main() -> None:
         except Exception:
             hw_queries = None
         streaming = bench_streaming(spark, workdir)
-        tail = bench_tail(spark, workdir)
         backfill = bench_backfill(spark, workdir)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
@@ -311,7 +246,6 @@ def main() -> None:
         "sf": float(SF_DIR.rstrip("/").split("sf")[-1]),
         "cpus": CPUS,
         "streaming": streaming,
-        "streaming_tail_source": tail,
         "backfill_day_pruned": backfill,
         "batch_total_sec": round(sum(queries.values()), 3),
         "hw_adjacent_iters_per_sec": hw_adjacent,

@@ -280,14 +280,15 @@ def _to_time_ordinal(cond, unit: str):
         if isinstance(v, int):
             return v
         if isinstance(v, str):
-            v = (_dt.datetime.fromisoformat(v) if unit == "hour"
-                 else _dt.date.fromisoformat(v[:10]))
+            v = _dt.datetime.fromisoformat(v)
         if hasattr(v, "to_pydatetime"):  # pandas Timestamp
             v = v.to_pydatetime()
+        if isinstance(v, _dt.datetime) and v.tzinfo is not None:
+            # ordinals count UTC units: a tz-aware instant may fall on
+            # another UTC day (month, year) than its local date
+            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
         if unit == "hour":
             if isinstance(v, _dt.datetime):
-                if v.tzinfo is not None:
-                    v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
                 delta = v - _dt.datetime(1970, 1, 1)
                 return int(delta.total_seconds() // 3600)
             raise TypeError(
@@ -2935,9 +2936,7 @@ class IcebergTable:
         ``__p_col=value`` directory segments (Spark URL-encodes them;
         ``__HIVE_DEFAULT_PARTITION__`` means null).  Partitioned files KEEP
         their ``__p_*`` directory placement under ``data/`` — the Iceberg
-        on-disk layout, which is also what lets the pruned STREAM source
-        (engine/streams.py iceberg_stream_source_path) glob exactly one
-        partition's files."""
+        on-disk layout."""
         from urllib.parse import unquote
 
         import pyarrow.parquet as pq
@@ -2986,6 +2985,17 @@ class IcebergTable:
         return infos
 
 
+def iceberg_table_at(location) -> IcebergTable | None:
+    """The Iceberg table ``location`` names — an ``IcebergTable`` passes
+    through, a path holding ``metadata/version-hint.text`` opens — or None
+    when the path is not an Iceberg table (e.g. a plain parquet dir)."""
+    if isinstance(location, IcebergTable):
+        return location
+    if os.path.exists(os.path.join(location, "metadata", "version-hint.text")):
+        return IcebergTable(location)
+    return None
+
+
 # ---------------------------------------------------------------------------
 # Exactly-once streaming sink (foreachBatch → Iceberg snapshot per batch)
 # ---------------------------------------------------------------------------
@@ -2997,9 +3007,12 @@ class IcebergSink:
     engine/sink.py — same protocol, Iceberg metadata instead of the JSON
     ledger). Idempotency: each snapshot's summary carries
     ``streaming-batch-id``; a replayed ``batchId`` that is already in the
-    snapshot log is a no-op, so restarts never double-commit (T7)."""
+    snapshot log is a no-op, so restarts never double-commit (T7). The
+    summary also carries ``streaming-query-id``: a batch id committed by a
+    different query (a reused table with a fresh checkpoint) is refused."""
 
     BATCH_KEY = "streaming-batch-id"
+    QUERY_KEY = "streaming-query-id"
 
     def __init__(self, location: str, schema=None,
                  partition_by: list[str] | None = None):
@@ -3019,22 +3032,27 @@ class IcebergSink:
                                        partition_by=self.partition_by)
         return self._table
 
-    def committed_batch_ids(self) -> set[int]:
-        t = self.table()
-        return {
-            int(s["summary"][self.BATCH_KEY])
-            for s in t.snapshots() if self.BATCH_KEY in s["summary"]
-        }
-
     def write_batch(self, batch_df: DataFrame, batch_id: int,
                     mode: str = "append") -> bool:
+        from engine.sink import refuse_foreign_replay, streaming_query_id
+
         table = self.table(batch_df)
-        if int(batch_id) in self.committed_batch_ids():
-            return False  # replay after restart — already committed
-        table.write_dataframe(
-            batch_df, mode=mode,
-            summary_extra={self.BATCH_KEY: int(batch_id)},
-        )
+        query_id = streaming_query_id(batch_df)
+        prior = [s["summary"] for s in table.snapshots()
+                 if int(s["summary"].get(self.BATCH_KEY, -1)) == batch_id]
+        if prior:
+            refuse_foreign_replay(self.location, batch_id,
+                                  prior[-1].get(self.QUERY_KEY), query_id)
+            # replay after restart — already committed. Still run the
+            # frame: a stateful query's state stores commit only when
+            # the batch's plan executes, and Spark refuses to go on
+            # from a batch whose stores never committed.
+            batch_df.write.format("noop").mode("overwrite").save()
+            return False
+        extra = {self.BATCH_KEY: int(batch_id)}
+        if query_id:
+            extra[self.QUERY_KEY] = query_id
+        table.write_dataframe(batch_df, mode=mode, summary_extra=extra)
         return True
 
     def foreach_batch(self, mode: str = "append"):

@@ -72,105 +72,87 @@ def cmd_producer(args) -> dict:
     return out
 
 
+def _partition_filter(table, args) -> dict | None:
+    """The ``--day``/``--day-range``/``--partition`` pruning filter for an
+    Iceberg topic, validated as CLI input: each failure exits with a usage
+    error, and so does a filter that matches no committed file (streaming
+    zero rows would look like success)."""
+    if not (args.day or args.day_range or args.partition):
+        return None
+    if table is None:
+        raise SystemExit(
+            "--day/--day-range/--partition need a partitioned Iceberg "
+            "topic (producer --iceberg --partition-days)")
+    flt = {}
+    if args.day or args.day_range:
+        day_fields = [f["name"] for f in table.spec_fields()
+                      if f.get("transform") == "day"]
+        if not day_fields:
+            raise SystemExit(
+                f"topic {table.location!r} has no days() partition field "
+                f"(spec: {[f['name'] for f in table.spec_fields()]})")
+        flt[day_fields[0]] = (tuple(args.day_range) if args.day_range
+                              else args.day)
+    # coerce by the table's PARTITION VALUE types — a blind int() would
+    # turn an identity-string value like speaker '123' into an int that
+    # matches nothing
+    ptypes = table._partition_col_types()
+    for term in args.partition or ():
+        if "=" not in term:
+            raise SystemExit(f"--partition needs FIELD=VALUE, got {term!r}")
+        k, v = term.split("=", 1)
+        t_ = ptypes.get(k)  # unknown field → normalize raises
+        if t_ in ("int", "long"):
+            try:
+                v = int(v)  # ordinals / identity ints
+            except ValueError:
+                pass  # ISO strings for time transforms
+        elif t_ in ("float", "double"):
+            try:
+                v = float(v)
+            except ValueError:
+                raise SystemExit(
+                    f"--partition {term!r}: {k} is a {t_} partition field, "
+                    f"{v!r} is not a number") from None
+        flt[k] = v
+    if not table.plan_files(partition_filter=flt):
+        raise SystemExit(
+            f"partition filter {flt!r} matches no committed file of "
+            f"{table.location!r} — nothing to stream")
+    return flt
+
+
 def cmd_pipeline(args) -> dict:
+    from engine.iceberg import iceberg_table_at
     from engine.session import get_spark
     from engine.sink import ParquetLedgerSink
-    from engine.streams import read_clip_stream, run_window_pipeline
+    from engine.streams import read_clip_source, run_window_pipeline
 
+    # An Iceberg topic streams through the snapshot tail; --day /
+    # --day-range / --partition turn the run into a pruned streamed
+    # backfill that plans only the matching partitions' files.
+    table = iceberg_table_at(args.clips)
+    day_filter = _partition_filter(table, args)
     spark = get_spark("pipeline", cores=args.cores,
                       shuffle_partitions=args.shuffle_partitions)
     ckpt = args.checkpoint or os.path.join(args.out, "_checkpoint")
-
-    # Iceberg source auto-detect: when --clips is an Iceberg table
-    # (metadata/version-hint.text present), validate the append-only
-    # invariant via the manifest planner and stream its validated source
-    # path — the north rule's "reads an Iceberg table ... as a
-    # rate-controlled stream". --day / --day-range turn the run into a
-    # day-pruned streamed backfill over a days(event_ts)-partitioned topic:
-    # only the matching partitions' files are listed or replayed.
-    recursive = False
-    day_filter = None
-    if args.day or args.day_range or getattr(args, "partition", None):
-        if not os.path.exists(
-                os.path.join(args.clips, "metadata", "version-hint.text")):
-            raise SystemExit(
-                "--day/--day-range/--partition need a partitioned Iceberg "
-                "topic (producer --iceberg --partition-days)")
-    tail_table = None
-    if os.path.exists(os.path.join(args.clips, "metadata", "version-hint.text")):
-        from engine.iceberg import IcebergTable
-        from engine.streams import iceberg_stream_source_path
-
-        table = IcebergTable(args.clips)
-        if args.day or args.day_range:
-            day_fields = [f["name"] for f in table.spec_fields()
-                          if f.get("transform") == "day"]
-            if not day_fields:
-                raise SystemExit(
-                    f"topic {args.clips!r} has no days() partition field "
-                    "(spec: "
-                    f"{[f['name'] for f in table.spec_fields()]})")
-            cond = (tuple(args.day_range) if args.day_range else args.day)
-            day_filter = {day_fields[0]: cond}
-        if getattr(args, "partition", None):
-            # coerce by the table's PARTITION VALUE types — a blind int()
-            # would turn an identity-string value like speaker '123' into
-            # an int that matches nothing (a silent data miss on the tail
-            # path, which has no matches-no-files guard)
-            ptypes = table._partition_col_types()
-            extra = {}
-            for term in args.partition:
-                if "=" not in term:
-                    raise SystemExit(
-                        f"--partition needs FIELD=VALUE, got {term!r}")
-                k, v = term.split("=", 1)
-                t_ = ptypes.get(k)  # unknown field → normalize raises
-                if t_ in ("int", "long"):
-                    try:
-                        v = int(v)  # ordinals / identity ints
-                    except ValueError:
-                        pass  # ISO strings for time transforms
-                elif t_ in ("float", "double"):
-                    v = float(v)
-                extra[k] = v
-            day_filter = {**(day_filter or {}), **extra}
-        if getattr(args, "tail", False):
-            # snapshot-tail source: manifest-planned, no path rewrite —
-            # the query keeps following commits made while it runs
-            tail_table = table
-        else:
-            args.clips, recursive = iceberg_stream_source_path(
-                table, partition_filter=day_filter)
-    elif getattr(args, "tail", False):
-        raise SystemExit("--tail requires an Iceberg topic (producer --iceberg)")
+    # payload-direct decode reads payloads disk→numpy itself; the speech
+    # features decode from bytes in the frame
+    direct = (args.decode and args.payload_direct
+              and args.features != "speech")
 
     def make_source(watermark):
-        from engine.streams import read_clip_stream, read_clip_stream_tail
-
-        if tail_table is not None:
-            decode = bool(getattr(args, "decode", False))
-            direct = bool(getattr(args, "payload_direct", False) and decode)
-            # a python data source gets NO Catalyst column pruning — heavy
-            # columns the pipeline never reads must be excluded HERE or
-            # they cross the Arrow bridge at the ~750 MB/s transfer
-            # ceiling. bytes ride only for in-frame decode (non-direct);
-            # payload-direct instead carries the backing file path and the
-            # decode stage reads payloads disk→numpy itself.
-            heavy = {"bytes", "transcript"}
-            needed = {args.key, args.value} | ({"bytes"}
-                                               if decode and not direct
-                                               else set())
-            return read_clip_stream_tail(
-                spark, tail_table,
-                max_files_per_trigger=args.max_files_per_trigger,
-                watermark=watermark, partition_filter=day_filter,
-                progress_dir=os.path.join(ckpt, "_tail_progress"),
-                exclude_columns=sorted(heavy - needed) or None,
-                include_file_path=direct)
-        return read_clip_stream(
-            spark, args.clips,
+        # a python data source gets NO Catalyst column pruning — heavy
+        # columns the pipeline never reads must be excluded at the tail or
+        # they cross the Arrow bridge at the ~750 MB/s transfer ceiling
+        needed = {args.key, args.value} | (
+            {"bytes"} if args.decode and not direct else set())
+        return read_clip_source(
+            spark, args.clips, os.path.join(ckpt, "_tail_progress"),
             max_files_per_trigger=args.max_files_per_trigger,
-            watermark=watermark, recursive=recursive)
+            watermark=watermark, partition_filter=day_filter,
+            exclude_columns=sorted({"bytes", "transcript"} - needed) or None,
+            include_file_path=direct)
 
     def extractor(sdf):
         from engine.audio import (
@@ -185,18 +167,16 @@ def cmd_pipeline(args) -> dict:
         fe = extract_audio_features_direct if args.payload_direct else extract_audio_features
         return fe(sdf, spectral=(args.features == "spectral"))
 
+    def read_input():
+        if table is not None:
+            return table.read(spark, partition_filter=day_filter)
+        return spark.read.parquet(args.clips)
+
     if args.decode and args.warmup:
         # Spawn python workers + compile codegen before the clock starts, so
         # sustained throughput is measured, not JVM/worker cold start.
-        if tail_table is not None:
-            warm = tail_table.read(
-                spark, partition_filter=day_filter).limit(256)
-        else:
-            wreader = spark.read
-            if recursive:
-                wreader = wreader.option("recursiveFileLookup", "true")
-            warm = wreader.parquet(args.clips).limit(256)
-        extractor(warm).write.format("noop").mode("overwrite").save()
+        extractor(read_input().limit(256)).write.format("noop") \
+            .mode("overwrite").save()
 
     t0 = time.time()
     if args.decode or args.stateful:
@@ -260,19 +240,10 @@ def cmd_pipeline(args) -> dict:
             window_kind=args.window, width=args.width, slide=args.slide,
             gap=args.gap, key_col=args.key, value_col=args.value,
             watermark=args.watermark,
-            max_files_per_trigger=args.max_files_per_trigger,
-            sink=custom_sink, recursive=recursive,
-            source_df=(make_source(args.watermark)
-                       if tail_table is not None else None),
+            sink=custom_sink, source_df=make_source(args.watermark),
         )
     elapsed = time.time() - t0
-    if tail_table is not None:
-        n_in = tail_table.read(spark, partition_filter=day_filter).count()
-    else:
-        reader = spark.read
-        if recursive:
-            reader = reader.option("recursiveFileLookup", "true")
-        n_in = reader.parquet(args.clips).count()
+    n_in = read_input().count()
     audit = sink.audit()
     try:
         out_rows = sink.read_committed(spark).count()
@@ -281,7 +252,7 @@ def cmd_pipeline(args) -> dict:
     spark.stop()
     return {
         "job": "pipeline", "window": args.window, "stateful": args.stateful,
-        "source": "tail" if tail_table is not None else "file",
+        "source": "tail" if table is not None else "file",
         "day_filter": {k: str(v) for k, v in day_filter.items()} if day_filter else None,
         "decode": args.decode,
         "input_clips": n_in, "output_rows": out_rows,
@@ -293,32 +264,22 @@ def cmd_pipeline(args) -> dict:
 
 
 def cmd_join(args) -> dict:
+    from engine.iceberg import iceberg_table_at
     from engine.session import get_spark
     from engine.streams import run_join_pipeline
 
     spark = get_spark("join", cores=args.cores,
                       shuffle_partitions=args.shuffle_partitions)
     ckpt = args.checkpoint or os.path.join(args.out, "_checkpoint")
-    tail_table = None
-    if getattr(args, "tail", False):
-        from engine.iceberg import IcebergTable
-
-        if not os.path.exists(
-                os.path.join(args.clips, "metadata", "version-hint.text")):
-            raise SystemExit("--tail requires an Iceberg topic "
-                             "(producer --iceberg)")
-        tail_table = IcebergTable(args.clips)
     t0 = time.time()
     _, sink = run_join_pipeline(
         spark, args.clips, args.out, ckpt, watermark=args.watermark,
         ttl=args.ttl, max_files_per_trigger=args.max_files_per_trigger,
-        tail_table=tail_table,
     )
     elapsed = time.time() - t0
-    if tail_table is not None:
-        n_in = tail_table.read(spark).count()
-    else:
-        n_in = spark.read.parquet(args.clips).count()
+    table = iceberg_table_at(args.clips)
+    n_in = (table.read(spark) if table is not None
+            else spark.read.parquet(args.clips)).count()
     audit = sink.audit()
     try:
         out_rows = sink.read_committed(spark).count()
@@ -529,12 +490,12 @@ def cmd_lineage(args) -> dict:
     offset range (tail offsets = input-table append-log coordinates),
     plan-time watermark, output rows / output Iceberg snapshot per batch.
     Durable-metadata only: no Spark session, works after the query died."""
+    from engine.iceberg import iceberg_table_at
     from engine.lineage import batch_lineage
 
     sink = None
     if args.sink:
-        if os.path.exists(os.path.join(args.sink, "metadata",
-                                       "version-hint.text")):
+        if iceberg_table_at(args.sink) is not None:
             from engine.iceberg import IcebergSink
 
             sink = IcebergSink(args.sink)
@@ -693,7 +654,10 @@ def build_parser() -> argparse.ArgumentParser:
 
     for name, fn in (("pipeline", cmd_pipeline), ("join", cmd_join)):
         p = sub.add_parser(name)
-        p.add_argument("--clips", required=True, help="clip topic dir (producer output)")
+        p.add_argument("--clips", required=True,
+                       help="clip topic (producer output): an Iceberg topic "
+                            "streams through the snapshot tail, a plain "
+                            "parquet dir through the file source")
         p.add_argument("--out", required=True, help="sink dir (data + ledger)")
         p.add_argument("--checkpoint", default=None)
         p.add_argument("--watermark", default="60 seconds")
@@ -740,16 +704,8 @@ def build_parser() -> argparse.ArgumentParser:
                                 "partition field (repeatable; composes with "
                                 "--day), e.g. event_ts_hour=2024-01-01T06:00 "
                                 "or speaker_id_bucket=c42")
-            p.add_argument("--tail", action="store_true",
-                           help="read the Iceberg topic via the snapshot-"
-                                "tail source (manifest-planned, follows "
-                                "live commits) instead of the validated "
-                                "file source")
         else:
             p.add_argument("--ttl", default="10 minutes")
-            p.add_argument("--tail", action="store_true",
-                           help="read the Iceberg topic via the snapshot-"
-                                "tail source on both join sides")
         p.set_defaults(fn=fn)
     return ap
 

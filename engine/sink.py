@@ -45,6 +45,31 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 
+def streaming_query_id(batch_df: DataFrame) -> str | None:
+    """Id of the streaming query whose ``foreachBatch`` is writing
+    ``batch_df`` — persisted in the checkpoint, so it is the same across
+    restarts of one query and new for a fresh checkpoint — or None outside
+    a stream. Sinks record it with each batch (see
+    :func:`refuse_foreign_replay`)."""
+    return batch_df.sparkSession.sparkContext.getLocalProperty(
+        "sql.streaming.queryId")
+
+
+def refuse_foreign_replay(out: str, batch_id: int,
+                          recorded_query: str | None,
+                          query_id: str | None) -> None:
+    """Raise when ``batch_id`` is already committed to sink ``out`` by a
+    different streaming query: a reused output with a fresh checkpoint
+    restarts batch ids at 0, and skipping its batches as replays would
+    silently drop its rows."""
+    if query_id and recorded_query and recorded_query != query_id:
+        raise RuntimeError(
+            f"sink {out!r} already has batch {batch_id} from streaming "
+            f"query {recorded_query}, not {query_id} — reusing an output "
+            "dir with a new checkpoint? Point the query at a fresh out_dir "
+            "or reuse the original checkpoint.")
+
+
 @dataclass
 class LedgerRecord:
     batch_id: int
@@ -130,13 +155,18 @@ class ParquetLedgerSink:
         if mode not in ("append", "upsert", "overwrite"):
             raise ValueError(f"unknown save mode {mode!r}")
         files = sorted(batch_df.inputFiles())
+        query_id = streaming_query_id(batch_df)
         if self.is_committed(batch_id):
             # Exactly-once short circuit (T7) — but a reused out_dir with a
             # FRESH checkpoint restarts batch ids at 0 and would silently
-            # no-op every write. A true replay re-reads the same input files;
-            # anything else is an out_dir/checkpoint mismatch → fail loudly.
+            # no-op every write. A true replay comes from the same query and
+            # re-reads the same input files; anything else is an
+            # out_dir/checkpoint mismatch → fail loudly.
             with open(self._ledger_path(batch_id)) as fh:
                 rec = json.load(fh)
+            refuse_foreign_replay(self.out_dir, batch_id,
+                                  rec.get("lineage", {}).get("query_id"),
+                                  query_id)
             recorded = rec.get("lineage", {}).get("input_files")
             if recorded is not None and files and recorded != files:
                 rec_set, now_set = set(recorded), set(files)
@@ -181,6 +211,10 @@ class ParquetLedgerSink:
                               "from the source (retention) — treating as a "
                               "benign replay and skipping the batch",
                               RuntimeWarning)
+            # Still run the frame: a stateful query's state stores commit
+            # only when the batch's plan executes, and Spark refuses to go
+            # on from a batch whose stores never committed.
+            batch_df.write.format("noop").mode("overwrite").save()
             return False
         tmp = os.path.join(self.data_dir, f".tmp-{batch_id}-{uuid.uuid4().hex[:8]}")
         final = self._batch_dir(batch_id)
@@ -188,6 +222,8 @@ class ParquetLedgerSink:
             "input_files": files,
             "num_input_files": len(files),
         }
+        if query_id:
+            lineage["query_id"] = query_id
         batch_df.write.mode("overwrite").parquet(tmp)
         partitions = self._partition_metrics(tmp)
         row_count = sum(p["row_count"] for p in partitions)

@@ -34,10 +34,9 @@ from engine.state import _norm_key_sql, _ts_us, _us_ts, dur_ms
 
 
 class JoinSpec:
-    """Column/type/codec plan for the symmetric hash join, shared by the
-    ``applyInPandasWithState`` fn below and the ``transformWithState``
-    processor (engine.state_tws.TwsJoinProcessor).  Instances hold only
-    plain data and are pickled to executors."""
+    """Column/type/codec plan for the symmetric hash join run by the
+    ``applyInPandasWithState`` fn below.  Instances hold only plain data
+    and are pickled to executors."""
 
     def __init__(self, left: DataFrame, right: DataFrame, key_col: str,
                  ts_col: str, ttl: str, left_ts_name: str, right_ts_name: str):

@@ -3,14 +3,21 @@
 Replaces the reference's Kafka source chain (``KafkaSource`` + Avro decode,
 ``TransactionFraudExample.java:52-57``; paced producer
 ``TransactionEventSimulator.java:27,55`` at 1 batch / 5 ms) with Structured
-Streaming over the materialized clip table:
+Streaming over the materialized clip table. :func:`read_clip_source` picks
+the source from the input, in one place:
 
-- **File-paced replay**: the table is written as many small parquet files;
-  ``readStream.parquet(dir)`` + ``maxFilesPerTrigger`` replays them in
-  deterministic file order, N files per micro-batch. Checkpointing tracks the
-  file offsets, so kill/restart resumes exactly (T3).
-- **Row-paced replay** (``rate-micro-batch`` joined to an indexed snapshot) is
-  available for fixed rows/sec pacing, at the cost of a join per batch.
+- **Iceberg topic** (an ``IcebergTable``, or a path holding
+  ``metadata/version-hint.text``): the snapshot tail (engine/tail.py,
+  :func:`read_clip_stream_tail`). Offsets are (snapshot, position) points in
+  the table's commit log, files are planned from manifests, partition
+  filters prune at the manifest level, and commits made while the query
+  runs keep flowing.
+- **Plain parquet dir**: ``readStream.parquet(dir)`` + ``maxFilesPerTrigger``
+  replays the files in deterministic order, N files per micro-batch
+  (:func:`read_clip_stream`).
+
+Either way the checkpoint tracks the source offsets, so kill/restart
+resumes exactly (T3).
 
 The assembled pipeline mirrors ``TransactionFraudExample.run`` (:33-77):
 source → event-time watermark (60 s) → keyed tumbling/sliding/session window
@@ -194,8 +201,8 @@ def write_clips_iceberg(
     (same bytes as :func:`write_clips_stream_dir`); metadata commits group
     them ``files_per_snapshot`` at a time into append snapshots. Batch
     readers plan via manifests (``IcebergTable.read``); the rate-controlled
-    stream replays the same committed files in arrival order via
-    :func:`read_clip_stream_iceberg`. Returns the ``IcebergTable``.
+    stream tails the same commits in arrival order via
+    :func:`read_clip_stream_tail`. Returns the ``IcebergTable``.
 
     ``partition_by`` (e.g. ``["days(event_ts)"]`` — the 10^12-clip topic's
     deployment shape; identity/bucket/truncate terms also accepted) lays
@@ -269,151 +276,6 @@ def write_clips_iceberg(
     return table
 
 
-_GLOB_UNSAFE = set("*?[]{},\\")
-
-
-def iceberg_stream_source_path(table, partition_filter: dict | None = None
-                               ) -> tuple[str, bool]:
-    """Validate an Iceberg clip table for file-source streaming and return
-    ``(source_path, recursive)`` for :func:`read_clip_stream`.
-
-    The file source replays whatever sits under the path, so exactness
-    requires planned files == on-disk files there.  Three layouts:
-
-    - **unpartitioned**: every live file sits flat in ``data/`` exactly
-      once (files are moved in before their snapshot commits) — returns
-      ``data/`` itself, non-recursive.
-    - **partitioned, no filter**: files live in ``__p_field=value/``
-      subdirs — returns ``data/`` with ``recursiveFileLookup`` (partition
-      values stay IN the files per the Iceberg layout, so directory
-      discovery is unnecessary).
-    - **partitioned + partition_filter**: manifest-level pruning picks the
-      matching partition dirs; returns a per-level brace glob (Hadoop glob
-      alternation) covering EXACTLY those dirs — the day-pruned streamed
-      backfill never lists, opens, or replays any other day's files.
-      The pruned dir set must be rectangular across levels (a glob is a
-      cross product) and each matched dir must hold only planned files;
-      both are validated here, failing fast rather than over-replaying."""
-    from engine.iceberg import IcebergTable
-
-    if isinstance(table, str):
-        table = IcebergTable(table)
-    planned = {f.file_path for f in
-               table.plan_files(partition_filter=partition_filter)}
-    spec = table.spec_fields()
-
-    def check_exact(on_disk: set[str], scope: str) -> None:
-        if planned != on_disk:
-            raise ValueError(
-                f"iceberg table {table.location!r} is not append-only-clean "
-                f"under {scope}: {len(on_disk - planned)} uncommitted and "
-                f"{len(planned - on_disk)} missing data files — stream "
-                "requires planned files == on-disk contents"
-            )
-
-    if not spec:
-        if partition_filter:
-            raise ValueError("partition_filter on an unpartitioned table")
-        on_disk = {
-            os.path.join(table.data_dir, n)
-            for n in os.listdir(table.data_dir) if n.endswith(".parquet")
-        }
-        check_exact(on_disk, "data/")
-        return table.data_dir, False
-
-    if partition_filter is None:
-        on_disk = {
-            os.path.join(root, n)
-            for root, _dirs, names in os.walk(table.data_dir)
-            for n in names if n.endswith(".parquet")
-        }
-        check_exact(on_disk, "data/ (recursive)")
-        return table.data_dir, True
-
-    if not planned:
-        raise ValueError(
-            f"partition_filter {partition_filter!r} matches no files — "
-            "nothing to stream"
-        )
-    dirs = {os.path.dirname(p) for p in planned}
-    on_disk = {
-        os.path.join(d, n)
-        for d in dirs for n in os.listdir(d) if n.endswith(".parquet")
-    }
-    check_exact(on_disk, "the pruned partition dirs")
-    rels = sorted(os.path.relpath(d, table.data_dir) for d in dirs)
-    comps = [r.split(os.sep) for r in rels]
-    depth = len(comps[0])
-    level_vals = [sorted({c[j] for c in comps}) for j in range(depth)]
-    for vals in level_vals:
-        for v in vals:
-            if _GLOB_UNSAFE & set(v):
-                raise ValueError(
-                    f"partition dir {v!r} contains glob metacharacters — "
-                    "stream this partition via its literal dir path instead"
-                )
-    # a glob is the cross product of its levels; refuse non-rectangular
-    # prunes (would silently replay partitions outside the filter)
-    from itertools import product
-
-    rect = {os.sep.join(t) for t in product(*level_vals)}
-    matched = {
-        r for r in (
-            os.path.relpath(root, table.data_dir)
-            for root, _dirs, names in os.walk(table.data_dir)
-            if any(n.endswith(".parquet") for n in names))
-        if r in rect
-    }
-    if matched != set(rels):
-        raise ValueError(
-            f"partition filter prunes a non-rectangular dir set "
-            f"({sorted(matched - set(rels))} also match the glob) — "
-            "stream per partition dir instead"
-        )
-    glob_parts = [
-        vals[0] if len(vals) == 1 else "{" + ",".join(vals) + "}"
-        for vals in level_vals
-    ]
-    return os.path.join(table.data_dir, *glob_parts), True
-
-
-def iceberg_stream_data_dir(table) -> str:
-    """Back-compat wrapper: the validated stream source path for the whole
-    table (see :func:`iceberg_stream_source_path`). Only valid for
-    unpartitioned tables, where the path needs no recursive lookup."""
-    path, recursive = iceberg_stream_source_path(table)
-    if recursive:
-        raise ValueError(
-            "partitioned table: use iceberg_stream_source_path() / "
-            "read_clip_stream_iceberg(), which carry the recursive-lookup "
-            "flag the file source needs for __p_*=value subdirs"
-        )
-    return path
-
-
-def read_clip_stream_iceberg(
-    spark: SparkSession,
-    table,
-    max_files_per_trigger: int = 1,
-    watermark: str = "60 seconds",
-    ts_col: str = "event_ts",
-    partition_filter: dict | None = None,
-) -> DataFrame:
-    """Rate-controlled stream over an Iceberg clip table (see
-    :func:`iceberg_stream_source_path` for why the file source over the
-    validated path is exact). ``partition_filter`` streams ONLY the
-    matching partitions' files — the day-pruned streamed backfill over a
-    ``days(event_ts)``-partitioned topic. With the Iceberg runtime jar
-    present, ``readStream.format("iceberg")`` replaces this source behind
-    the same table layout."""
-    path, recursive = iceberg_stream_source_path(
-        table, partition_filter=partition_filter)
-    return read_clip_stream(spark, path,
-                            max_files_per_trigger=max_files_per_trigger,
-                            watermark=watermark, ts_col=ts_col,
-                            recursive=recursive)
-
-
 def read_clip_stream_tail(
     spark: SparkSession,
     table,
@@ -427,12 +289,11 @@ def read_clip_stream_tail(
     include_file_path: bool = False,
     max_bytes_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Clip stream over the SNAPSHOT-TAIL source (engine/tail.py) instead
-    of the validated file source: plans from manifests (no directory
-    listing or planned==on-disk restriction), follows commits made WHILE
-    the query runs, prunes partitions at the manifest level with no
-    rectangularity requirement, and records exact per-batch lineage as
-    (snapshot, position) offsets.  ``progress_dir`` should live with the
+    """Clip stream over an Iceberg topic via the SNAPSHOT-TAIL source
+    (engine/tail.py): plans from manifests (uncommitted files are
+    invisible), follows commits made WHILE the query runs, prunes
+    partitions at the manifest level, and records exact per-batch lineage
+    as (snapshot, position) offsets.  ``progress_dir`` should live with the
     query's checkpoint dir (restart-safety high-water sidecar);
     ``partition_filter`` uses plan_files semantics (tuples OK — they are
     carried as JSON ranges)."""
@@ -477,20 +338,14 @@ def read_clip_stream(
     max_files_per_trigger: int = 1,
     watermark: str = "60 seconds",
     ts_col: str = "event_ts",
-    recursive: bool = False,
 ) -> DataFrame:
-    """S1 analogue: subscribe to the clip 'topic' from the earliest offset with
-    a bounded out-of-orderness watermark (W2). ``recursive`` turns on
-    ``recursiveFileLookup`` for partitioned (``__p_*=value/``) topic
-    layouts — partition values stay in the files, so no directory
-    inference is needed."""
-    reader = (
+    """S1 analogue over a plain parquet topic dir: subscribe from the
+    earliest offset with a bounded out-of-orderness watermark (W2)."""
+    stream = (
         spark.readStream.schema(CLIP_SCHEMA_DDL)
         .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(dir_path)
     )
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    stream = reader.parquet(dir_path)
     # watermark=None lets callers that insert a mapInPandas stage define the
     # watermark downstream instead (Spark requires it on the aggregation input
     # and forbids redefinition).
@@ -499,53 +354,48 @@ def read_clip_stream(
     return stream
 
 
-def read_clip_stream_paced(
+def read_clip_source(
     spark: SparkSession,
-    dir_path: str,
-    rows_per_batch: int = 1000,
+    clips,
+    progress_dir: str,
+    max_files_per_trigger: int = 1,
     watermark: str | None = "60 seconds",
-    ts_col: str = "event_ts",
+    partition_filter: dict | None = None,
+    exclude_columns: list[str] | None = None,
+    include_file_path: bool = False,
 ) -> DataFrame:
-    """Row-paced replay (S2 pacing analogue): a ``rate-micro-batch`` ticker
-    joined to an arrival-order-indexed snapshot of the clip table, emitting
-    exactly ``rows_per_batch`` clips per micro-batch — the fixed rows/sec
-    equivalent of the simulator's 5 ms-per-batch pacing
-    (``TransactionEventSimulator.java:27,55``).
+    """The clip stream for ``clips``, with the source picked from the input:
+    an Iceberg topic (see :func:`engine.iceberg.iceberg_table_at`) streams
+    through :func:`read_clip_stream_tail`, keeping its restart high-water
+    sidecar in ``progress_dir`` (give it a dir that lives with the query's
+    checkpoint); a plain parquet dir streams through
+    :func:`read_clip_stream`.
 
-    The stream is unbounded (the ticker keeps counting past the table end and
-    the join just stops matching) — callers stop the query once the sink has
-    consumed the table.  Costs a stream-static join per batch, so
-    :func:`read_clip_stream` (file-paced) is the default; this variant exists
-    for rate experiments.  The arrival index is a global sort by
-    ``(event_ts, clip_id)`` — fine at bench scale; at warehouse scale you
-    would persist the index once instead.
-    """
-    from pyspark.sql.window import Window
+    ``exclude_columns`` and ``include_file_path`` only shape the tail: a
+    Python data source gets no Catalyst column pruning, while the file
+    source does, and payload-direct decode reads its
+    ``_metadata.file_path``. ``partition_filter`` needs an Iceberg topic."""
+    from engine.iceberg import iceberg_table_at
 
-    snap = (
-        spark.read.parquet(dir_path)
-        # batch parquet reads surface timestamp_ntz; watermarks need timestamp
-        .withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withColumn(
-            "__idx",
-            F.row_number().over(Window.orderBy(ts_col, "clip_id")) - 1,
-        )
-    )
-    rate = (
-        spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", rows_per_batch)
-        .load()
-        .select(F.col("value").alias("__idx"))
-    )
-    stream = rate.join(snap, on="__idx").drop("__idx")
-    if watermark is not None:
-        stream = stream.withWatermark(ts_col, watermark)
-    return stream
+    table = iceberg_table_at(clips)
+    if table is None:
+        if partition_filter:
+            raise ValueError(
+                f"partition_filter needs an Iceberg topic; {clips!r} is a "
+                "plain parquet dir")
+        return read_clip_stream(spark, clips,
+                                max_files_per_trigger=max_files_per_trigger,
+                                watermark=watermark)
+    return read_clip_stream_tail(
+        spark, table, max_files_per_trigger=max_files_per_trigger,
+        watermark=watermark, partition_filter=partition_filter,
+        progress_dir=progress_dir, exclude_columns=exclude_columns,
+        include_file_path=include_file_path)
 
 
 def run_window_pipeline(
     spark: SparkSession,
-    clips_dir: str,
+    clips,
     out_dir: str,
     checkpoint_dir: str,
     window_kind: str = "tumbling",
@@ -559,25 +409,25 @@ def run_window_pipeline(
     bug_compatible_stdev: bool = False,
     await_termination: bool = True,
     sink=None,
-    recursive: bool = False,
     source_df: DataFrame | None = None,
 ):
     """The flagship streaming job (TransactionFraudExample analogue):
     rate-controlled source → watermark → keyed window agg → exactly-once sink.
 
-    ``sink`` overrides the default ``ParquetLedgerSink`` with any object
-    exposing the same ``foreach_batch``/``audit``/``read_committed``
-    protocol (e.g. ``engine.iceberg.IcebergSink``). ``recursive`` is the
-    partitioned-topic-layout flag (see :func:`read_clip_stream`).
-    ``source_df`` substitutes a prebuilt streaming source (e.g.
-    :func:`read_clip_stream_tail`) — it must already carry its watermark;
-    ``clips_dir``/``max_files_per_trigger``/``recursive`` are ignored.
+    ``clips`` is a plain parquet topic dir or an Iceberg topic (see
+    :func:`read_clip_source`). ``sink`` overrides the default
+    ``ParquetLedgerSink`` with any object exposing the same
+    ``foreach_batch``/``audit``/``read_committed`` protocol (e.g.
+    ``engine.iceberg.IcebergSink``). ``source_df`` substitutes a prebuilt
+    streaming source (e.g. a partition-pruned :func:`read_clip_source`) —
+    it must already carry its watermark; ``clips``/
+    ``max_files_per_trigger`` are ignored.
 
     Returns (StreamingQuery, sink).
     """
-    src = source_df if source_df is not None else read_clip_stream(
-        spark, clips_dir, max_files_per_trigger=max_files_per_trigger,
-        watermark=watermark, recursive=recursive,
+    src = source_df if source_df is not None else read_clip_source(
+        spark, clips, os.path.join(checkpoint_dir, "_tail_progress"),
+        max_files_per_trigger=max_files_per_trigger, watermark=watermark,
     )
     if window_kind == "tumbling":
         agg = tumbling_agg(src, "event_ts", key_col, value_col, width,
@@ -608,7 +458,7 @@ def run_window_pipeline(
 
 def run_multi_width_pipeline(
     spark: SparkSession,
-    clips_dir: str,
+    clips,
     out_root: str,
     checkpoint_root: str,
     widths: tuple[str, ...] = ("10 minutes", "1 hour", "12 hours"),
@@ -617,17 +467,14 @@ def run_multi_width_pipeline(
     watermark: str = "60 seconds",
     max_files_per_trigger: int = 4,
     await_termination: bool = True,
-    tail_table=None,
 ):
     """W4: the reference's three parallel feature groups (10m/1h/12h) fed from
     ONE clip topic — one StreamingQuery per width (each owns its window state
-    and checkpoint), all subscribed to the same source directory, exactly like
-    the three ``card_transactions_*_agg`` groups in the setup notebook
-    (cells 4, 10-13).
-
-    ``tail_table`` subscribes each width to its own snapshot-tail of the
-    Iceberg topic instead (per-width progress sidecars, bytes/transcript
-    pruned at the source — the metadata aggregate never ships payloads).
+    and checkpoint), all subscribed to the same topic, exactly like the three
+    ``card_transactions_*_agg`` groups in the setup notebook (cells 4,
+    10-13). On an Iceberg topic each width tails it with its own progress
+    sidecar, bytes/transcript pruned at the source — the metadata
+    aggregate never ships payloads.
 
     Returns {width_label: (query, sink)}.
     """
@@ -636,21 +483,11 @@ def run_multi_width_pipeline(
     out = {}
     for w in widths:
         lbl = width_label(w)
-        if tail_table is not None:
-            src = read_clip_stream_tail(
-                spark, tail_table,
-                max_files_per_trigger=max_files_per_trigger,
-                watermark=watermark,
-                progress_dir=os.path.join(
-                    checkpoint_root, lbl, "_tail_progress"),
-                exclude_columns=sorted(
-                    {"bytes", "transcript"} - {key_col, value_col}))
-        else:
-            src = read_clip_stream(
-                spark, clips_dir,
-                max_files_per_trigger=max_files_per_trigger,
-                watermark=watermark,
-            )
+        src = read_clip_source(
+            spark, clips, os.path.join(checkpoint_root, lbl, "_tail_progress"),
+            max_files_per_trigger=max_files_per_trigger, watermark=watermark,
+            exclude_columns=sorted(
+                {"bytes", "transcript"} - {key_col, value_col}))
         agg = tumbling_agg(src, "event_ts", key_col, value_col, w)
         sink = ParquetLedgerSink(
             os.path.join(out_root, lbl), event_ts_col="window_start"
@@ -684,7 +521,7 @@ def transcript_features(df: DataFrame) -> DataFrame:
 
 def run_join_pipeline(
     spark: SparkSession,
-    clips_dir: str,
+    clips,
     out_dir: str,
     checkpoint_dir: str,
     watermark: str = "60 seconds",
@@ -692,7 +529,6 @@ def run_join_pipeline(
     max_files_per_trigger: int = 1,
     await_termination: bool = True,
     n_buckets: int | None = 128,
-    tail_table=None,
 ):
     """North-rule J6 pipeline: clip-feature stream ⋈ transcript-feature stream,
     keyed by ``clip_id``, state in the custom applyInPandasWithState store
@@ -703,33 +539,22 @@ def run_join_pipeline(
     transcript stats JVM-side. Scale note: the union+groupBy shuffles once on
     clip_id; per-key state is bounded by the join TTL, not stream length.
 
-    ``tail_table`` switches both sides to independent snapshot-tail
-    sources over the Iceberg topic (engine/tail.py; own progress
-    sidecars), each pruned to exactly its columns at the source: the
-    clip side carries ``__file_path`` instead of bytes (payload-direct
+    On an Iceberg topic both sides are independent snapshot tails (own
+    progress sidecars), each pruned to exactly its columns at the source:
+    the clip side carries ``__file_path`` instead of bytes (payload-direct
     decode), the transcript side drops bytes entirely.
     """
     from engine.audio import extract_audio_features_direct
     from engine.state import stateful_stream_join
 
-    if tail_table is not None:
-        clip_side = read_clip_stream_tail(
-            spark, tail_table, max_files_per_trigger=max_files_per_trigger,
-            watermark=None,
-            progress_dir=os.path.join(checkpoint_dir, "_tail_progress_clip"),
-            exclude_columns=["bytes", "transcript"], include_file_path=True)
-        txt_side = read_clip_stream_tail(
-            spark, tail_table, max_files_per_trigger=max_files_per_trigger,
-            watermark=None,
-            progress_dir=os.path.join(checkpoint_dir, "_tail_progress_txt"),
-            exclude_columns=["bytes"])
-    else:
-        clip_side = read_clip_stream(
-            spark, clips_dir, max_files_per_trigger=max_files_per_trigger,
-            watermark=None)
-        txt_side = read_clip_stream(
-            spark, clips_dir, max_files_per_trigger=max_files_per_trigger,
-            watermark=None)
+    clip_side = read_clip_source(
+        spark, clips, os.path.join(checkpoint_dir, "_tail_progress_clip"),
+        max_files_per_trigger=max_files_per_trigger, watermark=None,
+        exclude_columns=["bytes", "transcript"], include_file_path=True)
+    txt_side = read_clip_source(
+        spark, clips, os.path.join(checkpoint_dir, "_tail_progress_txt"),
+        max_files_per_trigger=max_files_per_trigger, watermark=None,
+        exclude_columns=["bytes"])
     feats = (
         extract_audio_features_direct(clip_side)
         .select("clip_id", "event_ts", "rms", "peak", "decoded_dur_ms")

@@ -6,16 +6,14 @@ This is the live streaming analogue of the reference's Hudi/offline "pull
 changes since commit" seam (``base/FeatureGroupCommit.java`` pagination +
 the incremental read in ``engine/store.py pull_changes``) — but as a LIVE
 source: the stream keeps delivering as new snapshots commit, instead of a
-one-shot batch diff.  Compared to the validated file-source path
-(engine/streams.py ``iceberg_stream_source_path``) it
+one-shot batch diff.  It is the one way an Iceberg topic is streamed
+(engine/streams.py ``read_clip_source``), and it
 
 - plans from MANIFESTS, never a directory listing — uncommitted /
-  half-written files are invisible, so no "planned == on-disk" validation
-  or layout restrictions apply (any partition spec, non-rectangular
-  prunes, concurrent writers mid-stream are all fine);
-- follows NEW commits while running (a file source only replays what it
-  globs) — the 10^12-clip deployment shape is "producer keeps committing,
-  features keep flowing";
+  half-written files are invisible, and any partition spec, any prune and
+  concurrent writers mid-stream are all fine;
+- follows NEW commits while running — the 10^12-clip deployment shape is
+  "producer keeps committing, features keep flowing";
 - carries exact per-batch lineage: offsets are ``{snapshot-id, files
   consumed within it}``, so every micro-batch maps to a provable slice of
   the table's append log (the per-partition lineage the north rule asks

@@ -110,8 +110,8 @@ def main() -> None:
     t0 = time.time()
     subprocess.run(
         # --iceberg: the topic is an Iceberg v2 table (north rule); the
-        # pipeline job auto-detects it and streams the manifest-validated
-        # data/ dir — same parquet bytes, O(KB) metadata on top
+        # pipeline job auto-detects it and streams it through the snapshot
+        # tail — same parquet bytes, O(KB) metadata on top
         [sys.executable, "-m", "engine.jobs", "producer", "--out", clips_dir,
          "--n-clips", str(args.n_clips), "--n-files", str(args.n_files),
          "--jitter-ms", "30000", "--max-dur-ms", str(args.max_dur_ms),

@@ -211,12 +211,35 @@ def test_sink_exactly_once_replay_is_noop(spark, tmp_path):
     assert sink.read_committed(spark).count() == 30
 
 
+def test_sink_rejects_table_reuse_with_new_checkpoint(spark, tmp_path):
+    """A fresh checkpoint restarts batch ids at 0: against a table holding
+    another query's batches the sink refuses instead of skipping them as
+    replays (which would silently drop the new query's rows)."""
+    from engine.streams import run_window_pipeline, write_clips_stream_dir
+
+    clips = str(tmp_path / "clips")
+    write_clips_stream_dir(clips, 400, n_files=4, seed=2)
+    loc = str(tmp_path / "sunk")
+    run_window_pipeline(spark, clips, None, str(tmp_path / "ck1"),
+                        max_files_per_trigger=2, sink=IcebergSink(loc))
+    before = IcebergTable(loc).snapshots()
+    with pytest.raises(Exception, match="reusing an output dir"):
+        run_window_pipeline(spark, clips, None, str(tmp_path / "ck2"),
+                            max_files_per_trigger=2, sink=IcebergSink(loc))
+    assert IcebergTable(loc).snapshots() == before
+
+
+def _drain_to_memory(sdf, name, ckpt):
+    """Run a stream to completion into the memory table ``name``."""
+    q = (sdf.writeStream.format("memory").queryName(name)
+         .option("checkpointLocation", ckpt)
+         .outputMode("append").start())
+    q.processAllAvailable()
+    q.stop()
+
+
 def test_clips_iceberg_source_round_trip(spark, tmp_path):
-    from engine.streams import (
-        iceberg_stream_data_dir,
-        read_clip_stream_iceberg,
-        write_clips_iceberg,
-    )
+    from engine.streams import read_clip_stream_tail, write_clips_iceberg
 
     loc = str(tmp_path / "clips_ice")
     t = write_clips_iceberg(loc, 300, n_files=6, seed=7,
@@ -226,22 +249,16 @@ def test_clips_iceberg_source_round_trip(spark, tmp_path):
     batch = t.read(spark)
     assert batch.count() == 300
     assert batch.select("clip_id").distinct().count() == 300
-    # the stream over data/ replays the same committed rows
-    sdf = read_clip_stream_iceberg(spark, t, max_files_per_trigger=3)
-    q = (sdf.writeStream.format("memory").queryName("ice_clips")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .outputMode("append").start())
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("SELECT count(*) c FROM ice_clips").first().c
-    assert got == 300
-    # an uncommitted stray file in data/ breaks the invariant loudly
-    stray = os.path.join(t.data_dir, "stray.parquet")
-    with open(stray, "wb") as fh:
+    # an uncommitted stray file in data/ is invisible to the
+    # manifest-planned tail, which streams exactly the committed rows
+    with open(os.path.join(t.data_dir, "stray.parquet"), "wb") as fh:
         fh.write(b"not parquet")
-    with pytest.raises(ValueError, match="append-only-clean"):
-        iceberg_stream_data_dir(t)
-    os.unlink(stray)
+    sdf = read_clip_stream_tail(spark, t, max_files_per_trigger=3,
+                                progress_dir=str(tmp_path / "prog"))
+    _drain_to_memory(sdf, "ice_clips", str(tmp_path / "ck"))
+    got = spark.sql("SELECT count(*) c, count(DISTINCT clip_id) d "
+                    "FROM ice_clips").first()
+    assert got.c == got.d == 300
 
 
 def test_sink_streaming_end_to_end_with_restart(spark, tmp_path):
@@ -939,6 +956,18 @@ def test_year_month_hour_partition_transforms(spark, tmp_path):
     assert _to_time_ordinal(ts, "day") == 17486
     assert _to_time_ordinal(ts, "hour") == 419686
     assert _to_time_ordinal("2017-11-16T22:31:08", "hour") == 419686
+    # a tz-aware value names its UTC instant: 01:00+05:00 on 2024-01-01 is
+    # 20:00 UTC on 2023-12-31 — the previous UTC day, month and year
+    east = dt.timezone(dt.timedelta(hours=5))
+    for v in (dt.datetime(2024, 1, 1, 1, tzinfo=east),
+              pd.Timestamp("2024-01-01T01:00+05:00"),
+              "2024-01-01T01:00+05:00"):
+        assert _to_time_ordinal(v, "year") == 2023 - 1970
+        assert _to_time_ordinal(v, "month") == (2023 - 1970) * 12 + 11
+        assert _to_time_ordinal(v, "day") == (
+            dt.date(2023, 12, 31) - dt.date(1970, 1, 1)).days
+        assert _to_time_ordinal(v, "hour") == _to_time_ordinal(
+            dt.datetime(2023, 12, 31, 20), "hour")
 
     df0 = spark.range(0).selectExpr(
         "concat('c', id) AS clip_id", "current_timestamp() AS event_ts",
@@ -965,6 +994,11 @@ def test_year_month_hour_partition_transforms(spark, tmp_path):
     one = t.plan_files(partition_filter={"event_ts_month": "2024-02-01"})
     assert 0 < len(one) < len(live)
     assert all(f.partition["event_ts_month"] == m0 + 1 for f in one)
+    # a tz-aware value prunes to its UTC month: 2024-02-01T01:00+05:00 is
+    # still January in UTC
+    jan = t.plan_files(
+        partition_filter={"event_ts_month": "2024-02-01T01:00+05:00"})
+    assert jan and all(f.partition["event_ts_month"] == m0 for f in jan)
     # order-preserving range by date objects; exact here because every
     # file sits wholly inside one month
     got = t.read(spark, partition_filter={
@@ -1002,11 +1036,7 @@ def test_day_partitioned_topic_streams_and_prunes(spark, tmp_path):
     """The round-4 flagship gap: a days(event_ts)-partitioned clip topic
     must stream (full replay) AND support a day-pruned streamed backfill
     that replays exactly the pruned day's committed files."""
-    from engine.streams import (
-        iceberg_stream_source_path,
-        read_clip_stream_iceberg,
-        write_clips_iceberg,
-    )
+    from engine.streams import read_clip_stream_tail, write_clips_iceberg
 
     loc = str(tmp_path / "clips_pice")
     # 400 clips x 450 s mean gap ≈ 2.08 days from the fixed 2024-01-01 base
@@ -1028,59 +1058,37 @@ def test_day_partitioned_topic_streams_and_prunes(spark, tmp_path):
         assert rows.a == rows.b == f.partition["event_ts_day"]
 
     # full-topic stream over the partitioned layout replays every row
-    sdf = read_clip_stream_iceberg(spark, t, max_files_per_trigger=4)
-    q = (sdf.writeStream.format("memory").queryName("pice_all")
-         .option("checkpointLocation", str(tmp_path / "ck_all"))
-         .outputMode("append").start())
-    q.processAllAvailable(); q.stop()
+    sdf = read_clip_stream_tail(spark, t, max_files_per_trigger=4,
+                                progress_dir=str(tmp_path / "prog_all"))
+    _drain_to_memory(sdf, "pice_all", str(tmp_path / "ck_all"))
     assert spark.sql("SELECT count(*) c FROM pice_all").first().c == 400
 
     # day-pruned streamed backfill: plans strictly fewer files, replays
-    # exactly that day's rows
+    # exactly that day's committed rows — a stray uncommitted file inside
+    # the pruned day's dir is never planned
     day = days[1]
     flt = {"event_ts_day": day}
     planned = t.plan_files(partition_filter=flt)
     assert 0 < len(planned) < len(live)
-    path, recursive = iceberg_stream_source_path(t, flt)
-    assert recursive and f"__p_event_ts_day={day}" in path
-    sdf2 = read_clip_stream_iceberg(spark, t, max_files_per_trigger=2,
-                                    partition_filter=flt)
-    q2 = (sdf2.writeStream.format("memory").queryName("pice_day")
-          .option("checkpointLocation", str(tmp_path / "ck_day"))
-          .outputMode("append").start())
-    q2.processAllAvailable(); q2.stop()
+    with open(os.path.join(t.data_dir, f"__p_event_ts_day={day}",
+                           "stray.parquet"), "wb") as fh:
+        fh.write(b"junk")
+    sdf2 = read_clip_stream_tail(spark, t, max_files_per_trigger=2,
+                                 partition_filter=flt,
+                                 progress_dir=str(tmp_path / "prog_day"))
+    _drain_to_memory(sdf2, "pice_day", str(tmp_path / "ck_day"))
     got = {r.clip_id for r in
            spark.sql("SELECT clip_id FROM pice_day").collect()}
     want = {r.clip_id for r in
             t.read(spark, partition_filter=flt).select("clip_id").collect()}
     assert got == want and len(got) == sum(f.record_count for f in planned)
 
-    # a stray uncommitted file inside a pruned dir fails fast
-    stray = os.path.join(t.data_dir, f"__p_event_ts_day={day}",
-                         "stray.parquet")
-    with open(stray, "wb") as fh:
-        fh.write(b"junk")
-    with pytest.raises(ValueError, match="append-only-clean"):
-        iceberg_stream_source_path(t, flt)
-    os.unlink(stray)
-    # filters that match nothing fail fast too
-    with pytest.raises(ValueError, match="matches no files"):
-        iceberg_stream_source_path(t, {"event_ts_day": days[-1] + 100})
-    # back-compat wrapper refuses partitioned tables (needs recursive flag)
-    from engine.streams import iceberg_stream_data_dir
-    with pytest.raises(ValueError, match="partitioned table"):
-        iceberg_stream_data_dir(t)
-
 
 def test_hour_partitioned_topic_streams_and_prunes(spark, tmp_path):
     """The new hour(event_ts) transform composes with the streamed path:
     an hour-partitioned topic supports an hour-pruned streamed backfill
     (finer-grained than the day lever — the replay-one-bad-hour shape)."""
-    from engine.streams import (
-        iceberg_stream_source_path,
-        read_clip_stream_iceberg,
-        write_clips_iceberg,
-    )
+    from engine.streams import read_clip_stream_tail, write_clips_iceberg
 
     loc = str(tmp_path / "clips_hice")
     # 300 clips x 45 s mean gap ≈ 3.75 hours from the 2024-01-01 base
@@ -1094,14 +1102,10 @@ def test_hour_partitioned_topic_streams_and_prunes(spark, tmp_path):
     flt = {"event_ts_hour": hours[1]}
     planned = t.plan_files(partition_filter=flt)
     assert 0 < len(planned) < len(live)
-    path, recursive = iceberg_stream_source_path(t, flt)
-    assert recursive and f"__p_event_ts_hour={hours[1]}" in path
-    sdf = read_clip_stream_iceberg(spark, t, max_files_per_trigger=2,
-                                   partition_filter=flt)
-    q = (sdf.writeStream.format("memory").queryName("hice_hour")
-         .option("checkpointLocation", str(tmp_path / "ck_hour"))
-         .outputMode("append").start())
-    q.processAllAvailable(); q.stop()
+    sdf = read_clip_stream_tail(spark, t, max_files_per_trigger=2,
+                                partition_filter=flt,
+                                progress_dir=str(tmp_path / "prog_hour"))
+    _drain_to_memory(sdf, "hice_hour", str(tmp_path / "ck_hour"))
     got = {r.clip_id for r in
            spark.sql("SELECT clip_id FROM hice_hour").collect()}
     want = {r.clip_id for r in
@@ -1226,10 +1230,11 @@ def test_full_lifecycle_maintenance_sequence(spark, tmp_path):
 
 
 def test_stream_glob_refuses_non_rectangular_prune(spark, tmp_path):
-    """A stale on-disk dir inside the glob's cross product (uncommitted
-    files in a partition the filter would cover) must fail fast — the
-    brace glob would silently replay it otherwise."""
-    from engine.streams import iceberg_stream_source_path
+    """A stale uncommitted file in a partition dir the filter's cross
+    product would cover — here the (1, y) cell of a = 1 or 2 — is never
+    streamed: the tail plans from manifests, so a non-rectangular prune
+    streams exactly the committed rows the batch read returns."""
+    from engine.streams import read_clip_stream_tail
 
     df0 = spark.range(0).selectExpr(
         "id AS a", "cast(id AS string) AS b", "cast(id AS double) AS v")
@@ -1246,11 +1251,17 @@ def test_stream_glob_refuses_non_rectangular_prune(spark, tmp_path):
     import shutil
     shutil.copy(_g.glob(str(tmp_path / "sp" / "*.parquet"))[0],
                 os.path.join(stale_dir, "stale.parquet"))
-    with pytest.raises(ValueError, match="non-rectangular"):
-        iceberg_stream_source_path(t, {"a": [1, 2]})
-    # pruning a single cell still works — the stale dir is outside its glob
-    path, recursive = iceberg_stream_source_path(t, {"a": 2})
-    assert recursive and path.endswith(os.path.join("__p_a=2", "__p_b=y"))
+    for i, flt in enumerate(({"a": [1, 2]}, {"a": 2})):
+        sdf = read_clip_stream_tail(spark, t, watermark=None,
+                                    partition_filter=flt,
+                                    progress_dir=str(tmp_path / f"prog{i}"))
+        _drain_to_memory(sdf, f"rect_{i}", str(tmp_path / f"ck{i}"))
+        got = sorted(map(tuple, spark.table(f"rect_{i}")
+                         .select("a", "b", "v").collect()))
+        want = sorted(map(tuple, t.read(spark, partition_filter=flt)
+                          .select("a", "b", "v").collect()))
+        assert got == want and 9.0 not in {r[2] for r in got}
+    assert len(want) == 1
 
 
 # ---------------------------------------------------------------------------

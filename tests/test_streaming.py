@@ -137,38 +137,6 @@ def test_session_and_sliding_streaming_smoke(spark, clips_dir, tmp_path):
     assert s2.audit()["consistent"]
 
 
-def test_row_paced_replay(spark, clips_dir, tmp_path):
-    """rate-micro-batch pacing: fixed rows per batch, full table delivered."""
-    import time
-
-    from engine.sink import ParquetLedgerSink
-    from engine.streams import read_clip_stream_paced
-    from engine.windows import tumbling_agg
-
-    n = spark.read.parquet(clips_dir).count()
-    src = read_clip_stream_paced(spark, clips_dir, rows_per_batch=500)
-    sink = ParquetLedgerSink(str(tmp_path / "paced_out"))
-    q = (
-        src.select("clip_id", "event_ts", "speaker_id")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "paced_ckpt"))
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        recs = sink.committed_batches()
-        if sum(r.row_count for r in recs) >= n:
-            break
-        time.sleep(0.5)
-    q.stop()
-    got = sink.read_committed(spark)
-    assert got.count() == n
-    assert got.select("clip_id").distinct().count() == n
-    # pacing honored: no committed batch exceeded rows_per_batch
-    assert max(r.row_count for r in sink.committed_batches()) <= 500
-
-
 def test_multi_width_pipeline(spark, clips_dir, tmp_path):
     """W4: three widths fed from one topic, each matching its batch twin."""
     from engine.streams import run_multi_width_pipeline
@@ -292,11 +260,7 @@ def test_day_pruned_backfill_kill_restart(spark, tmp_path):
     equals a batch aggregate over the pruned day's committed rows."""
     import time as _time
 
-    from engine.streams import (
-        read_clip_stream,
-        iceberg_stream_source_path,
-        write_clips_iceberg,
-    )
+    from engine.streams import read_clip_stream_tail, write_clips_iceberg
     from engine.windows import tumbling_agg
 
     loc = str(tmp_path / "bf_topic")
@@ -308,14 +272,13 @@ def test_day_pruned_backfill_kill_restart(spark, tmp_path):
     day = sorted({f.partition["event_ts_day"]
                   for f in t.plan_files()})[1]
     flt = {"event_ts_day": day}
-    path, recursive = iceberg_stream_source_path(t, flt)
-    assert recursive
 
     out = str(tmp_path / "bf_out")
     ckpt = str(tmp_path / "bf_ckpt")
     sink = ParquetLedgerSink(out, event_ts_col="window_start")
-    src = read_clip_stream(spark, path, max_files_per_trigger=1,
-                           recursive=True)
+    src = read_clip_stream_tail(spark, t, max_files_per_trigger=1,
+                                partition_filter=flt,
+                                progress_dir=str(tmp_path / "bf_prog"))
     agg = tumbling_agg(src, "event_ts", "speaker_id", "dur_ms", "10 minutes")
 
     q = (agg.writeStream.outputMode("append")
@@ -361,3 +324,32 @@ def test_day_pruned_backfill_kill_restart(spark, tmp_path):
             .toPandas().reset_index(drop=True))
     pd.testing.assert_frame_equal(got[want.columns], want,
                                   check_dtype=False)
+
+
+def test_pipeline_cli_rejects_bad_partition_filters(tmp_path):
+    """``jobs pipeline`` validates its pruning filter before any Spark
+    work: a non-numeric value for a float partition field and a filter
+    that matches no committed file both exit with a usage error — not a
+    traceback, and not a silent zero-row stream."""
+    from pyspark.sql import types as T
+
+    from engine import jobs
+    from engine.iceberg import IcebergTable
+    from engine.streams import write_clips_iceberg
+
+    topic = write_clips_iceberg(str(tmp_path / "topic"), 200, n_files=2,
+                                seed=3, partition_by=["days(event_ts)"])
+    scored = IcebergTable(
+        str(tmp_path / "scored"),
+        schema=T.StructType([T.StructField("score", T.DoubleType()),
+                             T.StructField("event_ts", T.TimestampType())]),
+        partition_by=["score"])
+    out = str(tmp_path / "out")
+    with pytest.raises(SystemExit, match="score is a double partition "
+                                         "field, 'abc' is not a number"):
+        jobs.main(["pipeline", "--clips", scored.location, "--out", out,
+                   "--partition", "score=abc"])
+    with pytest.raises(SystemExit, match="matches no committed file"):
+        jobs.main(["pipeline", "--clips", topic.location, "--out", out,
+                   "--day", "1999-01-01"])
+    assert not os.path.exists(out)

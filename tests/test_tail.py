@@ -437,7 +437,7 @@ def test_tail_join_pipeline(spark, tmp_path):
                             seed=5, files_per_snapshot=1)
     _, sink = run_join_pipeline(
         spark, t.location, str(tmp_path / "out"), str(tmp_path / "ckpt"),
-        max_files_per_trigger=2, tail_table=t)
+        max_files_per_trigger=2)
     audit = sink.audit()
     assert audit["unique_batch_ids"] and audit["consistent"]
     got = sink.read_committed(spark)
