@@ -20,11 +20,19 @@ codecs were built from their public specs:
   in :mod:`engine.datafiles`, using the spec's exact record shapes and
   ``field-id`` attributes (manifest_entry 0/1/3/4/2, data_file 134/100/
   101/102/103/104, manifest_file 500-519).
-- **snapshot semantics**: append carries previous manifests forward;
-  overwrite rewrites live entries as DELETED (status=2) with explicit
-  data sequence numbers, per the v2 sequence-number inheritance rules.
-  Time travel = planning any snapshot's manifest list; incremental read =
-  ADDED entries of the snapshots in ``(from, to]``.
+- **snapshot semantics**: every commit goes through one core,
+  ``IcebergTable._commit_snapshot``: it pins the base metadata once,
+  writes one manifest per file group, optionally carries the parent's
+  manifests forward, fills the summary counters and CAS-publishes.
+  append and the row deltas (``upsert``, ``delete_keys``,
+  ``delete_where``) carry the parent's manifests forward; overwrite
+  rewrites live entries as DELETED (status=2) with explicit data sequence
+  numbers, per the v2 sequence-number inheritance rules;
+  ``overwrite_partitions`` and ``commit_replace`` (compaction) restate the
+  live set as ADDED/EXISTING/DELETED groups; ``rewrite_manifests``
+  restates it as EXISTING entries only.  Time travel = planning any
+  snapshot's manifest list; incremental read = ADDED entries of the
+  snapshots in ``(from, to]``.
 
 Scale posture: like real Iceberg, a commit is O(manifest metadata), never
 O(data). Data files are written executor-side by Spark's parquet writer;
@@ -38,12 +46,14 @@ reader, pinning the scan to exactly the planned files.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
 import time
 import uuid
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -668,6 +678,16 @@ _PARTITIONABLE = {"int": int, "long": int, "float": float, "double": float,
                   "string": str}
 
 
+class _Base(NamedTuple):
+    """What a commit builds on, read once: the metadata dict, its version
+    (the CAS base), the target branch and that branch's head snapshot
+    (None on an empty table)."""
+    meta: dict
+    version: int
+    branch: str
+    parent: dict | None
+
+
 class IcebergTable:
     """One Iceberg v2 table at ``location`` (HadoopCatalog layout:
     ``metadata/`` + ``data/``). Single-schema; optional identity
@@ -782,26 +802,25 @@ class IcebergTable:
             self._publish(meta, base_version=None)
 
     # -- partition spec -----------------------------------------------------
-    def spec_fields(self) -> list[dict]:
+    def _spec(self, meta: dict | None = None) -> dict:
+        """The default partition spec of ``meta`` (current by default)."""
+        meta = meta if meta is not None else self.metadata()
+        for spec in meta.get("partition-specs", []):
+            if spec["spec-id"] == meta.get("default-spec-id", 0):
+                return spec
+        return {"spec-id": 0, "fields": []}
+
+    def spec_fields(self, meta: dict | None = None) -> list[dict]:
         """Default partition-spec fields (empty for unpartitioned tables)."""
-        meta = self.metadata()
-        for spec in meta.get("partition-specs", []):
-            if spec["spec-id"] == meta.get("default-spec-id", 0):
-                return spec.get("fields", [])
-        return []
+        return self._spec(meta).get("fields", [])
 
-    def _spec_json(self) -> str:
-        meta = self.metadata()
-        for spec in meta.get("partition-specs", []):
-            if spec["spec-id"] == meta.get("default-spec-id", 0):
-                return json.dumps(spec, sort_keys=True)
-        return json.dumps({"spec-id": 0, "fields": []})
-
-    def _partition_col_types(self) -> dict[str, str]:
+    def _partition_col_types(self, meta: dict | None = None
+                             ) -> dict[str, str]:
         """partition field → iceberg primitive type of the PARTITION VALUE
         (identity/truncate → the source column's type; day → epoch-day
         int; bucket → int ordinal)."""
-        schema_fields = {f["id"]: f for f in self.schema_json()["fields"]}
+        meta = meta if meta is not None else self.metadata()
+        schema_fields = {f["id"]: f for f in self.schema_json(meta)["fields"]}
 
         def value_type(f: dict) -> str:
             tr = f.get("transform", "identity")
@@ -809,7 +828,7 @@ class IcebergTable:
                 return "int"
             return schema_fields[f["source-id"]]["type"]
 
-        return {f["name"]: value_type(f) for f in self.spec_fields()}
+        return {f["name"]: value_type(f) for f in self.spec_fields(meta)}
 
     def _partition_exprs(self):
         """[(partition field name, derivation Column)] for the writer: the
@@ -868,16 +887,16 @@ class IcebergTable:
             out.append((f["name"], col))
         return out
 
-    def _entry_schema(self) -> dict:
+    def _entry_schema(self, meta: dict) -> dict:
         """Manifest-entry Avro schema with the partition struct typed by
-        this table's spec (Iceberg embeds the spec-typed r102 record the
-        same way; unpartitioned tables keep the empty struct)."""
-        fields = self.spec_fields()
+        the spec of ``meta`` (Iceberg embeds the spec-typed r102 record
+        the same way; unpartitioned tables keep the empty struct)."""
+        fields = self.spec_fields(meta)
         if not fields:
             return MANIFEST_ENTRY_SCHEMA
         avro_of = {"int": "int", "long": "long", "float": "float",
                    "double": "double", "string": "string"}
-        types = self._partition_col_types()
+        types = self._partition_col_types(meta)
         part_fields = [
             {"name": f["name"], "field-id": f["field-id"], "default": None,
              "type": ["null", avro_of[types[f["name"]]]]}
@@ -967,8 +986,7 @@ class IcebergTable:
     # -- snapshots ----------------------------------------------------------
     @property
     def current_snapshot_id(self) -> int | None:
-        sid = self.metadata().get("current-snapshot-id", -1)
-        return None if sid in (-1, None) else sid
+        return self._head_id(self.metadata())
 
     def snapshots(self) -> list[dict]:
         return self.metadata().get("snapshots", [])
@@ -990,8 +1008,8 @@ class IcebergTable:
         them as null.  Drops/renames/type-changes are not supported here
         (additive evolution only — the only kind the reference's feature
         groups perform).  Returns the new schema id."""
-        meta = dict(self.metadata())
-        base = self._current_version()
+        meta, base = self._metadata_at()
+        meta = dict(meta)
         cur = self.schema_json(meta)
         existing = {f["name"] for f in cur["fields"]}
         ids = _IdGen(meta["last-column-id"])
@@ -1021,12 +1039,9 @@ class IcebergTable:
         never expire a snapshot a ref points at."""
         if not re.fullmatch(r"[A-Za-z0-9._-]+", name) or name == "main":
             raise ValueError(f"invalid ref name {name!r}")
-        sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id
-        if sid is None:
-            raise ValueError("cannot tag an empty table")
-        self.snapshot(sid)  # raises on unknown id
-        meta = dict(self.metadata())
-        base = self._current_version()
+        meta, base = self._metadata_at()
+        meta = dict(meta)
+        sid = self._known_snapshot_id(meta, snapshot_id, "tag")
         refs = dict(meta.get("refs") or {})
         refs[name] = {"snapshot-id": sid, "type": "tag"}
         meta["refs"] = refs
@@ -1037,8 +1052,8 @@ class IcebergTable:
         """Remove a named ref (its snapshot becomes expirable again)."""
         if name == "main":
             raise ValueError("cannot drop the main branch ref")
-        meta = dict(self.metadata())
-        base = self._current_version()
+        meta, base = self._metadata_at()
+        meta = dict(meta)
         refs = dict(meta.get("refs") or {})
         if name not in refs:
             raise KeyError(f"no ref {name!r}")
@@ -1049,6 +1064,24 @@ class IcebergTable:
 
     def refs(self) -> dict:
         return dict(self.metadata().get("refs") or {})
+
+    @staticmethod
+    def _head_id(meta: dict) -> int | None:
+        """Main's head snapshot id in ``meta`` (None on an empty table)."""
+        sid = meta.get("current-snapshot-id")
+        return None if sid in (-1, None) else sid
+
+    def _known_snapshot_id(self, meta: dict, snapshot_id: int | None,
+                           verb: str) -> int:
+        """``snapshot_id`` (main's head when None), checked against the
+        snapshots of the pinned ``meta``."""
+        sid = snapshot_id if snapshot_id is not None else self._head_id(meta)
+        if sid is None:
+            raise ValueError(f"cannot {verb} an empty table")
+        if not any(s["snapshot-id"] == sid
+                   for s in meta.get("snapshots", [])):
+            raise KeyError(f"no snapshot {sid} in {self.location}")
+        return sid
 
     @staticmethod
     def _ancestry_from(meta: dict, head_id: int | None) -> list[dict]:
@@ -1075,8 +1108,7 @@ class IcebergTable:
         fast-forward publishes them."""
         meta = self.metadata()
         if head_id is None:
-            head_id = meta.get("current-snapshot-id")
-            head_id = None if head_id in (-1, None) else head_id
+            head_id = self._head_id(meta)
         return self._ancestry_from(meta, head_id)
 
     def create_branch(self, name: str,
@@ -1091,14 +1123,7 @@ class IcebergTable:
             raise ValueError(f"invalid branch name {name!r}")
         meta, base = self._metadata_at()
         meta = dict(meta)
-        cur = meta.get("current-snapshot-id")
-        cur = None if cur in (-1, None) else cur
-        sid = from_snapshot_id if from_snapshot_id is not None else cur
-        if sid is None:
-            raise ValueError("cannot branch an empty table")
-        if not any(s["snapshot-id"] == sid
-                   for s in meta.get("snapshots", [])):
-            raise KeyError(f"no snapshot {sid} in {self.location}")
+        sid = self._known_snapshot_id(meta, from_snapshot_id, "branch")
         refs = dict(meta.get("refs") or {})
         if name in refs:
             raise ValueError(f"ref {name!r} already exists "
@@ -1131,11 +1156,8 @@ class IcebergTable:
             if refs[branch]["type"] != "branch":
                 raise ValueError(f"ref {branch!r} is a "
                                  f"{refs[branch]['type']}, not a branch")
-        if branch != "main":
-            cur = refs.get(branch, {}).get("snapshot-id")
-        else:
-            cur = meta.get("current-snapshot-id")
-            cur = None if cur in (-1, None) else cur
+        cur = (refs.get(branch, {}).get("snapshot-id") if branch != "main"
+               else self._head_id(meta))
         # ONE ancestry walk over the pinned meta serves both the
         # fast-forward check and the snapshot-log splice
         chain = self._ancestry_from(meta, head)
@@ -1272,19 +1294,20 @@ class IcebergTable:
         return None if cur is None else self.snapshot(cur)
 
     # -- manifest IO --------------------------------------------------------
-    def _write_manifest(self, entries: list[dict], spec_json: str,
-                        content: str = "data") -> tuple[str, int]:
+    def _write_manifest(self, entries: list[dict], meta: dict,
+                        content: int) -> tuple[str, int]:
         name = f"{uuid.uuid4().hex}-m0.avro"
         path = os.path.join(self.metadata_dir, name)
         buf = write_avro_ocf_bytes(
-            entries, self._entry_schema(),
+            entries, self._entry_schema(meta),
             extra_meta={
                 "schema": json.dumps(
-                    self.schema_json(), sort_keys=True).encode(),
-                "partition-spec": spec_json.encode(),
+                    self.schema_json(meta), sort_keys=True).encode(),
+                "partition-spec": json.dumps(
+                    self._spec(meta), sort_keys=True).encode(),
                 "partition-spec-id": b"0",
                 "format-version": b"2",
-                "content": content.encode(),
+                "content": b"deletes" if content else b"data",
             },
         )
         with open(path, "wb") as fh:
@@ -1296,23 +1319,28 @@ class IcebergTable:
             rows, _ = read_avro_ocf_bytes(fh.read())
         return rows
 
-    def _read_manifest_list(self, path: str) -> list[dict]:
-        with open(_from_uri(path), "rb") as fh:
-            rows, _ = read_avro_ocf_bytes(fh.read())
-        return rows
+    # manifests and manifest lists are both plain Avro OCF record files
+    _read_manifest_list = _read_manifest
 
     def _manifest_list_entry(self, manifest_path: str, length: int, seq: int,
-                             min_seq: int, snapshot_id: int,
-                             added: tuple[int, int], deleted: tuple[int, int],
-                             existing: tuple[int, int] = (0, 0),
-                             content: int = 0) -> dict:
+                             snapshot_id: int, files: list[DataFileInfo],
+                             status: int, content: int) -> dict:
+        """The manifest-list row for one manifest holding ``files``, all
+        with entry ``status``: counts and row totals come from the files;
+        ADDED entries inherit ``seq``, other entries keep their own."""
+        n, rows = len(files), sum(f.record_count for f in files)
+        added, existing, deleted = (
+            (n, rows) if status == s else (0, 0)
+            for s in (_STATUS_ADDED, _STATUS_EXISTING, _STATUS_DELETED))
         return {
             "manifest_path": _to_uri(manifest_path),
             "manifest_length": length,
             "partition_spec_id": 0,
             "content": content,
             "sequence_number": seq,
-            "min_sequence_number": min_seq,
+            "min_sequence_number": (
+                seq if status == _STATUS_ADDED
+                else min(f.sequence_number for f in files)),
             "added_snapshot_id": snapshot_id,
             "added_data_files_count": added[0],
             "existing_data_files_count": existing[0],
@@ -1329,7 +1357,8 @@ class IcebergTable:
         path shares (a schema change here reaches them all).  ADDED
         entries pass ``esq=None`` to inherit the snapshot's sequence
         number (v2 inheritance); EXISTING/DELETED entries carry their
-        original data sequence number."""
+        original data sequence number.  :meth:`_entry_file` reads it
+        back."""
         return {
             "status": status, "snapshot_id": snapshot_id,
             "sequence_number": esq, "file_sequence_number": esq,
@@ -1347,10 +1376,46 @@ class IcebergTable:
             },
         }
 
+    @staticmethod
+    def _entry_file(e: dict, m: dict) -> DataFileInfo:
+        """A manifest entry ``e`` (of manifest-list row ``m``) back as a
+        :class:`DataFileInfo` — the one reader of :meth:`_manifest_entry`'s
+        format."""
+        df = e["data_file"]
+        return DataFileInfo(
+            file_path=_from_uri(df["file_path"]),
+            record_count=df["record_count"],
+            file_size_in_bytes=df["file_size_in_bytes"],
+            # v2 inheritance: null entry seq → manifest's seq
+            sequence_number=(e["sequence_number"]
+                             if e["sequence_number"] is not None
+                             else m["sequence_number"]),
+            partition=df.get("partition") or None,
+            content=int(df.get("content") or 0),
+            equality_ids=list(df.get("equality_ids") or []) or None,
+            lower_bounds=_bounds_from_avro(df.get("lower_bounds")),
+            upper_bounds=_bounds_from_avro(df.get("upper_bounds")),
+        )
+
+    def _live_files(self, snap: dict | None,
+                    content: int) -> list[DataFileInfo]:
+        """Live (non-DELETED) entries of ``snap``'s data (``content=0``)
+        or delete (``content=1``) manifests."""
+        if snap is None:
+            return []
+        return [self._entry_file(e, m)
+                for m in self._read_manifest_list(snap["manifest-list"])
+                if m.get("content", 0) == content
+                for e in self._read_manifest(m["manifest_path"])
+                if e["status"] != _STATUS_DELETED]
+
     # -- commits ------------------------------------------------------------
-    def _commit(self, new_files: list[DataFileInfo], operation: str,
-                summary_extra: dict | None, branch: str = "main") -> int:
-        meta, base_version = self._metadata_at()
+    def _base(self, branch: str = "main") -> _Base:
+        """Pin a commit's base: ONE ``_metadata_at`` read, and the head of
+        ``branch`` resolved from that dict (commits target branches only,
+        and a named branch must exist — :meth:`create_branch`)."""
+        meta, version = self._metadata_at()
+        head = self._head_id(meta)
         if branch != "main":
             refs = meta.get("refs") or {}
             if branch not in refs:
@@ -1361,72 +1426,70 @@ class IcebergTable:
                 raise ValueError(
                     f"ref {branch!r} is a {refs[branch]['type']}; "
                     "commits target branches only")
+            head = refs[branch]["snapshot-id"]
+        parent = next((s for s in meta.get("snapshots", [])
+                       if s["snapshot-id"] == head), None)
+        return _Base(meta, version, branch, parent)
+
+    def _commit_snapshot(self, base: _Base, operation: str,
+                         groups: list[tuple[list[DataFileInfo], int, int]],
+                         summary: dict | None = None,
+                         summary_extra: dict | None = None,
+                         carry: bool = False) -> int:
+        """The one snapshot commit every write path shares.
+
+        ``groups`` are ``(files, status, content)`` triples: one manifest
+        each (content 0 data, 1 deletes), listed in order.  An empty group
+        writes no manifest — except an ADDED data group, which Iceberg
+        writes even for an empty append.  ``carry`` lists the parent's
+        manifests after the new ones (append, row delta).  The summary
+        counters come from the groups: added data files and records,
+        deleted ones when a DELETED data group is given (even empty), and
+        totals = the parent's totals + added − deleted.  ``summary`` adds
+        the operation's own keys, then ``summary_extra`` merges.  The
+        manifest list is written last, then the metadata is CAS-published
+        on ``base.version``; a branch commit moves only its ref."""
+        meta, parent = base.meta, base.parent
         seq = meta["last-sequence-number"] + 1
         snapshot_id = uuid.uuid4().int & ((1 << 62) - 1)  # positive long
         now_ms = int(time.time() * 1000)
-        spec_json = self._spec_json()
+        manifests = []
+        for files, status, content in groups:
+            if not files and (status, content) != (_STATUS_ADDED, 0):
+                continue
+            path, length = self._write_manifest(
+                [self._manifest_entry(
+                    f, status, snapshot_id,
+                    None if status == _STATUS_ADDED else f.sequence_number)
+                 for f in files], meta, content)
+            manifests.append(self._manifest_list_entry(
+                path, length, seq, snapshot_id, files, status, content))
+        if carry and parent is not None:
+            manifests.extend(self._read_manifest_list(parent["manifest-list"]))
 
-        def entry(f: DataFileInfo, status: int, esq: int | None) -> dict:
-            return self._manifest_entry(f, status, snapshot_id, esq)
+        def data(status: int) -> list[DataFileInfo]:
+            return [f for files, st, content in groups
+                    if st == status and content == 0 for f in files]
 
-        add_rows = sum(f.record_count for f in new_files)
-        mpath, mlen = self._write_manifest(
-            [entry(f, _STATUS_ADDED, None) for f in new_files], spec_json
-        )
-        manifests = [self._manifest_list_entry(
-            mpath, mlen, seq, seq, snapshot_id,
-            (len(new_files), add_rows), (0, 0),
-        )]
-
-        prev = self._resolve_snapshot(
-            None, None, ref=None if branch == "main" else branch)
-        prev_total_files = prev_total_rows = 0
-        if prev is not None:
-            prev_manifests = self._read_manifest_list(prev["manifest-list"])
-            prev_total_files = int(prev["summary"].get("total-data-files", 0))
-            prev_total_rows = int(prev["summary"].get("total-records", 0))
-            if operation == "append":
-                manifests.extend(prev_manifests)
-                total_files = prev_total_files + len(new_files)
-                total_rows = prev_total_rows + add_rows
-            else:  # overwrite: rewrite live entries as DELETED
-                live = self.plan_files(
-                    ref=None if branch == "main" else branch)
-                if live:
-                    dpath, dlen = self._write_manifest(
-                        [entry(f, _STATUS_DELETED, f.sequence_number)
-                         for f in live], spec_json
-                    )
-                    manifests.append(self._manifest_list_entry(
-                        dpath, dlen, seq,
-                        min(f.sequence_number for f in live), snapshot_id,
-                        (0, 0),
-                        (len(live), sum(f.record_count for f in live)),
-                    ))
-                total_files, total_rows = len(new_files), add_rows
-        else:
-            total_files, total_rows = len(new_files), add_rows
-
-        summary = {
+        added, deleted = data(_STATUS_ADDED), data(_STATUS_DELETED)
+        prev = parent["summary"] if parent is not None else {}
+        out = {
             "operation": operation,
-            "added-data-files": str(len(new_files)),
-            "added-records": str(add_rows),
-            "total-data-files": str(total_files),
-            "total-records": str(total_rows),
+            "added-data-files": len(added),
+            "added-records": sum(f.record_count for f in added),
+            "total-data-files": (int(prev.get("total-data-files", 0))
+                                 + len(added) - len(deleted)),
+            "total-records": (int(prev.get("total-records", 0))
+                              + sum(f.record_count for f in added)
+                              - sum(f.record_count for f in deleted)),
         }
-        if operation == "overwrite":
-            summary["deleted-data-files"] = str(prev_total_files)
-            summary["deleted-records"] = str(prev_total_rows)
-        summary.update({k: str(v) for k, v in (summary_extra or {}).items()})
-        return self._finalize_snapshot(
-            manifests, seq, snapshot_id, now_ms, summary, meta, base_version,
-            prev, branch=branch,
-        )
+        if any(st == _STATUS_DELETED and content == 0
+               for _, st, content in groups):
+            out["deleted-data-files"] = len(deleted)
+            out["deleted-records"] = sum(f.record_count for f in deleted)
+        out.update(summary or {})
+        out.update(summary_extra or {})
 
-    def _finalize_snapshot(self, manifests, seq, snapshot_id, now_ms, summary,
-                           meta, base_version, prev,
-                           branch: str = "main") -> int:
-        """Write the manifest list, append the snapshot, publish metadata."""
         list_name = f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
         list_path = os.path.join(self.metadata_dir, list_name)
         buf = write_avro_ocf_bytes(
@@ -1437,18 +1500,18 @@ class IcebergTable:
             fh.write(buf)
         snap = {
             "snapshot-id": snapshot_id,
-            "parent-snapshot-id": prev["snapshot-id"] if prev else None,
+            "parent-snapshot-id": parent["snapshot-id"] if parent else None,
             "sequence-number": seq,
             "timestamp-ms": now_ms,
             "manifest-list": _to_uri(list_path),
-            "summary": summary,
+            "summary": {k: str(v) for k, v in out.items()},
             "schema-id": meta["current-schema-id"],
         }
         meta = dict(meta)
         meta["last-sequence-number"] = seq
         meta["last-updated-ms"] = now_ms
         meta["snapshots"] = meta["snapshots"] + [snap]
-        if branch == "main":
+        if base.branch == "main":
             # branch commits stage aside: current-snapshot-id and the
             # snapshot-log (= main's became-current history) move only on
             # main commits and fast_forward publishes
@@ -1458,50 +1521,95 @@ class IcebergTable:
             ]
         meta["metadata-log"] = meta["metadata-log"] + [
             {"timestamp-ms": now_ms,
-             "metadata-file": _to_uri(self._version_path(base_version))}
+             "metadata-file": _to_uri(self._version_path(base.version))}
         ]
         refs = dict(meta.get("refs") or {})
-        refs[branch] = {"snapshot-id": snapshot_id, "type": "branch"}
+        refs[base.branch] = {"snapshot-id": snapshot_id, "type": "branch"}
         meta["refs"] = refs
-        self._publish(meta, base_version=base_version)
+        self._publish(meta, base_version=base.version)
         return snapshot_id
+
+    @contextlib.contextmanager
+    def _staged(self):
+        """The failure path every writer shares.  Yields ``stage(files)``,
+        which records files the writer moved into ``data/`` (and returns
+        them).  If the block raises, the staged files are removed while
+        no metadata version references them; once ``_publish``'s link
+        has succeeded the snapshot is committed, and a later error (a
+        failed version-hint update, an interrupt) leaves them in place."""
+        since_ms = int(time.time() * 1000)
+        staged: list[DataFileInfo] = []
+
+        def stage(files: list[DataFileInfo]) -> list[DataFileInfo]:
+            staged.extend(files)
+            return files
+
+        try:
+            yield stage
+        except BaseException:
+            if staged and not self._committed_since(since_ms, staged):
+                for f in staged:
+                    try:
+                        os.remove(f.file_path)
+                    except OSError:
+                        pass
+            raise
+
+    def _committed_since(self, since_ms: int,
+                         files: list[DataFileInfo]) -> bool:
+        """Does a snapshot committed at or after ``since_ms`` add any of
+        ``files``?  Only the newest metadata's recent snapshots are read."""
+        uris = {_to_uri(f.file_path) for f in files}
+        for s in self.snapshots():
+            if s["timestamp-ms"] < since_ms:
+                continue
+            for m in self._read_manifest_list(s["manifest-list"]):
+                if m["added_snapshot_id"] == s["snapshot-id"] and any(
+                        e["data_file"]["file_path"] in uris
+                        for e in self._read_manifest(m["manifest_path"])):
+                    return True
+        return False
 
     def commit_append(self, files: list[DataFileInfo],
                       summary_extra: dict | None = None,
                       branch: str = "main") -> int:
-        return self._commit(files, "append", summary_extra, branch=branch)
+        return self._commit_snapshot(
+            self._base(branch), "append", [(files, _STATUS_ADDED, 0)],
+            summary_extra=summary_extra, carry=True)
 
     def commit_overwrite(self, files: list[DataFileInfo],
                          summary_extra: dict | None = None,
                          branch: str = "main") -> int:
-        return self._commit(files, "overwrite", summary_extra, branch=branch)
+        base = self._base(branch)
+        return self._commit_snapshot(
+            base, "overwrite",
+            [(files, _STATUS_ADDED, 0),
+             (self._live_files(base.parent, 0), _STATUS_DELETED, 0)],
+            summary_extra=summary_extra)
 
     def commit_replace(self, new_files: list[DataFileInfo],
                        replaced: list[DataFileInfo],
-                       survivors: list[DataFileInfo],
                        summary_extra: dict | None = None,
                        purged_deletes: list[DataFileInfo] | None = None,
                        expected_rows: int | None = None) -> int:
         """Commit a REPLACE snapshot (the ``rewrite_data_files`` /
         compaction commit): ``replaced`` live files are swapped for
-        ``new_files`` holding the same rows; ``survivors`` are the
-        untouched live files, rewritten as EXISTING entries carrying their
-        original data sequence numbers so time travel and sequence-based
-        reasoning are unchanged.  Row counts must match exactly — a
-        compaction that changes the row count is corrupt and is rejected
-        before any metadata is written.
+        ``new_files`` holding the same rows; every other live file is
+        rewritten as an EXISTING entry carrying its original data sequence
+        number so time travel and sequence-based reasoning are unchanged.
+        Row counts must match exactly — a compaction that changes the row
+        count is corrupt and is rejected before any metadata is written.
 
         Concurrent-writer validation (Iceberg's rewrite validation): the
-        live file set is re-planned at commit time against the metadata
-        this commit will build on.  ``replaced`` files no longer live (a
-        concurrent overwrite/expire removed one) fail the commit — the
-        rewrite's inputs are gone, its outputs would resurrect deleted
-        rows.  Files that appeared since the rewrite planned (e.g. the
-        streaming sink's micro-batch append landing mid-compaction) are
-        carried forward as EXISTING survivors instead of being silently
-        dropped from the replace snapshot's live view (and then GC'd by
-        ``expire_snapshots``) — the caller's ``survivors`` list is a
-        plan-time hint; the commit-time live set is authoritative.
+        live file set is re-planned at commit time from the metadata this
+        commit builds on.  ``replaced`` files no longer live (a concurrent
+        overwrite/expire removed one) fail the commit — the rewrite's
+        inputs are gone, its outputs would resurrect deleted rows.  Files
+        that appeared since the rewrite planned (e.g. the streaming sink's
+        micro-batch append landing mid-compaction) are carried forward as
+        EXISTING survivors instead of being silently dropped from the
+        replace snapshot's live view (and then GC'd by
+        ``expire_snapshots``).
 
         Equality deletes: new files take this snapshot's sequence number,
         so pre-existing delete files would stop masking the rewritten rows
@@ -1524,11 +1632,10 @@ class IcebergTable:
                 f"replace with delete application grew the row count "
                 f"({old_rows} -> {new_rows})"
             )
-        meta, base_version = self._metadata_at()
-        prev = self._resolve_snapshot(None, None)
-        if prev is None:
+        base = self._base()
+        if base.parent is None:
             raise ValueError("cannot replace files in an empty table")
-        live_now = self.plan_files()
+        live_now = self._live_files(base.parent, 0)
         live_paths = {f.file_path for f in live_now}
         replaced_paths = {f.file_path for f in replaced}
         gone = replaced_paths - live_paths
@@ -1538,7 +1645,8 @@ class IcebergTable:
                 f"input file(s) are no longer live (e.g. {sorted(gone)[:2]}) "
                 "— re-plan the rewrite from current metadata"
             )
-        live_dels = {f.file_path: f for f in self.plan_delete_files()}
+        live_dels = {f.file_path: f
+                     for f in self._live_files(base.parent, 1)}
         purged_paths = {f.file_path for f in (purged_deletes or [])}
         if purged_paths - set(live_dels):
             raise RuntimeError(
@@ -1575,73 +1683,13 @@ class IcebergTable:
                     f"older file(s) they may mask (e.g. "
                     f"{masked_kept[0].file_path}) — rewrite those too"
                 )
-        seq = meta["last-sequence-number"] + 1
-        snapshot_id = uuid.uuid4().int & ((1 << 62) - 1)
-        now_ms = int(time.time() * 1000)
-        spec_json = self._spec_json()
-
-        def entry(f: DataFileInfo, status: int, esq: int | None) -> dict:
-            return self._manifest_entry(f, status, snapshot_id, esq)
-
-        manifests = []
-        apath, alen = self._write_manifest(
-            [entry(f, _STATUS_ADDED, None) for f in new_files], spec_json
-        )
-        manifests.append(self._manifest_list_entry(
-            apath, alen, seq, seq, snapshot_id,
-            (len(new_files), new_rows), (0, 0),
-        ))
-        if survivors:
-            epath, elen = self._write_manifest(
-                [entry(f, _STATUS_EXISTING, f.sequence_number)
-                 for f in survivors], spec_json
-            )
-            manifests.append(self._manifest_list_entry(
-                epath, elen, seq,
-                min(f.sequence_number for f in survivors), snapshot_id,
-                (0, 0), (0, 0),
-                (len(survivors), sum(f.record_count for f in survivors)),
-            ))
-        dpath, dlen = self._write_manifest(
-            [entry(f, _STATUS_DELETED, f.sequence_number)
-             for f in replaced], spec_json
-        )
-        manifests.append(self._manifest_list_entry(
-            dpath, dlen, seq,
-            min(f.sequence_number for f in replaced), snapshot_id,
-            (0, 0), (len(replaced), old_rows),
-        ))
-        if purged_paths:
-            purged = [live_dels[p] for p in sorted(purged_paths)]
-            xpath, xlen = self._write_manifest(
-                [entry(f, _STATUS_DELETED, f.sequence_number)
-                 for f in purged], spec_json, content="deletes")
-            manifests.append(self._manifest_list_entry(
-                xpath, xlen, seq,
-                min(f.sequence_number for f in purged), snapshot_id,
-                (0, 0),
-                (len(purged), sum(f.record_count for f in purged)),
-                content=1,
-            ))
-
-        total_files = len(new_files) + len(survivors)
-        total_rows = new_rows + sum(f.record_count for f in survivors)
-        summary = {
-            "operation": "replace",
-            "added-data-files": str(len(new_files)),
-            "added-records": str(new_rows),
-            "deleted-data-files": str(len(replaced)),
-            "deleted-records": str(old_rows),
-            "total-data-files": str(total_files),
-            "total-records": str(total_rows),
-        }
-        if purged_paths:
-            summary["removed-delete-files"] = str(len(purged_paths))
-        summary.update({k: str(v) for k, v in (summary_extra or {}).items()})
-        return self._finalize_snapshot(
-            manifests, seq, snapshot_id, now_ms, summary, meta, base_version,
-            prev,
-        )
+        purged = [live_dels[p] for p in sorted(purged_paths)]
+        return self._commit_snapshot(
+            base, "replace",
+            [(new_files, _STATUS_ADDED, 0), (survivors, _STATUS_EXISTING, 0),
+             (replaced, _STATUS_DELETED, 0), (purged, _STATUS_DELETED, 1)],
+            summary={"removed-delete-files": len(purged)} if purged else None,
+            summary_extra=summary_extra)
 
     def compact_data_files(self, spark: SparkSession,
                            target_file_bytes: int = 128 * 1024 * 1024,
@@ -1696,8 +1744,6 @@ class IcebergTable:
             if not live:
                 return None  # deletes mask nothing (no data files)
             inputs = live  # nothing maskable/small: still fold deletes away
-        in_paths = {f.file_path for f in inputs}
-        survivors = [f for f in live if f.file_path not in in_paths]
         total_bytes = sum(f.file_size_in_bytes for f in inputs)
         n_out = max(1, math.ceil(total_bytes / target_file_bytes))
 
@@ -1722,25 +1768,18 @@ class IcebergTable:
              .write.partitionBy(*dup).mode("overwrite").parquet(tmp))
         else:
             scan.repartition(n_out).write.mode("overwrite").parquet(tmp)
-        infos = self._register_written_files(tmp, name_prefix="compact-")
         import shutil
 
-        shutil.rmtree(tmp, ignore_errors=True)
-        try:
+        with self._staged() as stage:
+            infos = stage(
+                self._register_written_files(tmp, name_prefix="compact-"))
+            shutil.rmtree(tmp, ignore_errors=True)
             return self.commit_replace(
-                infos, inputs, survivors,
+                infos, inputs,
                 summary_extra={"compaction-input-files": len(inputs)},
                 purged_deletes=dels or None,
                 expected_rows=expected_rows,
             )
-        except ValueError:
-            # row-count invariance failed — abort and leave the table as-is
-            for f in infos:
-                try:
-                    os.remove(f.file_path)
-                except OSError:
-                    pass
-            raise
 
     def rewrite_manifests(self, target_entries_per_manifest: int = 100_000,
                           summary_extra: dict | None = None) -> int | None:
@@ -1763,64 +1802,28 @@ class IcebergTable:
         list is already consolidated."""
         import math
 
-        meta, base_version = self._metadata_at()
-        snap = self._resolve_snapshot(None, None)
-        if snap is None:
+        base = self._base()
+        if base.parent is None:
             return None
-        old_manifests = self._read_manifest_list(snap["manifest-list"])
-        live = sorted(self.plan_files(), key=lambda f: f.file_path)
-        dels = sorted(self.plan_delete_files(), key=lambda f: f.file_path)
+        old_manifests = self._read_manifest_list(base.parent["manifest-list"])
+        live = sorted(self._live_files(base.parent, 0),
+                      key=lambda f: f.file_path)
+        dels = sorted(self._live_files(base.parent, 1),
+                      key=lambda f: f.file_path)
         want = (math.ceil(len(live) / target_entries_per_manifest)
                 + (1 if dels else 0)) or 1
         if len(old_manifests) <= max(want, 2):
             return None
-
-        seq = meta["last-sequence-number"] + 1
-        snapshot_id = uuid.uuid4().int & ((1 << 62) - 1)
-        now_ms = int(time.time() * 1000)
-        spec_json = self._spec_json()
-
-        def entry(f: DataFileInfo) -> dict:
-            return self._manifest_entry(
-                f, _STATUS_EXISTING, snapshot_id, f.sequence_number)
-
-        manifests = []
-        for i in range(0, len(live), target_entries_per_manifest):
-            chunk = live[i:i + target_entries_per_manifest]
-            mpath, mlen = self._write_manifest(
-                [entry(f) for f in chunk], spec_json)
-            manifests.append(self._manifest_list_entry(
-                mpath, mlen, seq,
-                min(f.sequence_number for f in chunk), snapshot_id,
-                (0, 0), (0, 0),
-                (len(chunk), sum(f.record_count for f in chunk)),
-            ))
+        step = target_entries_per_manifest
+        groups = [(live[i:i + step], _STATUS_EXISTING, 0)
+                  for i in range(0, len(live), step)]
         if dels:
-            dpath, dlen = self._write_manifest(
-                [entry(f) for f in dels], spec_json, content="deletes")
-            manifests.append(self._manifest_list_entry(
-                dpath, dlen, seq,
-                min(f.sequence_number for f in dels), snapshot_id,
-                (0, 0), (0, 0),
-                (len(dels), sum(f.record_count for f in dels)),
-                content=1,
-            ))
-        summary = {
-            "operation": "replace",
-            "added-data-files": "0",
-            "added-records": "0",
-            "rewritten-manifests": str(len(old_manifests)),
-            "added-manifests": str(len(manifests)),
-            "total-data-files": snap["summary"].get(
-                "total-data-files", str(len(live))),
-            "total-records": snap["summary"].get(
-                "total-records", str(sum(f.record_count for f in live))),
-        }
-        summary.update({k: str(v) for k, v in (summary_extra or {}).items()})
-        return self._finalize_snapshot(
-            manifests, seq, snapshot_id, now_ms, summary, meta, base_version,
-            snap,
-        )
+            groups.append((dels, _STATUS_EXISTING, 1))
+        return self._commit_snapshot(
+            base, "replace", groups,
+            summary={"rewritten-manifests": len(old_manifests),
+                     "added-manifests": len(groups)},
+            summary_extra=summary_extra)
 
     def expire_snapshots(self, older_than_ms: int | None = None,
                          retain_last: int = 1) -> dict:
@@ -1856,8 +1859,7 @@ class IcebergTable:
         meta, base_version = self._metadata_at()
         snaps = meta.get("snapshots", [])
         keep_ids = {s["snapshot-id"] for s in snaps[-max(retain_last, 1):]}
-        cur = meta.get("current-snapshot-id")
-        cur = None if cur in (-1, None) else cur
+        cur = self._head_id(meta)
         if cur is not None:
             keep_ids.add(cur)
         # refs pin their snapshots: a tagged training set never expires
@@ -2147,37 +2149,11 @@ class IcebergTable:
                         f"stats_filter on non-scalar column {col!r}")
                 stats_cols[fld["id"]] = (fld["type"], cond)
         snap = self._resolve_snapshot(snapshot_id, as_of_ms, ref)
-        if snap is None:
-            return []
-        out: list[DataFileInfo] = []
-        for m in self._read_manifest_list(snap["manifest-list"]):
-            if m.get("content", 0) != 0:
-                continue
-            for e in self._read_manifest(m["manifest_path"]):
-                if e["status"] == _STATUS_DELETED:
-                    continue
-                df = e["data_file"]
-                part = df.get("partition") or {}
-                if partition_filter and not _partition_match(
-                        part, partition_filter):
-                    continue
-                lower = _bounds_from_avro(df.get("lower_bounds"))
-                upper = _bounds_from_avro(df.get("upper_bounds"))
-                if stats_cols and not _stats_match(lower, upper, stats_cols):
-                    continue
-                out.append(DataFileInfo(
-                    file_path=_from_uri(df["file_path"]),
-                    record_count=df["record_count"],
-                    file_size_in_bytes=df["file_size_in_bytes"],
-                    # v2 inheritance: null entry seq → manifest's seq
-                    sequence_number=(
-                        e["sequence_number"] if e["sequence_number"] is not None
-                        else m["sequence_number"]),
-                    partition=part or None,
-                    lower_bounds=lower,
-                    upper_bounds=upper,
-                ))
-        return out
+        return [f for f in self._live_files(snap, 0)
+                if (not partition_filter
+                    or _partition_match(f.partition or {}, partition_filter))
+                and (not stats_cols or _stats_match(
+                    f.lower_bounds, f.upper_bounds, stats_cols))]
 
     def plan_delete_files(self, snapshot_id: int | None = None,
                           as_of_ms: int | None = None,
@@ -2189,29 +2165,8 @@ class IcebergTable:
         ordinal) pairs they record, in files with sequence number <=
         theirs).  Global (unpartitioned) application — partition pruning
         never skips a delete, so pruned reads stay correct."""
-        snap = self._resolve_snapshot(snapshot_id, as_of_ms, ref)
-        if snap is None:
-            return []
-        out: list[DataFileInfo] = []
-        for m in self._read_manifest_list(snap["manifest-list"]):
-            if m.get("content", 0) != 1:
-                continue
-            for e in self._read_manifest(m["manifest_path"]):
-                if e["status"] == _STATUS_DELETED:
-                    continue
-                df = e["data_file"]
-                out.append(DataFileInfo(
-                    file_path=_from_uri(df["file_path"]),
-                    record_count=df["record_count"],
-                    file_size_in_bytes=df["file_size_in_bytes"],
-                    sequence_number=(
-                        e["sequence_number"] if e["sequence_number"] is not None
-                        else m["sequence_number"]),
-                    partition=df.get("partition") or None,
-                    content=int(df.get("content") or 2),
-                    equality_ids=list(df.get("equality_ids") or []),
-                ))
-        return out
+        return self._live_files(
+            self._resolve_snapshot(snapshot_id, as_of_ms, ref), 1)
 
     def incremental_files(self, from_snapshot_id: int | None,
                           to_snapshot_id: int | None = None
@@ -2278,30 +2233,18 @@ class IcebergTable:
         of O(history). ``normalized_filter`` must already be in
         transformed partition space (:meth:`normalize_partition_filter`)."""
         sid = snap["snapshot-id"]
-        files: list[DataFileInfo] = []
-        if snap["summary"].get("operation") != "replace":
-            for m in self._read_manifest_list(snap["manifest-list"]):
-                if m["added_snapshot_id"] != sid:
-                    continue
-                if m.get("content", 0) != 0:
-                    continue
-                for e in self._read_manifest(m["manifest_path"]):
-                    if (e["status"] == _STATUS_ADDED
-                            and e["snapshot_id"] == sid):
-                        df = e["data_file"]
-                        part = df.get("partition") or None
-                        if normalized_filter and not _partition_match(
-                                part or {}, normalized_filter):
-                            continue
-                        files.append(DataFileInfo(
-                            file_path=_from_uri(df["file_path"]),
-                            record_count=df["record_count"],
-                            file_size_in_bytes=df["file_size_in_bytes"],
-                            sequence_number=m["sequence_number"],
-                            partition=part,
-                        ))
-        files.sort(key=lambda f: f.file_path)
-        return files
+        if snap["summary"].get("operation") == "replace":
+            return []
+        files = [
+            self._entry_file(e, m)
+            for m in self._read_manifest_list(snap["manifest-list"])
+            if m["added_snapshot_id"] == sid and m.get("content", 0) == 0
+            for e in self._read_manifest(m["manifest_path"])
+            if e["status"] == _STATUS_ADDED and e["snapshot_id"] == sid]
+        if normalized_filter:
+            files = [f for f in files if _partition_match(
+                f.partition or {}, normalized_filter)]
+        return sorted(files, key=lambda f: f.file_path)
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None,
              as_of_ms: int | None = None,
@@ -2484,10 +2427,11 @@ class IcebergTable:
         its followers see nothing until :meth:`fast_forward`."""
         if mode not in ("append", "overwrite"):
             raise ValueError(f"iceberg save mode must be append/overwrite, got {mode!r}")
-        infos = self._write_partitioned_tmp(df, "write", "")
-        if mode == "append":
-            return self.commit_append(infos, summary_extra, branch=branch)
-        return self.commit_overwrite(infos, summary_extra, branch=branch)
+        commit = (self.commit_append if mode == "append"
+                  else self.commit_overwrite)
+        with self._staged() as stage:
+            infos = stage(self._write_partitioned_tmp(df, "write", ""))
+            return commit(infos, summary_extra, branch=branch)
 
     def _write_partitioned_tmp(self, df: DataFrame, job_prefix: str,
                                name_prefix: str) -> list[DataFileInfo]:
@@ -2545,8 +2489,9 @@ class IcebergTable:
             raise ValueError(
                 "partition_filter must name at least one partition column")
 
-        new_files = self._write_partitioned_tmp(df, "powr", "powr-")
-        try:
+        with self._staged() as stage:
+            new_files = stage(
+                self._write_partitioned_tmp(df, "powr", "powr-"))
             # validate on the WRITTEN files' partition tuples — exact even
             # for non-deterministic frames (a pre-write scan could pass
             # while the write job re-computes different rows), and no
@@ -2560,93 +2505,25 @@ class IcebergTable:
                     f"fall outside the target partitions {sorted(flt)} "
                     f"(e.g. {stray[0].partition}) — filter the frame or "
                     "widen the partition_filter")
-            return self._commit_partial_overwrite(
-                new_files, flt, summary_extra)
-        except BaseException:
-            for f in new_files:
-                try:
-                    os.remove(f.file_path)
-                except OSError:
-                    pass
-            raise
-
-    def _commit_partial_overwrite(self, new_files: list[DataFileInfo],
-                                  normalized_filter: dict,
-                                  summary_extra: dict | None) -> int:
-        """Commit for :meth:`overwrite_partitions`: a self-contained
-        manifest list holding the added files, the non-matching live
-        files as EXISTING, the matching live files as DELETED, and the
-        live delete files (both kinds) as EXISTING."""
-        meta, base_version = self._metadata_at()
-        prev = self._resolve_snapshot(None, None)
-        if prev is None:
-            raise ValueError("cannot overwrite partitions of an empty table")
-        live = self.plan_files()
-        removed = [f for f in live if _partition_match(
-            f.partition or {}, normalized_filter)]
-        kept = [f for f in live if not _partition_match(
-            f.partition or {}, normalized_filter)]
-        dels = self.plan_delete_files()
-
-        seq = meta["last-sequence-number"] + 1
-        snapshot_id = uuid.uuid4().int & ((1 << 62) - 1)
-        now_ms = int(time.time() * 1000)
-        spec_json = self._spec_json()
-        new_rows = sum(f.record_count for f in new_files)
-        kept_rows = sum(f.record_count for f in kept)
-
-        manifests = []
-        if new_files:
-            apath, alen = self._write_manifest(
-                [self._manifest_entry(f, _STATUS_ADDED, snapshot_id, None)
-                 for f in new_files], spec_json)
-            manifests.append(self._manifest_list_entry(
-                apath, alen, seq, seq, snapshot_id,
-                (len(new_files), new_rows), (0, 0)))
-        if kept:
-            epath, elen = self._write_manifest(
-                [self._manifest_entry(f, _STATUS_EXISTING, snapshot_id,
-                                      f.sequence_number)
-                 for f in kept], spec_json)
-            manifests.append(self._manifest_list_entry(
-                epath, elen, seq,
-                min(f.sequence_number for f in kept), snapshot_id,
-                (0, 0), (0, 0), (len(kept), kept_rows)))
-        if removed:
-            dpath, dlen = self._write_manifest(
-                [self._manifest_entry(f, _STATUS_DELETED, snapshot_id,
-                                      f.sequence_number)
-                 for f in removed], spec_json)
-            manifests.append(self._manifest_list_entry(
-                dpath, dlen, seq,
-                min(f.sequence_number for f in removed), snapshot_id,
-                (0, 0),
-                (len(removed), sum(f.record_count for f in removed))))
-        if dels:
-            xpath, xlen = self._write_manifest(
-                [self._manifest_entry(f, _STATUS_EXISTING, snapshot_id,
-                                      f.sequence_number)
-                 for f in dels], spec_json, content="deletes")
-            manifests.append(self._manifest_list_entry(
-                xpath, xlen, seq,
-                min(f.sequence_number for f in dels), snapshot_id,
-                (0, 0), (0, 0),
-                (len(dels), sum(f.record_count for f in dels)), content=1))
-        summary = {
-            "operation": "overwrite",
-            "added-data-files": str(len(new_files)),
-            "added-records": str(new_rows),
-            "deleted-data-files": str(len(removed)),
-            "deleted-records": str(
-                sum(f.record_count for f in removed)),
-            "total-data-files": str(len(kept) + len(new_files)),
-            "total-records": str(kept_rows + new_rows),
-        }
-        summary.update({k: str(v) for k, v in (summary_extra or {}).items()})
-        return self._finalize_snapshot(
-            manifests, seq, snapshot_id, now_ms, summary, meta,
-            base_version, prev,
-        )
+            base = self._base()
+            if base.parent is None:
+                raise ValueError(
+                    "cannot overwrite partitions of an empty table")
+            # the added files, the non-matching live files as EXISTING,
+            # the matching ones as DELETED, and the live delete files
+            # (both kinds) as EXISTING
+            live = self._live_files(base.parent, 0)
+            groups = [(new_files, _STATUS_ADDED, 0)] if new_files else []
+            groups += [
+                ([f for f in live
+                  if not _partition_match(f.partition or {}, flt)],
+                 _STATUS_EXISTING, 0),
+                ([f for f in live
+                  if _partition_match(f.partition or {}, flt)],
+                 _STATUS_DELETED, 0),
+                (self._live_files(base.parent, 1), _STATUS_EXISTING, 1)]
+            return self._commit_snapshot(base, "overwrite", groups,
+                                         summary_extra=summary_extra)
 
     def upsert(self, spark: SparkSession, df: DataFrame,
                key_cols: list[str],
@@ -2680,27 +2557,20 @@ class IcebergTable:
                       for f in self.schema_json()["fields"]}
         eq_ids = [name_to_id[k] for k in key_cols]
 
-        # data files (partition-aware, same writer as write_dataframe)
-        data_infos = self._write_partitioned_tmp(df, "upsert", "upsert-")
-        del_infos: list[DataFileInfo] = []
-        try:
+        with self._staged() as stage:
+            # data files (partition-aware, same writer as write_dataframe)
+            data_infos = stage(
+                self._write_partitioned_tmp(df, "upsert", "upsert-"))
             # the equality-delete files: just the key tuples, hash-sharded
             # so a huge upsert's key write stays parallel
             tmp2 = os.path.join(
                 self.location, f".tmp-eqdel-{uuid.uuid4().hex[:8]}")
             df.select(*key_cols).repartition(*key_cols) \
                 .write.mode("overwrite").parquet(tmp2)
-            del_infos = self._harvest_delete_files(
-                tmp2, "eqdel", content=2, eq_ids=eq_ids)
+            del_infos = stage(self._harvest_delete_files(
+                tmp2, "eqdel", content=2, eq_ids=eq_ids))
             return self._commit_row_delta(data_infos, del_infos,
                                           summary_extra)
-        except BaseException:
-            for f in data_infos + del_infos:
-                try:
-                    os.remove(f.file_path)
-                except OSError:
-                    pass
-            raise
 
     def delete_keys(self, spark: SparkSession, keys_df: DataFrame,
                     key_cols: list[str],
@@ -2730,20 +2600,13 @@ class IcebergTable:
         # of funneling a huge erasure batch through one task
         keys_df.select(*key_cols).distinct() \
             .write.mode("overwrite").parquet(tmp)
-        del_infos = self._harvest_delete_files(
-            tmp, "eqdel", content=2, eq_ids=eq_ids)
-        try:
+        with self._staged() as stage:
+            del_infos = stage(self._harvest_delete_files(
+                tmp, "eqdel", content=2, eq_ids=eq_ids))
             if not del_infos:
                 return None
             return self._commit_row_delta([], del_infos, summary_extra,
                                           operation="delete")
-        except BaseException:
-            for f in del_infos:
-                try:
-                    os.remove(f.file_path)
-                except OSError:
-                    pass
-            raise
 
     def _harvest_delete_files(self, tmp: str, prefix: str, content: int,
                               eq_ids: list[int] | None = None
@@ -2853,81 +2716,34 @@ class IcebergTable:
         )
         tmp = os.path.join(self.location, f".tmp-posdel-{uuid.uuid4().hex[:8]}")
         matches.write.mode("overwrite").parquet(tmp)
-        del_infos = self._harvest_delete_files(tmp, "posdel", content=1)
-        try:
+        with self._staged() as stage:
+            del_infos = stage(
+                self._harvest_delete_files(tmp, "posdel", content=1))
             if not del_infos:
                 return None
             return self._commit_row_delta([], del_infos, summary_extra,
                                           operation="delete")
-        except BaseException:
-            for f in del_infos:
-                try:
-                    os.remove(f.file_path)
-                except OSError:
-                    pass
-            raise
 
     def _commit_row_delta(self, data_files: list[DataFileInfo],
-                          delete_file: DataFileInfo | list[DataFileInfo],
+                          delete_files: list[DataFileInfo],
                           summary_extra: dict | None = None,
                           operation: str = "overwrite") -> int:
-        """Commit new data files + delete file(s) (either v2 kind) as a
+        """Commit new data files + delete files (either v2 kind) as a
         single row-delta snapshot: an added data manifest (content=0), an
         added delete manifest (content=1), and the previous snapshot's
-        manifests carried forward."""
-        delete_files = (delete_file if isinstance(delete_file, list)
-                        else [delete_file])
-        meta, base_version = self._metadata_at()
-        prev = self._resolve_snapshot(None, None)
-        seq = meta["last-sequence-number"] + 1
-        snapshot_id = uuid.uuid4().int & ((1 << 62) - 1)
-        now_ms = int(time.time() * 1000)
-        spec_json = self._spec_json()
-
-        def entry(f: DataFileInfo) -> dict:
-            return self._manifest_entry(f, _STATUS_ADDED, snapshot_id, None)
-
-        add_rows = sum(f.record_count for f in data_files)
-        manifests = []
-        if data_files:
-            mpath, mlen = self._write_manifest(
-                [entry(f) for f in data_files], spec_json)
-            manifests.append(self._manifest_list_entry(
-                mpath, mlen, seq, seq, snapshot_id,
-                (len(data_files), add_rows), (0, 0),
-            ))
-        del_rows = sum(f.record_count for f in delete_files)
-        if delete_files:
-            dpath, dlen = self._write_manifest(
-                [entry(f) for f in delete_files], spec_json,
-                content="deletes")
-            manifests.append(self._manifest_list_entry(
-                dpath, dlen, seq, seq, snapshot_id,
-                (len(delete_files), del_rows), (0, 0), content=1,
-            ))
-        prev_total_files = prev_total_rows = 0
-        if prev is not None:
-            manifests.extend(self._read_manifest_list(prev["manifest-list"]))
-            prev_total_files = int(prev["summary"].get("total-data-files", 0))
-            prev_total_rows = int(prev["summary"].get("total-records", 0))
-        summary = {
-            "operation": operation,
-            "added-data-files": str(len(data_files)),
-            "added-records": str(add_rows),
-            "added-delete-files": str(len(delete_files)),
-            ("added-position-delete-records"
-             if delete_files and delete_files[0].content == 1
-             else "added-equality-delete-records"): str(del_rows),
-            # totals are metadata-level (pre-delete-application), like
-            # Iceberg's total-records on row-delta snapshots
-            "total-data-files": str(prev_total_files + len(data_files)),
-            "total-records": str(prev_total_rows + add_rows),
-        }
-        summary.update({k: str(v) for k, v in (summary_extra or {}).items()})
-        return self._finalize_snapshot(
-            manifests, seq, snapshot_id, now_ms, summary, meta, base_version,
-            prev,
-        )
+        manifests carried forward.  Totals stay metadata-level
+        (pre-delete-application), like Iceberg's total-records on
+        row-delta snapshots."""
+        kind = ("position" if delete_files and delete_files[0].content == 1
+                else "equality")
+        groups = [(data_files, _STATUS_ADDED, 0)] if data_files else []
+        groups.append((delete_files, _STATUS_ADDED, 1))
+        return self._commit_snapshot(
+            self._base(), operation, groups,
+            summary={"added-delete-files": len(delete_files),
+                     f"added-{kind}-delete-records":
+                         sum(f.record_count for f in delete_files)},
+            summary_extra=summary_extra, carry=True)
 
     def _register_written_files(self, tmp: str,
                                 name_prefix: str = "") -> list[DataFileInfo]:

@@ -3,6 +3,7 @@ time travel, incremental read, exactly-once sink (engine/iceberg.py)."""
 
 import json
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -425,7 +426,7 @@ def test_replace_carries_concurrent_append_forward(spark, tmp_path):
     appended = {f.file_path for f in t.plan_files()} - {
         f.file_path for f in planned}
     assert len(appended) == 1
-    sid = t.commit_replace(new_files, planned, [])     # ...commit wins CAS
+    sid = t.commit_replace(new_files, planned)     # ...commit wins CAS
     live = {f.file_path for f in t.plan_files()}
     assert appended <= live, "concurrent append dropped by replace"
     assert len(t.read(spark).toPandas()) == 30
@@ -450,7 +451,7 @@ def test_replace_raises_when_input_no_longer_live(spark, tmp_path):
     new_files = t._register_written_files(tmp, name_prefix="compact-")
     t.write_dataframe(_df(spark, 50, 60), mode="overwrite")  # inputs gone
     with pytest.raises(RuntimeError, match="no longer live"):
-        t.commit_replace(new_files, planned, [])
+        t.commit_replace(new_files, planned)
     assert len(t.read(spark).toPandas()) == 10  # overwrite result unchanged
 
 
@@ -1364,7 +1365,7 @@ def test_replace_refuses_unapplied_deletes(spark, tmp_path):
         .write.mode("overwrite").parquet(tmp)
     new_files = t._register_written_files(tmp, name_prefix="compact-")
     with pytest.raises(RuntimeError, match="not covered by this replace"):
-        t.commit_replace(new_files, live, [])
+        t.commit_replace(new_files, live)
 
 
 def test_upsert_on_partitioned_table(spark, tmp_path):
@@ -1968,3 +1969,353 @@ def test_remove_orphan_files(spark, tmp_path):
     assert t.read(spark, snapshot_id=first).count() == 10
     for f in t.plan_files(snapshot_id=first):
         assert os.path.exists(f.file_path)
+
+
+
+# ---------------------------------------------------------------------------
+# commit characterization: every snapshot-building path, pinned literally
+# ---------------------------------------------------------------------------
+
+_FILE_RE = re.compile(r"^(.*?)[0-9a-f]{8}-\d+\.parquet$")
+
+
+def _pdf(spark, ks, tag="a"):
+    """One-task frame keyed ``k`` with identity partition ``p = k % 2``
+    (so every write lands one file per touched partition)."""
+    return spark.createDataFrame(
+        [(k, k % 2, f"{tag}{k}") for k in ks], "k long, p long, s string"
+    ).coalesce(1)
+
+
+def _file_shape(files):
+    """(basename prefix, rows, sequence number) per file, sorted."""
+    return sorted(
+        (_FILE_RE.match(os.path.basename(f.file_path)).group(1),
+         f.record_count, f.sequence_number) for f in files)
+
+
+def _list_shape(t):
+    """Per manifest of the current snapshot's list: content, written by
+    this snapshot?, added/existing/deleted (files, rows), and sequence /
+    minimum sequence relative to the snapshot's."""
+    snap = t.snapshot(t.current_snapshot_id)
+    seq, sid = snap["sequence-number"], snap["snapshot-id"]
+    return [
+        (m["content"], m["added_snapshot_id"] == sid,
+         m["added_data_files_count"], m["added_rows_count"],
+         m["existing_data_files_count"], m["existing_rows_count"],
+         m["deleted_data_files_count"], m["deleted_rows_count"],
+         m["sequence_number"] - seq, m["min_sequence_number"] - seq)
+        for m in t._read_manifest_list(snap["manifest-list"])]
+
+
+def test_commit_paths_characterization(spark, tmp_path):
+    """Every snapshot-building path on one partitioned table, pinned to
+    literal summaries, manifest-list shapes, planned files and append-log
+    entries — a refactor of the commit code must reproduce each exactly
+    (manifest counts matter: rewrite_manifests triggers on them)."""
+    t = IcebergTable(str(tmp_path / "char"), schema=_pdf(spark, []).schema,
+                     partition_by=["p"])
+    log = []
+
+    def check(summary, manifests, live, dels, added, rows=None):
+        assert t.snapshot(t.current_snapshot_id)["summary"] == summary
+        assert _list_shape(t) == manifests
+        assert _file_shape(t.plan_files()) == live
+        assert _file_shape(t.plan_delete_files()) == dels
+        log.append(added)
+        assert [_file_shape(fs) for _, fs in t.append_log()] == log
+        if rows is not None:
+            assert sorted((r.k, r.s) for r in t.read(spark).collect()) == rows
+
+    a = [(k, f"a{k}") for k in range(10)]
+    b = [(k, f"b{k}") for k in range(10, 14)]
+
+    t.write_dataframe(_pdf(spark, range(10)),
+                      summary_extra={"writer": "char"})
+    check({"operation": "append", "added-data-files": "2",
+           "added-records": "10", "total-data-files": "2",
+           "total-records": "10", "writer": "char"},
+          [(0, True, 2, 10, 0, 0, 0, 0, 0, 0)],
+          [("", 5, 1), ("", 5, 1)], [], [("", 5, 1), ("", 5, 1)], a)
+
+    t.create_branch("audit")
+    t.write_dataframe(_pdf(spark, range(10, 14), "b"), branch="audit")
+    t.fast_forward("main", "audit")
+    check({"operation": "append", "added-data-files": "2",
+           "added-records": "4", "total-data-files": "4",
+           "total-records": "14"},
+          [(0, True, 2, 4, 0, 0, 0, 0, 0, 0),
+           (0, False, 2, 10, 0, 0, 0, 0, -1, -1)],
+          [("", 2, 2), ("", 2, 2), ("", 5, 1), ("", 5, 1)], [],
+          [("", 2, 2), ("", 2, 2)], a + b)
+
+    t.upsert(spark, _pdf(spark, [0, 1], "u"), ["k"])
+    live3 = [("", 2, 2), ("", 2, 2), ("", 5, 1), ("", 5, 1),
+             ("upsert-", 1, 3), ("upsert-", 1, 3)]
+    check({"operation": "overwrite", "added-data-files": "2",
+           "added-records": "2", "added-delete-files": "1",
+           "added-equality-delete-records": "2",
+           "total-data-files": "6", "total-records": "16"},
+          [(0, True, 2, 2, 0, 0, 0, 0, 0, 0),
+           (1, True, 1, 2, 0, 0, 0, 0, 0, 0),
+           (0, False, 2, 4, 0, 0, 0, 0, -1, -1),
+           (0, False, 2, 10, 0, 0, 0, 0, -2, -2)],
+          live3, [("eqdel-", 2, 3)],
+          [("upsert-", 1, 3), ("upsert-", 1, 3)],
+          [(0, "u0"), (1, "u1")] + a[2:] + b)
+
+    t.delete_keys(spark, spark.createDataFrame([(2,)], "k long"), ["k"])
+    check({"operation": "delete", "added-data-files": "0",
+           "added-records": "0", "added-delete-files": "1",
+           "added-equality-delete-records": "1",
+           "total-data-files": "6", "total-records": "16"},
+          [(1, True, 1, 1, 0, 0, 0, 0, 0, 0),
+           (0, False, 2, 2, 0, 0, 0, 0, -1, -1),
+           (1, False, 1, 2, 0, 0, 0, 0, -1, -1),
+           (0, False, 2, 4, 0, 0, 0, 0, -2, -2),
+           (0, False, 2, 10, 0, 0, 0, 0, -3, -3)],
+          live3, [("eqdel-", 1, 4), ("eqdel-", 2, 3)], [],
+          [(0, "u0"), (1, "u1")] + a[3:] + b)
+
+    t.delete_where(spark, "k = 5")
+    check({"operation": "delete", "added-data-files": "0",
+           "added-records": "0", "added-delete-files": "1",
+           "added-position-delete-records": "1",
+           "total-data-files": "6", "total-records": "16"},
+          [(1, True, 1, 1, 0, 0, 0, 0, 0, 0),
+           (1, False, 1, 1, 0, 0, 0, 0, -1, -1),
+           (0, False, 2, 2, 0, 0, 0, 0, -2, -2),
+           (1, False, 1, 2, 0, 0, 0, 0, -2, -2),
+           (0, False, 2, 4, 0, 0, 0, 0, -3, -3),
+           (0, False, 2, 10, 0, 0, 0, 0, -4, -4)],
+          live3, [("eqdel-", 1, 4), ("eqdel-", 2, 3), ("posdel-", 1, 5)],
+          [], [(0, "u0"), (1, "u1")] + a[3:5] + a[6:] + b)
+
+    t.overwrite_partitions(_pdf(spark, [101, 103, 105], "o"), {"p": 1})
+    after_powr = ([(0, "u0"), (4, "a4"), (6, "a6"), (8, "a8"), (10, "b10"),
+                   (12, "b12")] + [(k, f"o{k}") for k in (101, 103, 105)])
+    check({"operation": "overwrite", "added-data-files": "1",
+           "added-records": "3", "deleted-data-files": "3",
+           "deleted-records": "8", "total-data-files": "4",
+           "total-records": "11"},
+          [(0, True, 1, 3, 0, 0, 0, 0, 0, 0),
+           (0, True, 0, 0, 3, 8, 0, 0, 0, -5),
+           (0, True, 0, 0, 0, 0, 3, 8, 0, -5),
+           (1, True, 0, 0, 3, 4, 0, 0, 0, -3)],
+          [("", 2, 2), ("", 5, 1), ("powr-", 3, 6), ("upsert-", 1, 3)],
+          [("eqdel-", 1, 4), ("eqdel-", 2, 3), ("posdel-", 1, 5)],
+          [("powr-", 3, 6)], after_powr)
+
+    t.compact_data_files(spark, target_file_bytes=1 << 30)
+    compacted = [("compact-", 3, 7), ("compact-", 6, 7)]
+    check({"operation": "replace", "added-data-files": "2",
+           "added-records": "9", "deleted-data-files": "4",
+           "deleted-records": "11", "total-data-files": "2",
+           "total-records": "9", "compaction-input-files": "4",
+           "removed-delete-files": "3"},
+          [(0, True, 2, 9, 0, 0, 0, 0, 0, 0),
+           (0, True, 0, 0, 0, 0, 4, 11, 0, -6),
+           (1, True, 0, 0, 0, 0, 3, 4, 0, -4)],
+          compacted, [], [], after_powr)
+
+    t.rewrite_manifests(summary_extra={"reason": "char"})
+    check({"operation": "replace", "added-data-files": "0",
+           "added-records": "0", "rewritten-manifests": "3",
+           "added-manifests": "1", "total-data-files": "2",
+           "total-records": "9", "reason": "char"},
+          [(0, True, 0, 0, 2, 9, 0, 0, 0, -1)],
+          compacted, [], [], after_powr)
+
+    t.write_dataframe(_pdf(spark, range(200, 204), "f"), mode="overwrite")
+    check({"operation": "overwrite", "added-data-files": "2",
+           "added-records": "4", "deleted-data-files": "2",
+           "deleted-records": "9", "total-data-files": "2",
+           "total-records": "4"},
+          [(0, True, 2, 4, 0, 0, 0, 0, 0, 0),
+           (0, True, 0, 0, 0, 0, 2, 9, 0, -2)],
+          [("", 2, 9), ("", 2, 9)], [], [("", 2, 9), ("", 2, 9)],
+          [(k, f"f{k}") for k in range(200, 204)])
+
+    # a replace that keeps survivors: one big file stays, the two small
+    # ones are bin-packed (EXISTING manifest between ADDED and DELETED)
+    t.write_dataframe(spark.range(1000, 7000, 2).selectExpr(
+        "id AS k", "id % 2 AS p", "sha2(cast(id AS string), 256) AS s"
+    ).coalesce(1))
+    big = [("", 3000, 10)]
+    check({"operation": "append", "added-data-files": "1",
+           "added-records": "3000", "total-data-files": "3",
+           "total-records": "3004"},
+          [(0, True, 1, 3000, 0, 0, 0, 0, 0, 0),
+           (0, False, 2, 4, 0, 0, 0, 0, -1, -1),
+           (0, False, 0, 0, 0, 0, 2, 9, -1, -3)],
+          [("", 2, 9), ("", 2, 9)] + big, [], big)
+    before = sorted(t.read(spark).collect())
+    t.compact_data_files(spark, target_file_bytes=8192)
+    check({"operation": "replace", "added-data-files": "2",
+           "added-records": "4", "deleted-data-files": "2",
+           "deleted-records": "4", "total-data-files": "3",
+           "total-records": "3004", "compaction-input-files": "2"},
+          [(0, True, 2, 4, 0, 0, 0, 0, 0, 0),
+           (0, True, 0, 0, 1, 3000, 0, 0, 0, -1),
+           (0, True, 0, 0, 0, 0, 2, 4, 0, -2)],
+          big + [("compact-", 2, 11), ("compact-", 2, 11)], [], [])
+    assert sorted(t.read(spark).collect()) == before
+
+
+@pytest.mark.parametrize("op", ["add_columns", "tag_snapshot", "drop_ref"])
+def test_metadata_commits_refuse_a_racing_commit(spark, tmp_path,
+                                                 monkeypatch, op):
+    """add_columns / tag_snapshot / drop_ref publish on the metadata they
+    read: a commit landing right after that read must fail their CAS
+    instead of being erased from the republished metadata."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    t = _mktable(spark, tmp_path, "race")
+    sid = t.write_dataframe(_df(spark, 0, 5))
+    t.tag_snapshot("keep")
+    other = IcebergTable(t.location)
+    real = t._current_version
+    raced = []
+
+    def racing_version():
+        v = real()
+        if not raced:  # another writer appends right after the first read
+            raced.append(other.commit_append([]))
+        return v
+
+    monkeypatch.setattr(t, "_current_version", racing_version)
+    call = {
+        "add_columns": lambda: t.add_columns(
+            StructType([StructField("extra", StringType())])),
+        "tag_snapshot": lambda: t.tag_snapshot("v1", sid),
+        "drop_ref": lambda: t.drop_ref("keep"),
+    }[op]
+    with pytest.raises(RuntimeError, match="concurrent Iceberg commit"):
+        call()
+    monkeypatch.undo()
+    assert raced[0] in {s["snapshot-id"] for s in t.snapshots()}
+    assert t.current_snapshot_id == raced[0]
+
+
+def _two_commit_table(spark, tmp_path):
+    t = IcebergTable(str(tmp_path / "w"), schema=_pdf(spark, []).schema,
+                     partition_by=["p"])
+    t.write_dataframe(_pdf(spark, range(6)))
+    t.write_dataframe(_pdf(spark, range(6, 10)))
+    return t
+
+
+def _files_under(path):
+    return sorted(os.path.join(r, n) for r, _, ns in os.walk(path)
+                  for n in ns)
+
+
+def _rows(spark, t):
+    return {r.k: r.s for r in t.read(spark).collect()}
+
+
+_WRITERS = {
+    "write_dataframe": lambda spark, t: t.write_dataframe(
+        _pdf(spark, [20, 21], "w")),
+    "compact_data_files": lambda spark, t: t.compact_data_files(
+        spark, target_file_bytes=1 << 30),
+    "upsert": lambda spark, t: t.upsert(
+        spark, _pdf(spark, [0, 21], "u"), ["k"]),
+    "delete_keys": lambda spark, t: t.delete_keys(
+        spark, spark.createDataFrame([(2,)], "k long"), ["k"]),
+    "delete_where": lambda spark, t: t.delete_where(spark, "k = 3"),
+    "overwrite_partitions": lambda spark, t: t.overwrite_partitions(
+        _pdf(spark, [101], "o"), {"p": 1}),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_WRITERS))
+def test_writer_removes_its_files_when_the_commit_fails(
+        spark, tmp_path, monkeypatch, writer):
+    """A commit that fails before its metadata is published (here: the
+    CAS publish raises) leaves no data or delete file behind in data/,
+    whichever writer staged them, and the table reads as before."""
+    t = _two_commit_table(spark, tmp_path)
+    files, rows = _files_under(t.data_dir), _rows(spark, t)
+
+    def refuse(meta, base_version):
+        raise RuntimeError("injected publish failure")
+
+    monkeypatch.setattr(t, "_publish", refuse)
+    with pytest.raises(RuntimeError, match="injected publish failure"):
+        _WRITERS[writer](spark, t)
+    monkeypatch.undo()
+    assert _files_under(t.data_dir) == files
+    assert _rows(spark, t) == rows
+
+
+@pytest.mark.parametrize("writer", ["write_dataframe", "upsert"])
+@pytest.mark.parametrize("point", ["manifest", "manifest_list", "link"])
+def test_commit_core_crash_points(spark, tmp_path, monkeypatch, writer,
+                                  point):
+    """A crash at each step of the commit core.  Before the link (after a
+    manifest write, after the manifest-list write) the table is unchanged
+    and ``remove_orphan_files`` deletes exactly the leftovers; after the
+    link, before the version-hint update, the snapshot is committed: the
+    version scan-up finds it, every file it references stays, and the
+    next commit lands on the version after it."""
+    import time as _time
+
+    t = _two_commit_table(spark, tmp_path)
+    rows, sid0 = _rows(spark, t), t.current_snapshot_id
+    v0, files0 = t._current_version(), _files_under(t.location)
+    if writer == "write_dataframe":
+        want = {**rows, 20: "w20", 21: "w21"}
+    else:
+        want = {**rows, 0: "u0", 21: "u21"}
+
+    def crash(what):
+        raise RuntimeError(f"crash {what}")
+
+    if point == "manifest":
+        real_write_manifest = t._write_manifest
+
+        def write_manifest(*args, **kwargs):
+            real_write_manifest(*args, **kwargs)
+            crash("after a manifest write")
+
+        monkeypatch.setattr(t, "_write_manifest", write_manifest)
+    elif point == "manifest_list":
+        monkeypatch.setattr(t, "_publish", lambda meta, base_version: crash(
+            "after the manifest-list write"))
+    else:
+        real_replace = os.replace
+
+        def replace(src, dst):
+            if dst.endswith("version-hint.text"):
+                crash("after os.link, before the version-hint update")
+            return real_replace(src, dst)
+
+        monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(RuntimeError, match="crash"):
+        _WRITERS[writer](spark, t)
+    monkeypatch.undo()
+
+    if point != "link":
+        assert t.current_snapshot_id == sid0
+        assert _rows(spark, t) == rows
+        leftovers = sorted(set(_files_under(t.location)) - set(files0))
+        assert leftovers
+        future = int(_time.time() * 1000) + 60_000
+        got = t.remove_orphan_files(older_than_ms=future)
+        assert _files_under(t.location) == files0
+        assert got == {
+            "data_files": sum(p.startswith(t.data_dir) for p in leftovers),
+            "metadata_files": sum(p.startswith(t.metadata_dir)
+                                  for p in leftovers),
+            "tmp_files": 0}
+    else:
+        assert t._current_version() == v0 + 1
+        assert t.current_snapshot_id != sid0
+        assert all(os.path.exists(f.file_path)
+                   for f in t.plan_files() + t.plan_delete_files())
+        assert _rows(spark, t) == want
+    sid = t.write_dataframe(_pdf(spark, [30], "n"))
+    assert t.current_snapshot_id == sid
+    assert t._current_version() == v0 + (2 if point == "link" else 1)
