@@ -96,33 +96,15 @@ def _stream_once(spark, table, rundir: str,
     checkpoint and sink under ``rundir``): payload-direct decode → 60 s
     watermark → per-speaker 10-minute tumbling window → exactly-once ledger
     sink. ``partition_filter`` prunes the tail at the manifest level."""
-    from engine.audio import extract_audio_features_direct
-    from engine.sink import ParquetLedgerSink
-    from engine.streams import read_clip_stream_tail
-    from engine.windows import tumbling_agg
+    from engine.streams import run_window_pipeline
 
     n_clips = sum(f.record_count
                   for f in table.plan_files(partition_filter=partition_filter))
-    sink = ParquetLedgerSink(os.path.join(rundir, "out"),
-                             event_ts_col="window_start")
-    src = read_clip_stream_tail(
-        spark, table, max_files_per_trigger=4, watermark=None,
-        partition_filter=partition_filter,
-        progress_dir=os.path.join(rundir, "progress"),
-        exclude_columns=["bytes", "transcript"], include_file_path=True)
-    feats = extract_audio_features_direct(src).withWatermark(
-        "event_ts", "60 seconds")
-    agg = tumbling_agg(feats, "event_ts", "speaker_id", "rms", "10 minutes")
-
     t0 = time.time()
-    q = (
-        agg.writeStream.outputMode("append")
-        .option("checkpointLocation", os.path.join(rundir, "ckpt"))
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    _, sink = run_window_pipeline(
+        spark, table, os.path.join(rundir, "out"), os.path.join(rundir, "ckpt"),
+        max_files_per_trigger=4, features="basic",
+        partition_filter=partition_filter)
     elapsed = time.time() - t0
     audit = sink.audit()
     return {

@@ -289,6 +289,49 @@ def _spectral_one(x: np.ndarray, sr: int) -> tuple:
     )
 
 
+_BASE_FEATURE_COLS = [
+    "n_samples", "rms", "peak", "zcr", "decoded_dur_ms", "clipped_frac",
+]
+_SPECTRAL_FEATURE_COLS = [
+    "centroid_mean", "centroid_std", "bandwidth_mean", "rolloff_mean",
+    "flatness_mean", "energy_std", "band_energies",
+]
+
+
+def _audio_feature_schema(df: DataFrame, dropped: tuple, spectral: bool) -> str:
+    """DDL of the extractors' output: ``df``'s columns except ``dropped``,
+    then the feature columns."""
+    return (
+        ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
+                  for f in df.schema.fields if f.name not in dropped)
+        + ", "
+        + AUDIO_FEATURE_FIELDS
+        + (", " + SPECTRAL_FEATURE_FIELDS if spectral else "")
+    )
+
+
+def _audio_feature_batches(
+    batches: Iterator[pd.DataFrame], payloads, passthrough: list[str],
+    spectral: bool,
+) -> Iterator[pd.DataFrame]:
+    """The per-batch kernel of both extractors: decode each clip's payload
+    (``payloads(pdf)`` yields them in row order), compute its features, and
+    append them to the ``passthrough`` columns."""
+    for pdf in batches:
+        feats, specs = [], []
+        for b, c, s in zip(payloads(pdf), pdf["codec"], pdf["sr_hz"]):
+            x = decode_payload(b, c, s)
+            feats.append(_basic_feats(x, int(s)))
+            if spectral:
+                specs.append(_spectral_one(x, int(s)))
+        fcols = pd.DataFrame(feats, columns=_BASE_FEATURE_COLS, index=pdf.index)
+        if spectral:
+            scols = pd.DataFrame(specs, columns=_SPECTRAL_FEATURE_COLS,
+                                 index=pdf.index)
+            fcols = pd.concat([fcols, scols], axis=1)
+        yield pd.concat([pdf[passthrough], fcols], axis=1)
+
+
 def extract_audio_features(
     df: DataFrame, payload_col: str = "bytes", spectral: bool = False
 ) -> DataFrame:
@@ -301,33 +344,13 @@ def extract_audio_features(
     operator project only the needed columns (pushdown-friendly).
     """
     passthrough = [c for c in df.columns if c != payload_col]
-    out_schema = (
-        ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields if f.name != payload_col)
-        + ", "
-        + AUDIO_FEATURE_FIELDS
-        + (", " + SPECTRAL_FEATURE_FIELDS if spectral else "")
-    )
-    base_cols = ["n_samples", "rms", "peak", "zcr", "decoded_dur_ms", "clipped_frac"]
-    spec_cols = [
-        "centroid_mean", "centroid_std", "bandwidth_mean", "rolloff_mean",
-        "flatness_mean", "energy_std", "band_energies",
-    ]
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, specs = [], []
-            for b, c, s in zip(pdf[payload_col], pdf["codec"], pdf["sr_hz"]):
-                x = decode_payload(b, c, s)
-                feats.append(_basic_feats(x, int(s)))
-                if spectral:
-                    specs.append(_spectral_one(x, int(s)))
-            fcols = pd.DataFrame(feats, columns=base_cols, index=pdf.index)
-            if spectral:
-                scols = pd.DataFrame(specs, columns=spec_cols, index=pdf.index)
-                fcols = pd.concat([fcols, scols], axis=1)
-            yield pd.concat([pdf[passthrough], fcols], axis=1)
+        return _audio_feature_batches(
+            batches, lambda pdf: pdf[payload_col], passthrough, spectral)
 
-    return df.mapInPandas(op, schema=out_schema)
+    return df.mapInPandas(
+        op, schema=_audio_feature_schema(df, (payload_col,), spectral))
 
 
 def extract_audio_features_direct(
@@ -352,8 +375,6 @@ def extract_audio_features_direct(
     non-payload columns pass through; output schema matches
     :func:`extract_audio_features`.
     """
-    from pyspark.sql import functions as F  # noqa: F811 (local for clarity)
-
     meta_cols = [c for c in df.columns
                  if c not in (payload_col, "__file_path")]
     if "__file_path" in df.columns:
@@ -364,22 +385,6 @@ def extract_audio_features_direct(
     else:
         pruned = df.select(
             *meta_cols, F.col("_metadata.file_path").alias("__file_path"))
-
-    out_schema = (
-        ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in df.schema.fields
-            if f.name not in (payload_col, "__file_path")
-        )
-        + ", "
-        + AUDIO_FEATURE_FIELDS
-        + (", " + SPECTRAL_FEATURE_FIELDS if spectral else "")
-    )
-    base_cols = ["n_samples", "rms", "peak", "zcr", "decoded_dur_ms", "clipped_frac"]
-    spec_cols = [
-        "centroid_mean", "centroid_std", "bandwidth_mean", "rolloff_mean",
-        "flatness_mean", "energy_std", "band_energies",
-    ]
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow.parquet as pq
@@ -398,23 +403,15 @@ def extract_audio_features_direct(
                 payload_cache[path] = got
             return got
 
-        for pdf in batches:
-            feats, specs = [], []
-            for cid, fp, c, s in zip(
-                pdf[id_col], pdf["__file_path"], pdf["codec"], pdf["sr_hz"]
-            ):
-                b = payloads_for(fp)[cid]
-                x = decode_payload(b, c, s)
-                feats.append(_basic_feats(x, int(s)))
-                if spectral:
-                    specs.append(_spectral_one(x, int(s)))
-            fcols = pd.DataFrame(feats, columns=base_cols, index=pdf.index)
-            if spectral:
-                scols = pd.DataFrame(specs, columns=spec_cols, index=pdf.index)
-                fcols = pd.concat([fcols, scols], axis=1)
-            yield pd.concat([pdf[meta_cols], fcols], axis=1)
+        return _audio_feature_batches(
+            batches,
+            lambda pdf: (payloads_for(fp)[cid] for cid, fp in
+                         zip(pdf[id_col], pdf["__file_path"])),
+            meta_cols, spectral)
 
-    return pruned.mapInPandas(op, schema=out_schema)
+    return pruned.mapInPandas(
+        op, schema=_audio_feature_schema(
+            df, (payload_col, "__file_path"), spectral))
 
 
 def with_payload_size(df: DataFrame, payload_col: str = "bytes") -> DataFrame:

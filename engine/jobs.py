@@ -13,10 +13,16 @@ Subcommands
 -----------
 producer   materialize the clip 'topic' (deterministic synthetic audio+
            transcript table as ordered parquet chunks) — SimProducer analogue.
-pipeline   rate-controlled stream → watermark → keyed window aggregate →
-           exactly-once ledger sink — TransactionFraudExample analogue.
-           ``--stateful`` switches the aggregation from the built-in
-           ``window()`` operator to the custom applyInPandasWithState store.
+pipeline   rate-controlled stream → [decode + features] → watermark →
+           keyed window aggregate → exactly-once sink —
+           TransactionFraudExample analogue. The job is one call to
+           ``engine.streams.run_window_pipeline``, the one builder of the
+           flagship: it prunes the heavy columns the stages do not read,
+           decodes payload-direct (``--features speech`` in-frame), places
+           the watermark and builds the sink. ``--stateful`` switches the
+           aggregation from the built-in ``window()`` operator to the custom
+           applyInPandasWithState store; ``--iceberg-sink`` commits Iceberg
+           snapshots instead of the parquet+ledger sink.
 join       dual-stream stateful join: clip features ⋈ transcript features
            keyed by clip_id (north rule J6).
 
@@ -122,11 +128,39 @@ def _partition_filter(table, args) -> dict | None:
     return flt
 
 
+def _read_topic(spark, table, clips, partition_filter=None):
+    """Batch read of the clip topic: ``table`` when it is an Iceberg topic,
+    else the plain parquet dir ``clips``."""
+    if table is not None:
+        return table.read(spark, partition_filter=partition_filter)
+    return spark.read.parquet(clips)
+
+
+def _finish_stream_job(spark, sink, t0: float, inputs, rows_key: str) -> dict:
+    """Count the input and committed rows of a drained streaming job
+    started at ``t0``, audit its sink, stop the session, and return those
+    fields with the throughput."""
+    elapsed = time.time() - t0
+    n_in = inputs.count()
+    audit = sink.audit()
+    try:
+        out_rows = sink.read_committed(spark).count()
+    except ValueError:  # legitimately empty input → zero committed batches
+        out_rows = 0
+    spark.stop()
+    return {
+        "input_clips": n_in, rows_key: out_rows,
+        "elapsed_sec": round(elapsed, 3),
+        "clips_per_sec": round(n_in / elapsed, 1),
+        "exactly_once": audit["consistent"] and audit["unique_batch_ids"],
+        "n_batches": audit["n_batches"],
+    }
+
+
 def cmd_pipeline(args) -> dict:
-    from engine.iceberg import iceberg_table_at
+    from engine.iceberg import IcebergSink, iceberg_table_at
     from engine.session import get_spark
-    from engine.sink import ParquetLedgerSink
-    from engine.streams import read_clip_source, run_window_pipeline
+    from engine.streams import clip_features, run_window_pipeline
 
     # An Iceberg topic streams through the snapshot tail; --day /
     # --day-range / --partition turn the run into a pruned streamed
@@ -135,131 +169,32 @@ def cmd_pipeline(args) -> dict:
     day_filter = _partition_filter(table, args)
     spark = get_spark("pipeline", cores=args.cores,
                       shuffle_partitions=args.shuffle_partitions)
-    ckpt = args.checkpoint or os.path.join(args.out, "_checkpoint")
-    # payload-direct decode reads payloads disk→numpy itself; the speech
-    # features decode from bytes in the frame
-    direct = (args.decode and args.payload_direct
-              and args.features != "speech")
-
-    def make_source(watermark):
-        # a python data source gets NO Catalyst column pruning — heavy
-        # columns the pipeline never reads must be excluded at the tail or
-        # they cross the Arrow bridge at the ~750 MB/s transfer ceiling
-        needed = {args.key, args.value} | (
-            {"bytes"} if args.decode and not direct else set())
-        return read_clip_source(
-            spark, args.clips, os.path.join(ckpt, "_tail_progress"),
-            max_files_per_trigger=args.max_files_per_trigger,
-            watermark=watermark, partition_filter=day_filter,
-            exclude_columns=sorted({"bytes", "transcript"} - needed) or None,
-            include_file_path=direct)
-
-    def extractor(sdf):
-        from engine.audio import (
-            extract_audio_features,
-            extract_audio_features_direct,
-            extract_speech_features,
-        )
-
-        if args.features == "speech":
-            # mel/MFCC/pitch featurization (bytes ride the stream frame)
-            return extract_speech_features(sdf)
-        fe = extract_audio_features_direct if args.payload_direct else extract_audio_features
-        return fe(sdf, spectral=(args.features == "spectral"))
-
-    def read_input():
-        if table is not None:
-            return table.read(spark, partition_filter=day_filter)
-        return spark.read.parquet(args.clips)
-
-    if args.decode and args.warmup:
+    features = args.features if args.decode else None
+    inputs = _read_topic(spark, table, args.clips, day_filter)
+    if features:
         # Spawn python workers + compile codegen before the clock starts, so
         # sustained throughput is measured, not JVM/worker cold start.
-        extractor(read_input().limit(256)).write.format("noop") \
-            .mode("overwrite").save()
+        clip_features(inputs.limit(256), features) \
+            .write.format("noop").mode("overwrite").save()
 
     t0 = time.time()
-    if args.decode or args.stateful:
-        from engine.state import stateful_session_agg, stateful_window_agg
-        from engine.windows import session_agg, sliding_agg, tumbling_agg
-
-        src = make_source(None)
-        if args.decode:
-            # end-to-end flagship: vectorized PCM decode feeds the aggregate.
-            # Drop columns the window pipeline never reads (transcript) BEFORE
-            # the mapInPandas stage — passthrough columns cross the Arrow
-            # boundary twice, and mapInPandas gets no Catalyst pruning.
-            # (The stream-stream join job keeps transcript; this is the
-            # window-aggregate flagship only.)
-            src = src.drop("transcript")
-            src = extractor(src)
-            args.value = "f0_hz" if args.features == "speech" else "rms"
-        if not args.stateful:
-            src = src.withWatermark("event_ts", args.watermark)
-        if args.stateful:
-            # exact-parity mode: operator owns the (widened) watermark
-            if args.window == "session":
-                agg = stateful_session_agg(
-                    src, "event_ts", args.key, args.value, args.gap,
-                    watermark=args.watermark, n_buckets=args.n_buckets,
-                )
-            else:
-                slide = args.slide if args.window == "sliding" else None
-                agg = stateful_window_agg(
-                    src, "event_ts", args.key, args.value, args.width, slide=slide,
-                    watermark=args.watermark, n_buckets=args.n_buckets,
-                )
-        elif args.window == "session":
-            agg = session_agg(src, "event_ts", args.key, args.value, args.gap)
-        elif args.window == "sliding":
-            agg = sliding_agg(src, "event_ts", args.key, args.value, args.width, args.slide)
-        else:
-            agg = tumbling_agg(src, "event_ts", args.key, args.value, args.width)
-        if args.iceberg_sink:
-            from engine.iceberg import IcebergSink
-
-            sink = IcebergSink(args.out)
-        else:
-            sink = ParquetLedgerSink(args.out, event_ts_col="window_start")
-        q = (
-            agg.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink.foreach_batch())
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    else:
-        custom_sink = None
-        if args.iceberg_sink:
-            from engine.iceberg import IcebergSink
-
-            custom_sink = IcebergSink(args.out)
-        _, sink = run_window_pipeline(
-            spark, args.clips, args.out, ckpt,
-            window_kind=args.window, width=args.width, slide=args.slide,
-            gap=args.gap, key_col=args.key, value_col=args.value,
-            watermark=args.watermark,
-            sink=custom_sink, source_df=make_source(args.watermark),
-        )
-    elapsed = time.time() - t0
-    n_in = read_input().count()
-    audit = sink.audit()
-    try:
-        out_rows = sink.read_committed(spark).count()
-    except ValueError:  # legitimately empty input → zero committed batches
-        out_rows = 0
-    spark.stop()
+    _, sink = run_window_pipeline(
+        spark, args.clips, args.out,
+        args.checkpoint or os.path.join(args.out, "_checkpoint"),
+        window_kind=args.window, width=args.width, slide=args.slide,
+        gap=args.gap, key_col=args.key, value_col=args.value,
+        watermark=args.watermark,
+        max_files_per_trigger=args.max_files_per_trigger, features=features,
+        stateful=args.stateful, n_buckets=args.n_buckets,
+        partition_filter=day_filter,
+        sink=IcebergSink(args.out) if args.iceberg_sink else None,
+    )
     return {
         "job": "pipeline", "window": args.window, "stateful": args.stateful,
         "source": "tail" if table is not None else "file",
         "day_filter": {k: str(v) for k, v in day_filter.items()} if day_filter else None,
         "decode": args.decode,
-        "input_clips": n_in, "output_rows": out_rows,
-        "elapsed_sec": round(elapsed, 3),
-        "clips_per_sec": round(n_in / elapsed, 1),
-        "exactly_once": audit["consistent"] and audit["unique_batch_ids"],
-        "n_batches": audit["n_batches"],
+        **_finish_stream_job(spark, sink, t0, inputs, "output_rows"),
     }
 
 
@@ -276,23 +211,9 @@ def cmd_join(args) -> dict:
         spark, args.clips, args.out, ckpt, watermark=args.watermark,
         ttl=args.ttl, max_files_per_trigger=args.max_files_per_trigger,
     )
-    elapsed = time.time() - t0
-    table = iceberg_table_at(args.clips)
-    n_in = (table.read(spark) if table is not None
-            else spark.read.parquet(args.clips)).count()
-    audit = sink.audit()
-    try:
-        out_rows = sink.read_committed(spark).count()
-    except ValueError:  # legitimately empty input → zero committed batches
-        out_rows = 0
-    spark.stop()
-    return {
-        "job": "join", "input_clips": n_in, "joined_rows": out_rows,
-        "elapsed_sec": round(elapsed, 3),
-        "clips_per_sec": round(n_in / elapsed, 1),
-        "exactly_once": audit["consistent"] and audit["unique_batch_ids"],
-        "n_batches": audit["n_batches"],
-    }
+    inputs = _read_topic(spark, iceberg_table_at(args.clips), args.clips)
+    return {"job": "join",
+            **_finish_stream_job(spark, sink, t0, inputs, "joined_rows")}
 
 
 def cmd_serve(args) -> dict:
@@ -678,16 +599,13 @@ def build_parser() -> argparse.ArgumentParser:
                                 "(for high-cardinality keys)")
             p.add_argument("--decode", action="store_true",
                            help="decode PCM (vectorized) and aggregate rms "
-                                "instead of the metadata dur_ms column")
+                                "(f0_hz for speech) instead of --value")
             p.add_argument("--features", choices=("basic", "spectral", "speech"),
                            default="basic",
-                           help="acoustic feature set computed after decode")
-            p.add_argument("--payload-direct", action="store_true",
-                           help="read audio bytes straight from parquet in the "
-                                "Python stage (JVM scans metadata only)")
-            p.add_argument("--warmup", action=argparse.BooleanOptionalAction,
-                           default=True,
-                           help="pre-spawn workers/codegen before timing")
+                           help="acoustic feature set computed after decode; "
+                                "basic/spectral read payloads straight from "
+                                "parquet (the JVM scans metadata only), "
+                                "speech decodes the bytes in the frame")
             p.add_argument("--iceberg-sink", action="store_true",
                            help="commit results as Iceberg v2 snapshots "
                                 "instead of the parquet+ledger sink")

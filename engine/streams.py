@@ -19,9 +19,10 @@ the source from the input, in one place:
 Either way the checkpoint tracks the source offsets, so kill/restart
 resumes exactly (T3).
 
-The assembled pipeline mirrors ``TransactionFraudExample.run`` (:33-77):
-source → event-time watermark (60 s) → keyed tumbling/sliding/session window
-aggregate → exactly-once ledger sink.
+The flagship job mirrors ``TransactionFraudExample.run`` (:33-77): source
+→ optional feature stage → event-time watermark (60 s) → keyed
+tumbling/sliding/session window aggregate → exactly-once sink. It is
+assembled in one place, :func:`run_window_pipeline`.
 """
 
 from __future__ import annotations
@@ -359,38 +360,60 @@ def read_clip_source(
     clips,
     progress_dir: str,
     max_files_per_trigger: int = 1,
-    watermark: str | None = "60 seconds",
     partition_filter: dict | None = None,
-    exclude_columns: list[str] | None = None,
+    reads=(),
     include_file_path: bool = False,
 ) -> DataFrame:
-    """The clip stream for ``clips``, with the source picked from the input:
-    an Iceberg topic (see :func:`engine.iceberg.iceberg_table_at`) streams
-    through :func:`read_clip_stream_tail`, keeping its restart high-water
-    sidecar in ``progress_dir`` (give it a dir that lives with the query's
+    """The un-watermarked clip stream for ``clips``: an Iceberg topic (see
+    :func:`engine.iceberg.iceberg_table_at`) streams through
+    :func:`read_clip_stream_tail`, keeping its restart high-water sidecar in
+    ``progress_dir`` (give it a dir that lives with the query's
     checkpoint); a plain parquet dir streams through
     :func:`read_clip_stream`.
 
-    ``exclude_columns`` and ``include_file_path`` only shape the tail: a
-    Python data source gets no Catalyst column pruning, while the file
-    source does, and payload-direct decode reads its
-    ``_metadata.file_path``. ``partition_filter`` needs an Iceberg topic."""
+    Of the heavy columns (``bytes``, ``transcript``) only those in ``reads``
+    (the columns the downstream stage reads) are shipped: a Python data
+    source gets no Catalyst column pruning. ``include_file_path`` adds the
+    backing file's path as ``__file_path``, which payload-direct decode
+    reads. ``partition_filter`` needs an Iceberg topic."""
     from engine.iceberg import iceberg_table_at
 
+    exclude = sorted({"bytes", "transcript"} - set(reads))
     table = iceberg_table_at(clips)
-    if table is None:
-        if partition_filter:
-            raise ValueError(
-                f"partition_filter needs an Iceberg topic; {clips!r} is a "
-                "plain parquet dir")
-        return read_clip_stream(spark, clips,
-                                max_files_per_trigger=max_files_per_trigger,
-                                watermark=watermark)
-    return read_clip_stream_tail(
-        spark, table, max_files_per_trigger=max_files_per_trigger,
-        watermark=watermark, partition_filter=partition_filter,
-        progress_dir=progress_dir, exclude_columns=exclude_columns,
-        include_file_path=include_file_path)
+    if table is not None:
+        return read_clip_stream_tail(
+            spark, table, max_files_per_trigger=max_files_per_trigger,
+            watermark=None, partition_filter=partition_filter,
+            progress_dir=progress_dir, exclude_columns=exclude or None,
+            include_file_path=include_file_path)
+    if partition_filter:
+        raise ValueError(
+            f"partition_filter needs an Iceberg topic; {clips!r} is a "
+            "plain parquet dir")
+    stream = read_clip_stream(spark, clips,
+                              max_files_per_trigger=max_files_per_trigger,
+                              watermark=None)
+    if include_file_path:
+        stream = stream.withColumn("__file_path",
+                                   F.col("_metadata.file_path"))
+    return stream.drop(*exclude)
+
+
+def clip_features(df: DataFrame, features: str) -> DataFrame:
+    """The flagship's feature stage over a clip frame: ``basic`` or
+    ``spectral`` acoustic features decoded payload-direct (``df`` carries
+    ``__file_path`` or is parquet-backed), or ``speech`` features decoded
+    from the ``bytes`` in the frame."""
+    from engine.audio import (
+        extract_audio_features_direct,
+        extract_speech_features,
+    )
+
+    if features == "speech":
+        return extract_speech_features(df)
+    if features not in ("basic", "spectral"):
+        raise ValueError(f"unknown feature set {features!r}")
+    return extract_audio_features_direct(df, spectral=features == "spectral")
 
 
 def run_window_pipeline(
@@ -406,40 +429,69 @@ def run_window_pipeline(
     value_col: str = "dur_ms",
     watermark: str = "60 seconds",
     max_files_per_trigger: int = 1,
-    bug_compatible_stdev: bool = False,
+    features: str | None = None,
+    stateful: bool = False,
+    n_buckets: int | None = None,
+    partition_filter: dict | None = None,
     await_termination: bool = True,
     sink=None,
-    source_df: DataFrame | None = None,
 ):
-    """The flagship streaming job (TransactionFraudExample analogue):
-    rate-controlled source → watermark → keyed window agg → exactly-once sink.
+    """The flagship streaming job (TransactionFraudExample analogue) and the
+    one place it is assembled: clip source → [feature stage] → watermark →
+    keyed window aggregate → exactly-once sink. ``jobs pipeline``,
+    ``bench.py`` and :func:`run_multi_width_pipeline` call it.
 
     ``clips`` is a plain parquet topic dir or an Iceberg topic (see
-    :func:`read_clip_source`). ``sink`` overrides the default
-    ``ParquetLedgerSink`` with any object exposing the same
-    ``foreach_batch``/``audit``/``read_committed`` protocol (e.g.
-    ``engine.iceberg.IcebergSink``). ``source_df`` substitutes a prebuilt
-    streaming source (e.g. a partition-pruned :func:`read_clip_source`) —
-    it must already carry its watermark; ``clips``/
-    ``max_files_per_trigger`` are ignored.
+    :func:`read_clip_source`; ``partition_filter`` prunes the latter).
+    ``features`` (``basic``/``spectral``/``speech``) decodes each clip and
+    aggregates its ``rms`` (speech: ``f0_hz``) instead of ``value_col``.
+    ``stateful`` uses the applyInPandasWithState window store
+    (``n_buckets`` as in :func:`engine.state.stateful_window_agg`).
+    ``sink`` replaces the default ``ParquetLedgerSink`` with any object of
+    the same protocol (e.g. ``engine.iceberg.IcebergSink``).
 
-    Returns (StreamingQuery, sink).
+    Decided here, not by callers: the source ships ``bytes`` only to the
+    speech stage and ``transcript`` to none; basic/spectral decode
+    payload-direct (bytes go disk → Python, never through the JVM), speech
+    in-frame; the watermark goes right before a built-in aggregate — on the
+    source, or after the feature stage — and the stateful operator owns it.
+
+    Returns (StreamingQuery, sink); with ``await_termination`` the query is
+    drained and stopped.
     """
-    src = source_df if source_df is not None else read_clip_source(
-        spark, clips, os.path.join(checkpoint_dir, "_tail_progress"),
-        max_files_per_trigger=max_files_per_trigger, watermark=watermark,
-    )
-    if window_kind == "tumbling":
-        agg = tumbling_agg(src, "event_ts", key_col, value_col, width,
-                           bug_compatible_stdev=bug_compatible_stdev)
-    elif window_kind == "sliding":
-        agg = sliding_agg(src, "event_ts", key_col, value_col, width, slide,
-                          bug_compatible_stdev=bug_compatible_stdev)
-    elif window_kind == "session":
-        agg = session_agg(src, "event_ts", key_col, value_col, gap,
-                          bug_compatible_stdev=bug_compatible_stdev)
-    else:
+    if window_kind not in ("tumbling", "sliding", "session"):
         raise ValueError(f"unknown window kind {window_kind}")
+    src = read_clip_source(
+        spark, clips, os.path.join(checkpoint_dir, "_tail_progress"),
+        max_files_per_trigger=max_files_per_trigger,
+        partition_filter=partition_filter,
+        reads={key_col, value_col} | ({"bytes"} if features == "speech"
+                                      else set()),
+        include_file_path=features in ("basic", "spectral"))
+    if features:
+        src = clip_features(src, features)
+        value_col = "f0_hz" if features == "speech" else "rms"
+    if stateful:
+        from engine.state import stateful_session_agg, stateful_window_agg
+
+        if window_kind == "session":
+            agg = stateful_session_agg(
+                src, "event_ts", key_col, value_col, gap,
+                watermark=watermark, n_buckets=n_buckets)
+        else:
+            agg = stateful_window_agg(
+                src, "event_ts", key_col, value_col, width,
+                slide=slide if window_kind == "sliding" else None,
+                watermark=watermark, n_buckets=n_buckets)
+    else:
+        src = src.withWatermark("event_ts", watermark)
+        if window_kind == "tumbling":
+            agg = tumbling_agg(src, "event_ts", key_col, value_col, width)
+        elif window_kind == "sliding":
+            agg = sliding_agg(src, "event_ts", key_col, value_col, width,
+                              slide)
+        else:
+            agg = session_agg(src, "event_ts", key_col, value_col, gap)
 
     if sink is None:
         sink = ParquetLedgerSink(out_dir, event_ts_col="window_start")
@@ -450,8 +502,10 @@ def run_window_pipeline(
         .start()
     )
     if await_termination:
-        q.processAllAvailable()
-        q.stop()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
         q.awaitTermination()
     return q, sink
 
@@ -469,42 +523,35 @@ def run_multi_width_pipeline(
     await_termination: bool = True,
 ):
     """W4: the reference's three parallel feature groups (10m/1h/12h) fed from
-    ONE clip topic — one StreamingQuery per width (each owns its window state
-    and checkpoint), all subscribed to the same topic, exactly like the three
-    ``card_transactions_*_agg`` groups in the setup notebook (cells 4,
-    10-13). On an Iceberg topic each width tails it with its own progress
-    sidecar, bytes/transcript pruned at the source — the metadata
-    aggregate never ships payloads.
+    ONE clip topic — one :func:`run_window_pipeline` query per width, each
+    with its own state, checkpoint and sink under ``<root>/<width label>``,
+    like the three ``card_transactions_*_agg`` groups in the setup notebook
+    (cells 4, 10-13). When one width fails to start or drain, every query
+    already started is stopped before the error propagates.
 
     Returns {width_label: (query, sink)}.
     """
-    from engine.windows import tumbling_agg, width_label
+    from engine.windows import width_label
 
     out = {}
-    for w in widths:
-        lbl = width_label(w)
-        src = read_clip_source(
-            spark, clips, os.path.join(checkpoint_root, lbl, "_tail_progress"),
-            max_files_per_trigger=max_files_per_trigger, watermark=watermark,
-            exclude_columns=sorted(
-                {"bytes", "transcript"} - {key_col, value_col}))
-        agg = tumbling_agg(src, "event_ts", key_col, value_col, w)
-        sink = ParquetLedgerSink(
-            os.path.join(out_root, lbl), event_ts_col="window_start"
-        )
-        q = (
-            agg.writeStream.outputMode("append")
-            .queryName(f"width_{lbl}")
-            .option("checkpointLocation", os.path.join(checkpoint_root, lbl))
-            .foreachBatch(sink.foreach_batch())
-            .start()
-        )
-        out[lbl] = (q, sink)
-    if await_termination:
-        for q, _ in out.values():
-            q.processAllAvailable()
-        for q, _ in out.values():
-            q.stop()
+    leave_running = False
+    try:
+        for w in widths:
+            lbl = width_label(w)
+            out[lbl] = run_window_pipeline(
+                spark, clips, os.path.join(out_root, lbl),
+                os.path.join(checkpoint_root, lbl), width=w, key_col=key_col,
+                value_col=value_col, watermark=watermark,
+                max_files_per_trigger=max_files_per_trigger,
+                await_termination=False)
+        if await_termination:
+            for q, _ in out.values():
+                q.processAllAvailable()
+        leave_running = not await_termination
+    finally:
+        if not leave_running:
+            for q, _ in out.values():
+                q.stop()
     return out
 
 
@@ -544,19 +591,16 @@ def run_join_pipeline(
     the clip side carries ``__file_path`` instead of bytes (payload-direct
     decode), the transcript side drops bytes entirely.
     """
-    from engine.audio import extract_audio_features_direct
     from engine.state import stateful_stream_join
 
     clip_side = read_clip_source(
         spark, clips, os.path.join(checkpoint_dir, "_tail_progress_clip"),
-        max_files_per_trigger=max_files_per_trigger, watermark=None,
-        exclude_columns=["bytes", "transcript"], include_file_path=True)
+        max_files_per_trigger=max_files_per_trigger, include_file_path=True)
     txt_side = read_clip_source(
         spark, clips, os.path.join(checkpoint_dir, "_tail_progress_txt"),
-        max_files_per_trigger=max_files_per_trigger, watermark=None,
-        exclude_columns=["bytes"])
+        max_files_per_trigger=max_files_per_trigger, reads={"transcript"})
     feats = (
-        extract_audio_features_direct(clip_side)
+        clip_features(clip_side, "basic")
         .select("clip_id", "event_ts", "rms", "peak", "decoded_dur_ms")
         .withWatermark("event_ts", watermark)
     )

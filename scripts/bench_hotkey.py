@@ -73,28 +73,18 @@ def main():
     work = tempfile.mkdtemp(prefix="hotkey_")
     clips_dir = os.path.join(work, "clips")
     write_clips_stream_dir(clips_dir, N_CLIPS, n_files=12, seed=11)
-    # warm the JVM/Python workers so path order does not bias the comparison
+    # warmup: tiny throwaway streams (built-in and custom-store window)
+    # compile the plans/JVM paths so the first measured path is not biased
+    # by session warmup
+    from engine.streams import run_window_pipeline
 
-    # warmup: tiny throwaway streams compile the plans/JVM paths so the
-    # first measured path is not biased by session warmup
-    from engine.state import stateful_window_agg as _swa
-    from engine.streams import read_clip_stream as _rcs
-    from engine.sink import ParquetLedgerSink as _PLS
     warm_dir = os.path.join(work, "warm_clips")
     write_clips_stream_dir(warm_dir, 2000, n_files=2, seed=1)
-    for wname, wagg in (
-        ("w1", lambda s_: tumbling_agg(s_, "event_ts", "speaker_id", "dur_ms", "10 minutes")),
-        ("w2", lambda s_: _swa(s_, "event_ts", "speaker_id", "dur_ms", "10 minutes", n_buckets=4)),
-    ):
-        wq = (
-            wagg(_rcs(spark, warm_dir, max_files_per_trigger=2))
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", os.path.join(work, f"wc_{wname}"))
-            .foreachBatch(_PLS(os.path.join(work, f"ws_{wname}")).foreach_batch())
-            .start()
-        )
-        wq.processAllAvailable()
-        wq.stop()
+    for wname, stateful in (("w1", False), ("w2", True)):
+        run_window_pipeline(
+            spark, warm_dir, os.path.join(work, f"ws_{wname}"),
+            os.path.join(work, f"wc_{wname}"), max_files_per_trigger=2,
+            stateful=stateful, n_buckets=4)
 
     results = {}
     results["builtin"] = run_path(

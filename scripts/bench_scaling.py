@@ -61,7 +61,6 @@ def run_once(cores: int, clips_dir: str, workdir: str, zip_path: str,
             "--out", out,
             "--decode",
             "--features", "spectral",
-            "--payload-direct",
             "--cores", str(cores),
             "--shuffle-partitions", str(cores),
             "--max-files-per-trigger", str(max_files_per_trigger),

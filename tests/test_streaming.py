@@ -160,6 +160,28 @@ def test_multi_width_pipeline(spark, clips_dir, tmp_path):
         pd.testing.assert_frame_equal(wp.loc[gp.index], gp, check_exact=False, rtol=1e-9)
 
 
+def test_multi_width_pipeline_stops_every_query_when_one_width_fails(
+        spark, clips_dir, tmp_path):
+    """One width's ledger already holds batch 0 of another query, so its
+    sink refuses the batch and the call raises; every query the call
+    started is stopped, not left running."""
+    from engine.streams import run_multi_width_pipeline
+    from engine.windows import width_label
+
+    out = tmp_path / "out"
+    run_window_pipeline(spark, clips_dir, str(out / width_label("1 hour")),
+                        str(tmp_path / "other_ckpt"), width="1 hour",
+                        max_files_per_trigger=4)
+    with pytest.raises(Exception, match="reusing an output dir"):
+        run_multi_width_pipeline(
+            spark, clips_dir, str(out), str(tmp_path / "ckpt"),
+            widths=("10 minutes", "1 hour", "12 hours"))
+    leaked = spark.streams.active
+    for q in leaked:
+        q.stop()
+    assert [q.name for q in leaked] == []
+
+
 def test_streaming_dedup(spark, clips_dir, tmp_path):
     """Duplicated stream (two subscriptions unioned) → exactly one row per
     clip_id survives; state bounded by the watermark."""
