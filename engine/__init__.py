@@ -31,6 +31,17 @@ Module map (see SURVEY.md §7):
 - :mod:`engine.similarity` — brute-force + LSH-bucketed cosine top-k ANN
 - :mod:`engine.multimodal` — opaque binary media columns: metadata, batch
   plumbing, stubbed decoders
+
+Importing the package installs :mod:`engine._zipguard`: on CPython
+3.10–3.12 a Python worker otherwise re-reads the directory of every zip on
+``sys.path`` (``pyspark.zip``, py4j, a ``--py-files`` ``engine.zip``) at the
+start of each task, about 150 ms of CPU per task. Every engine reader and UDF
+unpickles an ``engine.*`` function, so each reused worker is guarded from its
+second task on.
 """
+
+from engine import _zipguard
+
+_zipguard.install()
 
 __version__ = "0.1.0"

@@ -2822,10 +2822,12 @@ class IcebergSink:
     per micro-batch (the jar-backed analogue of ``ParquetLedgerSink``,
     engine/sink.py — same protocol, Iceberg metadata instead of the JSON
     ledger). Idempotency: each snapshot's summary carries
-    ``streaming-batch-id``; a replayed ``batchId`` that is already in the
-    snapshot log is a no-op, so restarts never double-commit (T7). The
-    summary also carries ``streaming-query-id``: a batch id committed by a
-    different query (a reused table with a fresh checkpoint) is refused."""
+    ``streaming-batch-id``; a replayed ``batchId`` that is already in
+    main's ancestry is a no-op, so restarts never double-commit (T7). A
+    batch id staged on an unpublished branch is not committed to main, so
+    it does not count. The summary also carries ``streaming-query-id``: a
+    batch id committed by a different query (a reused table with a fresh
+    checkpoint) is refused."""
 
     BATCH_KEY = "streaming-batch-id"
     QUERY_KEY = "streaming-query-id"
@@ -2854,7 +2856,7 @@ class IcebergSink:
 
         table = self.table(batch_df)
         query_id = streaming_query_id(batch_df)
-        prior = [s["summary"] for s in table.snapshots()
+        prior = [s["summary"] for s in table._ancestry()
                  if int(s["summary"].get(self.BATCH_KEY, -1)) == batch_id]
         if prior:
             refuse_foreign_replay(self.location, batch_id,
@@ -2889,8 +2891,7 @@ class IcebergSink:
         import pyarrow.parquet as pq
 
         t = self.table()
-        snaps = t.snapshots()
-        ids = [s["summary"][self.BATCH_KEY] for s in snaps
+        ids = [s["summary"][self.BATCH_KEY] for s in t._ancestry()
                if self.BATCH_KEY in s["summary"]]
         files = t.plan_files()
         footer_rows = sum(

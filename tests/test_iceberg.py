@@ -212,6 +212,25 @@ def test_sink_exactly_once_replay_is_noop(spark, tmp_path):
     assert sink.read_committed(spark).count() == 30
 
 
+def test_sink_replay_lookup_ignores_unpublished_branch(spark, tmp_path):
+    """A batch id staged on a side branch is not committed to main: the
+    sink's replay lookup walks main's ancestry, so it still commits the
+    batch to main instead of skipping it (and losing its rows)."""
+    sink = IcebergSink(str(tmp_path / "sunk"))
+    assert sink.write_batch(_df(spark, 0, 20), 0) is True
+    t = sink.table()
+    t.create_branch("audit")
+    t.write_dataframe(_df(spark, 100, 105), branch="audit",
+                      summary_extra={IcebergSink.BATCH_KEY: 1})
+    df1 = _df(spark, 20, 30)
+    assert sink.write_batch(df1, 1) is True
+    assert (sorted(map(tuple, t.read(spark).collect()))
+            == sorted(map(tuple, _df(spark, 0, 30).collect())))
+    assert t.read(spark, ref="audit").count() == 25
+    audit = sink.audit()
+    assert audit["n_batches"] == 2 and audit["unique_batch_ids"]
+
+
 def test_sink_rejects_table_reuse_with_new_checkpoint(spark, tmp_path):
     """A fresh checkpoint restarts batch ids at 0: against a table holding
     another query's batches the sink refuses instead of skipping them as
