@@ -249,6 +249,9 @@ _STATUS_ADDED, _STATUS_EXISTING, _STATUS_DELETED = 1, 0, 2
 # snapshot-tail source (engine/tail.py) uses it to resume provably-safely
 # after its offset snapshot ages out of the retained history.
 TAIL_EXPIRY_WATERMARK_PROP = "tail.last-expired-append-seq"
+#: key tuples per equality-delete file an upsert writes: a 1k-row upsert
+#: writes one file, not one per shuffle partition
+EQ_DELETE_ROWS_PER_FILE = 1_000_000
 
 
 @dataclass
@@ -2546,9 +2549,10 @@ class IcebergTable:
         missing = [k for k in key_cols if k not in df.columns]
         if missing:
             raise ValueError(f"upsert key columns not in frame: {missing}")
-        dup = (df.groupBy(*key_cols).count()
-               .filter(F.col("count") > 1).limit(1).collect())
-        if dup:
+        per_key = df.groupBy(*key_cols).count()
+        rows, most = per_key.agg(F.sum("count"), F.max("count")).first()
+        if (most or 0) > 1:
+            dup = per_key.filter(F.col("count") > 1).limit(1).collect()
             raise ValueError(
                 f"upsert frame has multiple rows for key "
                 f"{[dup[0][k] for k in key_cols]} — resolve to one row per "
@@ -2562,10 +2566,14 @@ class IcebergTable:
             data_infos = stage(
                 self._write_partitioned_tmp(df, "upsert", "upsert-"))
             # the equality-delete files: just the key tuples, hash-sharded
-            # so a huge upsert's key write stays parallel
+            # so a huge upsert's key write stays parallel, at most one
+            # shard per EQ_DELETE_ROWS_PER_FILE rows
+            shards = max(1, min(
+                -(-(rows or 0) // EQ_DELETE_ROWS_PER_FILE),  # ceil
+                int(spark.conf.get("spark.sql.shuffle.partitions"))))
             tmp2 = os.path.join(
                 self.location, f".tmp-eqdel-{uuid.uuid4().hex[:8]}")
-            df.select(*key_cols).repartition(*key_cols) \
+            df.select(*key_cols).repartition(shards, *key_cols) \
                 .write.mode("overwrite").parquet(tmp2)
             del_infos = stage(self._harvest_delete_files(
                 tmp2, "eqdel", content=2, eq_ids=eq_ids))

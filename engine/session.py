@@ -9,13 +9,43 @@ Scale posture: the same builder is used on a real cluster via
 ``spark-submit --master yarn/k8s --py-files engine.zip``; only ``master`` and
 the shuffle-partition count change. AQE is always on so the post-shuffle
 partition count self-tunes with data volume.
+
+Local file I/O: without ``libhadoop``, Hadoop's ``RawLocalFileSystem`` forks
+``chmod`` after every file create and mkdir, and ``readlink`` on every
+``FileContext.rename`` (each ``CheckpointFileManager.createAtomic``). A
+flagship trigger commits RocksDB state, offset and commit logs and ledger
+parquet files through it: about 120 forks of ~7 ms each. When this module
+launches the JVM itself (local master), it compiles the three small Java
+classes in ``engine/niofs/`` once with the JDK's ``javac`` (cached by source
+hash and PySpark version in ``engine/niofs/build/``), puts the jar on the
+driver classpath and makes them the ``file:`` ``FileSystem`` and
+``AbstractFileSystem``. They do those two operations through ``java.nio`` and
+inherit everything else, ``.crc`` checksums included. Without ``javac``, under
+``spark-submit`` or against a ``SPARK_MASTER`` (executors elsewhere would not
+have the jar), sessions use stock Hadoop and log one warning.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+NIOFS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "niofs")
+NIOFS_CONF = {
+    "spark.hadoop.fs.file.impl": "engine.niofs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "engine.niofs.NioLocalFs",
+}
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -81,6 +111,7 @@ def get_spark(
     # PYSPARK_GATEWAY_PORT is set iff spark-submit's JVM launched this Python
     # process (the JVM then owns master/memory); SPARK_MASTER is our own
     # explicit override.
+    extra_conf = dict(extra_conf or {})
     if "PYSPARK_GATEWAY_PORT" not in os.environ and not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cores}]")
         # spark.driver.memory must reach the JVM at launch: setting it on the
@@ -91,11 +122,86 @@ def get_spark(
         if "PYSPARK_SUBMIT_ARGS" not in os.environ:
             os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
         builder = builder.config("spark.driver.memory", mem)
-    for k, v in (extra_conf or {}).items():
+        jar = _niofs_jar()
+        if jar is not None and _jvm_can_load_niofs():
+            cp = extra_conf.get("spark.driver.extraClassPath")
+            extra_conf["spark.driver.extraClassPath"] = (
+                f"{cp}{os.pathsep}{jar}" if cp else jar)
+            extra_conf = {**NIOFS_CONF, **extra_conf}
+    else:
+        _warn_stock_fs("spark-submit or SPARK_MASTER owns the JVM")
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@functools.cache
+def _warn_stock_fs(reason: str) -> None:
+    log.warning("engine.session: %s; the local file system is stock Hadoop, "
+                "which forks chmod/readlink for every small file it commits",
+                reason)
+
+
+@functools.cache
+def _niofs_jar() -> str | None:
+    """The jar of ``engine/niofs/*.java``, compiled on first use; None (and
+    one warning) when it cannot be built."""
+    import pyspark
+    from pyspark.find_spark_home import _find_spark_home
+
+    sources = sorted(glob.glob(os.path.join(NIOFS_DIR, "*.java")))
+    key = hashlib.sha256(pyspark.__version__.encode())
+    for src in sources:
+        with open(src, "rb") as fh:
+            key.update(fh.read())
+    build = os.path.join(NIOFS_DIR, "build")
+    jar = os.path.join(build, f"niofs-{key.hexdigest()[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    java_home = os.environ.get("JAVA_HOME")
+    javac = (os.path.join(java_home, "bin", "javac") if java_home
+             else shutil.which("javac"))
+    if not javac or not os.access(javac, os.X_OK):
+        _warn_stock_fs("no javac to build engine/niofs")
+        return None
+    classpath = os.path.join(_find_spark_home(), "jars", "*")
+    try:
+        os.makedirs(build, exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=build) as tmp:
+            classes = os.path.join(tmp, "classes")
+            proc = subprocess.run(
+                [javac, "--release", "17", "-nowarn", "-d", classes,
+                 "-cp", classpath, *sources],
+                capture_output=True, text=True)
+            if proc.returncode != 0:
+                _warn_stock_fs(f"javac failed on engine/niofs: {proc.stderr.strip()}")
+                return None
+            staged = os.path.join(tmp, "niofs.jar")
+            with zipfile.ZipFile(staged, "w") as zf:
+                for dirpath, _, files in os.walk(classes):
+                    for f in sorted(files):
+                        full = os.path.join(dirpath, f)
+                        zf.write(full, os.path.relpath(full, classes))
+            os.replace(staged, jar)  # concurrent compiles publish the same bytes
+    except OSError as exc:
+        _warn_stock_fs(f"cannot build engine/niofs: {exc}")
+        return None
+    return jar
+
+
+def _jvm_can_load_niofs() -> bool:
+    """True unless this process already runs a JVM without the jar (a session
+    stopped and rebuilt reuses the JVM, and its classpath)."""
+    from py4j.java_gateway import JavaClass
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    if jvm is None or isinstance(jvm.engine.niofs.NioLocalFileSystem, JavaClass):
+        return True
+    _warn_stock_fs("this process's JVM was launched without engine/niofs")
+    return False
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict:

@@ -1336,6 +1336,33 @@ def test_upsert_equality_deletes_read_and_time_travel(spark, tmp_path):
         t.upsert(spark, dup, ["k"])
 
 
+def test_upsert_writes_one_delete_file_for_small_frames(spark, tmp_path):
+    """A 1k-row upsert writes its key tuples as one equality-delete file,
+    not one per shuffle partition, and reads resolve as before. AQE's
+    partition coalescing is off, so the bound does not rest on it."""
+    t = _mktable(spark, tmp_path, "up1k")
+    t.write_dataframe(_df(spark, 0, 1500).coalesce(2))
+    up = spark.range(500, 1500).selectExpr(
+        "id AS k", "cast(-id AS double) AS v", "concat('up-', id) AS s")
+    confs = {"spark.sql.shuffle.partitions": "64",
+             "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        t.upsert(spark, up, ["k"])
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    dels = t.plan_delete_files()
+    assert len(dels) == 1 and dels[0].record_count == 1000
+    got = t.read(spark).toPandas().sort_values("k", ignore_index=True)
+    assert got.k.tolist() == list(range(1500))
+    assert (got.v[got.k < 500] == got.k[got.k < 500] * 1.5).all()
+    assert (got.v[got.k >= 500] == -got.k[got.k >= 500]).all()
+    assert (got.s[got.k >= 500] == "up-" + got.k[got.k >= 500].astype(str)).all()
+
+
 def test_upsert_compaction_purges_deletes_plain_scan(spark, tmp_path):
     """After compact_data_files the deletes are folded into the data files:
     plan_delete_files is empty, the read is row-identical, and the plan
