@@ -703,13 +703,12 @@ class IcebergTable:
         self.location = os.path.abspath(location)
         self.metadata_dir = os.path.join(self.location, "metadata")
         self.data_dir = os.path.join(self.location, "data")
-        os.makedirs(self.metadata_dir, exist_ok=True)
-        os.makedirs(self.data_dir, exist_ok=True)
-        if self._current_version() is None:
-            if schema is None:
-                raise ValueError(
-                    f"no Iceberg table at {location!r} and no schema to create one"
-                )
+        exists = self._current_version() is not None
+        if not exists and schema is None:
+            raise ValueError(
+                f"no Iceberg table at {location!r} and no schema to create one"
+            )
+        if not exists:  # validated in full before any dir is created
             ice_schema, last_col = spark_schema_to_iceberg(schema)
             spec_fields = []
             for i, term in enumerate(partition_by or []):
@@ -802,7 +801,9 @@ class IcebergTable:
                 "metadata-log": [],
                 "refs": {},
             }
+            os.makedirs(self.metadata_dir, exist_ok=True)
             self._publish(meta, base_version=None)
+        os.makedirs(self.data_dir, exist_ok=True)
 
     # -- partition spec -----------------------------------------------------
     def _spec(self, meta: dict | None = None) -> dict:
@@ -929,6 +930,8 @@ class IcebergTable:
                 while os.path.exists(self._version_path(v + 1)):
                     v += 1
                 return v
+        if not os.path.isdir(self.metadata_dir):
+            return None
         vs = [
             int(n[1:].split(".")[0]) for n in os.listdir(self.metadata_dir)
             if n.startswith("v") and n.endswith(".metadata.json")
@@ -2812,7 +2815,7 @@ class IcebergTable:
 def iceberg_table_at(location) -> IcebergTable | None:
     """The Iceberg table ``location`` names — an ``IcebergTable`` passes
     through, a path holding ``metadata/version-hint.text`` opens — or None
-    when the path is not an Iceberg table (e.g. a plain parquet dir)."""
+    when the path is not an Iceberg table (e.g. a ledger sink dir)."""
     if isinstance(location, IcebergTable):
         return location
     if os.path.exists(os.path.join(location, "metadata", "version-hint.text")):

@@ -11,9 +11,11 @@ Our equivalents are subcommands of this module, launched either as
 
 Subcommands
 -----------
-producer   materialize the clip 'topic' (deterministic synthetic audio+
-           transcript table as ordered parquet chunks) — SimProducer analogue.
-pipeline   rate-controlled stream → [decode + features] → watermark →
+producer   write the clip topic: a deterministic synthetic audio+transcript
+           table as a new Iceberg v2 table whose append snapshots carry
+           the shards in arrival order — SimProducer analogue.
+pipeline   rate-controlled snapshot-tail stream of the clip topic →
+           [decode + features] → watermark →
            keyed window aggregate → exactly-once sink —
            TransactionFraudExample analogue. The job is one call to
            ``engine.streams.run_window_pipeline``, the one builder of the
@@ -47,48 +49,46 @@ def _add_common(p: argparse.ArgumentParser) -> None:
 
 
 def cmd_producer(args) -> dict:
-    t0 = time.time()
-    out = {
-        "job": "producer", "out": args.out, "clips": args.n_clips,
-        "files": args.n_files,
-    }
-    if args.iceberg:
-        from engine.streams import write_clips_iceberg
+    from engine.streams import write_clips_iceberg
 
-        partition_by = (getattr(args, "partition_by", None)
-                        or (["days(event_ts)"] if args.partition_days
-                            else None))
+    t0 = time.time()
+    try:
         table = write_clips_iceberg(
             args.out, args.n_clips, n_files=args.n_files, seed=args.seed,
             files_per_snapshot=args.files_per_snapshot,
             jitter_ms=args.jitter_ms, max_dur_ms=args.max_dur_ms,
-            mean_gap_ms=args.mean_gap_ms,
-            partition_by=partition_by,
+            mean_gap_ms=args.mean_gap_ms, partition_by=args.partition_by,
         )
-        out["iceberg_snapshots"] = len(table.snapshots())
-        out["partitioned"] = bool(partition_by)
-    else:
-        from engine.streams import write_clips_stream_dir
+    except ValueError as e:  # an existing topic, a bad --partition-by term
+        raise SystemExit(f"producer: {e}") from None
+    return {
+        "job": "producer", "out": args.out, "clips": args.n_clips,
+        "files": args.n_files, "iceberg_snapshots": len(table.snapshots()),
+        "partitioned": bool(args.partition_by),
+        "elapsed_sec": round(time.time() - t0, 3),
+    }
 
-        write_clips_stream_dir(
-            args.out, args.n_clips, n_files=args.n_files, seed=args.seed,
-            jitter_ms=args.jitter_ms, max_dur_ms=args.max_dur_ms,
-        )
-    out["elapsed_sec"] = round(time.time() - t0, 3)
-    return out
+
+def _open_topic(clips):
+    """The clip topic at ``clips``; a path that holds no Iceberg table
+    exits with a usage error before anything is created."""
+    from engine.iceberg import IcebergTable
+
+    try:
+        return IcebergTable(clips)
+    except ValueError as e:
+        raise SystemExit(
+            f"--clips: {e} (write a clip topic with `jobs producer`)"
+        ) from None
 
 
 def _partition_filter(table, args) -> dict | None:
-    """The ``--day``/``--day-range``/``--partition`` pruning filter for an
-    Iceberg topic, validated as CLI input: each failure exits with a usage
-    error, and so does a filter that matches no committed file (streaming
-    zero rows would look like success)."""
+    """The ``--day``/``--day-range``/``--partition`` pruning filter for the
+    clip topic ``table``, validated as CLI input: each failure exits with a
+    usage error, and so does a filter that matches no committed file
+    (streaming zero rows would look like success)."""
     if not (args.day or args.day_range or args.partition):
         return None
-    if table is None:
-        raise SystemExit(
-            "--day/--day-range/--partition need a partitioned Iceberg "
-            "topic (producer --iceberg --partition-days)")
     flt = {}
     if args.day or args.day_range:
         day_fields = [f["name"] for f in table.spec_fields()
@@ -128,14 +128,6 @@ def _partition_filter(table, args) -> dict | None:
     return flt
 
 
-def _read_topic(spark, table, clips, partition_filter=None):
-    """Batch read of the clip topic: ``table`` when it is an Iceberg topic,
-    else the plain parquet dir ``clips``."""
-    if table is not None:
-        return table.read(spark, partition_filter=partition_filter)
-    return spark.read.parquet(clips)
-
-
 def _finish_stream_job(spark, sink, t0: float, inputs, rows_key: str) -> dict:
     """Count the input and committed rows of a drained streaming job
     started at ``t0``, audit its sink, stop the session, and return those
@@ -158,19 +150,18 @@ def _finish_stream_job(spark, sink, t0: float, inputs, rows_key: str) -> dict:
 
 
 def cmd_pipeline(args) -> dict:
-    from engine.iceberg import IcebergSink, iceberg_table_at
+    from engine.iceberg import IcebergSink
     from engine.session import get_spark
     from engine.streams import clip_features, run_window_pipeline
 
-    # An Iceberg topic streams through the snapshot tail; --day /
-    # --day-range / --partition turn the run into a pruned streamed
-    # backfill that plans only the matching partitions' files.
-    table = iceberg_table_at(args.clips)
+    # --day / --day-range / --partition turn the run into a pruned
+    # streamed backfill that plans only the matching partitions' files.
+    table = _open_topic(args.clips)
     day_filter = _partition_filter(table, args)
     spark = get_spark("pipeline", cores=args.cores,
                       shuffle_partitions=args.shuffle_partitions)
     features = args.features if args.decode else None
-    inputs = _read_topic(spark, table, args.clips, day_filter)
+    inputs = table.read(spark, partition_filter=day_filter)
     if features:
         # Spawn python workers + compile codegen before the clock starts, so
         # sustained throughput is measured, not JVM/worker cold start.
@@ -179,7 +170,7 @@ def cmd_pipeline(args) -> dict:
 
     t0 = time.time()
     _, sink = run_window_pipeline(
-        spark, args.clips, args.out,
+        spark, table, args.out,
         args.checkpoint or os.path.join(args.out, "_checkpoint"),
         window_kind=args.window, width=args.width, slide=args.slide,
         gap=args.gap, key_col=args.key, value_col=args.value,
@@ -191,7 +182,6 @@ def cmd_pipeline(args) -> dict:
     )
     return {
         "job": "pipeline", "window": args.window, "stateful": args.stateful,
-        "source": "tail" if table is not None else "file",
         "day_filter": {k: str(v) for k, v in day_filter.items()} if day_filter else None,
         "decode": args.decode,
         **_finish_stream_job(spark, sink, t0, inputs, "output_rows"),
@@ -199,19 +189,19 @@ def cmd_pipeline(args) -> dict:
 
 
 def cmd_join(args) -> dict:
-    from engine.iceberg import iceberg_table_at
     from engine.session import get_spark
     from engine.streams import run_join_pipeline
 
+    table = _open_topic(args.clips)
     spark = get_spark("join", cores=args.cores,
                       shuffle_partitions=args.shuffle_partitions)
     ckpt = args.checkpoint or os.path.join(args.out, "_checkpoint")
     t0 = time.time()
     _, sink = run_join_pipeline(
-        spark, args.clips, args.out, ckpt, watermark=args.watermark,
+        spark, table, args.out, ckpt, watermark=args.watermark,
         ttl=args.ttl, max_files_per_trigger=args.max_files_per_trigger,
     )
-    inputs = _read_topic(spark, iceberg_table_at(args.clips), args.clips)
+    inputs = table.read(spark)
     return {"job": "join",
             **_finish_stream_job(spark, sink, t0, inputs, "joined_rows")}
 
@@ -294,18 +284,15 @@ def cmd_backfill(args) -> dict:
     table (the reference's backfill job, ``README.md:26-28``): same aggregate
     as the streaming pipeline, committed as one exactly-once ledger batch per
     width so time travel and serving read a consistent snapshot."""
-    from pyspark.sql import functions as F
-
     from engine.session import get_spark
     from engine.sink import ParquetLedgerSink
     from engine.windows import multi_width_aggs
 
+    table = _open_topic(args.clips)
     spark = get_spark("backfill", cores=args.cores,
                       shuffle_partitions=args.shuffle_partitions)
     t0 = time.time()
-    clips = spark.read.parquet(args.clips).withColumn(
-        "event_ts", F.col("event_ts").cast("timestamp")
-    )
+    clips = table.read(spark)
     widths = tuple(w.strip() for w in args.widths.split(",") if w.strip())
     aggs = multi_width_aggs(clips, "event_ts", args.key, args.value, widths=widths)
     out_rows = {}
@@ -481,28 +468,24 @@ def build_parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(prog="engine.jobs")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
-    p = sub.add_parser("producer", help="materialize the clip topic")
-    p.add_argument("--out", required=True)
+    p = sub.add_parser("producer", help="write the clip topic, a new "
+                                        "Iceberg v2 table")
+    p.add_argument("--out", required=True,
+                   help="topic location; must not hold an Iceberg table yet")
     p.add_argument("--n-clips", type=int, default=10_000)
     p.add_argument("--n-files", type=int, default=20)
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--jitter-ms", type=int, default=30_000)
     p.add_argument("--max-dur-ms", type=int, default=1000)
-    p.add_argument("--iceberg", action="store_true",
-                   help="write the topic as an Iceberg v2 table "
-                        "(manifest-planned snapshots over the same shards)")
-    p.add_argument("--partition-days", action="store_true",
-                   help="lay the Iceberg topic out partitioned by "
-                        "days(event_ts) — the 10^12-clip deployment shape")
     p.add_argument("--partition-by", action="append", default=None,
                    metavar="TERM",
-                   help="arbitrary Iceberg partition terms for the topic, "
-                        "e.g. hours(event_ts) or 'bucket(8, speaker_id)' "
-                        "(repeatable; overrides --partition-days)")
+                   help="Iceberg partition terms for the topic (repeatable), "
+                        "e.g. 'days(event_ts)' (the 10^12-clip deployment "
+                        "shape), hours(event_ts) or 'bucket(8, speaker_id)'")
     p.add_argument("--mean-gap-ms", type=int, default=1000,
                    help="mean inter-clip gap (stretches the topic across days)")
     p.add_argument("--files-per-snapshot", type=int, default=None,
-                   help="shards per Iceberg append snapshot (default: all in one)")
+                   help="shards per append snapshot (default: all in one)")
     p.set_defaults(fn=cmd_producer)
 
     p = sub.add_parser("serve", help="point-lookup feature vectors from a sink table")
@@ -565,7 +548,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.set_defaults(fn=cmd_condition)
 
     p = sub.add_parser("backfill", help="batch backfill of windowed feature groups")
-    p.add_argument("--clips", required=True)
+    p.add_argument("--clips", required=True, help="clip topic (producer output)")
     p.add_argument("--out", required=True)
     p.add_argument("--widths", default="10 minutes,1 hour,12 hours")
     p.add_argument("--key", default="speaker_id")
@@ -576,9 +559,8 @@ def build_parser() -> argparse.ArgumentParser:
     for name, fn in (("pipeline", cmd_pipeline), ("join", cmd_join)):
         p = sub.add_parser(name)
         p.add_argument("--clips", required=True,
-                       help="clip topic (producer output): an Iceberg topic "
-                            "streams through the snapshot tail, a plain "
-                            "parquet dir through the file source")
+                       help="clip topic (producer output), streamed "
+                            "through the snapshot tail")
         p.add_argument("--out", required=True, help="sink dir (data + ledger)")
         p.add_argument("--checkpoint", default=None)
         p.add_argument("--watermark", default="60 seconds")

@@ -3,21 +3,13 @@
 Replaces the reference's Kafka source chain (``KafkaSource`` + Avro decode,
 ``TransactionFraudExample.java:52-57``; paced producer
 ``TransactionEventSimulator.java:27,55`` at 1 batch / 5 ms) with Structured
-Streaming over the materialized clip table. :func:`read_clip_source` picks
-the source from the input, in one place:
-
-- **Iceberg topic** (an ``IcebergTable``, or a path holding
-  ``metadata/version-hint.text``): the snapshot tail (engine/tail.py,
-  :func:`read_clip_stream_tail`). Offsets are (snapshot, position) points in
-  the table's commit log, files are planned from manifests, partition
-  filters prune at the manifest level, and commits made while the query
-  runs keep flowing.
-- **Plain parquet dir**: ``readStream.parquet(dir)`` + ``maxFilesPerTrigger``
-  replays the files in deterministic order, N files per micro-batch
-  (:func:`read_clip_stream`).
-
-Either way the checkpoint tracks the source offsets, so kill/restart
-resumes exactly (T3).
+Streaming over the clip topic, an Iceberg table (:func:`write_clips_iceberg`
+writes it). It has one source, the snapshot tail (engine/tail.py,
+:func:`read_clip_stream_tail`; :func:`read_clip_source` is the flagship's
+pruned form of it): offsets are (snapshot, position) points in the table's
+commit log, files are planned from manifests, partition filters prune at
+the manifest level, and commits made while the query runs keep flowing.
+The checkpoint tracks those offsets, so kill/restart resumes exactly (T3).
 
 The flagship job mirrors ``TransactionFraudExample.run`` (:33-77): source
 → optional feature stage → event-time watermark (60 s) → keyed
@@ -28,30 +20,29 @@ assembled in one place, :func:`run_window_pipeline`.
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from engine.sink import ParquetLedgerSink
 from engine.windows import session_agg, sliding_agg, tumbling_agg
 
-CLIP_SCHEMA_DDL = (
-    "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
-    "transcript string, event_ts timestamp, speaker_id long"
-)
+#: The clip table's columns: the one definition that the producer's
+#: parquet schema and :data:`CLIP_SCHEMA_DDL` derive from.
+CLIP_SCHEMA = T.StructType([
+    T.StructField("clip_id", T.StringType()),
+    T.StructField("bytes", T.BinaryType()),
+    T.StructField("sr_hz", T.IntegerType()),
+    T.StructField("dur_ms", T.IntegerType()),
+    T.StructField("codec", T.StringType()),
+    T.StructField("transcript", T.StringType()),
+    T.StructField("event_ts", T.TimestampType()),
+    T.StructField("speaker_id", T.LongType()),
+])
 
-
-_CLIP_PA_SCHEMA_FIELDS = (
-    ("clip_id", "string"),
-    ("bytes", "binary"),
-    ("sr_hz", "int32"),
-    ("dur_ms", "int32"),
-    ("codec", "string"),
-    ("transcript", "string"),
-    ("event_ts", "timestamp[us]"),
-    ("speaker_id", "int64"),
-)
+CLIP_SCHEMA_DDL = ", ".join(
+    f"{f.name} {f.dataType.simpleString()}" for f in CLIP_SCHEMA.fields)
 
 
 def _partition_values(pdf, spec: list[tuple]) -> dict:
@@ -93,38 +84,36 @@ def _partition_values(pdf, spec: list[tuple]) -> dict:
     return out
 
 
-def _write_clip_file(args) -> list[tuple[str, dict | None]]:
+def _write_clip_shard(args) -> list[tuple[str, dict | None]]:
     """One producer shard: generate [start, start+n) deterministically and
-    write parquet — a single flat file for unpartitioned topics, or one
-    file per partition tuple under ``__p_field=value/`` dirs (the Iceberg
-    partitioned layout) when ``spec`` is set. Top-level so multiprocessing
+    write one parquet file per partition tuple under ``__p_field=value/``
+    dirs (the Iceberg partitioned layout); with no partition ``spec`` the
+    shard is one file with partition None. Top-level so multiprocessing
     can pickle it. Returns [(path, partition_dict_or_None)]."""
     dir_path, i, start, n, seed, kw, spec = args
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from engine.synth import make_clips_pdf
 
     pdf = make_clips_pdf(n, seed=seed, start_index=start, **kw)
-    schema = pa.schema([(name, pa.type_for_alias(t)) for name, t in _CLIP_PA_SCHEMA_FIELDS])
-    if not spec:
-        table = pa.Table.from_pandas(pdf, schema=schema, preserve_index=False)
-        out = os.path.join(dir_path, f"part-{i:05d}.parquet")
-        pq.write_table(table, out)
-        return [(out, None)]
-    import pandas as _pd
+    schema = to_arrow_schema(CLIP_SCHEMA, timestamp_utc=False)
+    groups = [((), pdf)]
+    if spec:
+        import pandas as _pd
 
-    pvals = _partition_values(pdf, spec)
-    key = _pd.MultiIndex.from_arrays(
-        [pvals[f] for f, *_ in spec], names=[f for f, *_ in spec])
-    written: list[tuple[str, dict]] = []
-    for j, (tup, g) in enumerate(sorted(
-            pdf.groupby(key, sort=True), key=lambda kv: str(kv[0]))):
+        pvals = _partition_values(pdf, spec)
+        key = _pd.MultiIndex.from_arrays(
+            [pvals[f] for f, *_ in spec], names=[f for f, *_ in spec])
+        groups = sorted(pdf.groupby(key, sort=True), key=lambda kv: str(kv[0]))
+    written: list[tuple[str, dict | None]] = []
+    for j, (tup, g) in enumerate(groups):
         tup = tup if isinstance(tup, tuple) else (tup,)
         part = {f: (v.item() if hasattr(v, "item") else v)
-                for (f, *_), v in zip(spec, tup)}
+                for (f, *_), v in zip(spec, tup)} or None
         sub = os.path.join(
-            dir_path, *[f"__p_{f}={v}" for f, v in part.items()])
+            dir_path, *[f"__p_{f}={v}" for f, v in (part or {}).items()])
         os.makedirs(sub, exist_ok=True)
         out = os.path.join(sub, f"part-{i:05d}-{j:03d}.parquet")
         table = pa.Table.from_pandas(
@@ -134,76 +123,29 @@ def _write_clip_file(args) -> list[tuple[str, dict | None]]:
     return written
 
 
-def write_clips_stream_dir(
-    dir_path: str, n_clips: int, n_files: int = 20, seed: int = 42,
-    parallelism: int | None = None, _spec: list | None = None, **kw
-):
-    """Materialize the clip table as ``n_files`` parquet chunks in arrival
-    order — the replayable 'topic'. (Producer job, ``SimProducer.java:24-47``.)
-
-    Shards are generated in parallel processes; each shard's rng derives from
-    ``(seed, start_index)`` (engine.synth.make_clips_pdf), so output is
-    deterministic regardless of parallelism.
-
-    ``_spec`` (internal, set by :func:`write_clips_iceberg`) routes each
-    shard's rows into the Iceberg partitioned layout (``__p_field=value/``
-    subdirs, one file per partition tuple per shard) and switches the
-    return value to ``[(path, partition_dict)]``; without it the layout is
-    flat and the dir path is returned."""
-    import shutil
-
-    os.makedirs(dir_path, exist_ok=True)
-    for stale in os.listdir(dir_path):  # rewriting the topic: drop old shards
-        p = os.path.join(dir_path, stale)
-        if stale.startswith("part-") and stale.endswith(".parquet"):
-            os.remove(p)
-        elif stale.startswith("__p_") and os.path.isdir(p):
-            shutil.rmtree(p)
-    chunk = (n_clips + n_files - 1) // n_files
-    tasks = []
-    for i in range(n_files):
-        start = i * chunk
-        n = min(chunk, n_clips - start)
-        if n <= 0:
-            break
-        tasks.append((dir_path, i, start, n, seed, kw, _spec))
-    if parallelism is None:
-        parallelism = min(len(tasks), max(1, (os.cpu_count() or 4) // 2))
-    if parallelism <= 1 or len(tasks) <= 1:
-        shards = [_write_clip_file(t) for t in tasks]
-    else:
-        import multiprocessing as mp
-
-        with mp.Pool(parallelism) as pool:
-            shards = pool.map(_write_clip_file, tasks)
-    results = [fp for shard in shards for fp in shard]
-    # Spark's file stream source replays in modification-time order; parallel
-    # shard writes finish out of order, so stamp monotone mtimes to preserve
-    # arrival order (the 'topic offset' order). Basename order = (shard,
-    # within-shard partition group) — event order, since event_ts is
-    # monotone in the global clip index.
-    ordered = sorted((p for p, _ in results), key=os.path.basename)
-    base = int(time.time()) - len(ordered) - 10
-    for i, p in enumerate(ordered):
-        os.utime(p, (base + i, base + i))
-    return results if _spec is not None else dir_path
-
-
 def write_clips_iceberg(
     location: str, n_clips: int, n_files: int = 20, seed: int = 42,
     files_per_snapshot: int | None = None, parallelism: int | None = None,
     partition_by: list[str] | None = None,
     **kw,
 ):
-    """The clip + transcript table AS an Iceberg v2 table (north rule:
-    "reads an Iceberg table of audio clip + transcript pairs").
+    """The clip topic: the clip + transcript table as an Iceberg v2 table
+    (north rule: "reads an Iceberg table of audio clip + transcript
+    pairs"); producer job, ``SimProducer.java:24-47``.
 
-    The deterministic producer shards land in the table's ``data/`` dir
-    (same bytes as :func:`write_clips_stream_dir`); metadata commits group
-    them ``files_per_snapshot`` at a time into append snapshots. Batch
-    readers plan via manifests (``IcebergTable.read``); the rate-controlled
-    stream tails the same commits in arrival order via
-    :func:`read_clip_stream_tail`. Returns the ``IcebergTable``.
+    ``n_clips`` are generated as ``n_files`` producer shards in parallel
+    processes; each shard's rng derives from ``(seed, start_index)``
+    (engine.synth.make_clips_pdf), so the bytes do not depend on
+    ``parallelism``. The shards land in the table's ``data/`` dir and
+    metadata commits group them ``files_per_snapshot`` at a time into
+    append snapshots, in arrival order (the basename order, shard then
+    partition group; event order, since event_ts is monotone in the
+    global clip index). Batch readers plan via manifests
+    (``IcebergTable.read``); the rate-controlled stream tails the same
+    commits via :func:`read_clip_stream_tail`. Returns the
+    ``IcebergTable``. A ``location`` that already holds an Iceberg table
+    is refused with ``ValueError``: writing shards under its snapshots
+    would corrupt them.
 
     ``partition_by`` (e.g. ``["days(event_ts)"]`` — the 10^12-clip topic's
     deployment shape; identity/bucket/truncate terms also accepted) lays
@@ -213,53 +155,50 @@ def write_clips_iceberg(
     (reference analogue: the partition-key feature flag,
     ``base/Feature.java:40-136``)."""
     import pyarrow.parquet as pq
-    from pyspark.sql import types as T
 
-    from engine.iceberg import DataFileInfo, IcebergTable, file_column_bounds
+    from engine.iceberg import (
+        DataFileInfo,
+        IcebergTable,
+        file_column_bounds,
+        iceberg_table_at,
+    )
 
-    spark_schema = T.StructType([
-        T.StructField("clip_id", T.StringType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("sr_hz", T.IntegerType()),
-        T.StructField("dur_ms", T.IntegerType()),
-        T.StructField("codec", T.StringType()),
-        T.StructField("transcript", T.StringType()),
-        T.StructField("event_ts", T.TimestampType()),
-        T.StructField("speaker_id", T.LongType()),
-    ])
-    table = IcebergTable(location, schema=spark_schema,
+    if iceberg_table_at(location) is not None:
+        raise ValueError(
+            f"{location!r} already holds an Iceberg table; write the clip "
+            "topic to a new location")
+    table = IcebergTable(location, schema=CLIP_SCHEMA,
                          partition_by=partition_by)
-    spec_fields = table.spec_fields()
-    if not spec_fields:
-        write_clips_stream_dir(table.data_dir, n_clips, n_files=n_files,
-                               seed=seed, parallelism=parallelism, **kw)
-        entries = [
-            (os.path.join(table.data_dir, n), None)
-            for n in sorted(
-                n for n in os.listdir(table.data_dir)
-                if n.startswith("part-") and n.endswith(".parquet"))
-        ]
-    else:
-        schema_by_id = {
-            f["id"]: f for f in table.schema_json()["fields"]}
-        spec = []
-        for f in spec_fields:
-            tr = f.get("transform", "identity")
-            if tr.startswith("bucket["):
-                transform, param = "bucket", int(tr[len("bucket["):-1])
-            elif tr.startswith("truncate["):
-                transform, param = "truncate", int(tr[len("truncate["):-1])
-            else:
-                transform, param = tr, None
-            spec.append((f["name"], transform,
-                         schema_by_id[f["source-id"]]["name"], param))
-        entries = sorted(
-            write_clips_stream_dir(
-                table.data_dir, n_clips, n_files=n_files, seed=seed,
-                parallelism=parallelism, _spec=spec, **kw),
-            key=lambda e: os.path.basename(e[0]),
-        )
     schema_fields = table.schema_json()["fields"]
+    schema_by_id = {f["id"]: f for f in schema_fields}
+    spec = []
+    for f in table.spec_fields():
+        tr = f.get("transform", "identity")
+        if tr.startswith("bucket["):
+            transform, param = "bucket", int(tr[len("bucket["):-1])
+        elif tr.startswith("truncate["):
+            transform, param = "truncate", int(tr[len("truncate["):-1])
+        else:
+            transform, param = tr, None
+        spec.append((f["name"], transform,
+                     schema_by_id[f["source-id"]]["name"], param))
+
+    chunk = (n_clips + n_files - 1) // n_files
+    tasks = [(table.data_dir, i, i * chunk, min(chunk, n_clips - i * chunk),
+              seed, kw, spec)
+             for i in range(n_files) if i * chunk < n_clips]
+    if parallelism is None:
+        parallelism = min(len(tasks), max(1, (os.cpu_count() or 4) // 2))
+    if parallelism <= 1 or len(tasks) <= 1:
+        shards = [_write_clip_shard(t) for t in tasks]
+    else:
+        import multiprocessing as mp
+
+        with mp.Pool(parallelism) as pool:
+            shards = pool.map(_write_clip_shard, tasks)
+    entries = sorted((e for shard in shards for e in shard),
+                     key=lambda e: os.path.basename(e[0]))
+
     per_snap = files_per_snapshot or len(entries) or 1
     for i in range(0, len(entries), per_snap):
         infos = []
@@ -333,28 +272,6 @@ def read_clip_stream_tail(
     return stream
 
 
-def read_clip_stream(
-    spark: SparkSession,
-    dir_path: str,
-    max_files_per_trigger: int = 1,
-    watermark: str = "60 seconds",
-    ts_col: str = "event_ts",
-) -> DataFrame:
-    """S1 analogue over a plain parquet topic dir: subscribe from the
-    earliest offset with a bounded out-of-orderness watermark (W2)."""
-    stream = (
-        spark.readStream.schema(CLIP_SCHEMA_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(dir_path)
-    )
-    # watermark=None lets callers that insert a mapInPandas stage define the
-    # watermark downstream instead (Spark requires it on the aggregation input
-    # and forbids redefinition).
-    if watermark is not None:
-        stream = stream.withWatermark(ts_col, watermark)
-    return stream
-
-
 def read_clip_source(
     spark: SparkSession,
     clips,
@@ -364,39 +281,23 @@ def read_clip_source(
     reads=(),
     include_file_path: bool = False,
 ) -> DataFrame:
-    """The un-watermarked clip stream for ``clips``: an Iceberg topic (see
-    :func:`engine.iceberg.iceberg_table_at`) streams through
+    """The un-watermarked clip stream over the clip topic ``clips`` (an
+    ``IcebergTable`` or its location), through
     :func:`read_clip_stream_tail`, keeping its restart high-water sidecar in
     ``progress_dir`` (give it a dir that lives with the query's
-    checkpoint); a plain parquet dir streams through
-    :func:`read_clip_stream`.
+    checkpoint).
 
     Of the heavy columns (``bytes``, ``transcript``) only those in ``reads``
     (the columns the downstream stage reads) are shipped: a Python data
     source gets no Catalyst column pruning. ``include_file_path`` adds the
     backing file's path as ``__file_path``, which payload-direct decode
-    reads. ``partition_filter`` needs an Iceberg topic."""
-    from engine.iceberg import iceberg_table_at
-
+    reads."""
     exclude = sorted({"bytes", "transcript"} - set(reads))
-    table = iceberg_table_at(clips)
-    if table is not None:
-        return read_clip_stream_tail(
-            spark, table, max_files_per_trigger=max_files_per_trigger,
-            watermark=None, partition_filter=partition_filter,
-            progress_dir=progress_dir, exclude_columns=exclude or None,
-            include_file_path=include_file_path)
-    if partition_filter:
-        raise ValueError(
-            f"partition_filter needs an Iceberg topic; {clips!r} is a "
-            "plain parquet dir")
-    stream = read_clip_stream(spark, clips,
-                              max_files_per_trigger=max_files_per_trigger,
-                              watermark=None)
-    if include_file_path:
-        stream = stream.withColumn("__file_path",
-                                   F.col("_metadata.file_path"))
-    return stream.drop(*exclude)
+    return read_clip_stream_tail(
+        spark, clips, max_files_per_trigger=max_files_per_trigger,
+        watermark=None, partition_filter=partition_filter,
+        progress_dir=progress_dir, exclude_columns=exclude or None,
+        include_file_path=include_file_path)
 
 
 def clip_features(df: DataFrame, features: str) -> DataFrame:
@@ -441,8 +342,8 @@ def run_window_pipeline(
     keyed window aggregate → exactly-once sink. ``jobs pipeline``,
     ``bench.py`` and :func:`run_multi_width_pipeline` call it.
 
-    ``clips`` is a plain parquet topic dir or an Iceberg topic (see
-    :func:`read_clip_source`; ``partition_filter`` prunes the latter).
+    ``clips`` is the clip topic (see :func:`read_clip_source`;
+    ``partition_filter`` prunes it).
     ``features`` (``basic``/``spectral``/``speech``) decodes each clip and
     aggregates its ``rms`` (speech: ``f0_hz``) instead of ``value_col``.
     ``stateful`` uses the applyInPandasWithState window store
@@ -586,7 +487,7 @@ def run_join_pipeline(
     transcript stats JVM-side. Scale note: the union+groupBy shuffles once on
     clip_id; per-key state is bounded by the join TTL, not stream length.
 
-    On an Iceberg topic both sides are independent snapshot tails (own
+    The two sides are independent snapshot tails (own
     progress sidecars), each pruned to exactly its columns at the source:
     the clip side carries ``__file_path`` instead of bytes (payload-direct
     decode), the transcript side drops bytes entirely.

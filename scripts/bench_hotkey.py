@@ -36,14 +36,17 @@ def hotify(df):
     )
 
 
-def run_path(spark, clips_dir, work, name, build):
+def run_path(spark, topic, work, name, build):
     from engine.sink import ParquetLedgerSink
-    from engine.streams import read_clip_stream
+    from engine.streams import read_clip_stream_tail
 
     out_dir = os.path.join(work, f"sink_{name}")
     ckpt = os.path.join(work, f"ckpt_{name}")
     sink = ParquetLedgerSink(out_dir, event_ts_col="window_start")
-    src = hotify(read_clip_stream(spark, clips_dir, max_files_per_trigger=2))
+    src = hotify(read_clip_stream_tail(
+        spark, topic, max_files_per_trigger=2,
+        progress_dir=os.path.join(ckpt, "_tail_progress"),
+        exclude_columns=["bytes", "transcript"]))
     agg, fe = build(src, sink)
     t0 = time.perf_counter()
     q = (
@@ -66,36 +69,36 @@ def main():
     from engine.session import get_spark
     from engine.skew import salted_window_agg_stream
     from engine.state import merge_window_partials, stateful_window_agg
-    from engine.streams import write_clips_stream_dir
+    from engine.streams import write_clips_iceberg
     from engine.windows import tumbling_agg
 
     spark = get_spark("bench-hotkey", cores=CPUS, shuffle_partitions=CPUS)
     work = tempfile.mkdtemp(prefix="hotkey_")
-    clips_dir = os.path.join(work, "clips")
-    write_clips_stream_dir(clips_dir, N_CLIPS, n_files=12, seed=11)
+    topic = write_clips_iceberg(os.path.join(work, "clips"), N_CLIPS,
+                                n_files=12, seed=11)
     # warmup: tiny throwaway streams (built-in and custom-store window)
     # compile the plans/JVM paths so the first measured path is not biased
     # by session warmup
     from engine.streams import run_window_pipeline
 
-    warm_dir = os.path.join(work, "warm_clips")
-    write_clips_stream_dir(warm_dir, 2000, n_files=2, seed=1)
+    warm = write_clips_iceberg(os.path.join(work, "warm_clips"), 2000,
+                               n_files=2, seed=1)
     for wname, stateful in (("w1", False), ("w2", True)):
         run_window_pipeline(
-            spark, warm_dir, os.path.join(work, f"ws_{wname}"),
+            spark, warm, os.path.join(work, f"ws_{wname}"),
             os.path.join(work, f"wc_{wname}"), max_files_per_trigger=2,
             stateful=stateful, n_buckets=4)
 
     results = {}
     results["builtin"] = run_path(
-        spark, clips_dir, work, "builtin",
+        spark, topic, work, "builtin",
         lambda src, sink: (
             tumbling_agg(src, "event_ts", "speaker_id", "dur_ms", "10 minutes"),
             sink.foreach_batch(),
         ),
     )
     results["salted_builtin"] = run_path(
-        spark, clips_dir, work, "salted_builtin",
+        spark, topic, work, "salted_builtin",
         lambda src, sink: (
             salted_window_agg_stream(
                 src, "event_ts", "speaker_id", "dur_ms", "10 minutes", n_salts=16
@@ -104,7 +107,7 @@ def main():
         ),
     )
     results["custom_unsalted"] = run_path(
-        spark, clips_dir, work, "custom_unsalted",
+        spark, topic, work, "custom_unsalted",
         lambda src, sink: (
             stateful_window_agg(
                 src, "event_ts", "speaker_id", "dur_ms", "10 minutes",
@@ -127,7 +130,7 @@ def main():
         return partials, fe
 
     results["custom_salted"] = run_path(
-        spark, clips_dir, work, "custom_salted", build_custom_salted
+        spark, topic, work, "custom_salted", build_custom_salted
     )
 
     counts = {k: v["out_rows"] for k, v in results.items()}

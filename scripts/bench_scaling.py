@@ -108,13 +108,11 @@ def main() -> None:
     clips_dir = os.path.join(workdir, "clips")
     t0 = time.time()
     subprocess.run(
-        # --iceberg: the topic is an Iceberg v2 table (north rule); the
-        # pipeline job auto-detects it and streams it through the snapshot
-        # tail — same parquet bytes, O(KB) metadata on top
+        # the topic is an Iceberg v2 table (north rule), streamed through
+        # the snapshot tail
         [sys.executable, "-m", "engine.jobs", "producer", "--out", clips_dir,
          "--n-clips", str(args.n_clips), "--n-files", str(args.n_files),
-         "--jitter-ms", "30000", "--max-dur-ms", str(args.max_dur_ms),
-         "--iceberg"],
+         "--jitter-ms", "30000", "--max-dur-ms", str(args.max_dur_ms)],
         check=True, env=dict(os.environ, PYTHONPATH=ROOT), capture_output=True,
         timeout=1800, text=True,
     )

@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -36,3 +37,23 @@ def clips_path(tmp_path_factory):
 @pytest.fixture(scope="session")
 def clips_df(spark, clips_path):
     return spark.read.parquet(clips_path)
+
+
+@pytest.fixture
+def clip_stream(spark, tmp_path):
+    """Opens snapshot-tail streams over a clip topic, each with its own
+    restart sidecar under ``tmp_path`` unless ``progress_dir`` is given
+    (a query that restarts needs the same one). ``bytes`` stays on disk
+    unless ``exclude_columns`` says otherwise."""
+    from engine.streams import read_clip_stream_tail
+
+    n = itertools.count()
+
+    def open_stream(topic, progress_dir=None, exclude_columns=("bytes",),
+                    **kw):
+        return read_clip_stream_tail(
+            spark, topic, exclude_columns=list(exclude_columns) or None,
+            progress_dir=progress_dir or str(tmp_path / f"tail_{next(n)}"),
+            **kw)
+
+    return open_stream

@@ -104,11 +104,10 @@ def test_payload_direct_matches_in_jvm(spark, tmp_path):
     """extract_audio_features_direct (bytes read straight from parquet in the
     Python stage) must produce byte-identical features to the JVM-scan path."""
     from engine.audio import extract_audio_features, extract_audio_features_direct
-    from engine.streams import write_clips_stream_dir
+    from engine.streams import write_clips_iceberg
 
-    d = str(tmp_path / "clips")
-    write_clips_stream_dir(d, 300, n_files=3, seed=5)
-    df = spark.read.parquet(d)
+    df = write_clips_iceberg(str(tmp_path / "clips"), 300, n_files=3,
+                             seed=5).read(spark)
     a = extract_audio_features(df, spectral=True).drop("band_energies").toPandas()
     b = extract_audio_features_direct(df, spectral=True).drop("band_energies").toPandas()
     a = a.sort_values("clip_id", ignore_index=True)
@@ -122,14 +121,15 @@ def test_parallel_producer_deterministic(tmp_path):
     """Same (seed, sharding) → identical files regardless of parallelism."""
     import hashlib
 
-    from engine.streams import write_clips_stream_dir
+    from engine.streams import write_clips_iceberg
 
-    d1 = str(tmp_path / "p1")
-    d2 = str(tmp_path / "p2")
-    write_clips_stream_dir(d1, 400, n_files=4, seed=9, parallelism=1)
-    write_clips_stream_dir(d2, 400, n_files=4, seed=9, parallelism=4)
+    d1 = write_clips_iceberg(str(tmp_path / "p1"), 400, n_files=4, seed=9,
+                             parallelism=1).data_dir
+    d2 = write_clips_iceberg(str(tmp_path / "p2"), 400, n_files=4, seed=9,
+                             parallelism=4).data_dir
     import os
 
+    assert len(os.listdir(d1)) == 4
     for f in sorted(os.listdir(d1)):
         h1 = hashlib.sha256(open(os.path.join(d1, f), "rb").read()).hexdigest()
         h2 = hashlib.sha256(open(os.path.join(d2, f), "rb").read()).hexdigest()

@@ -235,10 +235,10 @@ def test_sink_rejects_table_reuse_with_new_checkpoint(spark, tmp_path):
     """A fresh checkpoint restarts batch ids at 0: against a table holding
     another query's batches the sink refuses instead of skipping them as
     replays (which would silently drop the new query's rows)."""
-    from engine.streams import run_window_pipeline, write_clips_stream_dir
+    from engine.streams import run_window_pipeline, write_clips_iceberg
 
-    clips = str(tmp_path / "clips")
-    write_clips_stream_dir(clips, 400, n_files=4, seed=2)
+    clips = write_clips_iceberg(str(tmp_path / "clips"), 400, n_files=4,
+                                seed=2)
     loc = str(tmp_path / "sunk")
     run_window_pipeline(spark, clips, None, str(tmp_path / "ck1"),
                         max_files_per_trigger=2, sink=IcebergSink(loc))
@@ -474,18 +474,18 @@ def test_replace_raises_when_input_no_longer_live(spark, tmp_path):
     assert len(t.read(spark).toPandas()) == 10  # overwrite result unchanged
 
 
-def test_sink_compaction_after_streaming(spark, tmp_path):
+def test_sink_compaction_after_streaming(spark, clip_stream, tmp_path):
     """Maintenance on the exactly-once sink table: compaction after a
     streamed write leaves read_committed byte-identical and the audit
     green."""
     import pandas as pd
 
-    from engine.streams import read_clip_stream, write_clips_stream_dir
+    from engine.streams import write_clips_iceberg
     from engine.windows import tumbling_agg
 
-    d = str(tmp_path / "clips_in")
-    write_clips_stream_dir(d, n_clips=400, n_files=4, seed=7, jitter_ms=10_000)
-    src = read_clip_stream(spark, d, max_files_per_trigger=1)
+    topic = write_clips_iceberg(str(tmp_path / "clips_in"), n_clips=400,
+                                n_files=4, seed=7, jitter_ms=10_000)
+    src = clip_stream(topic, max_files_per_trigger=1)
     agg = tumbling_agg(src, "event_ts", "speaker_id", "dur_ms", "10 minutes")
     sink = IcebergSink(str(tmp_path / "sink_tbl"))
     q = (agg.writeStream.outputMode("append")
@@ -756,18 +756,18 @@ def test_day_partition_validation(spark, tmp_path):
                      partition_by=["days(v)"])
 
 
-def test_day_partitioned_sink_streaming(spark, tmp_path):
+def test_day_partitioned_sink_streaming(spark, clip_stream, tmp_path):
     """Exactly-once sink into a days(window_start)-partitioned table: the
     streamed window rows land under day partitions, read_committed prunes
     by day, and the audit stays green; maintenance composes on top."""
     import pandas as pd
 
-    from engine.streams import read_clip_stream, write_clips_stream_dir
+    from engine.streams import write_clips_iceberg
     from engine.windows import tumbling_agg
 
-    d = str(tmp_path / "clips_in")
-    write_clips_stream_dir(d, n_clips=300, n_files=3, seed=13, jitter_ms=10_000)
-    src = read_clip_stream(spark, d, max_files_per_trigger=1)
+    topic = write_clips_iceberg(str(tmp_path / "clips_in"), n_clips=300,
+                                n_files=3, seed=13, jitter_ms=10_000)
+    src = clip_stream(topic, max_files_per_trigger=1)
     agg = tumbling_agg(src, "event_ts", "speaker_id", "dur_ms", "10 minutes")
     sink = IcebergSink(str(tmp_path / "psink"),
                        partition_by=["days(window_start)"])

@@ -1,10 +1,11 @@
 """Characterization of ``python -m engine.jobs pipeline``: one successful
-run per shape of the flagship job (file source vs snapshot tail, metadata
-vs decoded value, built-in vs stateful window, ledger vs Iceberg sink,
-day-pruned backfill, speech features). Each run is a subprocess because the
-job stops its Spark session; the committed rows are read back through the
-sink in this process and pinned by a hash of the sorted, float-rounded
-frame."""
+run per shape of the flagship job (metadata vs decoded value, tumbling vs
+sliding, built-in vs stateful window, ledger vs Iceberg sink, day-pruned
+backfill, speech features). The ``file_*`` cases keep the names and rows
+they had on a parquet-dir copy of the same 6 shards. Each run is a
+subprocess because the job stops its Spark session; the committed rows are
+read back through the sink in this process and pinned by a hash of the
+sorted, float-rounded frame."""
 
 import hashlib
 import json
@@ -19,30 +20,30 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # clips start 2024-01-01; 600 clips x 400 s mean gap span ~2.8 days
 CASES = {
     "file_sliding": (
-        "plain", ["--window", "sliding"], False,
-        {"source": "file", "input_clips": 600, "output_rows": 340,
+        "iceberg", ["--window", "sliding"], False,
+        {"input_clips": 600, "output_rows": 340,
          "n_batches": 3, "exactly_once": True},
         "d4637424dcb2851c1bed118e442cf0c590cdc9c1ce8b7ea6b310cf4fc030a093"),
     "tail_decode": (
         "iceberg", ["--decode"], False,
-        {"source": "tail", "input_clips": 600, "output_rows": 157,
+        {"input_clips": 600, "output_rows": 157,
          "n_batches": 3, "exactly_once": True},
         "29f27765dd994eb99b548a0a565e269409c4a70435fb3204cae4bf62a4a83130"),
     "tail_spectral_stateful_iceberg_sink": (
         "iceberg", ["--decode", "--features", "spectral", "--stateful",
                     "--n-buckets", "4", "--iceberg-sink"], True,
-        {"source": "tail", "input_clips": 600, "output_rows": 157,
+        {"input_clips": 600, "output_rows": 157,
          "n_batches": 3, "exactly_once": True},
         "29f27765dd994eb99b548a0a565e269409c4a70435fb3204cae4bf62a4a83130"),
     "tail_day_decode": (
         "days", ["--day", "2024-01-02", "--decode"],
         False,
-        {"source": "tail", "input_clips": 215, "output_rows": 207,
+        {"input_clips": 215, "output_rows": 207,
          "n_batches": 2, "exactly_once": True},
         "317007b5e71e7b6ef389cd6c63f9e989d51ed15735b7a0271db83999efb9ada4"),
     "file_speech": (
-        "plain", ["--decode", "--features", "speech"], False,
-        {"source": "file", "input_clips": 600, "output_rows": 157,
+        "iceberg", ["--decode", "--features", "speech"], False,
+        {"input_clips": 600, "output_rows": 157,
          "n_batches": 3, "exactly_once": True},
         "2a67ab90e888f19e30ed8093b382c34c4f8d772a3109874387392d2a531731e0"),
 }
@@ -50,12 +51,10 @@ CASES = {
 
 @pytest.fixture(scope="module")
 def topics(tmp_path_factory):
-    from engine.streams import write_clips_iceberg, write_clips_stream_dir
+    from engine.streams import write_clips_iceberg
 
     root = tmp_path_factory.mktemp("jobs_topics")
     kw = dict(n_files=6, seed=7, jitter_ms=30_000, max_dur_ms=600)
-    plain = str(root / "plain")
-    write_clips_stream_dir(plain, 600, mean_gap_ms=5_000, **kw)
     ice = str(root / "iceberg")
     write_clips_iceberg(ice, 600, files_per_snapshot=3, mean_gap_ms=5_000,
                         **kw)
@@ -63,7 +62,7 @@ def topics(tmp_path_factory):
     write_clips_iceberg(days, 600, files_per_snapshot=3,
                         mean_gap_ms=400_000, partition_by=["days(event_ts)"],
                         **kw)
-    return {"plain": plain, "iceberg": ice, "days": days}
+    return {"iceberg": ice, "days": days}
 
 
 def _rows_sha256(pdf) -> str:

@@ -19,12 +19,12 @@ WRAPPED = ("chmod", "readlink", "ls", "stat")
 TWO_TRIGGERS = textwrap.dedent("""
     import os, sys
     from engine.session import get_spark
-    from engine.streams import run_window_pipeline, write_clips_stream_dir
+    from engine.streams import run_window_pipeline, write_clips_iceberg
 
     work = sys.argv[1]
     clips = os.path.join(work, "clips")
-    write_clips_stream_dir(clips, n_clips=400, n_files=2, seed=7,
-                           jitter_ms=30_000)
+    write_clips_iceberg(clips, n_clips=400, n_files=2, seed=7,
+                        jitter_ms=30_000)
     spark = get_spark("niofs-spawns", cores=2)
     q, sink = run_window_pipeline(spark, clips, os.path.join(work, "out"),
                                   os.path.join(work, "ckpt"),
@@ -134,11 +134,13 @@ def test_link_status_matches_stock(spark, tmp_path):
 
 def test_checksums_match_stock(spark, tmp_path):
     """``.crc`` sidecars are written through the FileSystem API and verified
-    on read through ``FileContext.open(path, bufferSize)``: a FileSystem read
+    on read through ``FileContext.open(path, bufferSize)`` (a FileSystem read
     of a corrupt file would move it to a ``bad_files`` dir at the top of the
-    device, and ``FileContext.open(path)`` skips the checksums."""
+    device). ``FileContext.open(path)``, the call Spark's checkpoint file
+    manager makes, verifies them too; stock ``LocalFs`` skips them there."""
     jvm = spark._jvm
     fs_pkg = _hadoop(jvm).fs
+    unverified = {}
     for name, cls, afs in (
             ("stock", fs_pkg.LocalFileSystem, "org.apache.hadoop.fs.local.LocalFs"),
             ("nio", jvm.engine.niofs.NioLocalFileSystem, "engine.niofs.NioLocalFs")):
@@ -152,11 +154,22 @@ def test_checksums_match_stock(spark, tmp_path):
         raw = bytearray(data.read_bytes())
         raw[0] ^= 0xFF
         data.write_bytes(bytes(raw))
-        stream = fs_pkg.FileContext.getLocalFSFileContext(conf).open(path, 4096)
+        fc = fs_pkg.FileContext.getLocalFSFileContext(conf)
+        stream = fc.open(path, 4096)
         with pytest.raises(Py4JJavaError) as exc:
             stream.read()
         stream.close()
         assert _java_error(exc.value) == "org.apache.hadoop.fs.ChecksumException"
+        stream = fc.open(path)
+        try:
+            stream.read()
+            unverified[name] = True
+        except Py4JJavaError as exc:
+            assert _java_error(exc) == "org.apache.hadoop.fs.ChecksumException"
+            unverified[name] = False
+        finally:
+            stream.close()
+    assert unverified == {"stock": True, "nio": False}
     assert ((tmp_path / "nio" / ".data.bin.crc").read_bytes()
             == (tmp_path / "stock" / ".data.bin.crc").read_bytes())
 

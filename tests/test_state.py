@@ -13,19 +13,18 @@ from pyspark.sql import functions as F
 
 from engine.state import dur_ms, stateful_session_agg, stateful_stream_join, stateful_window_agg
 from engine.streams import (
-    read_clip_stream,
     run_join_pipeline,
     transcript_features,
-    write_clips_stream_dir,
+    write_clips_iceberg,
 )
 from engine.windows import session_agg, sliding_agg, tumbling_agg
 
 
 @pytest.fixture(scope="module")
-def clips_dir(tmp_path_factory):
+def topic(tmp_path_factory):
     d = str(tmp_path_factory.mktemp("state_stream") / "clips")
-    write_clips_stream_dir(d, n_clips=1500, n_files=8, seed=11, jitter_ms=30_000)
-    return d
+    return write_clips_iceberg(d, n_clips=1500, n_files=8, seed=11,
+                               jitter_ms=30_000)
 
 
 _MEMQ = [0]
@@ -55,27 +54,27 @@ def test_dur_ms():
         dur_ms("10 fortnights")
 
 
-def test_stateful_tumbling_matches_builtin(spark, clips_dir):
-    src = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+def test_stateful_tumbling_matches_builtin(spark, topic, clip_stream):
+    src = clip_stream(topic, max_files_per_trigger=2)
     got = _run_stream(
         spark, stateful_window_agg(src, "event_ts", "speaker_id", "dur_ms", "10 minutes")
     )
-    src2 = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+    src2 = clip_stream(topic, max_files_per_trigger=2)
     want = _run_stream(
         spark, tumbling_agg(src2, "event_ts", "speaker_id", "dur_ms", "10 minutes")
     )
     _cmp(got, want, ["window_start", "speaker_id"])
 
 
-def test_stateful_sliding_matches_builtin(spark, clips_dir):
-    src = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+def test_stateful_sliding_matches_builtin(spark, topic, clip_stream):
+    src = clip_stream(topic, max_files_per_trigger=2)
     got = _run_stream(
         spark,
         stateful_window_agg(
             src, "event_ts", "speaker_id", "dur_ms", "10 minutes", slide="5 minutes"
         ),
     )
-    src2 = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+    src2 = clip_stream(topic, max_files_per_trigger=2)
     want = _run_stream(
         spark,
         sliding_agg(src2, "event_ts", "speaker_id", "dur_ms", "10 minutes", "5 minutes"),
@@ -83,27 +82,27 @@ def test_stateful_sliding_matches_builtin(spark, clips_dir):
     _cmp(got, want, ["window_start", "speaker_id"])
 
 
-def test_stateful_session_matches_builtin(spark, clips_dir):
-    src = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+def test_stateful_session_matches_builtin(spark, topic, clip_stream):
+    src = clip_stream(topic, max_files_per_trigger=2)
     got = _run_stream(
         spark, stateful_session_agg(src, "event_ts", "speaker_id", "dur_ms", "2 minutes")
     )
-    src2 = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+    src2 = clip_stream(topic, max_files_per_trigger=2)
     want = _run_stream(
         spark, session_agg(src2, "event_ts", "speaker_id", "dur_ms", "2 minutes")
     )
     _cmp(got, want, ["window_start", "speaker_id"])
 
 
-def test_stateful_join_matches_batch(spark, clips_dir, tmp_path):
+def test_stateful_join_matches_batch(spark, topic, tmp_path):
     out = os.path.join(str(tmp_path), "join_out")
     ckpt = os.path.join(str(tmp_path), "join_ckpt")
     _, sink = run_join_pipeline(
-        spark, clips_dir, out, ckpt, max_files_per_trigger=2, ttl="10 minutes"
+        spark, topic, out, ckpt, max_files_per_trigger=2, ttl="10 minutes"
     )
     got = sink.read_committed(spark).toPandas()
 
-    batch = spark.read.parquet(clips_dir)
+    batch = topic.read(spark)
     from engine.audio import extract_audio_features
 
     feats = extract_audio_features(batch).select(
@@ -119,18 +118,18 @@ def test_stateful_join_matches_batch(spark, clips_dir, tmp_path):
     _cmp(got, want, ["clip_id"])
 
 
-def test_join_ttl_expires_unmatched(spark, clips_dir, tmp_path):
+def test_join_ttl_expires_unmatched(spark, topic, clip_stream, tmp_path):
     """A right side filtered to half the keys → unmatched left state must be
     evicted (no growth) and only matching pairs emitted."""
-    src_l = read_clip_stream(spark, clips_dir, max_files_per_trigger=4)
+    src_l = clip_stream(topic, max_files_per_trigger=4)
     left = src_l.select("clip_id", "event_ts", F.col("dur_ms").alias("l_dur"))
-    src_r = read_clip_stream(spark, clips_dir, max_files_per_trigger=4)
+    src_r = clip_stream(topic, max_files_per_trigger=4)
     right = transcript_features(src_r).where(
         F.abs(F.hash("clip_id")) % 2 == 0
     )
     joined = stateful_stream_join(left, right, "clip_id", "event_ts", ttl="2 minutes")
     got = _run_stream(spark, joined)
-    batch = spark.read.parquet(clips_dir)
+    batch = topic.read(spark)
     want_keys = (
         transcript_features(batch)
         .where(F.abs(F.hash("clip_id")) % 2 == 0)
@@ -141,7 +140,7 @@ def test_join_ttl_expires_unmatched(spark, clips_dir, tmp_path):
     assert got["clip_id"].is_unique
 
 
-def test_stateful_kill_restart_resumes(spark, clips_dir, tmp_path):
+def test_stateful_kill_restart_resumes(spark, topic, clip_stream, tmp_path):
     """Custom applyInPandasWithState store must survive checkpoint restore:
     kill mid-stream, restart, result equals an uninterrupted run."""
     import time
@@ -149,7 +148,8 @@ def test_stateful_kill_restart_resumes(spark, clips_dir, tmp_path):
     from engine.sink import ParquetLedgerSink
 
     def build(out, ckpt):
-        src = read_clip_stream(spark, clips_dir, max_files_per_trigger=1)
+        src = clip_stream(topic, os.path.join(ckpt, "_tail_progress"),
+                          max_files_per_trigger=1)
         agg = stateful_window_agg(src, "event_ts", "speaker_id", "dur_ms", "10 minutes")
         sink = ParquetLedgerSink(out, event_ts_col="window_start")
         q = (
@@ -192,7 +192,7 @@ def test_stateful_kill_restart_resumes(spark, clips_dir, tmp_path):
 
 @pytest.mark.parametrize("sink_kind", ["ledger", "iceberg"])
 def test_stateful_replay_of_sink_committed_batch_recovers(
-        spark, clips_dir, tmp_path, sink_kind):
+        spark, topic, clip_stream, tmp_path, sink_kind):
     """A crash between the sink's commit and Spark's commit-log write
     leaves the last batch committed in the sink but not in the checkpoint,
     so the restart replays it. The sink must still run the replayed frame:
@@ -205,7 +205,8 @@ def test_stateful_replay_of_sink_committed_batch_recovers(
     def run(out, ckpt):
         sink = (ParquetLedgerSink(out, event_ts_col="window_start")
                 if sink_kind == "ledger" else IcebergSink(out))
-        src = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+        src = clip_stream(topic, os.path.join(ckpt, "_tail_progress"),
+                          max_files_per_trigger=2)
         agg = stateful_window_agg(
             src, "event_ts", "speaker_id", "dur_ms", "10 minutes")
         q = (agg.writeStream.outputMode("append")
@@ -239,18 +240,18 @@ def test_stateful_replay_of_sink_committed_batch_recovers(
     )
 
 
-def test_salted_streaming_window_matches_unsalted(spark, clips_dir):
+def test_salted_streaming_window_matches_unsalted(spark, topic, clip_stream):
     """Streaming two-phase salted aggregate (chained stateful aggs) must emit
     the same rows as the single-phase windowed aggregate."""
     from engine.skew import salted_window_agg_stream
 
-    src = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+    src = clip_stream(topic, max_files_per_trigger=2)
     got = _run_stream(
         spark,
         salted_window_agg_stream(src, "event_ts", "speaker_id", "dur_ms",
                                  "10 minutes", n_salts=8, salt_from="clip_id"),
     )
-    src2 = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+    src2 = clip_stream(topic, max_files_per_trigger=2)
     want = _run_stream(
         spark, tumbling_agg(src2, "event_ts", "speaker_id", "dur_ms", "10 minutes")
     )
@@ -258,67 +259,71 @@ def test_salted_streaming_window_matches_unsalted(spark, clips_dir):
     _cmp(got, want, ["window_start", "speaker_id"])
 
 
-def test_stateful_late_drop_matches_builtin(spark, tmp_path_factory):
+def test_stateful_late_drop_matches_builtin(spark, clip_stream,
+                                            tmp_path_factory):
     """Out-of-orderness (120 s) beyond the watermark (60 s) forces real late
     drops — the custom store must drop exactly the rows the built-in drops."""
     d = str(tmp_path_factory.mktemp("late") / "clips")
-    write_clips_stream_dir(d, n_clips=1200, n_files=8, seed=23, jitter_ms=120_000)
+    t = write_clips_iceberg(d, n_clips=1200, n_files=8, seed=23,
+                            jitter_ms=120_000)
 
-    src = read_clip_stream(spark, d, max_files_per_trigger=1, watermark=None)
+    src = clip_stream(t, max_files_per_trigger=1, watermark=None)
     got = _run_stream(
         spark,
         stateful_window_agg(src, "event_ts", "speaker_id", "dur_ms", "10 minutes",
                             watermark="60 seconds"),
     )
-    src2 = read_clip_stream(spark, d, max_files_per_trigger=1)
+    src2 = clip_stream(t, max_files_per_trigger=1)
     want = _run_stream(
         spark, tumbling_agg(src2, "event_ts", "speaker_id", "dur_ms", "10 minutes")
     )
     # sanity: drops actually happened (streamed != full batch aggregate)
     batch_rows = tumbling_agg(
-        spark.read.parquet(d), "event_ts", "speaker_id", "dur_ms", "10 minutes"
+        t.read(spark), "event_ts", "speaker_id", "dur_ms", "10 minutes"
     ).count()
     assert len(want) < batch_rows or len(want) > 0
     _cmp(got, want, ["window_start", "speaker_id"])
 
 
-def test_stateful_session_late_drop_matches_builtin(spark, tmp_path_factory):
+def test_stateful_session_late_drop_matches_builtin(spark, clip_stream,
+                                                    tmp_path_factory):
     d = str(tmp_path_factory.mktemp("late_s") / "clips")
-    write_clips_stream_dir(d, n_clips=800, n_files=6, seed=29, jitter_ms=120_000)
-    src = read_clip_stream(spark, d, max_files_per_trigger=1, watermark=None)
+    t = write_clips_iceberg(d, n_clips=800, n_files=6, seed=29,
+                            jitter_ms=120_000)
+    src = clip_stream(t, max_files_per_trigger=1, watermark=None)
     got = _run_stream(
         spark,
         stateful_session_agg(src, "event_ts", "speaker_id", "dur_ms", "2 minutes",
                              watermark="60 seconds"),
     )
-    src2 = read_clip_stream(spark, d, max_files_per_trigger=1)
+    src2 = clip_stream(t, max_files_per_trigger=1)
     want = _run_stream(
         spark, session_agg(src2, "event_ts", "speaker_id", "dur_ms", "2 minutes")
     )
     _cmp(got, want, ["window_start", "speaker_id"])
 
 
-def test_bucketed_window_and_session_match_builtin(spark, clips_dir):
+def test_bucketed_window_and_session_match_builtin(spark, topic, clip_stream):
     """Key-coarsened state layout (n_buckets) must equal the built-ins."""
-    src = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+    src = clip_stream(topic, max_files_per_trigger=2)
     got_w = _run_stream(
         spark,
         stateful_window_agg(src, "event_ts", "speaker_id", "dur_ms",
                             "10 minutes", n_buckets=16),
     )
-    src2 = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+    src2 = clip_stream(topic, max_files_per_trigger=2)
     want_w = _run_stream(
         spark, tumbling_agg(src2, "event_ts", "speaker_id", "dur_ms", "10 minutes")
     )
     _cmp(got_w, want_w, ["window_start", "speaker_id"])
 
-    src3 = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+    src3 = clip_stream(topic, max_files_per_trigger=2)
     got_s = _run_stream(
         spark,
         stateful_session_agg(src3, "event_ts", "speaker_id", "dur_ms",
                              "2 minutes", n_buckets=16),
     )
-    src4 = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+    src4 = clip_stream(topic, max_files_per_trigger=2)
     want_s = _run_stream(
         spark, session_agg(src4, "event_ts", "speaker_id", "dur_ms", "2 minutes")
     )
@@ -500,14 +505,14 @@ def test_null_keys_excluded(spark, tmp_path):
     assert set(first["k"]) == {1, 2}
 
 
-def test_salted_custom_store_matches_unsalted(spark, clips_dir):
+def test_salted_custom_store_matches_unsalted(spark, topic, clip_stream):
     """r3 VERDICT #7: stateful_window_agg(n_salts=K) emits algebraic
     partials from (key, salt) state groups; merge_window_partials recombines
     them into rows identical to the unsalted custom store (and hence the
     built-in operator)."""
     from engine.state import merge_window_partials
 
-    src = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+    src = clip_stream(topic, max_files_per_trigger=2)
     partials = _run_stream(
         spark,
         stateful_window_agg(
@@ -524,7 +529,7 @@ def test_salted_custom_store_matches_unsalted(spark, clips_dir):
     got = merge_window_partials(
         spark.createDataFrame(partials), "speaker_id", "10m"
     ).toPandas()
-    src2 = read_clip_stream(spark, clips_dir, max_files_per_trigger=2)
+    src2 = clip_stream(topic, max_files_per_trigger=2)
     want = _run_stream(
         spark,
         stateful_window_agg(src2, "event_ts", "speaker_id", "dur_ms", "10 minutes"),

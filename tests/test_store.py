@@ -64,22 +64,13 @@ def test_insert_schema_mismatch_raises(spark, tables, store):
         store.insert(fg, df.drop("r_name"))
 
 
-def test_insert_stream(spark, store, clips_dir_small, tmp_path):
-    from engine.streams import CLIP_SCHEMA_DDL
-
-    # parquet batch reads surface timestamp_ntz; the streaming DDL uses
-    # timestamp — declare the group with the streaming-side type
-    batch = spark.read.parquet(clips_dir_small).withColumn(
-        "event_ts", F.col("event_ts").cast("timestamp")
-    )
+def test_insert_stream(spark, store, clips_topic_small, clip_stream, tmp_path):
+    batch = clips_topic_small.read(spark)
     fg = store.get_or_create_stream_feature_group(
         "clips", df=batch, primary_key=["clip_id"], event_time="event_ts"
     )
-    stream = (
-        spark.readStream.schema(CLIP_SCHEMA_DDL)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(clips_dir_small)
-    )
+    stream = clip_stream(clips_topic_small, exclude_columns=(),
+                         max_files_per_trigger=2, watermark=None)
     q = store.insert_stream(fg, stream, str(tmp_path / "ckpt"), await_termination=True)
     assert store.read(spark, fg).count() == batch.count()
     details = store.commit_details(fg)
@@ -88,12 +79,11 @@ def test_insert_stream(spark, store, clips_dir_small, tmp_path):
 
 
 @pytest.fixture(scope="module")
-def clips_dir_small(tmp_path_factory):
-    from engine.streams import write_clips_stream_dir
+def clips_topic_small(tmp_path_factory):
+    from engine.streams import write_clips_iceberg
 
     d = str(tmp_path_factory.mktemp("store_clips") / "clips")
-    write_clips_stream_dir(d, 300, n_files=4, seed=3)
-    return d
+    return write_clips_iceberg(d, 300, n_files=4, seed=3)
 
 
 # -- connectors (S6) --------------------------------------------------------
@@ -190,20 +180,15 @@ def test_store_time_travel_roundtrip(spark, tables, store):
     assert delta.to_df(spark).count() == 2
 
 
-def test_mixed_insert_and_stream_ids_do_not_collide(spark, store, clips_dir_small, tmp_path):
-    from engine.streams import CLIP_SCHEMA_DDL
-
-    batch = spark.read.parquet(clips_dir_small).withColumn(
-        "event_ts", F.col("event_ts").cast("timestamp")
-    )
+def test_mixed_insert_and_stream_ids_do_not_collide(
+        spark, store, clips_topic_small, clip_stream, tmp_path):
+    batch = clips_topic_small.read(spark)
     fg = store.get_or_create_stream_feature_group(
         "clips_mixed", df=batch, primary_key=["clip_id"], event_time="event_ts"
     )
     store.insert(fg, batch.limit(10))  # batch commit FIRST (id in high namespace)
-    stream = (
-        spark.readStream.schema(CLIP_SCHEMA_DDL)
-        .option("maxFilesPerTrigger", 2).parquet(clips_dir_small)
-    )
+    stream = clip_stream(clips_topic_small, exclude_columns=(),
+                         max_files_per_trigger=2, watermark=None)
     store.insert_stream(fg, stream, str(tmp_path / "mx_ckpt"), await_termination=True)
     total = store.read(spark, fg).count()
     assert total == batch.count() + 10  # nothing silently dropped as 'replay'
@@ -301,25 +286,23 @@ def test_upsert_replay_is_idempotent(spark, tables, store):
     assert store.read(spark, fg).count() == df.count()
 
 
-def test_streaming_upsert_kill_restart(spark, store, clips_dir_small, tmp_path):
+def test_streaming_upsert_kill_restart(
+        spark, store, clips_topic_small, clip_stream, tmp_path):
     """Streaming upsert survives kill/restart: after resume from checkpoint,
     each clip_id appears exactly once (latest commit wins), audit green."""
     from engine.store import SaveMode
-    from engine.streams import CLIP_SCHEMA_DDL
 
-    batch = spark.read.parquet(clips_dir_small).withColumn(
-        "event_ts", F.col("event_ts").cast("timestamp")
-    )
+    batch = clips_topic_small.read(spark)
     fg = store.get_or_create_stream_feature_group(
         "clips_up", df=batch, primary_key=["clip_id"], event_time="event_ts"
     )
     ckpt = str(tmp_path / "up_ckpt")
 
     def start():
-        stream = (
-            spark.readStream.schema(CLIP_SCHEMA_DDL)
-            .option("maxFilesPerTrigger", 1).parquet(clips_dir_small)
-        )
+        stream = clip_stream(clips_topic_small,
+                             os.path.join(ckpt, "_tail_progress"),
+                             exclude_columns=(), max_files_per_trigger=1,
+                             watermark=None)
         return store.insert_stream(fg, stream, ckpt, mode=SaveMode.UPSERT)
 
     q = start()

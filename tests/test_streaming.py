@@ -6,42 +6,39 @@
 """
 
 import os
+import re
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from engine.sink import ParquetLedgerSink
-from engine.streams import (
-    read_clip_stream,
-    run_window_pipeline,
-    write_clips_stream_dir,
-)
+from engine.streams import run_window_pipeline, write_clips_iceberg
 from engine.windows import tumbling_agg
 
 
 @pytest.fixture(scope="module")
-def clips_dir(tmp_path_factory):
+def topic(tmp_path_factory):
     d = str(tmp_path_factory.mktemp("stream") / "clips")
     # ordered-ish event time: jitter 30s < 60s watermark keeps every row
-    write_clips_stream_dir(d, n_clips=2000, n_files=10, seed=42, jitter_ms=30_000)
-    return d
+    return write_clips_iceberg(d, n_clips=2000, n_files=10, seed=42,
+                               jitter_ms=30_000)
 
 
-def _run(spark, clips_dir, tmp, kind="tumbling", **kw):
+def _run(spark, topic, tmp, kind="tumbling", **kw):
     out = os.path.join(tmp, f"out_{kind}")
     ckpt = os.path.join(tmp, f"ckpt_{kind}")
     q, sink = run_window_pipeline(
-        spark, clips_dir, out, ckpt, window_kind=kind,
+        spark, topic, out, ckpt, window_kind=kind,
         max_files_per_trigger=2, **kw,
     )
     return sink
 
 
-def test_stream_matches_batch_tumbling(spark, clips_dir, tmp_path):
-    sink = _run(spark, clips_dir, str(tmp_path))
+def test_stream_matches_batch_tumbling(spark, topic, tmp_path):
+    sink = _run(spark, topic, str(tmp_path))
     got = sink.read_committed(spark)
-    batch = spark.read.parquet(clips_dir)
+    batch = topic.read(spark)
     want = tumbling_agg(batch, "event_ts", "speaker_id", "dur_ms", "10 minutes")
     # The final window(s) past the last watermark never fire in append mode;
     # compare on the windows the stream emitted — they must match batch exactly,
@@ -62,10 +59,10 @@ def test_stream_matches_batch_tumbling(spark, clips_dir, tmp_path):
     assert closed.index.isin(gp.index).all()
 
 
-def test_exactly_once_replay_noop(spark, clips_dir, tmp_path):
+def test_exactly_once_replay_noop(spark, topic, tmp_path):
     out = str(tmp_path / "once")
     sink = ParquetLedgerSink(out)
-    df = spark.read.parquet(clips_dir).select("clip_id", "speaker_id")
+    df = topic.read(spark).select("clip_id", "speaker_id")
     assert sink.write_batch(df, 0) is True
     n1 = sink.read_committed(spark).count()
     assert sink.write_batch(df, 0) is False  # replay short-circuits
@@ -74,12 +71,12 @@ def test_exactly_once_replay_noop(spark, clips_dir, tmp_path):
     assert audit["unique_batch_ids" ] and audit["consistent"]
 
 
-def test_kill_restart_no_dupes_no_gaps(spark, clips_dir, tmp_path):
+def test_kill_restart_no_dupes_no_gaps(spark, topic, clip_stream, tmp_path):
     out = str(tmp_path / "kr_out")
     ckpt = str(tmp_path / "kr_ckpt")
     sink = ParquetLedgerSink(out, event_ts_col="window_start")
 
-    src = read_clip_stream(spark, clips_dir, max_files_per_trigger=1)
+    src = clip_stream(topic, max_files_per_trigger=1)
     agg = tumbling_agg(src, "event_ts", "speaker_id", "dur_ms", "10 minutes")
 
     # phase 1: process a few micro-batches then kill mid-stream
@@ -118,7 +115,7 @@ def test_kill_restart_no_dupes_no_gaps(spark, clips_dir, tmp_path):
     out2 = str(tmp_path / "ref_out")
     ckpt2 = str(tmp_path / "ref_ckpt")
     _, ref_sink = run_window_pipeline(
-        spark, clips_dir, out2, ckpt2, max_files_per_trigger=1
+        spark, topic, out2, ckpt2, max_files_per_trigger=1
     )
     a = sink.read_committed(spark).orderBy("window_start", "speaker_id").toPandas()
     b = ref_sink.read_committed(spark).orderBy("window_start", "speaker_id").toPandas()
@@ -130,23 +127,23 @@ def test_kill_restart_no_dupes_no_gaps(spark, clips_dir, tmp_path):
     )
 
 
-def test_session_and_sliding_streaming_smoke(spark, clips_dir, tmp_path):
-    s1 = _run(spark, clips_dir, str(tmp_path), kind="sliding")
+def test_session_and_sliding_streaming_smoke(spark, topic, tmp_path):
+    s1 = _run(spark, topic, str(tmp_path), kind="sliding")
     assert s1.read_committed(spark).count() > 0
-    s2 = _run(spark, clips_dir, str(tmp_path), kind="session", gap="2 minutes")
+    s2 = _run(spark, topic, str(tmp_path), kind="session", gap="2 minutes")
     assert s2.audit()["consistent"]
 
 
-def test_multi_width_pipeline(spark, clips_dir, tmp_path):
+def test_multi_width_pipeline(spark, topic, tmp_path):
     """W4: three widths fed from one topic, each matching its batch twin."""
     from engine.streams import run_multi_width_pipeline
     from engine.windows import tumbling_agg, width_label
 
     res = run_multi_width_pipeline(
-        spark, clips_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        spark, topic, str(tmp_path / "out"), str(tmp_path / "ckpt"),
         widths=("10 minutes", "1 hour"),
     )
-    batch = spark.read.parquet(clips_dir)
+    batch = topic.read(spark)
     for w in ("10 minutes", "1 hour"):
         _, sink = res[width_label(w)]
         got = sink.read_committed(spark).toPandas()
@@ -161,7 +158,7 @@ def test_multi_width_pipeline(spark, clips_dir, tmp_path):
 
 
 def test_multi_width_pipeline_stops_every_query_when_one_width_fails(
-        spark, clips_dir, tmp_path):
+        spark, topic, tmp_path):
     """One width's ledger already holds batch 0 of another query, so its
     sink refuses the batch and the call raises; every query the call
     started is stopped, not left running."""
@@ -169,12 +166,12 @@ def test_multi_width_pipeline_stops_every_query_when_one_width_fails(
     from engine.windows import width_label
 
     out = tmp_path / "out"
-    run_window_pipeline(spark, clips_dir, str(out / width_label("1 hour")),
+    run_window_pipeline(spark, topic, str(out / width_label("1 hour")),
                         str(tmp_path / "other_ckpt"), width="1 hour",
                         max_files_per_trigger=4)
     with pytest.raises(Exception, match="reusing an output dir"):
         run_multi_width_pipeline(
-            spark, clips_dir, str(out), str(tmp_path / "ckpt"),
+            spark, topic, str(out), str(tmp_path / "ckpt"),
             widths=("10 minutes", "1 hour", "12 hours"))
     leaked = spark.streams.active
     for q in leaked:
@@ -182,15 +179,14 @@ def test_multi_width_pipeline_stops_every_query_when_one_width_fails(
     assert [q.name for q in leaked] == []
 
 
-def test_streaming_dedup(spark, clips_dir, tmp_path):
+def test_streaming_dedup(spark, topic, clip_stream, tmp_path):
     """Duplicated stream (two subscriptions unioned) → exactly one row per
     clip_id survives; state bounded by the watermark."""
     from engine.dedup import streaming_dedup
     from engine.sink import ParquetLedgerSink
-    from engine.streams import read_clip_stream
 
-    a = read_clip_stream(spark, clips_dir, max_files_per_trigger=2, watermark=None)
-    b = read_clip_stream(spark, clips_dir, max_files_per_trigger=2, watermark=None)
+    a = clip_stream(topic, max_files_per_trigger=2, watermark=None)
+    b = clip_stream(topic, max_files_per_trigger=2, watermark=None)
     dup = a.unionByName(b).select("clip_id", "event_ts", "speaker_id")
     ded = streaming_dedup(dup, ["clip_id"], ts_col="event_ts")
     sink = ParquetLedgerSink(str(tmp_path / "dd_out"))
@@ -203,12 +199,12 @@ def test_streaming_dedup(spark, clips_dir, tmp_path):
     q.processAllAvailable()
     q.stop()
     got = sink.read_committed(spark)
-    n = spark.read.parquet(clips_dir).count()
+    n = topic.read(spark).count()
     assert got.count() == n
     assert got.select("clip_id").distinct().count() == n
 
 
-def test_serving_over_streamed_output(spark, clips_dir, tmp_path):
+def test_serving_over_streamed_output(spark, topic, tmp_path):
     """North-star loop closed: stream → windowed agg → exactly-once sink →
     online point lookups (VectorServer) against the committed output."""
     from engine.serving import VectorServer
@@ -216,7 +212,7 @@ def test_serving_over_streamed_output(spark, clips_dir, tmp_path):
 
     out = str(tmp_path / "serve_out")
     ckpt = str(tmp_path / "serve_ckpt")
-    _, sink = run_window_pipeline(spark, clips_dir, out, ckpt,
+    _, sink = run_window_pipeline(spark, topic, out, ckpt,
                                   max_files_per_trigger=4)
     online = sink.read_committed(spark)
     # latest window per speaker = the online feature-group row
@@ -245,34 +241,50 @@ def test_serving_over_streamed_output(spark, clips_dir, tmp_path):
     assert batch_rows.count() == len(some)
 
 
-def test_sink_rejects_out_dir_reuse_with_new_checkpoint(spark, clips_dir, tmp_path):
+def test_sink_rejects_out_dir_reuse_with_new_checkpoint(spark, topic, tmp_path):
     """Reusing an out_dir with a fresh checkpoint restarts batch ids — the
     sink must fail loudly instead of silently no-opping (review regression)."""
     from engine.streams import run_window_pipeline
 
     out = str(tmp_path / "reuse_out")
-    _, sink1 = run_window_pipeline(spark, clips_dir, out, str(tmp_path / "ck1"),
+    _, sink1 = run_window_pipeline(spark, topic, out, str(tmp_path / "ck1"),
                                    max_files_per_trigger=4)
     before = [r.lineage for r in sink1.committed_batches()]
     with pytest.raises(Exception):  # guard surfaces wrapped in StreamingQueryException
         # new checkpoint, different batching → batch 0 covers different files
-        run_window_pipeline(spark, clips_dir, out, str(tmp_path / "ck2"),
+        run_window_pipeline(spark, topic, out, str(tmp_path / "ck2"),
                             max_files_per_trigger=1)
     after = [r.lineage for r in sink1.committed_batches()]
     assert after == before  # nothing overwritten or silently dropped
 
 
-def test_producer_rewrite_clears_stale_shards(tmp_path):
-    import os
+def test_producer_refuses_existing_topic(tmp_path):
+    """Writing a topic where one already is would delete or overwrite
+    shards that its snapshots still reference: the producer refuses, as a
+    ``ValueError`` from the library and a usage error from the CLI, and
+    the first topic's plan and bytes stay as they were."""
+    import hashlib
 
-    from engine.streams import write_clips_stream_dir
+    from engine import jobs
+    from engine.iceberg import IcebergTable
 
-    d = str(tmp_path / "topic")
-    write_clips_stream_dir(d, 400, n_files=8, seed=1)
-    assert len(os.listdir(d)) == 8
-    write_clips_stream_dir(d, 200, n_files=4, seed=1)
-    files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-    assert len(files) == 4  # old shards removed
+    loc = str(tmp_path / "topic")
+    write_clips_iceberg(loc, 400, n_files=4, seed=1)
+
+    def state():
+        files = IcebergTable(loc).plan_files()
+        return [(f.file_path, f.record_count,
+                 hashlib.sha256(open(f.file_path, "rb").read()).hexdigest())
+                for f in files]
+
+    before = state()
+    assert len(before) == 4
+    with pytest.raises(ValueError, match="already holds an Iceberg table"):
+        write_clips_iceberg(loc, 200, n_files=2, seed=1)
+    with pytest.raises(SystemExit, match="already holds an Iceberg table"):
+        jobs.main(["producer", "--out", loc, "--n-clips", "200",
+                   "--n-files", "2", "--seed", "1"])
+    assert state() == before
 
 
 def test_day_pruned_backfill_kill_restart(spark, tmp_path):
@@ -375,3 +387,19 @@ def test_pipeline_cli_rejects_bad_partition_filters(tmp_path):
         jobs.main(["pipeline", "--clips", topic.location, "--out", out,
                    "--day", "1999-01-01"])
     assert not os.path.exists(out)
+
+
+def test_cli_usage_errors_create_nothing(tmp_path):
+    """``--clips`` naming no clip topic exits with a usage error that names
+    the path, before a Spark session starts; so does a producer partition
+    term on a missing column. Neither creates a dir."""
+    from engine import jobs
+
+    clips = str(tmp_path / "no_topic")
+    for cmd in ("pipeline", "join", "backfill"):
+        with pytest.raises(SystemExit, match=re.escape(clips)):
+            jobs.main([cmd, "--clips", clips, "--out", str(tmp_path / "out")])
+    with pytest.raises(SystemExit, match="'no_such_col' not in schema"):
+        jobs.main(["producer", "--out", clips, "--n-clips", "10",
+                   "--partition-by", "days(no_such_col)"])
+    assert os.listdir(tmp_path) == []
