@@ -414,11 +414,6 @@ def extract_audio_features_direct(
             df, (payload_col, "__file_path"), spectral))
 
 
-def with_payload_size(df: DataFrame, payload_col: str = "bytes") -> DataFrame:
-    """Cheap JVM-side metadata: payload byte length without any Python."""
-    return df.withColumn("payload_bytes", F.length(F.col(payload_col)))
-
-
 # ---------------------------------------------------------------------------
 # Speech features: log-mel filterbank, MFCC, f0 — pure numpy, Arrow-batched
 # ---------------------------------------------------------------------------

@@ -34,14 +34,17 @@ from __future__ import annotations
 import json
 import os
 import struct
+from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from engine.complexio import _read_zigzag  # shared Avro varint codec
 from engine.complexio import _zigzag as _zigzag_long
 from engine.complexio import avro_decode_datum, avro_encode_datum
+
+if TYPE_CHECKING:  # imported where used, so engine.tail starts without it
+    import pandas as pd
 
 # ---------------------------------------------------------------------------
 # Schema mapping (Spark → Avro record of union[null, T] fields)
@@ -90,6 +93,8 @@ def _scalarize(v):
         return {k: _scalarize(x) for k, x in v.items()}
     if isinstance(v, (bytes, bytearray)):
         return bytes(v)
+    import pandas as pd
+
     # v is a scalar here (containers handled above): one isna covers
     # None, float NaN, and pd.NaT — NaT is NOT a pd.Timestamp instance,
     # so it must be caught before the timestamp branch
@@ -375,6 +380,7 @@ def _write_partitioned(df: DataFrame, path: str, ext: str,
     os.makedirs(path, exist_ok=True)
 
     def op(batches):
+        import pandas as pd
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
@@ -432,6 +438,8 @@ def write_avro_dataset(df: DataFrame, path: str) -> int:
 
 
 def read_avro_dataset(path: str) -> pd.DataFrame:
+    import pandas as pd
+
     rows: list[dict] = []
     for name in sorted(os.listdir(path)):
         if name.endswith(".avro"):

@@ -101,52 +101,6 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
     )
 
 
-# ---------------------------------------------------------------------------
-# MinHash + LSH
-# ---------------------------------------------------------------------------
-
-
-def minhash_signatures(
-    sh: DataFrame, num_perm: int = 32
-) -> DataFrame:
-    """(id, perm_id, min_hash): k permutations as seeded xxhash64 re-hashes.
-
-    xxhash64(shingle, seed=perm) is a family of independent hash functions;
-    the min over a doc's shingle set per perm is its MinHash signature row.
-    Shuffle volume: O(docs × num_perm).
-    """
-    perms = F.explode(F.sequence(F.lit(0), F.lit(num_perm - 1))).alias("perm_id")
-    hashed = sh.select("id", "shingle", perms).withColumn(
-        "h", F.xxhash64(F.col("shingle"), F.col("perm_id"))
-    )
-    return hashed.groupBy("id", "perm_id").agg(F.min("h").alias("min_hash"))
-
-
-def lsh_candidate_pairs(
-    sigs: DataFrame, bands: int = 8, rows_per_band: int = 4
-) -> DataFrame:
-    """Band the signature; docs sharing any (band, band_hash) bucket become
-    candidate pairs (a < b). Bucket join only — never a cross join."""
-    banded = (
-        sigs.withColumn("band", (F.col("perm_id") / rows_per_band).cast("int"))
-        .groupBy("id", "band")
-        .agg(F.xxhash64(F.concat_ws(",", F.sort_array(F.collect_list("min_hash")))).alias("band_hash"))
-    )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
-    return pairs
-
-
 def jaccard_verify(
     pairs: DataFrame, sh: DataFrame, threshold: float = 0.5
 ) -> DataFrame:

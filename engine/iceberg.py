@@ -55,7 +55,6 @@ import uuid
 from dataclasses import dataclass
 from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from engine.datafiles import read_avro_ocf_bytes, write_avro_ocf_bytes
@@ -571,9 +570,9 @@ def _bucket_udf(n: int, kind: str):
     the caller pre-casts to: "long" (int/long/date-days/timestamp-micros —
     fully numpy-vectorized, one pass per batch), "string" (UTF-8), or
     "binary".  Nulls map to null (Hive default partition)."""
+    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("int")
     def fn(s: pd.Series) -> pd.Series:
         if kind == "long":
             mask = s.isna()
@@ -592,7 +591,10 @@ def _bucket_udf(n: int, kind: str):
 
         return s.map(one).astype("Int32")
 
-    return fn
+    # the hints are strings (PEP 563) naming this function's local pd, which
+    # pandas_udf cannot resolve from the module globals: bind them here
+    fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
+    return pandas_udf(fn, "int")
 
 
 _TRANSFORM_RE = re.compile(

@@ -210,11 +210,9 @@ def cmd_serve(args) -> dict:
     """Online point-lookup serving (S7, ``VectorServer`` analogue) against a
     pipeline/backfill output: latest window row per key (ties broken on
     commit order, so re-backfills supersede older rows) — the CLI twin of
-    ``featureView.getFeatureVector``.  One scan serves all keys; misses are
-    reported per key, not fatal."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
+    ``featureView.getFeatureVector``.  One batch lookup serves all keys;
+    misses are reported per key, not fatal."""
+    from engine.serving import VectorServer
     from engine.session import get_spark
     from engine.sink import ParquetLedgerSink
 
@@ -232,12 +230,16 @@ def cmd_serve(args) -> dict:
 
         # parse key values according to the key column's actual type
         key_type = dict(online.dtypes).get(args.key)
-        if key_type in ("tinyint", "smallint", "int", "bigint"):
-            keys = [int(k) for k in raw]
-        elif key_type in ("float", "double"):
-            keys = [float(k) for k in raw]
-        else:
-            keys = raw
+        cast = (int if key_type in ("tinyint", "smallint", "int", "bigint")
+                else float if key_type in ("float", "double") else str)
+        keys = []
+        for k in raw:
+            try:
+                keys.append(cast(k))
+            except ValueError:
+                raise SystemExit(
+                    f"--keys: {args.key} column has type {key_type}, {k!r} is "
+                    "not a number") from None
         keys = list(dict.fromkeys(keys))  # dedupe, keep order
 
         # newest-row order: event/window ts when the table has one (pipeline
@@ -245,24 +247,18 @@ def cmd_serve(args) -> dict:
         ts_col = getattr(args, "ts_col", None) or (
             "window_start" if "window_start" in online.columns else None
         )
-        order = []
-        if ts_col is not None:
-            if ts_col not in online.columns:
-                raise SystemExit(
-                    f"--ts-col {ts_col!r} not in table columns {online.columns}"
-                )
-            order.append(F.desc(ts_col))
-        order.append(F.desc("batch_id"))
-        latest = (
-            online.filter(F.col(args.key).isin(keys))
-            .withColumn(
-                "_rn",
-                F.row_number().over(W.partitionBy(args.key).orderBy(*order)),
+        if ts_col is not None and ts_col not in online.columns:
+            raise SystemExit(
+                f"--ts-col {ts_col!r} not in table columns {online.columns}"
             )
-            .filter("_rn = 1")
-            .drop("_rn", "batch_id")
-        )
-        rows = {r[args.key]: r.asDict() for r in latest.collect()}
+        rows = {}
+        if keys:
+            server = VectorServer([("serve", online, [args.key])], ts_col=ts_col)
+            found = server.get_feature_vectors(
+                spark, [{args.key: k} for k in keys])
+            cols = [c for c in online.columns if c != "batch_id"]
+            rows = {r[args.key]: r.asDict()
+                    for r in found.select(*cols).collect()}
     finally:
         spark.stop()
     vectors, missing = [], []
@@ -428,7 +424,6 @@ def cmd_condition(args) -> dict:
     exact fingerprint dedup -> deterministic sample -> overlapping token
     chunks, written as one exactly-once ledger batch so downstream training
     jobs read a consistent snapshot."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from engine.sampling import deterministic_sample
@@ -442,13 +437,11 @@ def cmd_condition(args) -> dict:
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
     kept = quality_score(docs).filter(F.col("quality") >= args.min_quality)
-    w = Window.partitionBy("fp").orderBy("doc_id")
-    deduped = (
-        fingerprint(kept)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    fp = fingerprint(kept)
+    # the lowest doc_id of each fingerprint survives
+    deduped = (fp.groupBy("fp")
+               .agg(F.min_by(F.struct(*fp.columns), "doc_id").alias("_doc"))
+               .select("_doc.*"))
     sampled = deterministic_sample(deduped, args.fraction, salt=args.salt)
     chunks = chunk_documents(sampled, args.chunk_tokens, args.overlap)
     sink = ParquetLedgerSink(args.out)

@@ -280,14 +280,6 @@ def decode_image(buf: bytes) -> np.ndarray:
     return decode_image_stub(buf)
 
 
-def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbor resize via index striding — pure numpy."""
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-    xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
 def fake_image_decoder(buf: bytes) -> np.ndarray:
     """Deterministic fake: interpret bytes as an 8×8 grayscale tile (repeating),
     so plumbing tests exercise real numpy arrays end to end."""

@@ -26,21 +26,6 @@ def assign_tumbling(ts_ms: np.ndarray, width_ms: int) -> np.ndarray:
     return (ts_ms // width_ms) * width_ms
 
 
-def watermark_filter(pdf: pd.DataFrame, ts_col: str, bound_ms: int) -> pd.DataFrame:
-    """Drop rows that a bounded-out-of-orderness watermark would have dropped.
-
-    Flink's watermark after seeing events e1..ei is max(ts)-bound-1ms; a row
-    assigned to a window whose end <= current watermark is dropped. We model
-    the arrival order as the row order of ``pdf``.
-    """
-    ts = pdf[ts_col].to_numpy()
-    high = np.maximum.accumulate(ts)
-    wm = np.concatenate(([np.iinfo(np.int64).min], high[:-1])) - bound_ms
-    # A row is kept if its window could still be open. Conservative per-row
-    # model: drop if ts < watermark at arrival AND its window already fired.
-    return pdf[ts >= wm]
-
-
 def tumbling_oracle(
     pdf: pd.DataFrame,
     ts_col: str,

@@ -8,15 +8,16 @@ multi-feature-group vectors in prepared-statement (TreeMap) order (:339-366).
 Missing primary-key entries raise (:137-139, :422-427).
 
 Spark expression: the "online store" is just the latest committed feature
-table; a lookup is a broadcast-hash semi-join of a small key DataFrame against
-it (point lookups and batch lookups share one plan). On a real deployment the
+table, reduced to its newest row per key by one resolution step
+(``VectorServer._online``) that the driver-side snapshot, the Spark point
+lookup and the broadcast-join batch lookup all read. On a real deployment the
 online table would live in an external KV/JDBC store — the class keeps that
 boundary behind ``source_df`` so a JDBC reader can be swapped in.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -33,6 +34,14 @@ def _resolve_df(df_or_factory) -> DataFrame:
     """A feature group's online table may be a DataFrame or a zero-arg
     factory (re-resolved per call so new store commits become visible)."""
     return df_or_factory() if callable(df_or_factory) else df_or_factory
+
+
+def _ambiguous(entry: dict, name: str) -> LookupError_:
+    return LookupError_(
+        f"key {entry} has multiple rows in group '{name}' and no "
+        "batch_id/ts_col to order by — reduce the online table to "
+        "one row per key (latest window/commit) before serving"
+    )
 
 
 class VectorServer:
@@ -97,16 +106,20 @@ class VectorServer:
                 f"vector stitching; got {sorted(pk_sets)}"
             )
 
-    def _latest_order(self, df: DataFrame) -> list:
-        """Newest-row ordering: event/window ts first (when present), then
-        commit order — mirrors jobs.cmd_serve's tie-break."""
-        order = []
-        if self.ts_col and self.ts_col in df.columns:
-            order.append(F.desc_nulls_last(self.ts_col))
-        if "batch_id" in df.columns:
-            order.append(F.desc("batch_id"))
-        return order
-
+    def _online(self, df: DataFrame, pks: list[str]) -> DataFrame:
+        """The one resolution step every lookup path reads: one row per key
+        when the table has an order column — the newest event/window
+        ``ts_col`` first, then the newest commit (``batch_id``), nulls last
+        — with complex features decoded and transformations applied. A
+        table with neither column keeps every row; a key with several rows
+        is then ambiguous (:func:`_ambiguous`)."""
+        order = [F.col(c).desc_nulls_last() for c in (self.ts_col, "batch_id")
+                 if c is not None and c in df.columns]
+        if order:
+            df = (df.withColumn("_rn", F.row_number().over(
+                      Window.partitionBy(*pks).orderBy(*order)))
+                  .filter("_rn = 1").drop("_rn"))
+        return self._apply_transforms_df(self._decode_complex_df(df))
 
     def _check_keys(self, entry: dict, pks: list[str]) -> None:
         missing = [k for k in pks if k not in entry]
@@ -125,7 +138,7 @@ class VectorServer:
         mirroring the reference's online-store JDBC boundary); pass
         ``use_snapshot=False`` to run the lookup as a Spark job — the two
         are row-identical (pytest-asserted parity) because the snapshot is
-        built by collecting the SAME decode+transform plan.
+        built by collecting the SAME resolution step (:meth:`_online`).
         """
         if not use_snapshot:
             return self._get_feature_vector_spark(entry)
@@ -135,11 +148,7 @@ class VectorServer:
             snap, ambiguous = self._snapshot(name, df, pks)
             key = tuple(_norm_key(entry[k]) for k in pks)
             if key in ambiguous:
-                raise LookupError_(
-                    f"key {entry} has multiple rows in group '{name}' and no "
-                    "batch_id/ts_col to order by — reduce the online table to "
-                    "one row per key (latest window/commit) before serving"
-                )
+                raise _ambiguous(entry, name)
             row = snap.get(key)
             if row is None:
                 raise LookupError_(f"No feature vector for {entry} in group '{name}'")
@@ -148,147 +157,25 @@ class VectorServer:
         return out
 
     def _get_feature_vector_spark(self, entry: dict) -> dict:
-        """The Spark-job point lookup (semantics twin of the snapshot path)."""
+        """The Spark-job point lookup (semantics twin of the snapshot path).
+        The key filter runs first: the resolution step works per key, so
+        resolving only the requested key gives the same row."""
         out: dict = {}
         for name, df, pks in self.feature_groups:
-            df = _resolve_df(df)
             self._check_keys(entry, pks)
             cond = None
             for k in pks:
                 c = F.col(k) == F.lit(entry[k])
                 cond = c if cond is None else (cond & c)
-            matched = df.filter(cond)
-            order = self._latest_order(df)
-            if order:
-                # multi-version table: newest event/window row of the newest
-                # commit wins (not an arbitrary row within the newest batch)
-                matched = matched.orderBy(*order)
-            # complex decode then transformations run inside the SAME plan
-            # the batch path uses (typed columns — a null feature value
-            # transforms to null instead of crashing local schema inference)
-            matched = self._apply_transforms_df(self._decode_complex_df(matched))
+            matched = self._online(_resolve_df(df).filter(cond), pks)
             rows = matched.limit(2).collect()
             if not rows:
                 raise LookupError_(f"No feature vector for {entry} in group '{name}'")
-            if len(rows) > 1 and not order:
-                raise LookupError_(
-                    f"key {entry} has multiple rows in group '{name}' and no "
-                    "batch_id/ts_col to order by — reduce the online table to "
-                    "one row per key (latest window/commit) before serving"
-                )
-            row = rows[0].asDict()
-            for k, v in row.items():
+            if len(rows) > 1:
+                raise _ambiguous(entry, name)
+            for k, v in rows[0].asDict().items():
                 out.setdefault(k, v)
         return out
-
-    # -- executed SQL online-store boundary (VectorServer.java:368-382) -----
-    def init_sql_store(self, store) -> None:
-        """Materialize every group's resolved online table into a SQL online
-        store (:class:`engine.online_store.SqlOnlineStore` — the executed
-        JDBC boundary; the reference opens a real MySQL/RonDB connection at
-        ``VectorServer.java:368-382``). Rows are written oldest→newest so
-        the store's ``INSERT OR REPLACE`` primary-key upsert leaves exactly
-        the newest row per key — the same resolution the snapshot applies
-        driver-side. Complex features stay RAW Avro bytes in the store and
-        decode client-side at lookup time (:403-420); transformations are
-        engine-side Column functions by design, so they are applied before
-        the write (and may not target a complex feature in this mode)."""
-        clash = set(self.transformations) & set(self.complex_features)
-        if clash:
-            raise ValueError(
-                f"transformations on complex features {sorted(clash)} are "
-                "not supported on the SQL online-store path — decode "
-                "happens at lookup time, after transforms would have run"
-            )
-        self._sql_store = store
-        for name, df, pks in self.feature_groups:
-            df = _resolve_df(df)
-            resolved = self._apply_transforms_df(df)
-            order = []
-            if self.ts_col and self.ts_col in df.columns:
-                order.append(F.asc_nulls_first(self.ts_col))
-            if "batch_id" in df.columns:
-                order.append(F.asc("batch_id"))
-            if order:
-                resolved = resolved.orderBy(*order)
-            else:
-                # no order columns: INSERT OR REPLACE would let an arbitrary
-                # partition-order-dependent row win — raise the same
-                # ambiguity error the snapshot/Spark paths raise instead of
-                # breaking row-identical parity nondeterministically
-                dup = (resolved.groupBy(*pks).count()
-                       .filter(F.col("count") > 1).limit(1).collect())
-                if dup:
-                    key = {k: dup[0][k] for k in pks}
-                    raise LookupError_(
-                        f"key {key} has multiple rows in group '{name}' and "
-                        "no batch_id/ts_col to order by — reduce the online "
-                        "table to one row per key (latest window/commit) "
-                        "before serving"
-                    )
-            store.write_group(name, resolved, pks)
-
-    def _decode_complex_row(self, row: dict) -> dict:
-        from engine.complexio import avro_decode_datum
-
-        for c, schema in self.complex_features.items():
-            if c in row and row[c] is not None:
-                row[c] = avro_decode_datum(bytes(row[c]), schema)
-        return row
-
-    def get_feature_vector_sql(self, entry: dict) -> dict:
-        """Point lookup through the SQL online store: one prepared
-        ``WHERE pk = ?`` statement per group, client-side Avro decode of
-        complex features — the reference's serving path executed end to
-        end. Row-identical to the snapshot and Spark paths
-        (pytest-asserted parity)."""
-        if getattr(self, "_sql_store", None) is None:
-            raise RuntimeError("call init_sql_store(store) first")
-        out: dict = {}
-        for name, _, pks in self.feature_groups:
-            self._check_keys(entry, pks)
-            row = self._sql_store.get(name, entry)
-            if row is None:
-                raise LookupError_(
-                    f"No feature vector for {entry} in group '{name}'"
-                )
-            for k, v in self._decode_complex_row(row).items():
-                out.setdefault(k, v)
-        return out
-
-    def get_feature_vectors_sql(self, entries: list[dict]) -> list[dict]:
-        """Batch lookup through the SQL online store: the ``IN
-        ((k1),(k2),...)`` row-value tuple statement (:201-268), stitched
-        per key across groups in feature-group order."""
-        if getattr(self, "_sql_store", None) is None:
-            raise RuntimeError("call init_sql_store(store) first")
-        if not entries:
-            raise LookupError_("empty key batch")
-        stitched: dict[tuple, dict] = {}
-        for name, _, pks in self.feature_groups:
-            for e in entries:
-                self._check_keys(e, pks)
-            found: set[tuple] = set()
-            for row in self._sql_store.get_batch(name, entries):
-                key = tuple(_norm_key(row[k]) for k in pks)
-                found.add(key)
-                dst = stitched.setdefault(key, {})
-                for k, v in self._decode_complex_row(row).items():
-                    dst.setdefault(k, v)
-            # a key with no row in THIS group raises, like the point path
-            # (and the reference, which raises on missing PK entries) —
-            # silently dropping it would desync the output positions from
-            # `entries` and return partial vectors
-            missing = [
-                e for e in entries
-                if tuple(_norm_key(e[k]) for k in pks) not in found
-            ]
-            if missing:
-                raise LookupError_(
-                    f"No feature vector for {len(missing)} key(s) in group "
-                    f"'{name}': {missing[:5]}"
-                )
-        return [stitched[tuple(_norm_key(e[k]) for k in pks)] for e in entries]
 
     # -- driver-side snapshot (the in-sandbox "online store") ---------------
     def invalidate_snapshots(self) -> None:
@@ -296,49 +183,31 @@ class VectorServer:
 
     def _snapshot(self, name: str, df: DataFrame, pks: list[str]):
         """(mapping, ambiguous_keys) for one group; rebuilt when the
-        staleness token changes. Built by COLLECTING the same decode +
-        transform plan the Spark paths run, so values are identical by
-        construction; newest-row resolution happens driver-side with the
-        same (ts desc nulls-last, batch_id desc) order."""
+        staleness token changes. Built by COLLECTING the resolution step the
+        Spark paths run, so values are identical by construction."""
         token = self.snapshot_token_fn() if self.snapshot_token_fn else None
         cached = self._snapshots.get(name)
         if cached is not None and cached[0] == token:
             return cached[1], cached[2]
         # resolve the factory only on an actual rebuild — a fresh read here
         # is what makes commits landed after construction visible
-        df = _resolve_df(df)
-        resolved = self._apply_transforms_df(self._decode_complex_df(df))
-        rows = [r.asDict() for r in resolved.collect()]
-        order = []
-        if self.ts_col and self.ts_col in df.columns:
-            order.append(self.ts_col)
-        if "batch_id" in df.columns:
-            order.append("batch_id")
-        # stable multi-key descending sort, nulls last (desc_nulls_last)
-        for col in reversed(order):
-            rows.sort(
-                key=lambda r: (r[col] is not None,
-                               r[col] if r[col] is not None else 0),
-                reverse=True,
-            )
         mapping: dict = {}
-        counts: dict = {}
-        for r in rows:
+        ambiguous: set = set()
+        for r in self._online(_resolve_df(df), pks).collect():
             key = tuple(_norm_key(r[k]) for k in pks)
-            counts[key] = counts.get(key, 0) + 1
-            if key not in mapping:
-                mapping[key] = r
-        ambiguous = (
-            set() if order else {k for k, c in counts.items() if c > 1}
-        )
+            if key in mapping:  # only a table without order columns
+                ambiguous.add(key)
+            mapping[key] = r.asDict()
         self._snapshots[name] = (token, mapping, ambiguous)
         return mapping, ambiguous
 
     def get_feature_vectors(self, spark: SparkSession, entries: list[dict]) -> DataFrame:
         """Batch lookup: the ``IN``-tuple path (:201-268) as a broadcast join.
 
-        Returns one row per requested entry per feature group hit; callers can
-        assert completeness with :meth:`check_complete`.
+        Returns one row per requested key that any group holds (its newest
+        row, or every row of a table without order columns); callers can
+        assert completeness with :meth:`check_complete`. The key join runs
+        before the resolution step, which works per key.
         """
         if not entries:
             raise LookupError_("empty key batch")
@@ -350,8 +219,8 @@ class VectorServer:
             keys_df = spark.createDataFrame(
                 [tuple(e[k] for k in pks) for e in entries], pks
             ).dropDuplicates(pks)
-            part = df.join(F.broadcast(keys_df), on=pks, how="inner")
-            part = self._apply_transforms_df(self._decode_complex_df(part))
+            part = self._online(
+                df.join(F.broadcast(keys_df), on=pks, how="inner"), pks)
             if out is not None:
                 # disambiguate non-key columns colliding across groups
                 # (per-group prefix, as the reference's join prefixing does)

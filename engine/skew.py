@@ -198,23 +198,6 @@ def salted_window_agg_stream(
     )
 
 
-def repartition_salted(df: DataFrame, key: str, n_partitions: int, n_salts: int = 16) -> DataFrame:
-    """T2 analogue of ``.rescale().rebalance()`` for skewed keys: spread each
-    key across n_salts partitions instead of one."""
-    # Salt from a stable hash of all columns + the source split id: retried
-    # tasks land rows in the same partitions (unlike
-    # monotonically_increasing_id), and fully-duplicate hot rows still spread
-    # instead of re-concentrating in one partition.
-    return df.repartition(
-        n_partitions,
-        F.col(key),
-        F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns], F.spark_partition_id()),
-            F.lit(n_salts),
-        ),
-    )
-
-
 def partition_histogram(df: DataFrame) -> DataFrame:
     """Per-partition row counts — the lineage/metrics signal used to decide
     when salting is needed and recorded by the sink ledger."""

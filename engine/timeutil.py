@@ -40,6 +40,3 @@ def parse_wallclock(value) -> datetime:
         s = s + "000"  # millis → micros for %f
     return datetime.strptime(s, pattern)
 
-
-def to_epoch_ms(value) -> int:
-    return int(parse_wallclock(value).replace(tzinfo=timezone.utc).timestamp() * 1000)

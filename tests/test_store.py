@@ -219,6 +219,39 @@ def test_serving_latest_commit_and_stitch_prefix(spark, tables):
     assert "r_name" in out.columns and "b_r_name" in out.columns
 
 
+def test_serving_batch_serves_newest_row_only(spark):
+    """A batch lookup returns the row the point lookups return: the newest
+    commit's, one per key, also when two groups are stitched (an outer
+    join over superseded rows would multiply them)."""
+    from engine.serving import LookupError_, VectorServer
+
+    df = spark.createDataFrame(
+        [(1, "old", 0), (1, "new", 5), (2, "x", 0)],
+        "k int, v string, batch_id int",
+    )
+    entries = [{"k": 1}, {"k": 2}]
+    vs = VectorServer([("g", df, ["k"])])
+    assert vs.get_feature_vector({"k": 1})["v"] == "new"
+    assert vs.get_feature_vector({"k": 1}, use_snapshot=False)["v"] == "new"
+    got = vs.get_feature_vectors(spark, entries)
+    assert sorted(map(tuple, got.collect())) == [(1, "new", 5), (2, "x", 0)]
+
+    two = VectorServer([("a", df, ["k"]), ("b", df, ["k"])])
+    got = two.get_feature_vectors(spark, entries)
+    assert got.columns == ["k", "v", "batch_id", "b_v", "b_batch_id"]
+    assert sorted(map(tuple, got.collect())) == [
+        (1, "new", 5, "new", 5), (2, "x", 0, "x", 0)]
+
+    # without an order column a duplicated key is ambiguous on both point
+    # paths, and the other keys are still served
+    flat = VectorServer([("g", df.drop("batch_id"), ["k"])])
+    for use_snapshot in (True, False):
+        with pytest.raises(LookupError_, match="multiple rows"):
+            flat.get_feature_vector({"k": 1}, use_snapshot=use_snapshot)
+        assert flat.get_feature_vector(
+            {"k": 2}, use_snapshot=use_snapshot)["v"] == "x"
+
+
 # --------------------------------------------------------------------------- save modes (SaveMode.java:20-24)
 def test_upsert_latest_key_wins_and_time_travel(spark, tables, store):
     from engine.store import SaveMode
@@ -1311,130 +1344,6 @@ def test_kafka_connector_reference_option_parity():
             "b:9092", ssl_endpoint_identification_algorithm="bogus"
         )
     assert SslEndpointIdentificationAlgorithm.from_string("https") == "HTTPS"
-
-
-def test_sql_online_store_parity_point_and_batch(spark):
-    """The executed SQL online-store boundary (VectorServer.java:368-382
-    analogue, engine/online_store.py): point + batch lookups through real
-    prepared statements must be row-identical to the driver-snapshot and
-    Spark-job paths, including newest-commit upsert resolution, client-side
-    Avro decode of complex features, and attached transformations."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from engine.complexio import encode_feature_avro
-    from engine.online_store import SqlOnlineStore
-    from engine.serving import LookupError_, VectorServer
-    from engine.transform import fit_min_max
-
-    base = spark.range(1, 41).select(
-        F.col("id").alias("k"),
-        (F.col("id") * 2.5).alias("v"),
-        F.concat(F.lit("n"), F.col("id")).alias("nm"),
-        F.lit(1).alias("batch_id"),
-    )
-    # second commit upserts keys 1-10 with new values — latest must win
-    upd = base.filter("k <= 10").withColumn("v", F.col("v") + 1000.0).withColumn(
-        "batch_id", F.lit(2)
-    )
-    multi = base.unionByName(upd)
-    schema = json.dumps(["null", {"type": "array", "items": "double"}])
-    online = encode_feature_avro(
-        multi.withColumn("stats", F.array("v", F.col("v") * 0.5)), "stats", schema
-    )
-    vs = VectorServer(
-        [("g", online, ["k"])],
-        transformations={"v": fit_min_max(multi, "v")},
-        complex_features={"stats": schema},
-    )
-    sql_store = SqlOnlineStore()
-    vs.init_sql_store(sql_store)
-
-    entries = [{"k": k} for k in (1, 5, 15, 40)]
-    for e in entries:
-        snap = vs.get_feature_vector(e)
-        spark_row = vs.get_feature_vector(e, use_snapshot=False)
-        sql_row = vs.get_feature_vector_sql(e)
-        for col in ("k", "v", "nm"):
-            assert snap[col] == sql_row[col] == spark_row[col], (e, col)
-        assert list(snap["stats"]) == list(sql_row["stats"]) == list(
-            spark_row["stats"]
-        ), e
-    # upserted key resolves to the NEW value on every path
-    assert vs.get_feature_vector_sql({"k": 1})["nm"] == "n1"
-    raw_v1 = dict(
-        multi.filter("k = 1 AND batch_id = 2").collect()[0].asDict()
-    )["v"]
-    assert abs(sql_store.get("g", {"k": 1})["v"]
-               - vs.get_feature_vector({"k": 1})["v"]) < 1e-12
-    assert raw_v1 == 1002.5  # sanity: the upserted raw value
-
-    # batch path: IN-tuple statement, stitched in entry order
-    got = vs.get_feature_vectors_sql(entries)
-    assert [r["k"] for r in got] == [1, 5, 15, 40]
-    snap_batch = [vs.get_feature_vector(e) for e in entries]
-    for a, b in zip(got, snap_batch):
-        assert a["v"] == b["v"] and list(a["stats"]) == list(b["stats"])
-
-    # miss raises on the SQL path like the others
-    import pytest
-
-    with pytest.raises(LookupError_):
-        vs.get_feature_vector_sql({"k": 9999})
-    # transformations on complex features are rejected in SQL-store mode
-    vs_bad = VectorServer(
-        [("g", online, ["k"])],
-        transformations={"stats": fit_min_max(multi, "v")},
-        complex_features={"stats": schema},
-    )
-    with pytest.raises(ValueError):
-        vs_bad.init_sql_store(SqlOnlineStore())
-
-
-def test_sql_store_batch_miss_and_chunking(spark):
-    """ADVICE r4: batch lookups must raise on missing keys (positional
-    parity with `entries`, like the point path), and get_batch must chunk
-    below SQLite's bound-variable limit so >900-key batches work."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from engine.online_store import SqlOnlineStore
-    from engine.serving import LookupError_, VectorServer
-
-    n = 1200  # > 900 bound-variable chunk, forces multi-chunk IN statements
-    base = spark.range(1, n + 1).select(
-        F.col("id").alias("k"), (F.col("id") * 2.0).alias("v"))
-    vs = VectorServer([("g", base, ["k"])])
-    store = SqlOnlineStore()
-    vs.init_sql_store(store)
-
-    entries = [{"k": k} for k in range(1, n + 1)]
-    rows = store.get_batch("g", entries)
-    assert len(rows) == n                       # chunked, nothing dropped
-    got = vs.get_feature_vectors_sql(entries)
-    assert [r["k"] for r in got] == list(range(1, n + 1))  # entry order
-    assert got[0]["v"] == 2.0 and got[-1]["v"] == 2.0 * n
-
-    with pytest.raises(LookupError_, match="No feature vector"):
-        vs.get_feature_vectors_sql([{"k": 1}, {"k": n + 7}])
-
-
-def test_sql_store_ambiguous_keys_raise_without_order(spark):
-    """ADVICE r4: with neither ts_col nor batch_id, duplicate keys must
-    raise the same ambiguity error as the snapshot path instead of letting
-    an arbitrary partition-order-dependent row win INSERT OR REPLACE."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from engine.online_store import SqlOnlineStore
-    from engine.serving import LookupError_, VectorServer
-
-    dup = spark.range(1, 11).select(
-        (F.col("id") % 5).alias("k"), F.col("id").alias("v"))
-    vs = VectorServer([("g", dup, ["k"])])
-    with pytest.raises(LookupError_, match="multiple rows"):
-        vs.init_sql_store(SqlOnlineStore())
 
 
 def test_fit_label_encoder_cardinality_bound(spark):

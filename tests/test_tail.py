@@ -4,6 +4,8 @@ pacing, live follow, restart exactly-once, partition pruning, schema
 evolution, compaction/expiration interplay."""
 import json
 import os
+import subprocess
+import sys
 import time
 
 import pytest
@@ -52,6 +54,19 @@ def _start(spark, loc, d, ck="ck", **opts):
 # ---------------------------------------------------------------------------
 # reader unit tests — offset math, no Spark query needed
 # ---------------------------------------------------------------------------
+
+def test_tail_import_leaves_pandas_unloaded():
+    """PySpark starts a fresh Python source runner per tail query, and the
+    runner's ``import engine.tail`` is on every query's start path: it must
+    not pull in pandas (about a third of a second)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         "import sys, engine.tail; print('pandas' in sys.modules)"],
+        cwd=root, capture_output=True, text=True, timeout=120)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.strip() == "False"
+
 
 def test_reader_offsets_and_pacing(spark, tmp_path):
     t = _mktable(spark, tmp_path)
