@@ -1,9 +1,11 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
 local[$SPARK_GRAFT_CPUS], plus the streaming flagship's sustained clips/sec.
 
-Prints ONE JSON line:
+Writes the full result to BENCH/last_run.json and prints ONE JSON line,
+under 2 KB, with the headline fields:
   {"metric": "clips_per_sec_sustained", "value": N, "unit": "clips/sec",
-   "queries": {name: seconds, ...}, "sf": ..., ...}
+   "sf": ..., "cpus": ..., "batch_total_sec": ..., "exactly_once_audit": ...,
+   "hw_adjacent_iters_per_sec": ..., ...}
 
 The streaming flagship is the BASELINE.json metric: rate-controlled clip
 stream → vectorized PCM decode (mapInPandas) → per-speaker tumbling window
@@ -20,7 +22,14 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+LAST_RUN = os.path.join(ROOT, "BENCH", "last_run.json")
+#: the fields of the printed line besides the audit: it must stay short
+#: enough for a tail capture, so per-query times go only to LAST_RUN
+HEADLINE = ("metric", "value", "unit", "sf", "cpus", "batch_total_sec",
+            "hw_adjacent_iters_per_sec", "hw_queries_iters_per_sec",
+            "hw_ref_quiet_iters_per_sec")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -234,7 +243,14 @@ def main() -> None:
         "hw_queries_iters_per_sec": hw_queries,
         "hw_ref_quiet_iters_per_sec": HW_REF_QUIET,
     }
-    print(json.dumps(result))
+    with open(LAST_RUN, "w") as fh:
+        json.dump(result, fh, indent=1)
+    print(json.dumps({
+        **{k: result[k] for k in HEADLINE},
+        "exactly_once_audit": (streaming["exactly_once_audit"]
+                               and backfill["exactly_once_audit"]),
+        "detail": os.path.relpath(LAST_RUN, ROOT),
+    }))
 
 
 if __name__ == "__main__":

@@ -2832,15 +2832,15 @@ def iceberg_table_at(location) -> IcebergTable | None:
 
 class IcebergSink:
     """Exactly-once ``foreachBatch`` sink committing one Iceberg snapshot
-    per micro-batch (the jar-backed analogue of ``ParquetLedgerSink``,
-    engine/sink.py — same protocol, Iceberg metadata instead of the JSON
-    ledger). Idempotency: each snapshot's summary carries
-    ``streaming-batch-id``; a replayed ``batchId`` that is already in
-    main's ancestry is a no-op, so restarts never double-commit (T7). A
-    batch id staged on an unpublished branch is not committed to main, so
-    it does not count. The summary also carries ``streaming-query-id``: a
-    batch id committed by a different query (a reused table with a fresh
-    checkpoint) is refused."""
+    per micro-batch: ``ParquetLedgerSink``'s protocol (engine/sink.py) with
+    Iceberg metadata instead of the JSON ledger. Each snapshot's summary
+    carries ``streaming-batch-id`` and, from a stream,
+    ``streaming-query-id``. A batch id already in main's ancestry goes to
+    the sinks' one replay rule, ``engine.sink.replay_committed``: the query
+    that committed it replays it as a no-op (restarts never double-commit,
+    T7), and any other writer raises. A batch id staged on an unpublished
+    branch is not committed to main, so it does not count. Commits made
+    outside a stream take their id from :meth:`next_batch_id`."""
 
     BATCH_KEY = "streaming-batch-id"
     QUERY_KEY = "streaming-query-id"
@@ -2863,24 +2863,31 @@ class IcebergSink:
                                        partition_by=self.partition_by)
         return self._table
 
+    def _batch_ids(self) -> dict[int, str | None]:
+        """batch id → recording query id, over main's ancestry."""
+        return {int(s["summary"][self.BATCH_KEY]): s["summary"].get(
+                    self.QUERY_KEY)
+                for s in self.table()._ancestry()
+                if self.BATCH_KEY in s["summary"]}
+
+    def next_batch_id(self) -> int:
+        """The id for a commit made outside any stream
+        (``engine.sink.next_batch_id``)."""
+        from engine.sink import next_batch_id
+
+        return next_batch_id(self._batch_ids())
+
     def write_batch(self, batch_df: DataFrame, batch_id: int,
                     mode: str = "append") -> bool:
-        from engine.sink import refuse_foreign_replay, streaming_query_id
+        from engine.sink import replay_committed, streaming_query_id
 
-        table = self.table(batch_df)
-        query_id = streaming_query_id(batch_df)
-        prior = [s["summary"] for s in table._ancestry()
-                 if int(s["summary"].get(self.BATCH_KEY, -1)) == batch_id]
-        if prior:
-            refuse_foreign_replay(self.location, batch_id,
-                                  prior[-1].get(self.QUERY_KEY), query_id)
-            # replay after restart — already committed. Still run the
-            # frame: a stateful query's state stores commit only when
-            # the batch's plan executes, and Spark refuses to go on
-            # from a batch whose stores never committed.
-            batch_df.write.format("noop").mode("overwrite").save()
-            return False
+        table = self.table(batch_df)  # created from the first frame's schema
+        committed = self._batch_ids()
+        if batch_id in committed:
+            return replay_committed(self.location, batch_id,
+                                    committed[batch_id], batch_df)
         extra = {self.BATCH_KEY: int(batch_id)}
+        query_id = streaming_query_id(batch_df)
         if query_id:
             extra[self.QUERY_KEY] = query_id
         table.write_dataframe(batch_df, mode=mode, summary_extra=extra)

@@ -210,8 +210,11 @@ def cmd_serve(args) -> dict:
     """Online point-lookup serving (S7, ``VectorServer`` analogue) against a
     pipeline/backfill output: latest window row per key (ties broken on
     commit order, so re-backfills supersede older rows) — the CLI twin of
-    ``featureView.getFeatureVector``.  One batch lookup serves all keys;
-    misses are reported per key, not fatal."""
+    ``featureView.getFeatureVector``.  A batch-written row (``jobs
+    backfill``) beats a streamed row for the same key and window, because
+    batch-namespace ids (``engine.sink.BATCH_ID_BASE`` up) sort above
+    stream micro-batch ids.  One batch lookup serves all keys; misses are
+    reported per key, not fatal."""
     from engine.serving import VectorServer
     from engine.session import get_spark
     from engine.sink import ParquetLedgerSink
@@ -279,7 +282,9 @@ def cmd_backfill(args) -> dict:
     """Batch backfill of the windowed feature groups from the historical clip
     table (the reference's backfill job, ``README.md:26-28``): same aggregate
     as the streaming pipeline, committed as one exactly-once ledger batch per
-    width so time travel and serving read a consistent snapshot."""
+    width, in the sinks' batch id namespace, so time travel and serving read
+    a consistent snapshot and a stream into the same table keeps its own
+    ids."""
     from engine.session import get_spark
     from engine.sink import ParquetLedgerSink
     from engine.windows import multi_width_aggs
@@ -295,8 +300,7 @@ def cmd_backfill(args) -> dict:
     for lbl, agg in aggs.items():
         sink = ParquetLedgerSink(os.path.join(args.out, lbl),
                                  event_ts_col="window_start")
-        batch_id = max((r.batch_id for r in sink.committed_batches()), default=-1) + 1
-        sink.write_batch(agg, batch_id)
+        sink.write_batch(agg, sink.next_batch_id())
         out_rows[lbl] = sink.audit()["ledger_rows"]
     n_in = clips.count()
     spark.stop()
@@ -445,8 +449,7 @@ def cmd_condition(args) -> dict:
     sampled = deterministic_sample(deduped, args.fraction, salt=args.salt)
     chunks = chunk_documents(sampled, args.chunk_tokens, args.overlap)
     sink = ParquetLedgerSink(args.out)
-    batch_id = max((r.batch_id for r in sink.committed_batches()), default=-1) + 1
-    sink.write_batch(chunks, batch_id)
+    sink.write_batch(chunks, sink.next_batch_id())
     n_out = sink.audit()["ledger_rows"]
     spark.stop()
     return {

@@ -113,13 +113,17 @@ class VectorServer:
         — with complex features decoded and transformations applied. A
         table with neither column keeps every row; a key with several rows
         is then ambiguous (:func:`_ambiguous`)."""
-        order = [F.col(c).desc_nulls_last() for c in (self.ts_col, "batch_id")
-                 if c is not None and c in df.columns]
+        order = self._order_cols(df)
         if order:
             df = (df.withColumn("_rn", F.row_number().over(
-                      Window.partitionBy(*pks).orderBy(*order)))
+                      Window.partitionBy(*pks).orderBy(
+                          *[F.col(c).desc_nulls_last() for c in order])))
                   .filter("_rn = 1").drop("_rn"))
         return self._apply_transforms_df(self._decode_complex_df(df))
+
+    def _order_cols(self, df: DataFrame) -> list[str]:
+        return [c for c in (self.ts_col, "batch_id")
+                if c is not None and c in df.columns]
 
     def _check_keys(self, entry: dict, pks: list[str]) -> None:
         missing = [k for k in pks if k not in entry]
@@ -205,9 +209,11 @@ class VectorServer:
         """Batch lookup: the ``IN``-tuple path (:201-268) as a broadcast join.
 
         Returns one row per requested key that any group holds (its newest
-        row, or every row of a table without order columns); callers can
-        assert completeness with :meth:`check_complete`. The key join runs
-        before the resolution step, which works per key.
+        row); callers can assert completeness with :meth:`check_complete`.
+        The key join runs before the resolution step, which works per key.
+        In a table without order columns, a requested key with several rows
+        raises the point lookups' ambiguity error (one extra Spark job over
+        the requested keys' rows).
         """
         if not entries:
             raise LookupError_("empty key batch")
@@ -219,8 +225,13 @@ class VectorServer:
             keys_df = spark.createDataFrame(
                 [tuple(e[k] for k in pks) for e in entries], pks
             ).dropDuplicates(pks)
-            part = self._online(
-                df.join(F.broadcast(keys_df), on=pks, how="inner"), pks)
+            matched = df.join(F.broadcast(keys_df), on=pks, how="inner")
+            if not self._order_cols(matched):
+                dup = (matched.groupBy(*pks).count().filter("count > 1")
+                       .limit(1).collect())
+                if dup:
+                    raise _ambiguous({k: dup[0][k] for k in pks}, name)
+            part = self._online(matched, pks)
             if out is not None:
                 # disambiguate non-key columns colliding across groups
                 # (per-group prefix, as the reference's join prefixing does)

@@ -4,18 +4,22 @@ The reference's sink is a Kafka producer at AT_LEAST_ONCE
 (``flink/engine/FlinkEngine.writeDataStream``, ``FlinkEngine.java:80-95``,
 guarantee at :94). The north rule upgrades this to **exactly-once idempotent**
 delivery: Spark's ``foreachBatch`` re-runs batches after recovery with the same
-``batchId``, so exactly-once = "commit each batchId at most once".
+``batchId``, so exactly-once = "commit each batchId at most once, and skip
+a committed one only when it is that query's own replay".
 
 Commit protocol (SURVEY.md §4.2):
 
 1. ``foreachBatch(df, batch_id)`` → if ``_ledger/<batch_id>.json`` exists, the
-   batch is already committed → **no-op** (replay after restart).
+   one replay rule of both sinks (:func:`replay_committed`) decides: the
+   streaming query that committed the batch replays it as a **no-op**
+   (restart after a crash); any other writer raises. Commits made outside
+   a stream take ids from ``next_batch_id`` (``BATCH_ID_BASE`` up).
 2. Otherwise write the batch's rows to ``data/.tmp-<batch_id>`` as parquet,
    collect per-partition metrics (file, row count, event-time min/max) from the
    written files' parquet footers (no second job over the data),
 3. atomically ``rename`` the temp dir to ``data/batch_id=<batch_id>/``,
 4. atomically publish the ledger record (write-to-temp + ``rename``) with the
-   batch's lineage: input source, watermark, per-partition metrics.
+   batch's lineage: writing query, input files, per-partition metrics.
 
 Readers (:func:`read_committed`) list the ledger first and read only data
 directories with a published record, so a crash between (3) and (4) leaves at
@@ -27,9 +31,9 @@ time travel: each committed row set carries ``commit_ts`` usable by
 ``Query.as_of``.
 
 Scale: on a real cluster this sink is one atomic metadata operation per
-micro-batch (the Iceberg equivalent is a snapshot commit — swap
-``ParquetLedgerSink`` for an Iceberg writer when the runtime jar is present;
-the protocol is identical). Data volume flows through executor-side parquet
+micro-batch (``IcebergSink`` in engine/iceberg.py runs this protocol with
+a snapshot commit in place of the JSON record). Data volume flows
+through executor-side parquet
 writes, the driver only touches footers + one small JSON.
 """
 
@@ -40,9 +44,15 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+#: Commits made outside any stream (``FeatureStore.insert``, ``jobs
+#: backfill``, ``jobs condition``) number from here up; a streaming query
+#: numbers its micro-batches from 0, so the two never meet on one id.
+BATCH_ID_BASE = 1 << 40
 
 
 def streaming_query_id(batch_df: DataFrame) -> str | None:
@@ -50,24 +60,47 @@ def streaming_query_id(batch_df: DataFrame) -> str | None:
     ``batch_df`` — persisted in the checkpoint, so it is the same across
     restarts of one query and new for a fresh checkpoint — or None outside
     a stream. Sinks record it with each batch (see
-    :func:`refuse_foreign_replay`)."""
+    :func:`replay_committed`)."""
     return batch_df.sparkSession.sparkContext.getLocalProperty(
         "sql.streaming.queryId")
 
 
-def refuse_foreign_replay(out: str, batch_id: int,
-                          recorded_query: str | None,
-                          query_id: str | None) -> None:
-    """Raise when ``batch_id`` is already committed to sink ``out`` by a
-    different streaming query: a reused output with a fresh checkpoint
-    restarts batch ids at 0, and skipping its batches as replays would
-    silently drop its rows."""
-    if query_id and recorded_query and recorded_query != query_id:
+def next_batch_id(committed: Iterable[int]) -> int:
+    """The id for a commit made outside any stream to a sink holding the
+    ``committed`` batch ids: one above the highest id in the batch
+    namespace (``BATCH_ID_BASE`` on a sink with none)."""
+    return max((b for b in committed if b >= BATCH_ID_BASE),
+               default=BATCH_ID_BASE - 1) + 1
+
+
+def replay_committed(out: str, batch_id: int, recorded_query: str | None,
+                     batch_df: DataFrame) -> bool:
+    """The replay rule of both exactly-once sinks, for a ``batch_id`` that
+    sink ``out`` already holds from ``recorded_query`` (None: written
+    outside any stream).
+
+    Only the streaming query that committed the batch replays it: it still
+    runs the frame, into ``noop`` — a stateful query's state stores commit
+    only when the batch's plan executes, and Spark refuses to go on from a
+    batch whose stores never committed — and returns False. Every other
+    writer raises, because skipping its batch would silently drop its rows:
+    another query (a reused output with a fresh checkpoint restarts batch
+    ids at 0), a write outside any stream, or a stream meeting a batch
+    written outside one."""
+    query_id = streaming_query_id(batch_df)
+    if query_id is None or query_id != recorded_query:
+        def writer(q):
+            return (f"streaming query {q}" if q
+                    else "a write outside any streaming query")
+
         raise RuntimeError(
-            f"sink {out!r} already has batch {batch_id} from streaming "
-            f"query {recorded_query}, not {query_id} — reusing an output "
-            "dir with a new checkpoint? Point the query at a fresh out_dir "
-            "or reuse the original checkpoint.")
+            f"sink {out!r} already has batch {batch_id} from "
+            f"{writer(recorded_query)}, not {writer(query_id)} — reusing an "
+            "output dir with a new checkpoint? Point the query at a fresh "
+            "out_dir or reuse the original checkpoint; a write outside a "
+            "stream takes its id from the sink's next_batch_id().")
+    batch_df.write.format("noop").mode("overwrite").save()
+    return False
 
 
 @dataclass
@@ -101,19 +134,11 @@ class ParquetLedgerSink:
     """Idempotent exactly-once parquet sink (Iceberg-commit-shaped protocol)."""
 
     def __init__(self, out_dir: str, event_ts_col: str | None = None,
-                 create: bool = True, strict_replay: bool = False):
+                 create: bool = True):
         self.out_dir = out_dir
         self.data_dir = os.path.join(out_dir, "data")
         self.ledger_dir = os.path.join(out_dir, "_ledger")
         self.event_ts_col = event_ts_col
-        #: strict: ANY input-file difference on replay raises. Default False:
-        #: a replay reading a strict SUBSET of the recorded files (source
-        #: compaction/retention between run and recovery) warns loudly and
-        #: no-ops — every replayed row was already committed, so skipping is
-        #: the correct exactly-once behavior. Any NEW file (or a fully
-        #: disjoint set) still raises: that is a reused out_dir with a fresh
-        #: checkpoint, and skipping would silently drop the new rows.
-        self.strict_replay = strict_replay
         if create:
             os.makedirs(self.data_dir, exist_ok=True)
             os.makedirs(self.ledger_dir, exist_ok=True)
@@ -129,99 +154,29 @@ class ParquetLedgerSink:
     def _batch_dir(self, batch_id: int) -> str:
         return os.path.join(self.data_dir, f"batch_id={batch_id}")
 
-    def is_committed(self, batch_id: int) -> bool:
-        return os.path.exists(self._ledger_path(batch_id))
-
-    @staticmethod
-    def _source_file_exists(uri: str) -> bool:
-        """Whether a recorded input file still exists at the source.
-
-        Lineage paths come from ``DataFrame.inputFiles()`` (``file:`` URIs on
-        local/FS sources). Non-file schemes (s3a, hdfs, ...) can't be probed
-        from here — report True (present), which makes the replay guard err
-        on the strict side (raise rather than silently skip)."""
-        if uri.startswith("file:"):
-            from urllib.parse import unquote, urlparse
-
-            return os.path.exists(unquote(urlparse(uri).path))
-        if "://" not in uri:  # bare local path
-            return os.path.exists(uri)
-        return True
+    def next_batch_id(self) -> int:
+        """The id for a commit made outside any stream
+        (:func:`next_batch_id`), read from the ledger's file names."""
+        return next_batch_id(int(n[:-5]) for n in os.listdir(self.ledger_dir)
+                             if n.endswith(".json"))
 
     def write_batch(
         self, batch_df: DataFrame, batch_id: int, mode: str = "append"
     ) -> bool:
-        """The foreachBatch body. Returns False when the batch was a replay."""
+        """The foreachBatch body. Returns False when the batch was a replay
+        (:func:`replay_committed`)."""
         if mode not in ("append", "upsert", "overwrite"):
             raise ValueError(f"unknown save mode {mode!r}")
-        files = sorted(batch_df.inputFiles())
-        query_id = streaming_query_id(batch_df)
-        if self.is_committed(batch_id):
-            # Exactly-once short circuit (T7) — but a reused out_dir with a
-            # FRESH checkpoint restarts batch ids at 0 and would silently
-            # no-op every write. A true replay comes from the same query and
-            # re-reads the same input files; anything else is an
-            # out_dir/checkpoint mismatch → fail loudly.
+        if os.path.exists(self._ledger_path(batch_id)):
             with open(self._ledger_path(batch_id)) as fh:
-                rec = json.load(fh)
-            refuse_foreign_replay(self.out_dir, batch_id,
-                                  rec.get("lineage", {}).get("query_id"),
-                                  query_id)
-            recorded = rec.get("lineage", {}).get("input_files")
-            if recorded is not None and files and recorded != files:
-                rec_set, now_set = set(recorded), set(files)
-                disjoint = not (rec_set & now_set)
-                has_new_files = bool(now_set - rec_set)
-                msg = (
-                    f"sink {self.out_dir!r} already has batch {batch_id} from "
-                    f"different input files (recorded {len(recorded)}, replay "
-                    f"{len(files)}, shared {len(rec_set & now_set)})"
-                )
-                # A subset replay is benign ONLY when the files missing from
-                # this replay no longer exist at the source (true retention /
-                # compaction between run and recovery). A reused out_dir with
-                # a FRESH checkpoint and different micro-batch boundaries
-                # (e.g. a smaller maxFilesPerTrigger) also reads subsets, but
-                # the missing files still exist — skipping would let the new
-                # checkpoint re-commit them under new batch ids (duplication).
-                missing_still_exist = any(
-                    self._source_file_exists(p) for p in rec_set - now_set
-                )
-                if (self.strict_replay or disjoint or has_new_files
-                        or missing_still_exist):
-                    # zero overlap = a reused out_dir with a fresh checkpoint
-                    # restarting ids at 0; NEW files beyond the recorded set =
-                    # a fresh checkpoint over a grown source; missing-but-
-                    # still-present files = fresh checkpoint with different
-                    # batch boundaries — skipping any of these silently
-                    # drops or duplicates rows
-                    raise RuntimeError(
-                        msg + " — reusing an output dir with a new checkpoint? "
-                        "Point the query at a fresh out_dir or reuse the "
-                        "original checkpoint."
-                    )
-                # a strict SUBSET whose complement is gone from the source
-                # (compaction or retention between run and recovery): every
-                # replayed file was already committed, so skipping is the
-                # correct exactly-once behavior — but say so loudly
-                import warnings
-
-                warnings.warn(msg + "; replay reads a subset of the committed "
-                              "input and the other committed files are gone "
-                              "from the source (retention) — treating as a "
-                              "benign replay and skipping the batch",
-                              RuntimeWarning)
-            # Still run the frame: a stateful query's state stores commit
-            # only when the batch's plan executes, and Spark refuses to go
-            # on from a batch whose stores never committed.
-            batch_df.write.format("noop").mode("overwrite").save()
-            return False
+                recorded = json.load(fh)["lineage"].get("query_id")
+            return replay_committed(self.out_dir, batch_id, recorded, batch_df)
         tmp = os.path.join(self.data_dir, f".tmp-{batch_id}-{uuid.uuid4().hex[:8]}")
         final = self._batch_dir(batch_id)
-        lineage = {
-            "input_files": files,
-            "num_input_files": len(files),
-        }
+        # input files are lineage only: a snapshot-tail batch has none
+        files = sorted(batch_df.inputFiles())
+        lineage = {"input_files": files, "num_input_files": len(files)}
+        query_id = streaming_query_id(batch_df)
         if query_id:
             lineage["query_id"] = query_id
         batch_df.write.mode("overwrite").parquet(tmp)

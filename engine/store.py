@@ -212,14 +212,11 @@ class FeatureStore:
             os.path.join(out_dir, "table"), event_ts_col=fg.event_time
         )
 
-    #: batch inserts use their own id namespace, far above any plausible
-    #: streaming micro-batch count, so mixing insert and insert_stream on one
-    #: group can never collide with a checkpoint's restarting batch ids.
-    BATCH_ID_BASE = 1 << 40
-
     def insert(self, fg: FeatureGroup, df: DataFrame,
                mode: str = SaveMode.APPEND) -> int:
-        """Batch insert = one exactly-once ledger commit; returns batch id.
+        """Batch insert = one exactly-once ledger commit; returns batch id,
+        from the sink's batch namespace (``ParquetLedgerSink.next_batch_id``),
+        so inserts and ``insert_stream`` on one group never share an id.
 
         ``mode=SaveMode.UPSERT``: rows supersede earlier rows with the same
         primary key (resolved at read time, newest commit wins).
@@ -239,9 +236,7 @@ class FeatureStore:
         fg.verify_schema(df)
         df = fg.conform(df)
         sink = self._sink(fg)
-        existing = [r.batch_id for r in sink.committed_batches()
-                    if r.batch_id >= self.BATCH_ID_BASE]
-        batch_id = max(existing, default=self.BATCH_ID_BASE - 1) + 1
+        batch_id = sink.next_batch_id()
         sink.write_batch(df, batch_id, mode=mode)
         return batch_id
 
@@ -277,7 +272,7 @@ class FeatureStore:
         return q
 
     def read(self, spark: SparkSession, fg: FeatureGroup,
-             with_commit_ts: bool = True, resolve: bool = True,
+             with_commit_ts: bool = True,
              as_of_batch_id: int | None = None,
              as_of_ts=None, exclude_until=None) -> DataFrame:
         """Committed rows with save-mode resolution; by default each row
@@ -285,7 +280,7 @@ class FeatureStore:
         ``Query.as_of`` / ``pull_changes`` time travel actually bounds
         store-managed tables.
 
-        Resolution (``resolve=True``): only batches since the latest OVERWRITE
+        Resolution: only batches since the latest OVERWRITE
         commit are visible; for each primary key that appears in at least one
         visible UPSERT commit, the newest visible row for that key wins
         (tie-break inside a batch: event time descending when the group
@@ -337,18 +332,17 @@ class FeatureStore:
             lo = _ms(exclude_until)
             recs = [r for r in recs if r.commit_ts_ms > lo]
         visible = recs
-        if resolve:
-            # latest overwrite by COMMIT TIME (batch-id tie-break) — raw
-            # batch ids are not comparable across the stream (from 0) and
-            # batch-insert (from 2^40) namespaces
-            overwrites = [r for r in recs if r.mode == SaveMode.OVERWRITE]
-            if overwrites:
-                cut = max(overwrites, key=lambda r: (r.commit_ts_ms, r.batch_id))
-                visible = [
-                    r for r in recs
-                    if (r.commit_ts_ms, r.batch_id)
-                    >= (cut.commit_ts_ms, cut.batch_id)
-                ]
+        # latest overwrite by COMMIT TIME (batch-id tie-break) — raw batch
+        # ids are not comparable across the stream (from 0) and batch-insert
+        # (from 2^40) namespaces
+        overwrites = [r for r in recs if r.mode == SaveMode.OVERWRITE]
+        if overwrites:
+            cut = max(overwrites, key=lambda r: (r.commit_ts_ms, r.batch_id))
+            visible = [
+                r for r in recs
+                if (r.commit_ts_ms, r.batch_id)
+                >= (cut.commit_ts_ms, cut.batch_id)
+            ]
         if not visible:
             # a fresh group with no commits is an empty table, not an error
             schema = fg.spark_schema()
@@ -361,7 +355,7 @@ class FeatureStore:
                     list(schema) + [T.StructField(_CTS, T.TimestampType())]
                 )
             return spark.createDataFrame([], schema)
-        has_upsert = resolve and any(r.mode == SaveMode.UPSERT for r in visible)
+        has_upsert = any(r.mode == SaveMode.UPSERT for r in visible)
         need_batch_id = with_commit_ts or has_upsert
         df = sink.read_committed(
             spark,

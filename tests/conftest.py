@@ -1,3 +1,4 @@
+import contextlib
 import itertools
 import os
 import sys
@@ -57,3 +58,21 @@ def clip_stream(spark, tmp_path):
             **kw)
 
     return open_stream
+
+
+@pytest.fixture
+def as_stream_query(spark):
+    """``with as_stream_query("q1"):`` makes sink writes on this thread look
+    like ``foreachBatch`` calls of streaming query ``q1``: Spark marks a
+    stream's thread with its id as the ``sql.streaming.queryId`` local
+    property. ``None`` is a write outside any stream."""
+    @contextlib.contextmanager
+    def scope(query_id):
+        sc = spark.sparkContext
+        sc.setLocalProperty("sql.streaming.queryId", query_id)
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("sql.streaming.queryId", None)
+
+    return scope

@@ -200,12 +200,13 @@ def test_sequence_numbers_inherited_and_monotonic(spark, tmp_path):
 # exactly-once sink
 # ---------------------------------------------------------------------------
 
-def test_sink_exactly_once_replay_is_noop(spark, tmp_path):
+def test_sink_exactly_once_replay_is_noop(spark, tmp_path, as_stream_query):
     sink = IcebergSink(str(tmp_path / "sunk"))
     b = _df(spark, 0, 20)
-    assert sink.write_batch(b, 0) is True
-    assert sink.write_batch(b, 0) is False  # replay
-    assert sink.write_batch(_df(spark, 20, 30), 1) is True
+    with as_stream_query("q1"):
+        assert sink.write_batch(b, 0) is True
+        assert sink.write_batch(b, 0) is False  # the same query's replay
+        assert sink.write_batch(_df(spark, 20, 30), 1) is True
     audit = sink.audit()
     assert audit["consistent"] and audit["unique_batch_ids"]
     assert audit["n_batches"] == 2

@@ -14,6 +14,7 @@ from engine.connectors import (
     S3Connector,
 )
 from engine.schema import SchemaError
+from engine.sink import BATCH_ID_BASE
 from engine.store import FeatureStore
 
 
@@ -46,7 +47,7 @@ def test_insert_and_commit_log(spark, tables, store):
     b0 = store.insert(fg, df)
     b1 = store.insert(fg, df.limit(2))
     # batch inserts live in their own id namespace (no streaming collision)
-    assert (b0, b1) == (FeatureStore.BATCH_ID_BASE, FeatureStore.BATCH_ID_BASE + 1)
+    assert (b0, b1) == (BATCH_ID_BASE, BATCH_ID_BASE + 1)
     assert store.read(spark, fg).count() == df.count() + 2
     details = store.commit_details(fg)
     assert [d["batch_id"] for d in details] == [b0, b1]
@@ -252,6 +253,24 @@ def test_serving_batch_serves_newest_row_only(spark):
             {"k": 2}, use_snapshot=use_snapshot)["v"] == "x"
 
 
+def test_serving_batch_refuses_ambiguous_key(spark):
+    """Without an order column, a requested key with several rows makes the
+    batch lookup raise the point lookups' ambiguity error instead of
+    returning every row; a batch of unambiguous keys is still served."""
+    from engine.serving import LookupError_, VectorServer
+
+    df = spark.createDataFrame([(1, "a"), (1, "b"), (2, "x")], "k int, v string")
+    vs = VectorServer([("g", df, ["k"])])
+    for use_snapshot in (True, False):
+        with pytest.raises(LookupError_, match="multiple rows") as point:
+            vs.get_feature_vector({"k": 1}, use_snapshot=use_snapshot)
+    with pytest.raises(LookupError_, match="multiple rows") as batch:
+        vs.get_feature_vectors(spark, [{"k": 1}, {"k": 2}])
+    assert str(batch.value) == str(point.value)
+    got = vs.get_feature_vectors(spark, [{"k": 2}])
+    assert sorted(map(tuple, got.collect())) == [(2, "x")]
+
+
 # --------------------------------------------------------------------------- save modes (SaveMode.java:20-24)
 def test_upsert_latest_key_wins_and_time_travel(spark, tables, store):
     from engine.store import SaveMode
@@ -304,16 +323,18 @@ def test_upsert_requires_primary_key(spark, tables, store):
         store.insert(fg, df, mode=SaveMode.UPSERT)
 
 
-def test_upsert_replay_is_idempotent(spark, tables, store):
-    """Exactly-once under replay: re-delivering the same upsert batch id is a
-    ledger no-op — rows never supersede themselves twice (T7 for UPSERT)."""
+def test_upsert_replay_is_idempotent(spark, tables, store, as_stream_query):
+    """Exactly-once under replay: the stream re-delivering the same upsert
+    batch id is a ledger no-op — rows never supersede themselves twice (T7
+    for UPSERT)."""
     df = tables["region"]
     fg = store.get_or_create_stream_feature_group(
         "region_replay", df=df, primary_key=["r_regionkey"]
     )
     sink = store._sink(fg)
-    assert sink.write_batch(df, 7, mode="upsert") is True
-    assert sink.write_batch(df, 7, mode="upsert") is False  # replay → no-op
+    with as_stream_query("q1"):
+        assert sink.write_batch(df, 7, mode="upsert") is True
+        assert sink.write_batch(df, 7, mode="upsert") is False  # replay
     audit = sink.audit()
     assert audit["consistent"] and audit["n_batches"] == 1
     assert store.read(spark, fg).count() == df.count()
@@ -634,52 +655,47 @@ def test_compute_statistics_single_pass_and_persist(spark, tables, store):
     assert store.get_statistics(fg)["row_count"] == got["row_count"]
 
 
-# --------------------------------------------------------------------------- sink replay guard (ADVICE fix)
-def test_replay_guard_disjoint_raises_overlap_warns(spark, tables, tmp_path):
-    import warnings
-
+# --------------------------------------------------------------------------- the sinks' one replay rule
+@pytest.mark.parametrize("kind", ["ledger", "iceberg"])
+def test_replay_rule_only_the_committing_query_replays(
+        spark, tables, tmp_path, as_stream_query, kind):
+    """``engine.sink.replay_committed``, on both sinks: a committed batch id
+    is a replay only for the streaming query that committed it. Any other
+    writer raises and the table stays as it was: another query, a write
+    outside any stream, or a stream meeting a batch written outside one."""
+    from engine.iceberg import IcebergSink
     from engine.sink import ParquetLedgerSink
 
-    src_a = str(tmp_path / "a.parquet")
-    src_b = str(tmp_path / "b.parquet")
-    tables["region"].write.parquet(src_a)
-    tables["region"].write.parquet(src_b)
-    dfa, dfb = spark.read.parquet(src_a), spark.read.parquet(src_b)
-    both = spark.read.parquet(src_a, src_b)
+    df = tables["region"]
+    loc = str(tmp_path / "sink")
+    sink = ParquetLedgerSink(loc) if kind == "ledger" else IcebergSink(loc)
+    assert sink.write_batch(df, 0) is True  # outside any stream
+    with as_stream_query("q1"):
+        assert sink.write_batch(df, 1) is True
+        assert sink.write_batch(df, 1) is False  # q1's own replay
+    for query, batch_id in [("q2", 1), (None, 1), (None, 0), ("q1", 0)]:
+        with (as_stream_query(query),
+              pytest.raises(RuntimeError, match="reusing an output dir")):
+            sink.write_batch(df, batch_id)
+    assert sink.read_committed(spark).count() == 2 * df.count()
+    audit = sink.audit()
+    assert audit["consistent"] and audit["n_batches"] == 2
 
-    sink = ParquetLedgerSink(str(tmp_path / "sink"))
-    assert sink.write_batch(both, 0) is True  # committed with {a, b} files
-    # fully disjoint input files on the same batch id → out_dir mismatch
-    src_c = str(tmp_path / "c.parquet")
-    tables["region"].write.parquet(src_c)
-    with pytest.raises(RuntimeError):
-        sink.write_batch(spark.read.parquet(src_c), 0)
-    # NEW files beyond the recorded set (fresh checkpoint over a grown
-    # source) would silently drop rows if skipped → must raise
-    with pytest.raises(RuntimeError):
-        sink.write_batch(spark.read.parquet(src_a, src_c), 0)
-    # SUBSET while the missing recorded file still EXISTS at the source:
-    # that is a fresh checkpoint with different micro-batch boundaries
-    # (e.g. smaller maxFilesPerTrigger), not retention — skipping would let
-    # the new checkpoint re-commit src_b under a new batch id (duplication).
-    # Must raise (r3 ADVICE fix).
-    with pytest.raises(RuntimeError):
-        sink.write_batch(dfa, 0)
-    # strict SUBSET whose complement is GONE from the source (true
-    # compaction/retention): every replayed row was already committed →
-    # warn + skip, data unchanged
-    import shutil as _shutil
 
-    _shutil.rmtree(src_b)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        assert sink.write_batch(dfa, 0) is False
-    assert any("benign replay" in str(x.message) for x in w)
-    assert sink.audit()["consistent"]
-    # strict mode raises on any difference, even a retention subset
-    strict = ParquetLedgerSink(str(tmp_path / "sink"), strict_replay=True)
-    with pytest.raises(RuntimeError):
-        strict.write_batch(dfa, 0)
+def test_batch_ids_come_from_the_batch_namespace(tables, tmp_path):
+    """Commits made outside a stream number from BATCH_ID_BASE, above any
+    stream id already in the table, on both sinks."""
+    from engine.iceberg import IcebergSink
+    from engine.sink import ParquetLedgerSink
+
+    df = tables["region"]
+    for sink in (ParquetLedgerSink(str(tmp_path / "ledger")),
+                 IcebergSink(str(tmp_path / "ice"), schema=df.schema)):
+        assert sink.next_batch_id() == BATCH_ID_BASE
+        sink.write_batch(df, 5)
+        assert sink.next_batch_id() == BATCH_ID_BASE
+        sink.write_batch(df, sink.next_batch_id())
+        assert sink.next_batch_id() == BATCH_ID_BASE + 1
 
 
 def test_upsert_resolution_crosses_batch_id_namespaces(spark, tables, store, tmp_path):

@@ -59,13 +59,14 @@ def test_stream_matches_batch_tumbling(spark, topic, tmp_path):
     assert closed.index.isin(gp.index).all()
 
 
-def test_exactly_once_replay_noop(spark, topic, tmp_path):
+def test_exactly_once_replay_noop(spark, topic, tmp_path, as_stream_query):
     out = str(tmp_path / "once")
     sink = ParquetLedgerSink(out)
     df = topic.read(spark).select("clip_id", "speaker_id")
-    assert sink.write_batch(df, 0) is True
-    n1 = sink.read_committed(spark).count()
-    assert sink.write_batch(df, 0) is False  # replay short-circuits
+    with as_stream_query("q1"):
+        assert sink.write_batch(df, 0) is True
+        n1 = sink.read_committed(spark).count()
+        assert sink.write_batch(df, 0) is False  # replay short-circuits
     assert sink.read_committed(spark).count() == n1
     audit = sink.audit()
     assert audit["unique_batch_ids" ] and audit["consistent"]
@@ -256,6 +257,92 @@ def test_sink_rejects_out_dir_reuse_with_new_checkpoint(spark, topic, tmp_path):
                             max_files_per_trigger=1)
     after = [r.lineage for r in sink1.committed_batches()]
     assert after == before  # nothing overwritten or silently dropped
+
+
+@pytest.fixture(scope="module")
+def backfill_topic(tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("backfill") / "clips")
+    return write_clips_iceberg(d, n_clips=1500, n_files=6, seed=42,
+                               jitter_ms=30_000)
+
+
+def _sink(kind, loc, schema):
+    from engine.iceberg import IcebergSink
+
+    if kind == "ledger":
+        return ParquetLedgerSink(loc, event_ts_col="window_start")
+    return IcebergSink(loc, schema=schema)
+
+
+def _window_rows(pdf):
+    """[((window start ms, speaker, count), avg)] of a window-output frame."""
+    ws = pdf["window_start"].astype("datetime64[ms]").astype("int64")
+    return [((int(w), int(k), int(n)), a) for w, k, n, a in zip(
+        ws, pdf["speaker_id"], pdf["num_trans_per_10m"],
+        pdf["avg_amt_per_10m"])]
+
+
+@pytest.mark.parametrize("kind", ["ledger", "iceberg"])
+def test_backfill_then_stream_commits_every_stream_row(
+        spark, backfill_topic, tmp_path, kind):
+    """Three ``jobs backfill``-style commits, then a fresh stream into the
+    same table: the batch commits take batch-namespace ids, so every stream
+    batch commits and the stream's rows equal the oracle's closed windows.
+    Numbered 0-2 instead, they made the stream skip its batches 1-2 as
+    replays."""
+    import collections
+
+    import numpy as np
+
+    from engine.oracle import tumbling_oracle
+
+    clips = backfill_topic.read(spark)
+    agg = tumbling_agg(clips, "event_ts", "speaker_id", "dur_ms", "10 minutes")
+    loc = str(tmp_path / "out")
+    sink = _sink(kind, loc, agg.schema)
+    for _ in range(3):
+        assert sink.write_batch(agg, sink.next_batch_id()) is True
+    run_window_pipeline(spark, backfill_topic, loc, str(tmp_path / "ck"),
+                        max_files_per_trigger=2, sink=sink)
+
+    # the stream's rows: everything committed minus three backfill copies
+    committed = _window_rows(sink.read_committed(spark).toPandas())
+    got = collections.Counter(k for k, _ in committed)
+    for key, _ in _window_rows(agg.toPandas()):
+        got[key] -= 3
+    assert set(got.values()) <= {0, 1}  # no window streamed twice
+    stream = {k for k, n in got.items() if n}
+
+    pdf = clips.select("event_ts", "speaker_id", "dur_ms").toPandas()
+    pdf["ts_ms"] = pdf["event_ts"].astype("datetime64[ms]").astype("int64")
+    want = tumbling_oracle(pdf, "ts_ms", "speaker_id", "dur_ms", 600_000,
+                           "10m")
+    want = want[want["window_end_ms"] <= pdf["ts_ms"].max() - 60_000]
+    want = {(int(w), int(k), int(n)): a for w, k, n, a in zip(
+        want["window_start_ms"], want["speaker_id"],
+        want["num_trans_per_10m"], want["avg_amt_per_10m"])}
+    assert stream == set(want)
+    avg = dict(committed)
+    assert np.allclose([avg[k] for k in want], list(want.values()))
+
+
+@pytest.mark.parametrize("kind", ["ledger", "iceberg"])
+def test_stream_meeting_a_batch_written_outside_it_raises(
+        spark, topic, tmp_path, kind):
+    """A batch id that a write outside any stream committed (numbered from
+    0, as batch writes were before the batch namespace) is not the stream's
+    to replay: the stream fails loudly and commits nothing."""
+    agg = tumbling_agg(topic.read(spark), "event_ts", "speaker_id", "dur_ms",
+                       "10 minutes")
+    sink = _sink(kind, str(tmp_path / "out"), agg.schema)
+    assert sink.write_batch(agg, 0) is True
+    before = sink.read_committed(spark).count()
+    with pytest.raises(Exception, match="a write outside any streaming query"):
+        run_window_pipeline(spark, topic, str(tmp_path / "out"),
+                            str(tmp_path / "ck"), max_files_per_trigger=4,
+                            sink=sink)
+    assert sink.audit()["n_batches"] == 1
+    assert sink.read_committed(spark).count() == before
 
 
 def test_producer_refuses_existing_topic(tmp_path):
