@@ -2508,7 +2508,7 @@ def _q_salted_stream_agg_10m(spark, sf_dir):
 def _q_stateful_stream_join(spark, sf_dir):
     """Symmetric-hash stateful stream-stream equi-join (J6): two event streams
     keyed by event_id; every pair matches inside the TTL."""
-    from engine.state import stateful_stream_join
+    from engine.state_join import stateful_stream_join
 
     left = (
         _stream_events(spark, sf_dir)

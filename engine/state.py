@@ -19,7 +19,7 @@ This module implements both, Arrow-vectorized (no per-row Python):
   Spark's append-mode semantics.
 - :func:`stateful_session_agg` — session windows via vectorized
   gaps-and-islands interval merging in state.
-- :func:`stateful_stream_join` — symmetric hash join (engine.state_join).
+- :func:`engine.state_join.stateful_stream_join` — symmetric hash join.
 
 **Key-coarsening** (``n_buckets``): ``applyInPandasWithState`` pays ~1 ms of
 Arrow/invocation overhead per GROUP per micro-batch, so grouping by a raw
@@ -159,8 +159,7 @@ def _acc_to_state(
     state.setTimeoutTimestamp(timeout_ms)
 
 
-def _result_pdf(acc: pd.DataFrame, width_ms, label, bug_compatible_stdev,
-                key_name, to_ts=_ms_ts):
+def _result_pdf(acc: pd.DataFrame, width_ms, label, key_name, to_ts=_ms_ts):
     """Accumulators → output rows shaped like engine.windows._agg_exprs."""
     # cnt counts every row (count(*)); avg/stdev use the non-null count,
     # matching F.avg / F.stddev_samp null semantics.
@@ -169,14 +168,10 @@ def _result_pdf(acc: pd.DataFrame, width_ms, label, bug_compatible_stdev,
     ssq = acc["sumsq"].to_numpy()
     with np.errstate(invalid="ignore", divide="ignore"):
         avg = np.where(n > 0, s / np.where(n > 0, n, 1.0), np.nan)
-    if bug_compatible_stdev:
-        stdev = np.zeros(len(acc))
-    else:
         # stddev_samp; NaN (→ null) for n == 1, matching Spark's stddev_samp.
-        with np.errstate(invalid="ignore", divide="ignore"):
-            var = (ssq - s * s / n) / (n - 1)
-            stdev = np.sqrt(np.maximum(var, 0.0))
-        stdev[n <= 1] = np.nan
+        var = (ssq - s * s / n) / (n - 1)
+        stdev = np.sqrt(np.maximum(var, 0.0))
+    stdev[n <= 1] = np.nan
     end = acc["start"] + width_ms if width_ms is not None else acc["end"]
     return pd.DataFrame(
         {
@@ -192,35 +187,6 @@ def _result_pdf(acc: pd.DataFrame, width_ms, label, bug_compatible_stdev,
     )
 
 
-def _partial_pdf(acc: pd.DataFrame, width_ms, key_name, to_ts=_ms_ts):
-    """Accumulators → raw algebraic partials (salted mode); NaN min/max of
-    all-null-value windows become nulls via the Arrow conversion, so the
-    downstream F.min/F.max merge skips them (Spark treats NaN as a VALUE
-    that sorts greatest — emitting it would corrupt the merged max)."""
-    end = acc["start"] + width_ms if width_ms is not None else acc["end"]
-    return pd.DataFrame(
-        {
-            "window_start": to_ts(acc["start"]),
-            "window_end": to_ts(end),
-            key_name: acc["k"].reset_index(drop=True),
-            "cnt": acc["cnt"].astype("int64").reset_index(drop=True),
-            "nn": acc["nn"].astype("int64").reset_index(drop=True),
-            "sum": acc["sum"].reset_index(drop=True),
-            "sumsq": acc["sumsq"].reset_index(drop=True),
-            "mn": acc["mn"].reset_index(drop=True),
-            "mx": acc["mx"].reset_index(drop=True),
-        }
-    )
-
-
-def _partial_ddl(key_name: str, key_sql_type: str) -> str:
-    return (
-        f"window_start timestamp, window_end timestamp, "
-        f"{key_name} {key_sql_type}, cnt long, nn long, sum double, "
-        "sumsq double, mn double, mx double"
-    )
-
-
 def _out_ddl(key_name: str, key_sql_type: str, label: str) -> str:
     return (
         f"window_start timestamp, window_end timestamp, {key_name} {key_sql_type}, "
@@ -230,31 +196,12 @@ def _out_ddl(key_name: str, key_sql_type: str, label: str) -> str:
     )
 
 
-def _grouped(df: DataFrame, key_col: str, n_buckets: int | None,
-             n_salts: int | None = None, salt_from: str | None = None):
-    cols = []
+def _grouped(df: DataFrame, key_col: str, n_buckets: int | None):
     if n_buckets is None:
-        cols.append(key_col)
-    else:
-        df = df.withColumn(
-            "__bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-        )
-        cols.append("__bucket")
-    if n_salts:
-        # same salt derivation as engine.skew.salted_agg: deterministic under
-        # micro-batch replay (a replayed batch re-reads the same files into
-        # the same splits) AND spreads hot keys whose salt-source values are
-        # low-cardinality, because the partition id participates
-        df = df.withColumn(
-            "__salt",
-            F.pmod(
-                F.xxhash64(F.col(salt_from or key_col),
-                           F.spark_partition_id(), F.lit(17)),
-                F.lit(n_salts),
-            ),
-        )
-        cols.append("__salt")
-    return df.groupBy(*cols)
+        return df.groupBy(key_col)
+    return df.withColumn(
+        "__bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
+    ).groupBy("__bucket")
 
 
 def _key_meta(df: DataFrame, key_col: str) -> tuple[str, str | None]:
@@ -272,12 +219,9 @@ def stateful_window_agg(
     width: str = "10 minutes",
     slide: str | None = None,
     label: str | None = None,
-    bug_compatible_stdev: bool = False,
     late_retention: str = "1 hour",
     watermark: str | None = None,
     n_buckets: int | None = None,
-    n_salts: int | None = None,
-    salt_from: str | None = None,
 ) -> DataFrame:
     """Tumbling (``slide=None``) or sliding keyed event-time window aggregate
     with state in a custom ``applyInPandasWithState`` store.
@@ -289,23 +233,8 @@ def stateful_window_agg(
     ``n_buckets`` selects the key-coarsened state layout for high-cardinality
     keys (module docstring).  Output schema and values match
     :func:`engine.windows.tumbling_agg` / ``sliding_agg`` in append mode.
-
-    **Salted mode** (``n_salts``, r2 VERDICT #7): a hot key otherwise lands
-    every row in ONE Python invocation per micro-batch (the measured 7×
-    degradation in BENCH/PLANS.md). With ``n_salts`` the state key becomes
-    ``(key-or-bucket, salt)`` — the hot key's rows spread over up to
-    ``n_salts`` invocations, each keeping algebraic PARTIALS
-    ``(cnt, nn, Σx, Σx², min, max)`` per (key, window) — and the stream
-    emits those partials (schema: ``window_start, window_end, key, cnt, nn,
-    sum, sumsq, mn, mx``) instead of finished stats. Merge them downstream
-    with :func:`merge_window_partials` (a plain JVM-side groupBy — run it
-    inside ``foreachBatch`` before the sink, or over the sink table on
-    read). Same-trigger completeness holds by construction: every salted
-    group holding a window sets its event-time timeout at-or-before that
-    window's end, so the trigger whose watermark crosses the end fires ALL
-    of them — each micro-batch carries complete partial sets, making the
-    foreachBatch merge exactly-once-correct. ``salt_from`` defaults to the
-    value column (plus the source split id), as in ``engine.skew``.
+    A hot key's rows all land in one Python invocation per micro-batch;
+    for heavy skew use :func:`engine.skew.salted_window_agg_stream`.
     """
     from engine.windows import width_label
 
@@ -320,12 +249,10 @@ def stateful_window_agg(
     # aggregates, but applyInPandasWithState ships EVERY child column through
     # the shuffle and the Arrow boundary into Python. On the clip stream the
     # unused audio payload is ~30 kB/row — measured 35 s → ~13 s on the 96k
-    # hot-key soak from this select alone. The salt column (if any) derives
-    # from salt_from, which may be a non-value column, so keep it too.
-    needed = {ts_col, key_col, value_col}
-    if n_salts is not None and salt_from is not None:
-        needed.add(salt_from)
-    df = df.select(*[c for c in df.columns if c in needed])
+    # hot-key soak from this select alone.
+    df = df.select(
+        *[c for c in df.columns if c in {ts_col, key_col, value_col}]
+    )
     shift_ms = 0
     if watermark is not None:
         shift_ms = width_ms
@@ -345,11 +272,7 @@ def stateful_window_agg(
     # maps to int64 min, failing every liveness check).
     df = df.where(F.col(key_col).isNotNull() | F.col(ts_col).isNull())
     key_sql, key_pd = _key_meta(df, key_col)
-    salted = n_salts is not None
-    out_ddl = (
-        _partial_ddl(key_col, key_sql) if salted
-        else _out_ddl(key_col, key_sql, label)
-    )
+    out_ddl = _out_ddl(key_col, key_sql, label)
     state_ddl = (
         f"thru long, k array<{key_sql}>, start array<long>, cnt array<long>, "
         "nn array<long>, sum array<double>, sumsq array<double>, "
@@ -397,12 +320,7 @@ def stateful_window_agg(
         mature = acc["start"] + width_ms <= wm
         emitted = bool(mature.any())
         if emitted:
-            if salted:
-                yield _partial_pdf(acc[mature], width_ms, key_col)
-            else:
-                yield _result_pdf(
-                    acc[mature], width_ms, label, bug_compatible_stdev, key_col
-                )
+            yield _result_pdf(acc[mature], width_ms, label, key_col)
         rest = acc[~mature]
         if len(rest):
             _acc_to_state(state, max(thru, wm), rest,
@@ -422,62 +340,8 @@ def stateful_window_agg(
             # retention timeout fired with no new data and nothing pending
             state.remove()
 
-    return _grouped(
-        df, key_col, n_buckets, n_salts,
-        (salt_from or value_col) if salted else None,
-    ).applyInPandasWithState(
+    return _grouped(df, key_col, n_buckets).applyInPandasWithState(
         fn, out_ddl, state_ddl, "append", GroupStateTimeout.EventTimeTimeout
-    )
-
-
-def merge_window_partials(
-    df: DataFrame,
-    key_col: str,
-    label: str,
-    bug_compatible_stdev: bool = False,
-) -> DataFrame:
-    """Merge salted window PARTIALS (from ``stateful_window_agg(...,
-    n_salts=K)``) into final stats — the phase-2 of the chained-agg shape
-    (engine.skew.salted_window_agg_stream) applied to the custom store.
-
-    Plain JVM-side groupBy over O(keys × salts) partial rows (whole-stage
-    codegen, map-side combine); algebraic identities match
-    ``TransactionCountAggregate.merge`` (TransactionCountAggregate.java:
-    35-39). Output schema and null semantics match the unsalted store /
-    :func:`engine.windows.tumbling_agg`: avg null when no non-null values,
-    stdev null when fewer than two."""
-    m = df.groupBy("window_start", "window_end", key_col).agg(
-        F.sum("cnt").alias("_ROWS"),
-        F.sum("nn").alias("_N"),
-        F.sum("sum").alias("_S"),
-        F.sum("sumsq").alias("_S2"),
-        F.min("mn").alias("_MN"),
-        F.max("mx").alias("_MX"),
-    )
-    stdev = (
-        F.lit(0.0) if bug_compatible_stdev
-        else F.when(
-            F.col("_N") > 1,
-            F.sqrt(
-                F.greatest(
-                    (F.col("_S2") - F.col("_S") * F.col("_S") / F.col("_N"))
-                    / (F.col("_N") - 1),
-                    F.lit(0.0),
-                )
-            ),
-        )
-    )
-    return m.select(
-        "window_start",
-        "window_end",
-        key_col,
-        F.col("_ROWS").alias(f"num_trans_per_{label}"),
-        F.when(F.col("_N") > 0, F.col("_S") / F.col("_N")).alias(
-            f"avg_amt_per_{label}"
-        ),
-        stdev.alias(f"stdev_amt_per_{label}"),
-        F.col("_MN").alias(f"min_amt_per_{label}"),
-        F.col("_MX").alias(f"max_amt_per_{label}"),
     )
 
 
@@ -510,7 +374,6 @@ def stateful_session_agg(
     value_col: str,
     gap: str = "30 seconds",
     label: str = "session",
-    bug_compatible_stdev: bool = False,
     late_retention: str = "1 hour",
     watermark: str | None = None,
     n_buckets: int | None = None,
@@ -583,8 +446,8 @@ def stateful_session_agg(
         mature = acc["end"] <= wm
         emitted = bool(mature.any())
         if emitted:
-            yield _result_pdf(acc[mature], None, label, bug_compatible_stdev,
-                              key_col, to_ts=_us_ts)
+            yield _result_pdf(acc[mature], None, label, key_col,
+                              to_ts=_us_ts)
         rest = acc[~mature]
         # timeouts are in ms and must be strictly past the watermark
         if len(rest):
@@ -606,23 +469,3 @@ def stateful_session_agg(
         fn, out_ddl, state_ddl, "append", GroupStateTimeout.EventTimeTimeout
     )
 
-
-def stateful_stream_join(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str,
-    ts_col: str = "event_ts",
-    ttl: str = "10 minutes",
-    left_ts_name: str = "left_ts",
-    right_ts_name: str = "right_ts",
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Stateful inner stream-stream equi-join with buffered state (J6).
-
-    Implemented in :mod:`engine.state_join`; ``n_buckets`` selects the
-    key-coarsened layout that keeps per-micro-batch Python-invocation cost
-    independent of key cardinality (see that module's docstring)."""
-    from engine.state_join import stateful_stream_join as impl
-
-    return impl(left, right, key_col, ts_col, ttl, left_ts_name,
-                right_ts_name, n_buckets)

@@ -224,17 +224,16 @@ def read_clip_stream_tail(
     ts_col: str = "event_ts",
     partition_filter: dict | None = None,
     progress_dir: str | None = None,
-    starting_snapshot_id: int | None = None,
     exclude_columns: list[str] | None = None,
     include_file_path: bool = False,
-    max_bytes_per_trigger: int | None = None,
 ) -> DataFrame:
     """Clip stream over an Iceberg topic via the SNAPSHOT-TAIL source
     (engine/tail.py): plans from manifests (uncommitted files are
     invisible), follows commits made WHILE the query runs, prunes
     partitions at the manifest level, and records exact per-batch lineage
-    as (snapshot, position) offsets.  ``progress_dir`` should live with the
-    query's checkpoint dir (restart-safety high-water sidecar);
+    as (snapshot, position) offsets.  ``progress_dir`` is required and
+    should live with the query's checkpoint dir (restart-safety high-water
+    sidecar; ``load()`` fails without it);
     ``partition_filter`` uses plan_files semantics (tuples OK — they are
     carried as JSON ranges)."""
     import json as _json
@@ -256,16 +255,10 @@ def read_clip_stream_tail(
         reader = reader.option("partition_filter", _json.dumps(flt))
     if progress_dir:
         reader = reader.option("progress_dir", progress_dir)
-    if starting_snapshot_id is not None:
-        reader = reader.option("starting_snapshot_id",
-                               str(starting_snapshot_id))
     if exclude_columns:
         reader = reader.option("exclude_columns", ",".join(exclude_columns))
     if include_file_path:
         reader = reader.option("include_file_path", "true")
-    if max_bytes_per_trigger is not None:
-        reader = reader.option("max_bytes_per_trigger",
-                               str(max_bytes_per_trigger))
     stream = reader.load()
     if watermark is not None:
         stream = stream.withWatermark(ts_col, watermark)
@@ -480,7 +473,7 @@ def run_join_pipeline(
 ):
     """North-rule J6 pipeline: clip-feature stream ⋈ transcript-feature stream,
     keyed by ``clip_id``, state in the custom applyInPandasWithState store
-    (engine.state.stateful_stream_join), exactly-once ledger sink.
+    (engine.state_join.stateful_stream_join), exactly-once ledger sink.
 
     Both sides replay the same clip 'topic' through independent sources: side A
     decodes PCM (vectorized mapInPandas) into acoustic features; side B derives
@@ -492,7 +485,7 @@ def run_join_pipeline(
     the clip side carries ``__file_path`` instead of bytes (payload-direct
     decode), the transcript side drops bytes entirely.
     """
-    from engine.state import stateful_stream_join
+    from engine.state_join import stateful_stream_join
 
     clip_side = read_clip_source(
         spark, clips, os.path.join(checkpoint_dir, "_tail_progress_clip"),

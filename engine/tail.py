@@ -22,6 +22,12 @@ one-shot batch diff.  It is the one way an Iceberg topic is streamed
   reusing :meth:`IcebergTable.normalize_partition_filter` — no data file
   is opened for non-matching partitions.
 
+It takes six options (:data:`OPTIONS`) and refuses any other:
+``location`` and ``progress_dir`` (both required), ``max_files_per_trigger``
+(pacing, default 1), ``partition_filter``, ``exclude_columns`` and
+``include_file_path``.  A stream always starts at the table's first
+snapshot and is paced by file count alone.
+
 Semantics are Iceberg's *incremental append scan* (same as
 :meth:`IcebergTable.append_log` / ``incremental_files``): appends and an
 upsert's NEW rows are delivered; compaction/replace snapshots deliver
@@ -48,8 +54,7 @@ at-or-ahead of anything Spark ever saw — at-or-ahead is safe, because
 batches are planned as offset RANGES from Spark's own log (nothing is
 skipped, the next batch is just larger), and a regressing range is
 refused loudly by ``partitions`` as a canary.  Pass a directory that
-lives and dies with the query's checkpoint dir (``unsafe_no_progress=
-true`` opts out, for single-process runs that will never restart).
+lives and dies with the query's checkpoint dir.
 """
 from __future__ import annotations
 
@@ -67,6 +72,10 @@ from pyspark.sql.datasource import (
 from engine.iceberg import TAIL_EXPIRY_WATERMARK_PROP
 
 SOURCE_NAME = "iceberg_tail"
+
+#: every option the source reads; any other is refused
+OPTIONS = ("location", "max_files_per_trigger", "partition_filter",
+           "progress_dir", "exclude_columns", "include_file_path")
 
 #: offset schema: files of ancestry snapshots up to and including ``snap``
 #: are consumed, except ``snap``'s files beyond the first ``pos``.
@@ -110,6 +119,32 @@ def _arrow_type(iceberg_type):
 
 def _truthy(v) -> bool:
     return str(v).lower() in ("1", "true", "yes") if v is not None else False
+
+
+def _checked_options(options) -> dict:
+    """Options with lower-cased names (Spark passes a case-insensitive
+    map). A name outside :data:`OPTIONS` raises, so a caller setting an
+    option the source does not read fails instead of streaming with
+    pacing or a start point it did not ask for; so does a missing
+    ``location`` or ``progress_dir``."""
+    opts = {k.lower(): v for k, v in options.items()}
+    unknown = sorted(set(opts) - set(OPTIONS))
+    if unknown:
+        raise ValueError(
+            f"iceberg_tail: unsupported option(s) {unknown}; "
+            f"the supported options are {list(OPTIONS)}")
+    if not opts.get("location"):
+        raise ValueError("iceberg_tail requires a location option")
+    if not opts.get("progress_dir"):
+        # without the sidecar, a RESTARTED reader's rate-limited
+        # latestOffset lands behind Spark's checkpointed position and
+        # every subsequent batch plan fails the regress guard — the
+        # stream can never resume. Refuse up front instead of wedging
+        # at the first restart.
+        raise ValueError(
+            "iceberg_tail needs a progress_dir (tie it to the query's "
+            "checkpoint dir)")
+    return opts
 
 
 def _projected_columns(schema_json: dict, options: dict) -> list:
@@ -180,35 +215,15 @@ def _parse_filter(raw: str | None) -> dict | None:
 
 class IcebergTailReader(DataSourceStreamReader):
     def __init__(self, options: dict):
-        self._loc = options.get("location")
-        if not self._loc:
-            raise ValueError("iceberg_tail requires a location option")
+        options = _checked_options(options)
+        self._loc = options["location"]
         self._max_files = int(options.get("max_files_per_trigger", 1) or 1)
         if self._max_files < 1:
             raise ValueError("max_files_per_trigger must be >= 1")
-        mb = options.get("max_bytes_per_trigger")
-        self._max_bytes = int(mb) if mb else None
-        if self._max_bytes is not None and self._max_bytes < 1:
-            raise ValueError("max_bytes_per_trigger must be >= 1")
-        self._drain_first = _truthy(options.get("drain_on_start"))
         self._flt = _parse_filter(options.get("partition_filter"))
-        self._progress = None
-        if options.get("progress_dir"):
-            os.makedirs(options["progress_dir"], exist_ok=True)
-            self._progress = os.path.join(
-                options["progress_dir"], "tail-progress.json")
-        elif not _truthy(options.get("unsafe_no_progress")):
-            # without the sidecar, a RESTARTED reader's rate-limited
-            # latestOffset lands behind Spark's checkpointed position and
-            # every subsequent batch plan fails the regress guard — the
-            # stream can never resume. Refuse up front instead of wedging
-            # at the first restart.
-            raise ValueError(
-                "iceberg_tail needs a progress_dir (tie it to the query's "
-                "checkpoint dir); pass unsafe_no_progress=true only for "
-                "single-process runs that will never restart")
-        start = options.get("starting_snapshot_id")
-        self._start_snap = int(start) if start else None
+        os.makedirs(options["progress_dir"], exist_ok=True)
+        self._progress = os.path.join(
+            options["progress_dir"], "tail-progress.json")
         self._columns = _projected_columns(
             self._table().schema_json(), options)
         self._include_path = _truthy(options.get("include_file_path"))
@@ -323,14 +338,12 @@ class IcebergTailReader(DataSourceStreamReader):
                 "or restart from a fresh checkpoint accepting the gap.")
 
     def _persisted(self) -> dict | None:
-        if self._progress and os.path.exists(self._progress):
+        if os.path.exists(self._progress):
             with open(self._progress) as f:
                 return json.load(f)
         return None
 
     def _persist(self, off: dict) -> None:
-        if not self._progress:
-            return
         tmp = f"{self._progress}.{uuid.uuid4().hex[:8]}.tmp"
         with open(tmp, "w") as f:
             json.dump(off, f)
@@ -339,60 +352,16 @@ class IcebergTailReader(DataSourceStreamReader):
     # -- DataSourceStreamReader protocol ------------------------------------
 
     def initialOffset(self) -> dict:
-        if self._start_snap is None:
-            return dict(_ZERO)
-        log = self._log()
-        for sid, files in log:
-            if sid == self._start_snap:
-                off = {"snap": sid, "pos": len(files)}
-                seq = self._seq_by_sid.get(sid)
-                if seq is not None:
-                    off["seq"] = seq
-                    off["eof"] = True
-                return off
-        raise ValueError(
-            f"starting_snapshot_id {self._start_snap} not in table history")
+        return dict(_ZERO)
 
     def latestOffset(self) -> dict:
         log = self._log()
-        if self._cur is not None:
-            # _cur and the sidecar advance together — no disk read needed
-            base = self._cur
-        else:
-            # first call of this reader: the persisted high-water offset
-            # wins over the configured start (a restarted stream must NOT
-            # re-evaluate starting_snapshot_id — it may have expired long
-            # after the stream moved past it)
-            base = self._persisted() or self.initialOffset()
+        # _cur and the sidecar advance together, so only a reader's first
+        # call reads the persisted high-water offset
+        base = self._cur or self._persisted() or self.initialOffset()
         cur_idx = self._resolve_index(log, base, allow_expired_remap=True)
-        flat = [f for _, files in log for f in files]
-        if self._drain_first and self._cur is None:
-            # first call of this reader: hand Spark the ENTIRE backlog as
-            # one range, ignoring rate caps — Trigger.AvailableNow pins
-            # "available" to the first latestOffset() and stops there, so
-            # this is the correct one-shot-backfill recipe (a paced
-            # availableNow run would otherwise stop after ONE rate-limited
-            # step; nothing is lost — a restart resumes — but the trigger
-            # semantics promise a full drain)
-            off = self._offset_at(log, len(flat))
-            if len(flat) != cur_idx:
-                self._persist(off)
-            self._cur = off
-            return off
-        new_idx = min(len(flat), cur_idx + self._max_files)
-        if self._max_bytes is not None:
-            # byte CEILING composed with the file cap: stop BEFORE the
-            # file that would exceed the budget — except the batch's
-            # first file, which always admits (progress guarantee: one
-            # oversized file still streams, as its own batch)
-            spent, i = 0, cur_idx
-            while i < new_idx:
-                size = flat[i].file_size_in_bytes
-                if i > cur_idx and spent + size > self._max_bytes:
-                    break
-                spent += size
-                i += 1
-            new_idx = i
+        n_files = sum(len(files) for _, files in log)
+        new_idx = min(n_files, cur_idx + self._max_files)
         off = self._offset_at(log, new_idx)
         if new_idx != cur_idx:
             self._persist(off)
@@ -457,23 +426,15 @@ class IcebergTailReader(DataSourceStreamReader):
 
 class IcebergTailDataSource(DataSource):
     """``spark.readStream.format("iceberg_tail").option("location", path)``
-    — see module docstring. Options: ``location`` (required),
-    ``max_files_per_trigger`` (default 1), ``max_bytes_per_trigger``
-    (byte-budget pacing composed with the file cap — at least one file
-    always admits so an oversized file cannot stall the stream),
-    ``partition_filter`` (JSON:
-    scalar / list / {"lo","hi"}), ``starting_snapshot_id`` (exclusive),
+    — see module docstring. Its six options, any other refused:
+    ``location`` (required), ``max_files_per_trigger`` (default 1),
+    ``partition_filter`` (JSON: scalar / list / {"lo","hi"}),
     ``progress_dir`` (REQUIRED restart-safety sidecar — pass a dir tied
-    to the query's checkpoint; ``unsafe_no_progress`` opts out for
-    never-restarted runs), ``drain_on_start`` (first latestOffset returns
-    the WHOLE backlog uncapped — pair with ``Trigger.AvailableNow`` for
-    one-shot backfills; without it availableNow stops after one
-    rate-limited step, losing nothing but draining nothing either),
-    ``exclude_columns`` (CSV — source-level column
-    pruning, keeps heavy payloads out of the parquet read entirely),
-    ``include_file_path`` (append the backing data file's path as a
-    ``__file_path`` string column — the payload-direct decode pattern,
-    engine/audio.py extract_audio_features_direct)."""
+    to the query's checkpoint), ``exclude_columns`` (CSV — source-level
+    column pruning, keeps heavy payloads out of the parquet read
+    entirely), ``include_file_path`` (append the backing data file's path
+    as a ``__file_path`` string column — the payload-direct decode
+    pattern, engine/audio.py extract_audio_features_direct)."""
 
     @classmethod
     def name(cls) -> str:
@@ -482,14 +443,12 @@ class IcebergTailDataSource(DataSource):
     def schema(self) -> str:
         from engine.iceberg import IcebergTable, iceberg_schema_to_ddl
 
-        loc = self.options.get("location")
-        if not loc:
-            raise ValueError("iceberg_tail requires a location option")
+        options = _checked_options(self.options)
         cols = _projected_columns(
-            IcebergTable(loc).schema_json(), dict(self.options))
+            IcebergTable(options["location"]).schema_json(), options)
         ddl = iceberg_schema_to_ddl({"fields": [
             {"name": n, "type": t} for n, t in cols]})
-        if _truthy(self.options.get("include_file_path")):
+        if _truthy(options.get("include_file_path")):
             ddl += ", __file_path string"
         return ddl
 

@@ -1,15 +1,16 @@
-"""Hot-key skew soak (T1 evidence, r2 VERDICT #7).
+"""Hot-key skew soak (T1 evidence).
 
-24k-clip stream with a manufactured hot key (~50% of rows forced onto one
-speaker), 10-minute tumbling aggregate over dur_ms, local[16], four paths:
+``N_CLIPS``-clip stream (default 96,000) with a manufactured hot key (~50%
+of rows forced onto one speaker), 10-minute tumbling aggregate over dur_ms,
+local[``SPARK_GRAFT_CPUS``] (default 16), three paths:
 
 1. built-in window() groupBy                 (engine.windows.tumbling_agg)
 2. salted two-phase chained aggregation      (engine.skew.salted_window_agg_stream)
-3. custom applyInPandasWithState, unsalted   (engine.state.stateful_window_agg)
-4. custom store SALTED (n_salts) + foreachBatch merge_window_partials  [r3]
+3. custom applyInPandasWithState, bucketed   (engine.state.stateful_window_agg)
 
-All four write through the exactly-once ledger sink; row counts must agree.
-Prints one JSON line. Run with nothing else active on the box.
+All three write through the exactly-once ledger sink; row counts must agree.
+Prints one JSON line. Run with nothing else active on the box, e.g.
+``N_CLIPS=48000 SPARK_GRAFT_CPUS=4 python scripts/bench_hotkey.py``.
 """
 import json
 import os
@@ -68,7 +69,7 @@ def run_path(spark, topic, work, name, build):
 def main():
     from engine.session import get_spark
     from engine.skew import salted_window_agg_stream
-    from engine.state import merge_window_partials, stateful_window_agg
+    from engine.state import stateful_window_agg
     from engine.streams import write_clips_iceberg
     from engine.windows import tumbling_agg
 
@@ -106,8 +107,8 @@ def main():
             sink.foreach_batch(),
         ),
     )
-    results["custom_unsalted"] = run_path(
-        spark, topic, work, "custom_unsalted",
+    results["custom"] = run_path(
+        spark, topic, work, "custom",
         lambda src, sink: (
             stateful_window_agg(
                 src, "event_ts", "speaker_id", "dur_ms", "10 minutes",
@@ -117,29 +118,10 @@ def main():
         ),
     )
 
-    def build_custom_salted(src, sink):
-        partials = stateful_window_agg(
-            src, "event_ts", "speaker_id", "dur_ms", "10 minutes",
-            n_buckets=max(2, CPUS // 2), n_salts=8,
-        )
-
-        def fe(batch_df, batch_id):
-            merged = merge_window_partials(batch_df, "speaker_id", "10m")
-            sink.write_batch(merged, batch_id)
-
-        return partials, fe
-
-    results["custom_salted"] = run_path(
-        spark, topic, work, "custom_salted", build_custom_salted
-    )
-
     counts = {k: v["out_rows"] for k, v in results.items()}
-    ratio = (results["custom_salted"]["elapsed_sec"]
-             / results["salted_builtin"]["elapsed_sec"])
     print(json.dumps({
         "metric": "hotkey_soak", "n_clips": N_CLIPS, "cpus": CPUS,
         "paths": results, "rows_agree": len(set(counts.values())) == 1,
-        "custom_salted_vs_salted_builtin": round(ratio, 2),
     }))
     shutil.rmtree(work, ignore_errors=True)
 

@@ -127,6 +127,25 @@ def test_append_read_round_trip(spark, tmp_path):
     assert sum(f.record_count for f in t.plan_files()) == 120
 
 
+def test_read_plans_many_files_without_a_listing_job(spark, tmp_path):
+    """Past 32 planned files Spark's default is a parallel file-listing
+    job per ``read()``; the session lists the known paths on the driver."""
+    t = _mktable(spark, tmp_path)
+    t.write_dataframe(_df(spark, 0, 400).repartition(40))
+    assert len(t.plan_files()) == 40
+    sc = spark.sparkContext
+    sc.setJobGroup("iceberg-read-planning", "planning only")
+    try:
+        df = t.read(spark)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(
+        "iceberg-read-planning")) == []
+    assert df.count() == 400
+
+
 def test_time_travel_by_snapshot_and_timestamp(spark, tmp_path):
     t = _mktable(spark, tmp_path)
     s1 = t.write_dataframe(_df(spark, 0, 30))

@@ -11,7 +11,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from engine.state import dur_ms, stateful_session_agg, stateful_stream_join, stateful_window_agg
+from engine.state import dur_ms, stateful_session_agg, stateful_window_agg
+from engine.state_join import stateful_stream_join
 from engine.streams import (
     run_join_pipeline,
     transcript_features,
@@ -417,16 +418,13 @@ def test_second_stale_straggler_cannot_duplicate_window(spark, tmp_path):
 
 def test_null_values_match_builtin(spark, tmp_path):
     """Null measure values: cnt counts all rows, avg/stdev/min/max ignore
-    nulls — identical to the built-in aggregate."""
+    nulls — identical to the built-in aggregate, keyed or bucketed (an
+    all-null window has null avg/min/max, stdev is null for n <= 1)."""
     d = _mini_stream_dir(tmp_path, [
         [(1, 100, 10.0), (1, 200, None), (2, 150, None), (2, 160, None)],
         [(3, 3000, 5.0)],
         [(3, 4000, 5.0)],
     ])
-    got = _run_stream(
-        spark, stateful_window_agg(_mini_src(spark, d), "ts", "k", "v",
-                                   "10 minutes", watermark="60 seconds")
-    )
     want = _run_stream(
         spark,
         tumbling_agg(
@@ -434,7 +432,13 @@ def test_null_values_match_builtin(spark, tmp_path):
             "ts", "k", "v", "10 minutes",
         ),
     )
-    _cmp(got, want, ["window_start", "k"])
+    for n_buckets in (None, 2):
+        got = _run_stream(
+            spark, stateful_window_agg(_mini_src(spark, d), "ts", "k", "v",
+                                       "10 minutes", watermark="60 seconds",
+                                       n_buckets=n_buckets)
+        )
+        _cmp(got, want, ["window_start", "k"])
 
 
 def test_join_preserves_large_int_payloads(spark, tmp_path):
@@ -503,81 +507,6 @@ def test_null_keys_excluded(spark, tmp_path):
     )
     first = got[got["window_start"] == pd.Timestamp("1970-01-01")]
     assert set(first["k"]) == {1, 2}
-
-
-def test_salted_custom_store_matches_unsalted(spark, topic, clip_stream):
-    """r3 VERDICT #7: stateful_window_agg(n_salts=K) emits algebraic
-    partials from (key, salt) state groups; merge_window_partials recombines
-    them into rows identical to the unsalted custom store (and hence the
-    built-in operator)."""
-    from engine.state import merge_window_partials
-
-    src = clip_stream(topic, max_files_per_trigger=2)
-    partials = _run_stream(
-        spark,
-        stateful_window_agg(
-            src, "event_ts", "speaker_id", "dur_ms", "10 minutes", n_salts=4
-        ),
-    )
-    assert set(partials.columns) == {
-        "window_start", "window_end", "speaker_id",
-        "cnt", "nn", "sum", "sumsq", "mn", "mx",
-    }
-    # the hot path spreads: at least one (key, window) appears in >1 partial
-    dup = partials.groupby(["window_start", "speaker_id"]).size()
-    assert (dup > 1).any(), "salting produced no spread at all"
-    got = merge_window_partials(
-        spark.createDataFrame(partials), "speaker_id", "10m"
-    ).toPandas()
-    src2 = clip_stream(topic, max_files_per_trigger=2)
-    want = _run_stream(
-        spark,
-        stateful_window_agg(src2, "event_ts", "speaker_id", "dur_ms", "10 minutes"),
-    )
-    _cmp(got, want, ["window_start", "speaker_id"])
-
-
-def test_salted_custom_store_null_values_and_buckets(spark, tmp_path):
-    """Salted + bucketed layout with null values: merged output matches the
-    built-in operator (null avg/min/max windows, stdev null for n<=1)."""
-    from engine.state import merge_window_partials
-    from engine.windows import tumbling_agg as _tumb
-
-    d = str(tmp_path / "nulls")
-    pdf = pd.DataFrame(
-        {
-            "event_ts": pd.to_datetime(
-                [10, 70, 130, 190, 250, 310, 370, 430], unit="s"
-            ),
-            "speaker_id": [1, 1, 1, 1, 2, 2, 3, 3],
-            "dur_ms": [5.0, None, None, None, 7.0, 9.0, None, None],
-        }
-    )
-    spark.createDataFrame(pdf).coalesce(1).write.parquet(d)
-    src = (
-        spark.readStream.schema("event_ts timestamp, speaker_id bigint, dur_ms double")
-        .parquet(d)
-        .withWatermark("event_ts", "60 seconds")
-    )
-    partials = _run_stream(
-        spark,
-        stateful_window_agg(
-            src, "event_ts", "speaker_id", "dur_ms", "1 minute",
-            n_salts=3, n_buckets=2,
-        ),
-    )
-    got = merge_window_partials(
-        spark.createDataFrame(partials), "speaker_id", "1m"
-    ).toPandas()
-    src2 = (
-        spark.readStream.schema("event_ts timestamp, speaker_id bigint, dur_ms double")
-        .parquet(d)
-        .withWatermark("event_ts", "60 seconds")
-    )
-    want = _run_stream(
-        spark, _tumb(src2, "event_ts", "speaker_id", "dur_ms", "1 minute", label="1m")
-    )
-    _cmp(got, want, ["window_start", "speaker_id"])
 
 
 def test_custom_store_prunes_payload_columns(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Snapshot-tail streaming source (engine/tail.py): follow an Iceberg
 table's commit log as a live Structured Streaming source — offset math,
-pacing, live follow, restart exactly-once, partition pruning, schema
+options, pacing, live follow, restart exactly-once, partition pruning, schema
 evolution, compaction/expiration interplay."""
 import json
 import os
@@ -73,7 +73,7 @@ def test_reader_offsets_and_pacing(spark, tmp_path):
     s1 = t.write_dataframe(_df(spark, 0, 4).coalesce(2))
     s2 = t.write_dataframe(_df(spark, 4, 10).coalesce(3))
     r = IcebergTailReader({"location": t.location,
-                           "unsafe_no_progress": "true",
+                           "progress_dir": str(tmp_path / "prog"),
                            "max_files_per_trigger": "2"})
     assert r.initialOffset() == {"snap": 0, "pos": 0}
     o1 = r.latestOffset()
@@ -98,37 +98,10 @@ def test_reader_offsets_and_pacing(spark, tmp_path):
         r.partitions(o3, o1)
 
 
-def test_reader_byte_budget_pacing(spark, tmp_path):
-    """max_bytes_per_trigger composes with the file cap: files admit
-    until the byte budget is spent, and an oversized single file still
-    makes progress (never stalls)."""
-    t = _mktable(spark, tmp_path)
-    t.write_dataframe(_df(spark, 0, 12).coalesce(3))
-    sizes = [f.file_size_in_bytes for _, fs in t.append_log() for f in fs]
-    # budget covering exactly one file → one file per trigger
-    r = IcebergTailReader({"location": t.location,
-                           "unsafe_no_progress": "true",
-                           "max_files_per_trigger": "100",
-                           "max_bytes_per_trigger": str(min(sizes))})
-    offs = [r.latestOffset() for _ in range(3)]
-    assert [o["pos"] for o in offs] == [1, 2, 3]
-    # budget smaller than ANY file → still one file per trigger
-    r2 = IcebergTailReader({"location": t.location,
-                            "unsafe_no_progress": "true",
-                            "max_files_per_trigger": "100",
-                            "max_bytes_per_trigger": "1"})
-    assert r2.latestOffset()["pos"] == 1
-    # generous budget → file cap is what binds
-    r3 = IcebergTailReader({"location": t.location,
-                            "unsafe_no_progress": "true",
-                            "max_files_per_trigger": "2",
-                            "max_bytes_per_trigger": str(sum(sizes) * 10)})
-    assert r3.latestOffset()["pos"] == 2
-
-
 def test_reader_restart_floor_and_start_snapshot(spark, tmp_path):
+    """A restarted reader starts from the persisted high-water offset."""
     t = _mktable(spark, tmp_path)
-    s1 = t.write_dataframe(_df(spark, 0, 4).coalesce(2))
+    t.write_dataframe(_df(spark, 0, 4).coalesce(2))
     t.write_dataframe(_df(spark, 4, 10).coalesce(3))
     prog = str(tmp_path / "prog")
     r = IcebergTailReader({"location": t.location,
@@ -144,20 +117,44 @@ def test_reader_restart_floor_and_start_snapshot(spark, tmp_path):
     assert r2._index_of(r2._log(), o2) >= r2._index_of(r2._log(), o1)
     with open(os.path.join(prog, "tail-progress.json")) as f:
         assert r2._index_of(r2._log(), json.load(f)) == 5
-    # starting_snapshot_id skips everything up to and including it
-    r3 = IcebergTailReader({"location": t.location,
-                            "unsafe_no_progress": "true",
-                            "max_files_per_trigger": "100",
-                            "starting_snapshot_id": str(s1)})
-    assert r3.initialOffset() == {"snap": s1, "pos": 2, "seq": 1,
-                                  "eof": True}
-    o = r3.latestOffset()
-    assert sum(b.num_rows for p in r3.partitions(r3.initialOffset(), o)
-               for b in r3.read(p)) == 6
-    with pytest.raises(ValueError, match="not in table history"):
-        IcebergTailReader({"location": t.location,
-                           "unsafe_no_progress": "true",
-                           "starting_snapshot_id": "999"}).initialOffset()
+
+
+def test_reader_requires_progress_dir(spark, tmp_path):
+    """Without the sidecar a restarted reader would wedge on the regress
+    guard, so the source refuses a missing ``progress_dir`` up front, in
+    the reader and at ``load()``."""
+    t = _mktable(spark, tmp_path)
+    for opts in ({}, {"progress_dir": ""}):
+        with pytest.raises(ValueError, match="needs a progress_dir"):
+            IcebergTailReader({"location": t.location, **opts})
+    register_tail_source(spark)
+    with pytest.raises(Exception, match="needs a progress_dir"):
+        (spark.readStream.format("iceberg_tail")
+         .option("location", t.location).load())
+
+
+def test_tail_refuses_unknown_options(spark, tmp_path):
+    """An option the source does not read raises, naming it, in the reader
+    and at ``load()``; names compare case-insensitively, as Spark's option
+    map does."""
+    t = _mktable(spark, tmp_path)
+    t.write_dataframe(_df(spark, 0, 4).coalesce(2))
+    prog = str(tmp_path / "prog")
+    for name in ("max_bytes_per_trigger", "drain_on_start",
+                 "starting_snapshot_id", "unsafe_no_progress",
+                 "maxFilesPerTrigger"):
+        with pytest.raises(ValueError, match=name.lower()):
+            IcebergTailReader({"location": t.location, "progress_dir": prog,
+                               name: "1"})
+    r = IcebergTailReader({"LOCATION": t.location, "Progress_Dir": prog,
+                           "MAX_FILES_PER_TRIGGER": "2"})
+    assert r.latestOffset()["pos"] == 2
+    register_tail_source(spark)
+    reader = (spark.readStream.format("iceberg_tail")
+              .option("location", t.location).option("progress_dir", prog))
+    assert reader.load().columns == ["k", "v"]
+    with pytest.raises(Exception, match="starting_snapshot_id"):
+        reader.option("Starting_Snapshot_Id", "1").load()
 
 
 def test_reader_compaction_upsert_and_expiry(spark, tmp_path):
@@ -168,7 +165,7 @@ def test_reader_compaction_upsert_and_expiry(spark, tmp_path):
     t.write_dataframe(_df(spark, 0, 4).coalesce(2))
     s2 = t.write_dataframe(_df(spark, 4, 10).coalesce(2))
     r = IcebergTailReader({"location": t.location,
-                           "unsafe_no_progress": "true",
+                           "progress_dir": str(tmp_path / "prog"),
                            "max_files_per_trigger": "100"})
     o = r.latestOffset()
     assert o["snap"] == s2
@@ -195,7 +192,7 @@ def test_reader_manifest_rewrite_invisible(spark, tmp_path):
     t.write_dataframe(_df(spark, 4, 8).coalesce(2))
     s3 = t.write_dataframe(_df(spark, 8, 10).coalesce(1))
     r = IcebergTailReader({"location": t.location,
-                           "unsafe_no_progress": "true",
+                           "progress_dir": str(tmp_path / "prog"),
                            "max_files_per_trigger": "100"})
     o = r.latestOffset()
     assert o["snap"] == s3
@@ -232,7 +229,7 @@ def test_reader_partition_overwrite_redelivers_corrections(spark, tmp_path):
     t.write_dataframe(rows("2024-03-01", 0, 10).coalesce(1))
     t.write_dataframe(rows("2024-03-02", 10, 20).coalesce(1))
     r = IcebergTailReader({"location": t.location,
-                           "unsafe_no_progress": "true",
+                           "progress_dir": str(tmp_path / "prog"),
                            "max_files_per_trigger": "100"})
     o = r.latestOffset()  # tail fully caught up (20 rows delivered)
     t.overwrite_partitions(rows("2024-03-02", 100, 105, v_off=1000),
@@ -408,38 +405,6 @@ def test_tail_ignores_staged_branch_until_publish(spark, tmp_path):
         assert got.groupBy("k").count().where("count > 1").count() == 0
     finally:
         q.stop()
-
-
-def test_tail_drain_on_start_available_now(spark, tmp_path):
-    """drain_on_start: the first latestOffset returns the whole backlog
-    uncapped — paired with Trigger.AvailableNow it drains everything and
-    stops (without it, availableNow pins 'available' to one rate-limited
-    step). Subsequent calls fall back to paced tailing."""
-    t = _mktable(spark, tmp_path)
-    t.write_dataframe(_df(spark, 0, 8).coalesce(4))
-    r = IcebergTailReader({"location": t.location,
-                           "unsafe_no_progress": "true",
-                           "max_files_per_trigger": "1",
-                           "drain_on_start": "true"})
-    o = r.latestOffset()
-    assert r._index_of(r._log(), o) == 4  # full backlog, cap ignored
-    t.write_dataframe(_df(spark, 8, 12).coalesce(2))
-    o2 = r.latestOffset()
-    assert r._index_of(r._log(), o2) == 5  # paced again after the drain
-
-    register_tail_source(spark)
-    out = str(tmp_path / "anow_out")
-    q = (spark.readStream.format("iceberg_tail")
-         .option("location", t.location)
-         .option("max_files_per_trigger", "1")
-         .option("drain_on_start", "true")
-         .option("progress_dir", str(tmp_path / "anow_prog"))
-         .load()
-         .writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", str(tmp_path / "anow_ckpt"))
-         .trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    assert spark.read.parquet(out).count() == 12
 
 
 def test_tail_join_pipeline(spark, tmp_path):
