@@ -418,13 +418,16 @@ def test_second_stale_straggler_cannot_duplicate_window(spark, tmp_path):
 
 def test_null_values_match_builtin(spark, tmp_path):
     """Null measure values: cnt counts all rows, avg/stdev/min/max ignore
-    nulls — identical to the built-in aggregate, keyed or bucketed (an
-    all-null window has null avg/min/max, stdev is null for n <= 1)."""
+    nulls — identical to the built-in aggregate."""
     d = _mini_stream_dir(tmp_path, [
         [(1, 100, 10.0), (1, 200, None), (2, 150, None), (2, 160, None)],
         [(3, 3000, 5.0)],
         [(3, 4000, 5.0)],
     ])
+    got = _run_stream(
+        spark, stateful_window_agg(_mini_src(spark, d), "ts", "k", "v",
+                                   "10 minutes", watermark="60 seconds")
+    )
     want = _run_stream(
         spark,
         tumbling_agg(
@@ -432,13 +435,7 @@ def test_null_values_match_builtin(spark, tmp_path):
             "ts", "k", "v", "10 minutes",
         ),
     )
-    for n_buckets in (None, 2):
-        got = _run_stream(
-            spark, stateful_window_agg(_mini_src(spark, d), "ts", "k", "v",
-                                       "10 minutes", watermark="60 seconds",
-                                       n_buckets=n_buckets)
-        )
-        _cmp(got, want, ["window_start", "k"])
+    _cmp(got, want, ["window_start", "k"])
 
 
 def test_join_preserves_large_int_payloads(spark, tmp_path):
@@ -507,6 +504,49 @@ def test_null_keys_excluded(spark, tmp_path):
     )
     first = got[got["window_start"] == pd.Timestamp("1970-01-01")]
     assert set(first["k"]) == {1, 2}
+
+
+def test_salted_custom_store_null_values_and_buckets(spark, tmp_path):
+    """Null values through the skew layouts: the salted two-phase stream and
+    the bucketed custom store both match the built-in operator (null
+    avg/min/max windows, stdev null for n<=1)."""
+    from engine.skew import salted_window_agg_stream
+
+    d = str(tmp_path / "nulls")
+    pdf = pd.DataFrame(
+        {
+            "event_ts": pd.to_datetime(
+                [10, 70, 130, 190, 250, 310, 370, 430], unit="s"
+            ),
+            "speaker_id": [1, 1, 1, 1, 2, 2, 3, 3],
+            "dur_ms": [5.0, None, None, None, 7.0, 9.0, None, None],
+        }
+    )
+    spark.createDataFrame(pdf).coalesce(1).write.parquet(d)
+
+    def src():
+        return (
+            spark.readStream
+            .schema("event_ts timestamp, speaker_id bigint, dur_ms double")
+            .parquet(d)
+            .withWatermark("event_ts", "60 seconds")
+        )
+
+    want = _run_stream(
+        spark, tumbling_agg(src(), "event_ts", "speaker_id", "dur_ms",
+                            "1 minute", label="1m")
+    )
+    salted = _run_stream(
+        spark, salted_window_agg_stream(src(), "event_ts", "speaker_id",
+                                        "dur_ms", "1 minute", n_salts=3,
+                                        label="1m")
+    )
+    _cmp(salted, want, ["window_start", "speaker_id"])
+    bucketed = _run_stream(
+        spark, stateful_window_agg(src(), "event_ts", "speaker_id", "dur_ms",
+                                   "1 minute", label="1m", n_buckets=2)
+    )
+    _cmp(bucketed, want, ["window_start", "speaker_id"])
 
 
 def test_custom_store_prunes_payload_columns(spark, tmp_path):
